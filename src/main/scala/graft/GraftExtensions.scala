@@ -2,239 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.plans.{AdcSum, BandHashes, BpeTokens, BpeTokensWith, CharRunStats, CosineSimilarity, CrawlDelay, DequantDot, FingerprintStats, GramHashes, GramStats, HtmlLinks, HtmlText, LangIdExpr, LinkAnchors, MinHashSig, NearestCentroid, PostingsDigest, RobotsAllowed, Segments, SimHash60, SitemapEntries, Sitemaps, SrpBuckets, TermCounts, UrlCanon, UrlResolve, WinnowSel}
+import graft.plans.Kernels
 
-/** Engine extensions, installed with
+/** SQL names for the engine's kernels, installed with
   * `spark.sql.extensions=graft.GraftExtensions` (SparkSessionExtensions
   * is the public plug-in point — no Catalyst internals are patched).
-  * Registers the codegen'd scalar kernels used by the
-  * similarity-search and text-quality operators: `graft_cosine(a, b)`,
-  * `graft_srp_buckets(v)`, `graft_nearest_centroid(v, codebook)`,
-  * `graft_char_run_stats(str)` and `graft_gram_stats(toks, n)`. */
+  * Every name in `Kernels.names` (`graft_lang_id`, `graft_minhash_sig`,
+  * `graft_cosine`, ...) becomes callable from `spark.sql`, built by
+  * `Kernels.build` with the same argument checks as the column API.
+  * The engine's own operators do not need it: they build kernel
+  * columns directly, so sessions without it run the same plans. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_cosine takes exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_srp_buckets"),
-      new ExpressionInfo(classOf[SrpBuckets].getName, "graft_srp_buckets"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_srp_buckets takes exactly 1 argument")
-        SrpBuckets(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_centroid"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_nearest_centroid takes exactly 2 arguments")
-        NearestCentroid(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_run_stats"),
-      new ExpressionInfo(classOf[CharRunStats].getName, "graft_char_run_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_char_run_stats takes exactly 1 argument")
-        CharRunStats(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_stats"),
-      new ExpressionInfo(classOf[GramStats].getName, "graft_gram_stats"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_gram_stats takes exactly 2 arguments")
-        children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) =>
-            GramStats(children.head, n)
-          case other => throw new IllegalArgumentException(
-            s"graft_gram_stats requires a literal int gram width, got $other")
-        }
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_term_counts"),
-      new ExpressionInfo(classOf[TermCounts].getName, "graft_term_counts"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_term_counts takes exactly 1 argument")
-        TermCounts(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_minhash_sig takes exactly 1 argument")
-        MinHashSig(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "graft_gram_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_gram_hashes takes exactly 2 arguments")
-        children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) =>
-            GramHashes(children.head, n)
-          case other => throw new IllegalArgumentException(
-            s"graft_gram_hashes requires a literal int gram width, got $other")
-        }
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_segments"),
-      new ExpressionInfo(classOf[Segments].getName, "graft_segments"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_segments takes exactly 2 arguments")
-        children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) =>
-            Segments(children.head, n)
-          case other => throw new IllegalArgumentException(
-            s"graft_segments requires a literal int segment width, got $other")
-        }
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_band_hashes"),
-      new ExpressionInfo(classOf[BandHashes].getName, "graft_band_hashes"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_band_hashes takes exactly 1 argument")
-        BandHashes(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[FingerprintStats].getName, "graft_fingerprint"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_fingerprint takes exactly 1 argument")
-        FingerprintStats(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowSel].getName, "graft_winnow"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_winnow takes exactly 1 argument")
-        WinnowSel(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash60].getName, "graft_simhash"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_simhash takes exactly 1 argument")
-        SimHash60(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dequant_dot"),
-      new ExpressionInfo(classOf[DequantDot].getName, "graft_dequant_dot"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 4, "graft_dequant_dot takes exactly 4 arguments")
-        DequantDot(children.head, children(1), children(2), children(3))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_adc"),
-      new ExpressionInfo(classOf[AdcSum].getName, "graft_adc"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 3, "graft_adc takes exactly 3 arguments")
-        AdcSum(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_text"),
-      new ExpressionInfo(classOf[HtmlText].getName, "graft_html_text"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_html_text takes exactly 1 argument")
-        HtmlText(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_html_links"),
-      new ExpressionInfo(classOf[HtmlLinks].getName, "graft_html_links"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_html_links takes exactly 1 argument")
-        HtmlLinks(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_url_resolve"),
-      new ExpressionInfo(classOf[UrlResolve].getName, "graft_url_resolve"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_url_resolve takes exactly 2 arguments")
-        UrlResolve(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_url_canon"),
-      new ExpressionInfo(classOf[UrlCanon].getName, "graft_url_canon"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_url_canon takes exactly 1 argument")
-        UrlCanon(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_robots_allowed"),
-      new ExpressionInfo(classOf[RobotsAllowed].getName, "graft_robots_allowed"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 3, "graft_robots_allowed takes exactly 3 arguments")
-        children(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(a: org.apache.spark.unsafe.types.UTF8String, _) =>
-            RobotsAllowed(children.head, children(1), a.toString)
-          case other => throw new IllegalArgumentException(
-            s"graft_robots_allowed requires a literal string agent, got $other")
-        }
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sitemaps"),
-      new ExpressionInfo(classOf[Sitemaps].getName, "graft_sitemaps"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_sitemaps takes exactly 1 argument")
-        Sitemaps(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_crawl_delay"),
-      new ExpressionInfo(classOf[CrawlDelay].getName, "graft_crawl_delay"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_crawl_delay takes exactly 2 arguments")
-        children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(a: org.apache.spark.unsafe.types.UTF8String, _) =>
-            CrawlDelay(children.head, a.toString)
-          case other => throw new IllegalArgumentException(
-            s"graft_crawl_delay requires a literal string agent, got $other")
-        }
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lang_id"),
-      new ExpressionInfo(classOf[LangIdExpr].getName, "graft_lang_id"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_lang_id takes exactly 1 argument")
-        LangIdExpr(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_postings_digest"),
-      new ExpressionInfo(classOf[PostingsDigest].getName, "graft_postings_digest"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_postings_digest takes exactly 1 argument")
-        PostingsDigest(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_link_anchors"),
-      new ExpressionInfo(classOf[LinkAnchors].getName, "graft_link_anchors"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_link_anchors takes exactly 1 argument")
-        LinkAnchors(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sitemap_entries"),
-      new ExpressionInfo(classOf[SitemapEntries].getName, "graft_sitemap_entries"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_sitemap_entries takes exactly 1 argument")
-        SitemapEntries(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_tokens"),
-      new ExpressionInfo(classOf[BpeTokens].getName, "graft_bpe_tokens"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 1, "graft_bpe_tokens takes exactly 1 argument")
-        BpeTokens(children.head)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bpe_tokens_with"),
-      new ExpressionInfo(classOf[BpeTokensWith].getName, "graft_bpe_tokens_with"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.length == 2, "graft_bpe_tokens_with takes exactly 2 arguments")
-        BpeTokensWith(children.head, children(1))
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for (name <- Kernels.names)
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(Kernels.getClass.getName.stripSuffix("$"), name),
+        (args: Seq[Expression]) => Kernels.build(name, args)))
 }

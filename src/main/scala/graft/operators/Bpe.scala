@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Kernels
 import graft.sources.Tables
 
 /** Byte-pair encoding — the SUBWORD tokenizer a real training-data
@@ -27,8 +28,8 @@ import graft.sources.Tables
   *    driver work independent of corpus size.
   *  - ENCODING is a pure per-row function of the text once the merge
   *    table exists — a map-only codegen'd scan via the
-  *    `graft_bpe_tokens` kernel (plans/BpeExpr) for the embedded seed
-  *    model, or a ScalaUDF closing over a trained table. Per-row cost
+  *    `graft_bpe_tokens` kernel (plans/BpeKernel) for the embedded seed
+  *    model, or `graft_bpe_tokens_with` for a trained table. Per-row cost
   *    is bounded: merge resolution is rank-greedy per word, words
   *    longer than `MaxWordLen` are encoded per segment (a hostile
   *    megabyte "word" costs linear work, never the quadratic pair
@@ -350,34 +351,20 @@ object Bpe {
   // column APIs
   // ---------------------------------------------------------------
 
-  /** Seed-model tokens as a COLUMN. Kernel path: the codegen'd
-    * `graft_bpe_tokens` (plans/BpeExpr) — a static call inside
-    * WholeStageCodegen; fallback: a ScalaUDF over the SAME
-    * `encodeSeed`, bit-identical across the gate
-    * (KernelParitySpec). */
-  def seedTokensCol(spark: SparkSession, text: Column): Column =
-    if (Llm.kernelOn(spark, "graft_bpe_tokens"))
-      call_function("graft_bpe_tokens", text)
-    else udf((s: String) => if (s == null) null else encodeSeed(s)).apply(text)
+  /** Seed-model tokens as a COLUMN: the `graft_bpe_tokens` kernel
+    * (plans/BpeKernel), a static call inside WholeStageCodegen. */
+  def seedTokensCol(text: Column): Column = Kernels("graft_bpe_tokens", text)
 
   /** Tokens under a TRAINED merge table as a column — the shape a
-    * pipeline uses after `trainFromCorpus`. Kernel path: the
-    * codegen'd `graft_bpe_tokens_with` (plans/BpeExpr) — the
+    * pipeline uses after `trainFromCorpus`: the
+    * `graft_bpe_tokens_with` kernel (plans/BpeKernel) — the
     * driver-small merge table (a few MB at 64k merges, the trainer's
     * `maxWords` contract) rides the plan as a FOLDABLE literal and is
     * materialized ONCE per task into a rank map + per-thread word
     * LRU, so the corpus encode is a map-only codegen'd scan with no
-    * per-row ScalaUDF dispatch. Fallback (kernels off): the original
-    * ScalaUDF closing over the same rank map — bit-identical
-    * (BpeSpec pins kernel == UDF on real corpus text). */
-  def tokensCol(spark: SparkSession, merges: Seq[(String, String)])(text: Column): Column =
-    if (Llm.kernelOn(spark, "graft_bpe_tokens_with"))
-      call_function("graft_bpe_tokens_with", text,
-        typedLit(merges.map(p => Seq(p._1, p._2))))
-    else {
-      val ranks = ranksOf(merges)
-      udf((s: String) => if (s == null) null else encode(s, ranks)).apply(text)
-    }
+    * per-row ScalaUDF dispatch. */
+  def tokensCol(merges: Seq[(String, String)])(text: Column): Column =
+    Kernels("graft_bpe_tokens_with", text, typedLit(merges.map(p => Seq(p._1, p._2))))
 
   // ---------------------------------------------------------------
   // registry legs
@@ -400,8 +387,8 @@ object Bpe {
   }
 
   /** `llm_bpe_tokenize` — the oracled leg: per document, the seed
-    * model tokenizes the synthesized sample text distributed (kernel
-    * or parity fallback), and the row carries the full token
+    * model tokenizes the synthesized sample text distributed (the
+    * kernel), and the row carries the full token
     * spelling, the count, and the decode round-trip. DuckDB restates
     * tokens/count/decode from doc_id alone — a row matches only if
     * rank-greedy merge resolution, the leading-space spelling AND
@@ -412,7 +399,7 @@ object Bpe {
       .filter(col("text").isNotNull)
       .select(col("doc_id"), pmod(col("doc_id"), lit(4)).as("bpe_case"),
         sampleText(k).as("sample"))
-      .withColumn("toks", seedTokensCol(spark, col("sample")))
+      .withColumn("toks", seedTokensCol(col("sample")))
       .select(col("doc_id"), col("bpe_case"),
         size(col("toks")).cast("long").as("n_tokens"),
         array_join(col("toks"), "|").as("tokens"),
@@ -450,11 +437,10 @@ object Bpe {
     * lifts per micro-batch unchanged like `chunkFrame`. */
   def chunkByBpe(docs: DataFrame, chunkTokens: Int, overlap: Int): DataFrame = {
     require(overlap >= 0 && overlap < chunkTokens, "need 0 <= overlap < chunkTokens")
-    val spark = docs.sparkSession
     val stride = chunkTokens - overlap
     docs
       .filter(col("text").isNotNull)
-      .withColumn("toks", seedTokensCol(spark, col("text")))
+      .withColumn("toks", seedTokensCol(col("text")))
       .withColumn("n", size(col("toks")))
       .filter(col("n") > 0) // blank text: zero tokens, zero chunks
       .withColumn("n_chunks", when(col("n") <= chunkTokens, lit(1))
@@ -483,7 +469,7 @@ final class BpeModel(val merges: Seq[(String, String)]) extends Serializable {
   val ranks: Map[(String, String), Int] = Bpe.ranksOf(merges)
   @transient private lazy val cache = Bpe.newWordCache()
   /** Identical output to `Bpe.encode(text, ranks)` — pinned in
-    * BpeSpec against the ScalaUDF fallback on real corpus text. */
+    * BpeSpec against `Bpe.encode` on real corpus text. */
   def encodeCached(text: String): Array[String] =
     Bpe.encodeCached(text, ranks, cache.get())
 }

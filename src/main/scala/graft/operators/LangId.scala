@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.plans.Kernels
 
 /** Language identification by character-n-gram rank profiles — the
   * Cavnar–Trenkle method ("N-Gram-Based Text Categorization", SDAIR
@@ -278,12 +280,7 @@ object LangId {
   }
 
   /** The COLUMN-level classification API — per-document language as
-    * a plain column. Kernel path: the codegen'd `graft_lang_id`
-    * (plans/LangIdExpr) — a static call inside WholeStageCodegen;
-    * fallback: a ScalaUDF over the SAME `classify`, bit-identical
-    * across the gate (KernelParitySpec). */
-  def langCol(spark: SparkSession, text: Column): Column =
-    if (Llm.kernelOn(spark, "graft_lang_id"))
-      call_function("graft_lang_id", text)
-    else udf((s: String) => if (s == null) null else classify(s)).apply(text)
+    * a plain column: the `graft_lang_id` kernel
+    * (plans/LangIdKernel), a static call inside WholeStageCodegen. */
+  def langCol(text: Column): Column = Kernels("graft_lang_id", text)
 }

@@ -102,7 +102,6 @@ object LinkGraph {
     * core is the batch legs' scan and `Streaming.outlinkStream`'s
     * per-micro-batch lift (the chunkStream pattern). */
   private[graft] def edgesOf(pages: DataFrame): DataFrame = {
-    val spark = pages.sparkSession
     pages
       // src keys off the CANONICAL fetch URL — a page fetched under a
       // non-canonical spelling ("HTTP://B.Example:80/p") must land on
@@ -111,12 +110,12 @@ object LinkGraph {
       // that doesn't parse can't key edges at all (resolve against it
       // yields nothing either), so those rows drop visibly here
       .withColumn("src_host",
-        Urls.hostCol(Urls.canonCol(spark, col("page_url"))))
+        Urls.hostCol(Urls.canonCol(col("page_url"))))
       .filter(col("src_host").isNotNull)
-      .select(col("*"), explode(Html.linksCol(spark, col("page"))).as("ref"))
+      .select(col("*"), explode(Html.linksCol(col("page"))).as("ref"))
       .withColumn("link_url",
-        Urls.canonCol(spark,
-          Urls.resolveCol(spark, col("page_url"), col("ref"))))
+        Urls.canonCol(
+          Urls.resolveCol(col("page_url"), col("ref"))))
       .filter(col("link_url").isNotNull)
       .withColumn("dst_host", Urls.hostCol(col("link_url")))
       .filter(col("dst_host") =!= col("src_host"))
@@ -190,14 +189,10 @@ object LinkGraph {
     * closed form; LinkGraphSpec additionally pins the merged totals
     * equal to a from-scratch full rebuild. */
   def linkIncr(spark: SparkSession, dir: String): DataFrame = {
-    // the kernel gate is part of the cache key: under a flipped gate
-    // (KernelParitySpec, a no-extension deployment) the prev index
-    // REBUILDS through the fallback path instead of silently reusing
-    // the kernel-built snapshot — the end-to-end parity pin covers
-    // both eras, not just the delta
-    val group = s"$dir|k=${Llm.kernelOn(spark, "graft_html_links")}"
+    // the group names the artifact: `Snapshots` evicts a group's
+    // other fingerprints, and the ANN snapshot is keyed on `dir` too
     val fp = Tables.inputFingerprint(spark, dir, "documents")
-    val snap = Snapshots.of(group, fp, "graft_link_index") { tmp =>
+    val snap = Snapshots.of(s"$dir|link_index", fp, "graft_link_index") { tmp =>
       buildLinkIndex(pagesOf(spark, dir).filter(pmod(col("doc_id"), lit(3)) =!= 0))
         .write.mode("overwrite").parquet(s"$tmp/edges")
     }
@@ -254,15 +249,15 @@ object LinkGraph {
     val anchors = Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), pageUrl.as("page_url"), page.as("page"))
-      .withColumn("src_host", Urls.hostCol(Urls.canonCol(spark, col("page_url"))))
+      .withColumn("src_host", Urls.hostCol(Urls.canonCol(col("page_url"))))
       .filter(col("src_host").isNotNull)
       .select(col("page_url"), col("src_host"),
-        explode(Html.anchorsCol(spark, col("page"))).as("pair"))
+        explode(Html.anchorsCol(col("page"))).as("pair"))
       .select(col("page_url"), col("src_host"),
         substring_index(col("pair"), "\t", 1).as("href"),
         substring_index(col("pair"), "\t", -1).as("anchor"))
       .withColumn("link_url",
-        Urls.canonCol(spark, Urls.resolveCol(spark, col("page_url"), col("href"))))
+        Urls.canonCol(Urls.resolveCol(col("page_url"), col("href"))))
       .filter(col("link_url").isNotNull)
       .withColumn("dst_host", Urls.hostCol(col("link_url")))
       .filter(col("dst_host") =!= col("src_host"))

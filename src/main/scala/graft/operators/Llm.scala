@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.SketchAggs
 import graft.operators.Ckpt.CkptOps
+import graft.plans.Kernels
 import graft.sources.Tables
 
 /** Large-scale training-data pipeline operators over the `documents`
@@ -62,26 +63,23 @@ object Llm {
     * queries hit the same single-split serialization). */
   private def widened(docs: DataFrame): DataFrame = Tables.widened(docs)
 
-  /** Gate shared by every native-kernel call site: the session must
-    * have `GraftExtensions` registered AND `spark.graft.kernels
-    * .enabled` (default true) left on. The conf is the operational
-    * escape hatch — flipping it forces every operator onto its
-    * pure-SQL fallback formulation in the SAME session, which
-    * `KernelParitySpec` uses to pin whole-query agreement between
-    * the two paths: a no-extension deployment takes exactly these
-    * branches, so the pin covers all twenty decision points
-    * end-to-end rather than per-expression. */
-  private[graft] def kernelOn(spark: SparkSession, fn: String): Boolean = {
-    val raw = spark.conf.get("spark.graft.kernels.enabled", "true")
-    val enabled = raw.trim.toLowerCase match {
+  /** Selects, at the kernel call sites that keep an independent SQL
+    * formulation (MinHash fold, SimHash, band hashes, ADC, char/gram
+    * run stats, gram hashes, fingerprint, winnow, term counts,
+    * segments, postings, cosine, SRP, dequant, centroid), between the
+    * kernel and that reference:
+    * `spark.graft.kernels.enabled`, default true. Kernels never need
+    * the session extension, so the conf is the only switch;
+    * `KernelParitySpec` flips it to pin whole-query agreement between
+    * the two formulations. */
+  private[graft] def kernelOn(spark: SparkSession): Boolean =
+    spark.conf.get("spark.graft.kernels.enabled", "true").trim.toLowerCase match {
       case "true" | "1" | "yes" | "on"  => true
       case "false" | "0" | "no" | "off" => false
       case other => throw new IllegalArgumentException(
         s"spark.graft.kernels.enabled must be a boolean ('$other' given); " +
           "use true/false (1/0, yes/no, on/off accepted)")
     }
-    enabled && spark.catalog.functionExists(fn)
-  }
 
   /** The ADC table-lookup sum shared by the three PQ scan sites
     * (`annPq`, `probeAnnIndex`, streaming `annSuspects`): approx
@@ -93,7 +91,7 @@ object Llm {
     * subscript). Both accumulate left-to-right from 0.0, so the
     * paths are bit-identical (KernelParitySpec). */
   private[graft] def adcExpr(spark: SparkSession, m: Int, ks: Int): Column =
-    if (kernelOn(spark, "graft_adc")) expr(s"graft_adc(ptab, code, $ks)")
+    if (kernelOn(spark)) Kernels("graft_adc", col("ptab"), col("code"), lit(ks))
     else expr(
       s"""aggregate(sequence(0, ${m - 1}), cast(0.0 as double),
           (a, j) -> a + element_at(ptab,
@@ -115,16 +113,16 @@ object Llm {
     * exact-duplicate cluster must produce O(groups) candidates, not
     * O(cluster²) — the cluster collapses to one representative before
     * any quadratic step. Routes through the kernel signature build
-    * when the session has it (the shipping path), the explode+fold
-    * otherwise — candidate sets are identical (signatures bit-equal,
+    * (the shipping path), or the explode+fold with kernels disabled
+    * — candidate sets are identical (signatures bit-equal,
     * LlmSpec pins it). */
   private[graft] def nearDupCandidates(docs: DataFrame): DataFrame = {
     val m = normalized(docs)
-    if (kernelOn(docs.sparkSession, "graft_minhash_sig"))
+    if (kernelOn(docs.sparkSession))
       bandJoin(repsOf(m)
         .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
         .filter(size(col("toks")) >= 3)
-        .select(col("key"), expr("graft_minhash_sig(toks)").as("s"))
+        .select(col("key"), Kernels("graft_minhash_sig", col("toks")).as("s"))
         .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig")))
     else candidatesOf(shingles(repsOf(m)))
   }
@@ -138,11 +136,11 @@ object Llm {
     * interpretively (Slice.nullSafeEval was a top frame in warm
     * llm_curate profiles); the kernel is one primitive loop,
     * bit-equal to the fold (pinned in LlmSpec). */
-  /** The band-hash expression over a `sig` column — kernel when the
-    * session has it, seed-chained xxhash64 fold otherwise (bit-equal;
+  /** The band-hash expression over a `sig` column — kernel with
+    * kernels on, seed-chained xxhash64 fold otherwise (bit-equal;
     * LlmSpec). Shared with the streaming suspects leg. */
   private[graft] def bandHashesExpr(spark: SparkSession) =
-    if (kernelOn(spark, "graft_band_hashes")) expr("graft_band_hashes(sig)")
+    if (kernelOn(spark)) Kernels("graft_band_hashes", col("sig"))
     else expr("transform(sequence(0, 31), b -> xxhash64(b, slice(sig, b*4 + 1, 4)))")
 
   private[graft] def bandsOf(sigs: DataFrame): DataFrame =
@@ -274,7 +272,7 @@ object Llm {
     * quadratic expansion.
     *
     * Two signature builds, candidate-identical (LlmSpec pins the
-    * signatures bit-equal): with GraftExtensions, `graft_minhash_sig`
+    * signatures bit-equal): with kernels on, `graft_minhash_sig`
     * computes each representative's 128-slot signature in one pass
     * over its own token array — every shingle of a key comes from ONE
     * row, so the fallback's explode → shuffle → regroup
@@ -297,14 +295,14 @@ object Llm {
     val spark = docs.sparkSession
     val m = normalized(widened(docs)).ckptLocal()
     val members = m.select(col("doc_id"), col("text_hash"))
-    if (kernelOn(spark, "graft_minhash_sig")) {
+    if (kernelOn(spark)) {
       val repToks = repsOf(m)
         .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
         .filter(size(col("toks")) >= 3)
         .repartition(spark.sparkContext.defaultParallelism)
         .ckptLocal()
       val sigs = repToks
-        .select(col("key"), expr("graft_minhash_sig(toks)").as("s"))
+        .select(col("key"), Kernels("graft_minhash_sig", col("toks")).as("s"))
         .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig"))
       val cand = bandJoin(sigs).ckptLocal()
       val candKeys = cand.select(col("hash_a").as("key"))
@@ -566,8 +564,8 @@ object Llm {
       .repartition(spark.sparkContext.defaultParallelism)
       .ckptLocal()
     val groups =
-      if (kernelOn(spark, "graft_minhash_sig"))
-        repToks.select(col("key"), expr("graft_minhash_sig(toks)").as("s"), col("toks"))
+      if (kernelOn(spark))
+        repToks.select(col("key"), Kernels("graft_minhash_sig", col("toks")).as("s"), col("toks"))
           .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig"), col("toks"))
       else
         sigsOfShingles(shinglesOfToks(repToks)).join(repToks, Seq("key"))
@@ -644,22 +642,22 @@ object Llm {
     * SQL formulation won the hot path for the same serde reason as
     * candidatesOf). Returns (key = text_hash, simhash). */
   private def simhashSigs(m: DataFrame): DataFrame = {
-    // per-representative sketch: with GraftExtensions the whole
+    // per-representative sketch: with kernels on the whole
     // bigram → md5-60-bit → ±1 votes → sign fold runs as one native
     // pass per row (graft_simhash — every bigram of a key comes from
     // ONE representative row, same argument as graft_minhash_sig);
-    // the explode + 60-column sum aggregation is the no-extension
-    // fallback. LlmSpec pins the signatures bit-equal.
+    // the explode + 60-column sum aggregation is the SQL reference
+    // formulation. LlmSpec pins the signatures bit-equal.
     val toks = repsOf(m)
       .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 2)
-    if (kernelOn(m.sparkSession, "graft_simhash"))
-      toks.select(col("key"), expr("graft_simhash(toks)").as("simhash"))
+    if (kernelOn(m.sparkSession))
+      toks.select(col("key"), Kernels("graft_simhash", col("toks")).as("simhash"))
     else simhashSigsHof(toks)
   }
 
-  /** The explode + 60-vote aggregation formulation — the
-    * no-extension fallback and the drift-pin twin of
+  /** The explode + 60-vote aggregation formulation — the SQL
+    * reference (kernels disabled) and the drift-pin twin of
     * `graft_simhash`. Takes the tokenized reps (`key`, `toks`). */
   private[graft] def simhashSigsHof(toks: DataFrame): DataFrame = {
     val bigrams = toks
@@ -781,7 +779,7 @@ object Llm {
         Tables.documents(spark, dir)
           .filter(col("text").isNotNull)
           .select(col("doc_id"), col("lang")))
-      .withColumn("pred_lang", LangId.langCol(spark,
+      .withColumn("pred_lang", LangId.langCol(
         concat(snippet, lit(" "), col("doc_id").cast("string"))))
       .groupBy(col("lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
@@ -1021,7 +1019,7 @@ object Llm {
     // second (token, doc_id)-keyed aggregate over every token
     // occurrence (the expensive half of this query's round-7 CPU)
     val grouped =
-      if (kernelOn(spark, "graft_term_counts"))
+      if (kernelOn(spark))
         termCountsOf(docs.select(col("doc_id"), col("text")))
           .groupBy(col("term").as("token"))
           .agg(sum(col("cnt")).as("corpus_freq"), count(lit(1)).as("doc_freq"))
@@ -1193,22 +1191,22 @@ object Llm {
     * Two formulations, hash-identical (PropertySpec pins them):
     * the native codegen'd kernel `graft_char_run_stats`
     * (plans/RunStats.scala — one fused pass, no regex, no
-    * per-character array) when the session has GraftExtensions, and
-    * the interpreted HOF fold (sort the char array, `aggregate` run
-    * lengths) as the no-extension fallback. The kernel exists
+    * per-character array) with kernels on, and the interpreted HOF
+    * fold (sort the char array, `aggregate` run lengths) as the SQL
+    * reference. The kernel exists
     * because the HOF form was the engine's largest remaining CPU
     * constant (12.5 CPU-s at sf0.1, round-7 bench listener): HOF
     * lambdas evaluate interpreted, and `regexp_extract_all` builds a
     * single-codepoint string per character. */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.widened(Tables.documents(spark, dir))
-    if (kernelOn(spark, "graft_char_run_stats")) charEntropyKernel(docs)
+    if (kernelOn(spark)) charEntropyKernel(docs)
     else charEntropyHof(docs)
   }
 
   private[graft] def charEntropyKernel(docs: DataFrame): DataFrame =
     docs
-      .select(col("doc_id"), expr("graft_char_run_stats(lower(text))").as("st"))
+      .select(col("doc_id"), Kernels("graft_char_run_stats", lower(col("text"))).as("st"))
       .filter(col("st.n") > 0L)
       .select(col("doc_id"),
         col("st.n").as("n_chars_ns"),
@@ -1286,7 +1284,7 @@ object Llm {
     // at 100 TB it streams through the corpus scan with zero
     // exchanges. Two hash-identical formulations (PropertySpec pins
     // them): the native codegen'd `graft_gram_stats` kernel
-    // (plans/RunStats.scala) when the session has GraftExtensions —
+    // (plans/RunStats.scala) with kernels on —
     // no interpreted `transform`/`aggregate` lambdas, no gram-array
     // materialization — and the HOF fold as the fallback.
     val spark = docs.sparkSession
@@ -1294,7 +1292,7 @@ object Llm {
       .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
     val counted =
-      if (kernelOn(spark, "graft_gram_stats")) repetitionKernelCounts(toks)
+      if (kernelOn(spark)) repetitionKernelCounts(toks)
       else repetitionHofCounts(toks)
     counted.select(col("doc_id"), col("n_bigrams"),
       round(col("max_c") / col("n_bigrams"), 6).as("top_bigram_frac"),
@@ -1305,14 +1303,14 @@ object Llm {
     * fused pass per row, no gram-array materialization. */
   private[graft] def repetitionKernelCounts(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"),
-      expr("graft_gram_stats(toks, 2)").as("bg"),
-      expr("graft_gram_stats(toks, 3)").as("tg"))
+      Kernels("graft_gram_stats", col("toks"), lit(2)).as("bg"),
+      Kernels("graft_gram_stats", col("toks"), lit(3)).as("tg"))
       .select(col("doc_id"),
         col("bg.n").as("n_bigrams"), col("bg.max_run").as("max_c"),
         col("tg.n").as("n_tri"), col("tg.n_runs").as("n_tri_d"))
 
   /** The interpreted-HOF gram counts (`transform` + sorted-run
-    * `aggregate` + `array_distinct`) — the no-extension fallback and
+    * `aggregate` + `array_distinct`) — the SQL reference and
     * the drift-pin twin of `graft_gram_stats`. Takes the tokenized
     * frame (`doc_id`, `toks`) and returns the pre-ratio counts. */
   private[graft] def repetitionHofCounts(toks: DataFrame): DataFrame = {
@@ -1358,8 +1356,8 @@ object Llm {
     // lambda evaluates interpretively per gram; the kernel is one
     // pass per row, bit-equal to the fold (pinned in LlmSpec)
     val gramsExpr =
-      if (kernelOn(docs.sparkSession, "graft_gram_hashes"))
-        expr("graft_gram_hashes(toks, 8)")
+      if (kernelOn(docs.sparkSession))
+        Kernels("graft_gram_hashes", col("toks"), lit(8))
       else expr(
         "transform(sequence(1, size(toks)-7), i -> xxhash64(concat_ws(' ', slice(toks, i, 8))))")
     // NOT widened: the gram kernel here is cheap enough (<1 CPU-s at
@@ -1427,23 +1425,23 @@ object Llm {
     // Docs under 3 tokens get a null dup_frac (outside the trigram
     // domain), coalesced to 0 in the filter — the same semantics the
     // round-7 grouped formulation had via its left join. Distinct
-    // counts come from the native graft_gram_stats kernel when the
-    // session has it (n_runs of the 1-gram/3-gram frequency map ==
+    // counts come from the native graft_gram_stats kernel with
+    // kernels on (n_runs of the 1-gram/3-gram frequency map ==
     // size(array_distinct(...)) of the materialized gram arrays,
     // without the interpreted transform + distinct per row); the HOF
-    // expressions remain the no-extension fallback.
+    // expressions remain the SQL reference.
     // widened: a single-file documents scan is one partition, which
     // would serialize the kernelized stats scan into one task
     // (measured 1.07 s of the warm query's wall at sf0.1)
     val tokenized = withSplit(widened(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
       .select(col("doc_id"), col("split"), split(lower(trim(col("text"))), "\\s+").as("toks"))
     val stats =
-      if (kernelOn(spark, "graft_gram_stats"))
+      if (kernelOn(spark))
         tokenized
           .select(col("doc_id"), col("split"), col("toks"),
             size(col("toks")).cast("long").as("n_tokens"),
-            expr("graft_gram_stats(toks, 1).n_runs").cast("int").as("n_uniq"),
-            expr("graft_gram_stats(toks, 3)").as("tg"))
+            Kernels("graft_gram_stats", col("toks"), lit(1)).getField("n_runs").cast("int").as("n_uniq"),
+            Kernels("graft_gram_stats", col("toks"), lit(3)).as("tg"))
           .withColumn("dup_frac", when(size(col("toks")) >= 3,
             (col("tg.n") - col("tg.n_runs")).cast("double") / col("tg.n")))
       else
@@ -1514,7 +1512,7 @@ object Llm {
   def dedupEmbed(spark: SparkSession, dir: String, threshold: Double = 0.35): DataFrame = {
     val v = vecs(spark, dir).filter(col("vec_id") < 200)
     val cos =
-      if (kernelOn(spark, "graft_cosine")) expr("graft_cosine(va, vb)")
+      if (kernelOn(spark)) Kernels("graft_cosine", col("va"), col("vb"))
       else expr("aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0.0 AS double), (a, x) -> a + x)" +
         " / (sqrt(aggregate(va, cast(0.0 AS double), (a, x) -> a + x * x))" +
         " * sqrt(aggregate(vb, cast(0.0 AS double), (a, x) -> a + x * x)))")
@@ -1546,21 +1544,21 @@ object Llm {
       .select(col("doc_id"),
         regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("t"))
       .filter(length(col("t")) >= 8)
-    if (kernelOn(docs.sparkSession, "graft_fingerprint"))
+    if (kernelOn(docs.sparkSession))
       // one fused pass per row — the ~300x gram table never
       // materializes and the groupBy disappears with it; the widen
       // round-robin (BEFORE the kernel, so the md5 work spreads)
       // only fires on a below-parallelism scan
       Tables.widened(normed)
-        .select(col("doc_id"), expr("graft_fingerprint(t)").as("fp"))
+        .select(col("doc_id"), Kernels("graft_fingerprint", col("t")).as("fp"))
         .select(col("doc_id"), col("fp.n_grams").as("n_grams"),
           col("fp.n_selected").as("n_selected"),
           col("fp.min_fp").as("min_fp"), col("fp.fp_xor").as("fp_xor"))
     else fingerprintHof(normed)
   }
 
-  /** The gram-explode + groupBy formulation — the no-extension
-    * fallback and the drift-pin twin of `graft_fingerprint`. Takes
+  /** The gram-explode + groupBy formulation — the SQL reference
+    * and the drift-pin twin of `graft_fingerprint`. Takes
     * the normalized (`doc_id`, `t`) frame. */
   private[graft] def fingerprintHof(normed: DataFrame): DataFrame =
     normed
@@ -1622,14 +1620,14 @@ object Llm {
       .select(col("doc_id"),
         regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("t"))
       .filter(length(col("t")) >= MinWinnowLen) // < w+k-1 chars => no full window
-    if (kernelOn(docs.sparkSession, "graft_winnow"))
+    if (kernelOn(docs.sparkSession))
       Tables.widened(normed)
-        .select(col("doc_id"), explode(expr("graft_winnow(t).sel")).as("h"))
+        .select(col("doc_id"), explode(Kernels("graft_winnow", col("t")).getField("sel")).as("h"))
     else winnowSelectedHof(normed)
   }
 
-  /** The gram-explode + two-window-pass formulation — the
-    * no-extension fallback and the drift-pin twin of `graft_winnow`.
+  /** The gram-explode + two-window-pass formulation — the SQL
+    * reference and the drift-pin twin of `graft_winnow`.
     * Takes the normalized (`doc_id`, `t`) frame (length >= 23). */
   private[graft] def winnowSelectedHof(normed: DataFrame): DataFrame = {
     val selWin = Window.partitionBy("doc_id").orderBy("pos")
@@ -1662,7 +1660,7 @@ object Llm {
     * probabilistic per gram. */
   def winnow(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    if (kernelOn(spark, "graft_winnow")) {
+    if (kernelOn(spark)) {
       // the kernel's array IS the per-doc set (distinct, sorted
       // ascending), and doc_id is the table key — the rollup is a
       // per-row fold: zero exchange, zero explode (PlanSpec pin)
@@ -1671,7 +1669,7 @@ object Llm {
           regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("t"))
         .filter(length(col("t")) >= MinWinnowLen)
       Tables.widened(normed)
-        .select(col("doc_id"), expr("graft_winnow(t).sel").as("sel"))
+        .select(col("doc_id"), Kernels("graft_winnow", col("t")).getField("sel").as("sel"))
         .filter(size(col("sel")) > 0)
         .select(col("doc_id"), size(col("sel")).cast("long").as("n_sel"),
           expr("sel[0]").as("min_sel"),
@@ -1720,9 +1718,8 @@ object Llm {
   }
 
   /** Pure-expression per-row winnow (the streaming fallback — window
-    * functions don't exist on streams, and the kernel may be absent
-    * in a session built without `spark.sql.extensions`): the same
-    * gram hashes, packed keys, min-of-each-window selection and
+    * functions don't exist on streams, and kernels may be disabled):
+    * the same gram hashes, packed keys, min-of-each-window selection and
     * position recovery as `graft_winnow`, entirely in higher-order
     * functions over one row. Requires columns `t` (normalized text,
     * length >= 23). Yields the sorted distinct selected hash array —
@@ -1835,14 +1832,13 @@ object Llm {
       .withColumn("nrm", expr("sqrt(aggregate(v, cast(0.0 AS double), (a, x) -> a + x * x))"))
 
   /** Cosine of the (v, pv) pair: the codegen'd native expression
-    * (plans/CosineSimilarity via GraftExtensions) when the session
-    * has it — one fused primitive loop inside WholeStageCodegen — and
-    * the interpreted higher-order-function formulation as a fallback
-    * for sessions built without `spark.sql.extensions`. Both compose
+    * (plans/CosineSimilarity) — one fused primitive loop inside
+    * WholeStageCodegen — or, with kernels disabled, the interpreted
+    * higher-order-function formulation. Both compose
     * the identical double arithmetic, so results hash-match either
     * way. */
   private def cosineSim(spark: SparkSession) =
-    if (kernelOn(spark, "graft_cosine")) expr("graft_cosine(v, pv)")
+    if (kernelOn(spark)) Kernels("graft_cosine", col("v"), col("pv"))
     else expr("aggregate(zip_with(v, pv, (x, y) -> x * y), cast(0.0 AS double), (a, x) -> a + x)") /
       (col("nrm") * col("pn"))
 
@@ -1867,9 +1863,8 @@ object Llm {
   /** The SRP bucket kernel in plain Scala — the UDF fallback's body,
     * exposed so PropertySpec can pin that this formulation and the
     * native expression's eval/codegen paths never drift (only one of
-    * the two runs in any given session, so drift would otherwise be
-    * invisible until a session without the extension disagreed with
-    * one that has it). */
+    * the two runs for a given `spark.graft.kernels.enabled`, so drift
+    * would otherwise stay invisible). */
   private[graft] def srpBucketsScala(v: Seq[Double]): Array[Int] = {
     import graft.plans.SrpBuckets.{Dims, Planes, Tables => NT}
     val w = graft.plans.SrpBuckets.planeWeights
@@ -1889,9 +1884,9 @@ object Llm {
     }
   }
 
-  /** Scala-UDF fallback for SRP bucket assignment (same LCG planes,
-    * identical buckets to plans/SrpBuckets) for sessions built
-    * without `spark.sql.extensions`. */
+  /** Scala-UDF reference for SRP bucket assignment (same LCG planes,
+    * identical buckets to plans/SrpBuckets), used with kernels
+    * disabled. */
   private def annBucketsUdf(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     udf(srpBucketsScala _).apply(v)
 
@@ -1911,13 +1906,12 @@ object Llm {
     * counts are the tuning knobs. */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     // Bucket assignment: the codegen'd native expression
-    // (plans/SrpBuckets via GraftExtensions) when the session has it
-    // — columnar ArrayData read, one primitive loop nest inside
-    // WholeStageCodegen — with a closure-serialized Scala-UDF
-    // fallback (same LCG planes, identical buckets) for sessions
-    // built without `spark.sql.extensions`.
+    // (plans/SrpBuckets) — columnar ArrayData read, one primitive
+    // loop nest inside WholeStageCodegen — or, with kernels disabled,
+    // a closure-serialized Scala-UDF reference (same LCG planes,
+    // identical buckets).
     val bucketsCol =
-      if (kernelOn(spark, "graft_srp_buckets")) expr("graft_srp_buckets(v)")
+      if (kernelOn(spark)) Kernels("graft_srp_buckets", col("v"))
       else annBucketsUdf(col("v"))
     val all = vecs(spark, dir)
     // Only ids cross the bucket join and the candidate dedup — the
@@ -2051,13 +2045,13 @@ object Llm {
     // folded literal into the codegen'd graft_nearest_centroid
     // kernel — columnar ArrayData in, one primitive loop nest, no
     // per-row Seq[Double] deserialization anywhere in the vector
-    // path (round-3 verdict item 5). The mapPartitions fallback
-    // (sessions without the extension) batches the same arithmetic.
+    // path (round-3 verdict item 5). The mapPartitions reference
+    // (kernels disabled) batches the same arithmetic.
     val assigned =
-      if (kernelOn(spark, "graft_nearest_centroid")) {
+      if (kernelOn(spark)) {
         val codebook = array(centroids.map(c => array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
         all.select(col("vec_id"),
-          call_function("graft_nearest_centroid", col("v"), codebook).as("cluster"))
+          Kernels("graft_nearest_centroid", col("v"), codebook).as("cluster"))
       } else {
         val bc = spark.sparkContext.broadcast(centroids)
         typed.mapPartitions { rows =>
@@ -2107,7 +2101,7 @@ object Llm {
   private[graft] def embedNearDupOn(spark: SparkSession, vecs: DataFrame,
                                     threshold: Double): DataFrame = {
     val buckets =
-      if (kernelOn(spark, "graft_srp_buckets")) expr("graft_srp_buckets(v)")
+      if (kernelOn(spark)) Kernels("graft_srp_buckets", col("v"))
       else annBucketsUdf(col("v"))
     val tabled = vecs.withColumn("buckets", buckets)
       .select(col("vec_id"), posexplode(col("buckets"))).toDF("vec_id", "t", "bucket")
@@ -2117,7 +2111,7 @@ object Llm {
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
       .distinct()
     val cos =
-      if (kernelOn(spark, "graft_cosine")) expr("graft_cosine(va, vb)")
+      if (kernelOn(spark)) Kernels("graft_cosine", col("va"), col("vb"))
       else expr("aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0.0 AS double), (a, x) -> a + x)" +
         " / (sqrt(aggregate(va, cast(0.0 AS double), (a, x) -> a + x * x))" +
         " * sqrt(aggregate(vb, cast(0.0 AS double), (a, x) -> a + x * x)))")
@@ -2177,8 +2171,8 @@ object Llm {
     // interpreted-lambda-to-one-pass swap as the gram hashes, pinned
     // byte-equal in LlmSpec
     val segsExpr =
-      if (kernelOn(docs.sparkSession, "graft_segments"))
-        expr("graft_segments(t, 10)")
+      if (kernelOn(docs.sparkSession))
+        Kernels("graft_segments", col("t"), lit(10))
       else expr(
         "transform(sequence(0, cast(floor((size(t)-1)/10) as int)), i -> array_join(slice(t, i*10+1, 10), ' '))")
     val segs = widened(docs)
@@ -2219,14 +2213,14 @@ object Llm {
 
   private[graft] def unigramLogprobOn(docs: DataFrame): DataFrame =
     unigramLogprobPath(docs,
-      kernelOn(docs.sparkSession, "graft_term_counts"))
+      kernelOn(docs.sparkSession))
 
   /** Both formulations, selectable for the kernel-vs-fallback drift
     * pin (LlmSpec): the kernel path's count-weighted mean and the
     * fallback's per-occurrence mean are algebraically equal but sum
     * floats in different orders, so the pin proves the round(...,6)
-    * output can't disagree between a no-extension session and the
-    * kernel session. */
+    * output can't disagree between the two settings of
+    * `spark.graft.kernels.enabled`. */
   private[graft] def unigramLogprobPath(docs: DataFrame, useKernel: Boolean): DataFrame = {
     if (useKernel) {
       // per-doc term counts from the kernel: the vocab aggregate and
@@ -2309,14 +2303,14 @@ object Llm {
     * exchange. */
   def invertedIndex(spark: SparkSession, dir: String): DataFrame = {
     // the digest of each term's sorted posting list: fused
-    // sort+join+md5 kernel when the session has it (the HOF
+    // sort+join+md5 kernel with kernels on (the HOF
     // formulation ran an interpreted transform per posting and
     // materialized three intermediate arrays per group), byte-equal
-    // HOF fallback otherwise — LlmSpec pins both against a
+    // HOF reference otherwise — LlmSpec pins both against a
     // hand-built canonical string
     val digest =
-      if (kernelOn(spark, "graft_postings_digest"))
-        expr("graft_postings_digest(postings)")
+      if (kernelOn(spark))
+        Kernels("graft_postings_digest", col("postings"))
       else
         md5(expr("array_join(transform(array_sort(postings), " +
           "x -> concat(cast(x.doc_id as string), ':', cast(x.pos as string))), ',')"))
@@ -2526,7 +2520,7 @@ object Llm {
 
     // ADC scan: approx dot = sum of m table lookups per (vector, probe)
     // — the codegen'd graft_adc kernel over the packed byte codes,
-    // HOF fallback without the extension (bit parity, adcExpr)
+    // HOF reference with kernels disabled (bit parity, adcExpr)
     val adc = adcExpr(spark, m, ks)
     val wq = Window.partitionBy(col("probe_id")).orderBy(col("simq").desc, col("vec_id").asc)
     val cand = codes.crossJoin(probeTab)
@@ -3005,7 +2999,7 @@ object Llm {
     // prune (at 100 TB: a partition-pruned read of nprobe/k of
     // the corpus); approx dot = cell_dot + m table lookups — the
     // codegen'd graft_adc kernel over the packed byte codes, HOF
-    // fallback without the extension (bit parity, adcExpr)
+    // reference with kernels disabled (bit parity, adcExpr)
     val adc = adcExpr(spark, m, ks)
     val wq = Window.partitionBy(col("probe_id")).orderBy(col("simq").desc, col("vec_id").asc)
     val cand = index.codes.join(broadcast(probeCells), Seq("cluster"))
@@ -3038,15 +3032,14 @@ object Llm {
     val probes = all.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
     // approximate cosine from bucket-midpoint decode: the codegen'd
-    // dequantize-dot kernel (plans/DequantDot) when the session has
-    // it — one fused primitive loop per (vector × probe) row inside
-    // WholeStageCodegen — with the higher-order-fold formulation as
-    // the no-extension fallback. Both compose the identical double
+    // dequantize-dot kernel (plans/DequantDot) — one fused primitive
+    // loop per (vector × probe) row inside WholeStageCodegen — with
+    // the higher-order-fold formulation as the SQL reference. Both compose the identical double
     // arithmetic in the identical association order (KernelParitySpec
     // pins bit agreement), so results match either way.
     val approxSim =
-      if (kernelOn(spark, "graft_dequant_dot"))
-        expr("graft_dequant_dot(code, pv, mn, mx)")
+      if (kernelOn(spark))
+        Kernels("graft_dequant_dot", col("code"), col("pv"), col("mn"), col("mx"))
       else expr(
         """aggregate(zip_with(code, pv, (c, y) ->
            (mn + (cast(c as double) + 0.5) * (mx - mn) / 255.0) * y),
@@ -3092,7 +3085,7 @@ object Llm {
   private[graft] def termCountsOf(docs: DataFrame): DataFrame =
     widened(docs)
       .select(col("doc_id"),
-        explode(expr("graft_term_counts(split(lower(trim(text)), '\\\\s+'))")).as("tc"))
+        explode(Kernels("graft_term_counts", split(lower(trim(col("text"))), "\\s+"))).as("tc"))
       .select(col("doc_id"), col("tc.term").as("term"), col("tc.cnt").as("cnt"))
 
   private[graft] def tfidfTermsOn(docs: DataFrame): DataFrame = {
@@ -3102,11 +3095,11 @@ object Llm {
     // (doc, term) — the round-8 profile put the replaced formulation's
     // CPU in the (doc_id, term) hash aggregation's string-key
     // UnsafeRow hashing, and its exchange shipped every token
-    // occurrence. The token-explode + groupBy stays as the
-    // no-extension fallback (same counts, LlmSpec pins agreement).
+    // occurrence. The token-explode + groupBy stays as the SQL
+    // reference (same counts, LlmSpec pins agreement).
     val spark = docs.sparkSession
     val tf =
-      if (kernelOn(spark, "graft_term_counts"))
+      if (kernelOn(spark))
         termCountsOf(docs)
           .select(col("doc_id"), col("term"), col("cnt").as("tf"))
           .ckptLocal()

@@ -1,22 +1,17 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** UTF8String shims for the two frontier kernels. Both call the SAME
-  * Scala walks the typed/UDF fallbacks call (sources/Urls.scala,
-  * sources/Robots.scala), so kernel and fallback paths are
-  * bit-identical by construction — KernelParitySpec pins the whole
-  * frontier query across the gate anyway. */
+/** The crawl-frontier kernels: UTF8String entry points over the
+  * Scala walks in sources/Urls.scala, sources/Robots.scala and
+  * sources/Sitemap.scala, one static call per row (built in
+  * Kernels). */
 object FrontierKernel {
 
   /** RFC 3986 canonical form, or null when the input is not an
     * absolute URL — null is the SQL-native "not a URL" verdict the
     * caller coalesces to its own sentinel. */
-  def canon(u: UTF8String): UTF8String =
+  def graft_url_canon(u: UTF8String): UTF8String =
     graft.sources.Urls.normalizeUrl(u.toString) match {
       case Some(c) => UTF8String.fromString(c)
       case None => null
@@ -25,7 +20,7 @@ object FrontierKernel {
   /** RFC 3986 §5 resolution of `ref` against `base`, or null when the
     * base is not an absolute URI (and the ref carries no scheme of
     * its own) — the discover step per extracted link. */
-  def resolve(base: UTF8String, ref: UTF8String): UTF8String =
+  def graft_url_resolve(base: UTF8String, ref: UTF8String): UTF8String =
     graft.sources.Urls.resolve(base.toString, ref.toString) match {
       case Some(t) => UTF8String.fromString(t)
       case None => null
@@ -78,15 +73,15 @@ object FrontierKernel {
     }
   }
 
-  private val caches = new ThreadLocal[java.util.HashMap[String, PolicyCache]] {
-    override def initialValue() = new java.util.HashMap[String, PolicyCache]()
+  private val caches = new ThreadLocal[java.util.HashMap[UTF8String, PolicyCache]] {
+    override def initialValue() = new java.util.HashMap[UTF8String, PolicyCache]()
   }
 
   /** RFC 9309 verdict of `agent` fetching `path` under `robots`. */
-  def allowed(robots: UTF8String, path: UTF8String, agent: String): Boolean = {
+  def graft_robots_allowed(robots: UTF8String, path: UTF8String, agent: UTF8String): Boolean = {
     val byAgent = caches.get()
     var cache = byAgent.get(agent)
-    if (cache == null) { cache = new PolicyCache(agent); byAgent.put(agent, cache) }
+    if (cache == null) { cache = new PolicyCache(agent.toString); byAgent.put(agent.clone(), cache) }
     graft.sources.Robots.isAllowed(cache.rulesFor(robots), path.toString)
   }
 
@@ -94,39 +89,40 @@ object FrontierKernel {
     * the parse comes from the shared GroupsCache (never a second
     * parse of a policy `graft_robots_allowed` already parsed on this
     * thread). Values box the Option as a Long with -1 = "no delay
-    * declared" so the map stays primitive-friendly. */
+    * declared", so a hit returns the cached box without allocating. */
   private final class DelayCache(agent: String)
       extends java.util.LinkedHashMap[UTF8String, java.lang.Long](16, 0.75f, true) {
     override def removeEldestEntry(
         e: java.util.Map.Entry[UTF8String, java.lang.Long]): Boolean = size() > 64
-    def delayFor(robots: UTF8String): Long = {
+    def delayFor(robots: UTF8String): java.lang.Long = {
       var d = get(robots)
       if (d == null) {
         d = java.lang.Long.valueOf(graft.sources.Robots.crawlDelayMs(
           groupsCaches.get().groupsFor(robots), agent).getOrElse(-1L))
         put(robots.clone(), d)
       }
-      d.longValue()
+      d
     }
   }
 
-  private val delayCaches = new ThreadLocal[java.util.HashMap[String, DelayCache]] {
-    override def initialValue() = new java.util.HashMap[String, DelayCache]()
+  private val delayCaches = new ThreadLocal[java.util.HashMap[UTF8String, DelayCache]] {
+    override def initialValue() = new java.util.HashMap[UTF8String, DelayCache]()
   }
 
-  /** `Crawl-delay` in ms governing `agent` under `robots`, or -1 when
-    * the policy declares none (the expression maps -1 to SQL NULL). */
-  def delayMs(robots: UTF8String, agent: String): Long = {
+  /** `Crawl-delay` in ms governing `agent` under `robots`, or null
+    * (SQL NULL) when the policy declares none. */
+  def graft_crawl_delay(robots: UTF8String, agent: UTF8String): java.lang.Long = {
     val byAgent = delayCaches.get()
     var cache = byAgent.get(agent)
-    if (cache == null) { cache = new DelayCache(agent); byAgent.put(agent, cache) }
-    cache.delayFor(robots)
+    if (cache == null) { cache = new DelayCache(agent.toString); byAgent.put(agent.clone(), cache) }
+    val d = cache.delayFor(robots)
+    if (d.longValue < 0) null else d
   }
 
   /** The policy's `Sitemap:` URLs as columnar ArrayData — global
     * records, agent-independent (RFC 9309 §2.3), so no per-agent
     * cache tier is needed; the scan is one bounded line walk. */
-  def sitemapUrls(robots: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def graft_sitemaps(robots: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val ss = graft.sources.Robots.sitemaps(robots.toString)
     val out = new Array[AnyRef](ss.length)
     var i = 0
@@ -135,9 +131,8 @@ object FrontierKernel {
   }
 
   /** Typed `kind \t loc` entries of one sitemap DOCUMENT (urlset /
-    * sitemapindex), document order — the per-row walk behind
-    * `graft_sitemap_entries` (sources/Sitemap.parseEntries). */
-  def sitemapEntries(xml: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+    * sitemapindex), document order (sources/Sitemap.parseEntries). */
+  def graft_sitemap_entries(xml: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val es = graft.sources.Sitemap.parseEntries(xml.toString)
     val out = new Array[AnyRef](es.length)
     var i = 0
@@ -146,193 +141,4 @@ object FrontierKernel {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
-
-/** Native Catalyst expression `graft_url_canon(url)`: RFC 3986
-  * syntax-based canonicalization as a COLUMN — the crawl frontier's
-  * per-URL hot path (seen-set keys, politeness grouping, alias
-  * collapse) without a ScalaUDF serialization boundary. NULL when
-  * the input does not parse as an absolute URL. */
-case class UrlCanon(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_canon"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    FrontierKernel.canon(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, u =>
-      s"""${ev.value} = graft.plans.FrontierKernel.canon($u);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_url_resolve(base, ref)`:
-  * RFC 3986 §5 reference resolution as a COLUMN — an extracted href
-  * ("../a", "//cdn/x", "?page=2", "#top") absolutized against its
-  * page URL, the step between `graft_html_links` and
-  * `graft_url_canon` in the discover chain. NULL when the base is
-  * not an absolute URI and the ref has no scheme of its own. */
-case class UrlResolve(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_url_resolve"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string base, string ref), got $other")
-    }
-
-  override protected def nullSafeEval(base: Any, ref: Any): Any =
-    FrontierKernel.resolve(base.asInstanceOf[UTF8String], ref.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, r) =>
-      s"""${ev.value} = graft.plans.FrontierKernel.resolve($b, $r);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native Catalyst expression `graft_sitemaps(robots_txt)`: the
-  * policy's global `Sitemap:` records (RFC 9309 §2.3) as
-  * `array<string>` — the crawl SEED discovery path, feeding
-  * `explode` + `graft_url_canon` exactly like the outlink chain. */
-case class Sitemaps(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_sitemaps"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string robots_txt argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    FrontierKernel.sitemapUrls(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, r =>
-      s"${ev.value} = graft.plans.FrontierKernel.sitemapUrls($r);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_sitemap_entries(xml)`: the typed
-  * `kind \t loc` entries of one sitemap document as a COLUMN — the
-  * seed-discovery walk (bounded, entity-safe, CDATA-aware; see
-  * sources/Sitemap) as one map-only codegen'd scan over fetched
-  * bodies. Fallback (kernels off): a ScalaUDF over the SAME
-  * `Sitemap.parseEntries` — bit-identical, pinned by
-  * KernelParitySpec. */
-case class SitemapEntries(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_sitemap_entries"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string xml argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    FrontierKernel.sitemapEntries(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, r =>
-      s"${ev.value} = graft.plans.FrontierKernel.sitemapEntries($r);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_crawl_delay(robots_txt, agent)`:
-  * the governing group's `Crawl-delay` in MILLISECONDS as a COLUMN,
-  * NULL when the policy declares none — the politeness schedule's
-  * per-host knob. `agent` must be a literal (enforced at
-  * registration); the parse is LRU-cached per thread like the
-  * verdict kernel's. */
-case class CrawlDelay(child: Expression, agent: String) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_crawl_delay"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string robots_txt argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(robots: Any): Any = {
-    val d = FrontierKernel.delayMs(robots.asInstanceOf[UTF8String], agent)
-    if (d < 0) null else java.lang.Long.valueOf(d)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val agentRef = ctx.addReferenceObj("agent", agent, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, r =>
-      s"""${ev.value} = graft.plans.FrontierKernel.delayMs($r, $agentRef);
-         |${ev.isNull} = ${ev.value} < 0;""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_robots_allowed(robots_txt, path,
-  * agent)`: the RFC 9309 verdict as a COLUMN, with the policy parse
-  * cached per thread (bounded LRU) so a broadcast-joined robots
-  * column costs one parse per distinct policy per task, not one per
-  * row. `agent` must be a literal (enforced at registration) — it
-  * selects the rule group, a query-time constant. */
-case class RobotsAllowed(left: Expression, right: Expression, agent: String)
-    extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "graft_robots_allowed"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string robots_txt, string path), got $other")
-    }
-
-  override protected def nullSafeEval(robots: Any, path: Any): Any =
-    FrontierKernel.allowed(robots.asInstanceOf[UTF8String],
-      path.asInstanceOf[UTF8String], agent)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val agentRef = ctx.addReferenceObj("agent", agent, "java.lang.String")
-    nullSafeCodeGen(ctx, ev, (r, p) =>
-      s"${ev.value} = graft.plans.FrontierKernel.allowed($r, $p, $agentRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,55 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expression `graft_minhash_sig(toks)`: the
-  * 128-slot MinHash signature (plus distinct-shingle count) of a
-  * token array, in ONE pass per row — distinct word-3-gram shingles,
-  * two xxhash64 evaluations per shingle, Kirsch-Mitzenmacher
-  * expansion `(h1 + i*h2) & (2^31-1)`, elementwise min.
-  *
-  * Replaces the explode → shuffle → `groupByKey.mapGroups` signature
-  * build in the near-dup pipeline: every shingle of a key comes from
-  * ONE representative row (exact-dup groups collapse first), so
-  * regrouping the exploded shingles was a full-working-set shuffle
-  * plus typed-encoder serde that reassembled what the scan already
-  * had in hand. Cites Llm.candidatesOf's fold (the no-extension
-  * fallback) — bit parity is guaranteed by construction:
-  *   h1 = pmod(xxhash64(1, shingle), 2^31)
-  *      = XXH64.hashUTF8String(shingle, XXH64.hashInt(1, 42)) & mask
-  * (pmod by a power of two IS the two's-complement mask), and the
-  * shingle bytes come from the same UTF8String.concatWs the SQL
-  * `concat_ws` evaluates. LlmSpec pins kernel-vs-fold equality on
-  * the real corpus.
-  */
-case class MinHashSig(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = MinHashSig.sigType
-  override def prettyName: String = "graft_minhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.MinHashSig.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_simhash(toks)`: the 60-bit
+/** The `graft_simhash(toks)` kernel: the 60-bit
   * SimHash of a token array in one pass — word bigrams (with
   * multiplicity: votes count every occurrence), md5-derived 60-bit
   * hash per bigram, ±1 bit votes, sign-threshold signature. Replaces
@@ -59,34 +15,12 @@ case class MinHashSig(child: Expression) extends UnaryExpression {
   * SQL formulation `conv(substring(md5(g), 1, 15), 16, 10)`: the
   * first 15 hex chars of the digest are bytes 0..6 plus the high
   * nibble of byte 7, folded most-significant-first. */
-case class SimHash60(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHash60.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.SimHash60.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimHash60 {
   private val Bits = 60
   private val md5 = ThreadLocal.withInitial[java.security.MessageDigest](() =>
     java.security.MessageDigest.getInstance("MD5"))
 
-  def compute(toks: ArrayData): Long = {
+  def graft_simhash(toks: ArrayData): Long = {
     val nTok = toks.numElements()
     val sp = RunStatsKernel.Space
     val votes = new Array[Int](Bits)
@@ -120,7 +54,7 @@ object SimHash60 {
   }
 }
 
-/** Native Catalyst expression `graft_band_hashes(sig)`: the 32
+/** The `graft_band_hashes(sig)` kernel: the 32
   * LSH band hashes of a 128-slot MinHash signature in one primitive
   * loop — band b hashes signature slots [4b, 4b+4). Replaces the
   * interpreted `transform(sequence(0, 31),
@@ -132,33 +66,11 @@ object SimHash60 {
   * `hashInt(b)`, then one `hashLong` per array element in order —
   * which is exactly the loop below; LlmSpec pins equality on real
   * corpus signatures. */
-case class BandHashes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_band_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<bigint> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    BandHashes.compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.BandHashes.compute($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BandHashes {
   val Bands = 32
   val RowsPerBand = 4
 
-  def compute(sig: ArrayData): GenericArrayData = {
+  def graft_band_hashes(sig: ArrayData): GenericArrayData = {
     val n = sig.numElements()
     val out = new Array[Long](Bands)
     var b = 0
@@ -181,6 +93,26 @@ object BandHashes {
   }
 }
 
+/** The `graft_minhash_sig(toks)` kernel: the
+  * 128-slot MinHash signature (plus distinct-shingle count) of a
+  * token array, in ONE pass per row — distinct word-3-gram shingles,
+  * two xxhash64 evaluations per shingle, Kirsch-Mitzenmacher
+  * expansion `(h1 + i*h2) & (2^31-1)`, elementwise min.
+  *
+  * Replaces the explode → shuffle → `groupByKey.mapGroups` signature
+  * build in the near-dup pipeline: every shingle of a key comes from
+  * ONE representative row (exact-dup groups collapse first), so
+  * regrouping the exploded shingles was a full-working-set shuffle
+  * plus typed-encoder serde that reassembled what the scan already
+  * had in hand. Cites Llm.candidatesOf's fold (the SQL
+  * reference) — bit parity is guaranteed by construction:
+  *   h1 = pmod(xxhash64(1, shingle), 2^31)
+  *      = XXH64.hashUTF8String(shingle, XXH64.hashInt(1, 42)) & mask
+  * (pmod by a power of two IS the two's-complement mask), and the
+  * shingle bytes come from the same UTF8String.concatWs the SQL
+  * `concat_ws` evaluates. LlmSpec pins kernel-vs-fold equality on
+  * the real corpus.
+  */
 object MinHashSig {
   val Slots = 128
   private val Mask = (1L << 31) - 1
@@ -190,6 +122,8 @@ object MinHashSig {
   val sigType: StructType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("sig", ArrayType(LongType, containsNull = false), nullable = false)))
+
+  def graft_minhash_sig(toks: ArrayData): GenericInternalRow = compute(toks)
 
   def compute(toks: ArrayData): GenericInternalRow = {
     val nTok = toks.numElements()

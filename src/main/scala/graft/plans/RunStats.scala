@@ -1,17 +1,20 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared run-statistics kernel behind the two codegen'd text
-  * expressions below. "Runs" of a SORTED multiset are exactly its
-  * per-value frequencies, so both expressions count frequencies and
+/** The text-statistics kernels (`graft_char_run_stats`,
+  * `graft_gram_stats`, `graft_term_counts`, `graft_fingerprint`,
+  * `graft_winnow`, `graft_postings_digest`, `graft_gram_hashes`,
+  * `graft_segments`; built in Kernels). Each replaces an interpreted
+  * higher-order-function or explode/regroup formulation with one
+  * pass per row inside WholeStageCodegen.
+  *
+  * "Runs" of a SORTED multiset are exactly its per-value
+  * frequencies, so the two run-stats kernels count frequencies and
   * fold the summary in ascending binary key order — the same terms,
   * in the same order, as the interpreted higher-order-function
   * formulations they replace (Llm.charEntropy / Llm.repetitionOn
@@ -19,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * makes the double-precision `ent_sum` bit-identical to the HOF
   * path and to the DuckDB oracle's ORDER BY-inside-aggregate.
   *
-  * Output struct (both expressions):
+  * Output struct (both run-stats kernels):
   *   n       — element count (post skip-set for the char variant)
   *   n_runs  — distinct values (== size(array_distinct(...)))
   *   max_run — largest frequency (== longest equal run when sorted)
@@ -65,7 +68,7 @@ object RunStatsKernel {
     * point (Java regex `.` matches one code point), and ascending
     * code-point order equals the UTF-8 binary order `array_sort`
     * gives single-code-point strings. */
-  def charStats(s: UTF8String): InternalRow = {
+  def graft_char_run_stats(s: UTF8String): InternalRow = {
     val str = s.toString
     val counts = new java.util.TreeMap[Integer, Array[Long]]()
     val len = str.length
@@ -96,12 +99,14 @@ object RunStatsKernel {
     * to the HOF `concat(element_at(toks, i), ' ', ...)` construction
     * (tokens come from `split` on `\s+`, so they contain no spaces
     * and no nulls, and joined-string equality is window equality). */
+  def graft_gram_stats(toks: ArrayData, gramN: Int): InternalRow = gramStats(toks, gramN)
+
   def gramStats(toks: ArrayData, gramN: Int): InternalRow = {
     val m = toks.numElements() - gramN + 1
     val counts = new java.util.TreeMap[UTF8String, Array[Long]](BinaryOrder)
     val sep = Space
     // scratch window reused across grams (concatWs copies the bytes
-    // out, so nothing retains the slots) — gramHashes already hoists
+    // out, so nothing retains the slots) — graft_gram_hashes already hoists
     // its twin; this loop allocated one array per gram
     val parts = new Array[UTF8String](gramN)
     var n = 0L
@@ -129,7 +134,7 @@ object RunStatsKernel {
     * per-document statistics (tf), removes the (doc_id, term)
     * shuffle entirely: the count that groupBy would compute after an
     * exchange happens here, inside the scan projection. */
-  def termCounts(toks: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def graft_term_counts(toks: ArrayData): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val counts = new java.util.TreeMap[UTF8String, Array[Long]](BinaryOrder)
     val n = toks.numElements()
     var i = 0
@@ -165,7 +170,7 @@ object RunStatsKernel {
     * `concat_ws` evaluates. Callers gate on size >= n (contamination
     * filters first), so the SQL's descending-sequence quirk at
     * size < n never arises. */
-  def gramHashes(toks: ArrayData, gramN: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def graft_gram_hashes(toks: ArrayData, gramN: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val m = toks.numElements() - gramN + 1
     val sp = Space
     val out = new Array[Long](math.max(m, 0))
@@ -188,7 +193,7 @@ object RunStatsKernel {
     * (`sequence(0, -1)` descends through two out-of-range slices)
     * this returns the same two empty segments — though `split` never
     * produces an empty array, so the path is theoretical. */
-  def segments(toks: ArrayData, width: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def graft_segments(toks: ArrayData, width: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val n = toks.numElements()
     val sp = Space
     if (n == 0) {
@@ -216,7 +221,7 @@ object RunStatsKernel {
     * posting and materialized the sorted struct array, the joined
     * array and the final string separately). Byte-equal to
     * md5(array_join(transform(array_sort(ps), ...), ',')). */
-  def postingsDigest(ps: ArrayData): UTF8String = {
+  def graft_postings_digest(ps: ArrayData): UTF8String = {
     val n = ps.numElements()
     val docs = new Array[Long](n)
     val poss = new Array[Int](n)
@@ -274,7 +279,7 @@ object RunStatsKernel {
     * count/min/xor exactly like the SQL aggregate (empty selection →
     * -1/-1). Replaces the 300× gram-row explode + conv hex parse +
     * groupBy — the gram table never materializes. */
-  def fingerprintStats(t: UTF8String): InternalRow = {
+  def graft_fingerprint(t: UTF8String): InternalRow = {
     val bytes = t.getBytes
     // code-point start offsets (UTF-8 continuation bytes are 10xxxxxx)
     var cp = 0
@@ -335,7 +340,7 @@ object RunStatsKernel {
 
   /** Winnowed fingerprint set of a normalized string in one pass:
     * every 8-code-point gram is md5-hashed exactly like
-    * `fingerprintStats` (first 7 digest bytes = the 56-bit gram
+    * `graft_fingerprint` (first 7 digest bytes = the 56-bit gram
     * hash), each gram gets the packed selection key above, each
     * window of 16 consecutive gram positions selects its min-key
     * gram, and the distinct FULL 56-bit hashes of the selected
@@ -344,7 +349,7 @@ object RunStatsKernel {
     * return an empty selection. Positions are capped at 2^24 - 1
     * grams (~16.7 M chars) — the packing's domain; training-corpus
     * documents sit orders of magnitude below it. */
-  def winnow(t: UTF8String): InternalRow = {
+  def graft_winnow(t: UTF8String): InternalRow = {
     val bytes = t.getBytes
     var cp = 0
     var i = 0
@@ -438,230 +443,4 @@ object RunStatsKernel {
     }
     new GenericInternalRow(Array[Any](n, runs, maxRun, s))
   }
-}
-
-/** Native Catalyst expression `graft_char_run_stats(str)`: character
-  * frequency/run summary of a string in ONE pass — no regex scans, no
-  * per-character single-codepoint string array, no interpreted
-  * `aggregate` lambda. Replaces the hottest remaining interpreted-HOF
-  * CPU in the engine (the round-7 bench CPU listener put
-  * `llm_char_entropy` at 12.5 CPU-s at sf0.1, almost all of it the
-  * `regexp_extract_all` + `array_sort` + lambda fold this fuses).
-  * The loop body is a static call, so the expression stays inside the
-  * enclosing WholeStageCodegen span like CosineSimilarity. */
-case class CharRunStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = RunStatsKernel.statsType
-  override def prettyName: String = "graft_char_run_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.charStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.plans.RunStatsKernel.charStats($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_term_counts(toks)`: the per-row
-  * term frequency array (see RunStatsKernel.termCounts). The
-  * token-level `explode` + `groupBy(doc_id, term)` it replaces
-  * shuffles every token occurrence on a variable-width string pair —
-  * the round-8 profile's top frame for tf-idf (UnsafeRow string
-  * hashing in the fast hash map); this computes the same counts
-  * inside the scan and ships one row per DISTINCT (doc, term). */
-case class TermCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = RunStatsKernel.termCountsType
-  override def prettyName: String = "graft_term_counts"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.termCounts(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RunStatsKernel.termCounts($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_fingerprint(t)`: rolling
-  * char-8-gram fingerprint stats (see
-  * RunStatsKernel.fingerprintStats). */
-case class FingerprintStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = RunStatsKernel.fingerprintType
-  override def prettyName: String = "graft_fingerprint"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.fingerprintStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.plans.RunStatsKernel.fingerprintStats($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_winnow(t)`: the winnowed
-  * fingerprint set of a normalized string (see RunStatsKernel.winnow)
-  * — one fused pass that replaces the gram explode plus TWO window
-  * functions (the min-of-window selection and the selected-position
-  * recovery) of the SQL formulation; the ~300x gram table and both
-  * per-doc window sorts never materialize. */
-case class WinnowSel(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = RunStatsKernel.winnowType
-  override def prettyName: String = "graft_winnow"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.winnow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.plans.RunStatsKernel.winnow($s);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_postings_digest(ps)`: md5 of
-  * the canonical sorted "doc:pos,..." posting string for an inverted
-  * index group (see RunStatsKernel.postingsDigest). */
-case class PostingsDigest(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_postings_digest"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(s: StructType, _) if s.length == 2 &&
-        s(0).dataType == LongType && s(1).dataType == IntegerType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<struct<bigint,int>>, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.postingsDigest(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RunStatsKernel.postingsDigest($a);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_gram_stats(toks, n)`: word
-  * n-gram frequency/run summary of a token array in one pass —
-  * replaces the interpreted `transform(sequence(...))` gram
-  * materialization plus `aggregate` fold plus `array_distinct` of
-  * the repetition metrics (Llm.repetitionOn). `n` must be a literal
-  * (enforced at registration in GraftExtensions) so the window width
-  * is a compile-time constant in both eval and codegen. */
-case class GramStats(child: Expression, gramN: Int) extends UnaryExpression {
-  require(gramN >= 1, "graft_gram_stats requires n >= 1")
-
-  override def dataType: DataType = RunStatsKernel.statsType
-  override def prettyName: String = "graft_gram_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.gramStats(input.asInstanceOf[ArrayData], gramN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RunStatsKernel.gramStats($a, $gramN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_gram_hashes(toks, n)`: 64-bit
-  * xxhash per word n-gram in one pass — the hashed-gram side of the
-  * contamination overlap join without the interpreted
-  * transform/slice/concat_ws lambda (reference: the GPT-3-style
-  * 8-gram overlap decontamination the SQL fold implements). `n` is a
-  * literal, enforced at registration. */
-case class GramHashes(child: Expression, gramN: Int) extends UnaryExpression {
-  require(gramN >= 1, "graft_gram_hashes requires n >= 1")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_gram_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.gramHashes(input.asInstanceOf[ArrayData], gramN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RunStatsKernel.gramHashes($a, $gramN);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression `graft_segments(toks, w)`: the
-  * fixed-width token spans of the C4-style segment dedup in one pass
-  * — byte-equal to the `array_join(slice(...), ' ')` lambda it
-  * replaces. `w` is a literal, enforced at registration. */
-case class Segments(child: Expression, width: Int) extends UnaryExpression {
-  require(width >= 1, "graft_segments requires width >= 1")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_segments"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<string> argument, got ${other.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    RunStatsKernel.segments(input.asInstanceOf[ArrayData], width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.RunStatsKernel.segments($a, $width);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

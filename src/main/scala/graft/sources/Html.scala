@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Kernels
+
 /** HTML → text extraction — the missing step between a crawl
   * response body (`Warc.warcEntity` / `bodyToText`) and the
   * quality / dedup / chunking family, which all want prose, not
@@ -212,17 +214,11 @@ object Html {
 
   /** The COLUMN-level extraction API — how the real crawl chain
     * composes (WARC entity body → html text → quality/chunk/dedup)
-    * without typed user code. Kernel path: the codegen'd
-    * `graft_html_text` expression (plans/HtmlText) — per-row static
-    * call inside WholeStageCodegen, no ScalaUDF serialization
-    * boundary in a scan that runs once per crawl document at 100 TB.
-    * Fallback (no GraftExtensions / kernels disabled): a ScalaUDF
-    * over the SAME Scala function, so the paths are bit-identical
-    * (KernelParitySpec). */
-  def textCol(spark: SparkSession, html: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_html_text"))
-      call_function("graft_html_text", html)
-    else udf((s: String) => extractText(s)).apply(html)
+    * without typed user code: the `graft_html_text` kernel
+    * (plans/HtmlTextKernel), a per-row static call inside
+    * WholeStageCodegen with no ScalaUDF serialization boundary in a
+    * scan that runs once per crawl document at 100 TB. */
+  def textCol(html: Column): Column = Kernels("graft_html_text", html)
 
   private def isAsciiWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == 11.toChar || c == '\f' || c == '\r'
@@ -355,13 +351,9 @@ object Html {
 
   /** The COLUMN-level link extraction API — `array<string>` of raw
     * outlink candidates per page, for `explode` + `Urls.resolveCol` +
-    * `Urls.canonCol` to turn into frontier candidates. Kernel path:
-    * the codegen'd `graft_html_links` (plans/HtmlText); fallback: a
-    * ScalaUDF over the SAME walk, bit-identical (KernelParitySpec). */
-  def linksCol(spark: SparkSession, html: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_html_links"))
-      call_function("graft_html_links", html)
-    else udf((s: String) => if (s == null) null else extractLinks(s)).apply(html)
+    * `Urls.canonCol` to turn into frontier candidates: the
+    * `graft_html_links` kernel (plans/HtmlTextKernel). */
+  def linksCol(html: Column): Column = Kernels("graft_html_links", html)
 
   /** Per-anchor text cap — link-context features want a phrase, not
     * a hostile page-sized anchor; the walk keeps scanning to the
@@ -469,15 +461,8 @@ object Html {
   /** The COLUMN-level anchor API — `array<string>` of
     * `href \t anchor_text` rows (framing is injection-proof: hrefs
     * strip raw tabs, anchor whitespace collapses to single spaces).
-    * Kernel path: the codegen'd `graft_link_anchors`
-    * (plans/HtmlText); fallback: a ScalaUDF over the SAME walk,
-    * bit-identical (KernelParitySpec). */
-  def anchorsCol(spark: SparkSession, html: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_link_anchors"))
-      call_function("graft_link_anchors", html)
-    else udf((s: String) =>
-      if (s == null) null else extractAnchors(s).map { case (h, a) => s"$h\t$a" }
-    ).apply(html)
+    * The `graft_link_anchors` kernel (plans/HtmlTextKernel). */
+  def anchorsCol(html: Column): Column = Kernels("graft_link_anchors", html)
 
   /** The ORACLED registry leg (`llm_html_extract`): every document
     * is wrapped in a synthesized page exercising each extraction
@@ -486,8 +471,8 @@ object Html {
     * parsing), named + numeric character references, and the
     * document text ENTITY-ESCAPED (so `&`/`<`/`>` in real prose
     * round-trip through escape → extract). The page is synthesized
-    * COLUMNAR (concat/replace) and extracted via `textCol`, so with
-    * GraftExtensions the whole query is one WholeStageCodegen scan
+    * COLUMNAR (concat/replace) and extracted via `textCol`, so the
+    * whole query is one WholeStageCodegen scan
     * projection — no mapPartitions, no UDF (PlanSpec pins it). The
     * REAL extractor runs distributed; DuckDB restates the
     * closed-form result: `'Doc & ' || doc_id || ' ' ||
@@ -507,7 +492,7 @@ object Html {
         "if (1 < 2) { emit(\"<fake>\"); }</script>\n</body></html>"))
     Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
-      .select(col("doc_id"), textCol(spark, page).as("extracted_text"))
+      .select(col("doc_id"), textCol(page).as("extracted_text"))
   }
 
   /** The ORACLED outlink-discovery leg (`llm_html_links`) — the
@@ -549,12 +534,12 @@ object Html {
     Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
       .select(col("doc_id"), base.as("base_url"),
-        linksCol(spark, page).as("links"))
+        linksCol(page).as("links"))
       .select(col("doc_id"), col("base_url"), posexplode(col("links")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("link_no"),
         coalesce(
-          graft.sources.Urls.canonCol(spark,
-            graft.sources.Urls.resolveCol(spark, col("base_url"), col("col"))),
+          graft.sources.Urls.canonCol(
+            graft.sources.Urls.resolveCol(col("base_url"), col("col"))),
           lit("!")).as("url")) // failure is visible, never silently dropped
   }
 
@@ -603,7 +588,7 @@ object Html {
     // columnar half: html -> visible text -> whitespace token count,
     // one codegen projection on top of the byte-walk scan
     recovered
-      .select(col("doc_id"), textCol(spark, col("html")).as("extracted_text"))
+      .select(col("doc_id"), textCol(col("html")).as("extracted_text"))
       // extraction output is single-space collapsed and starts with
       // "Doc & <id>", so it is never empty and split-on-space = tokens
       .withColumn("n_tokens", size(split(col("extracted_text"), " ")).cast("long"))

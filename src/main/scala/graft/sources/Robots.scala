@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Kernels
+
 /** robots.txt (RFC 9309, the Robots Exclusion Protocol) — the crawl
   * POLICY layer of the ingestion story: a corpus pipeline must be
   * able to re-evaluate "was this fetch allowed" at scale (policy
@@ -159,13 +161,9 @@ object Robots {
 
   /** The COLUMN-level sitemap API: `array<string>` of the policy's
     * sitemap URLs (empty array when none), for `explode` +
-    * `Urls.canonCol` to turn into crawl seeds. Kernel path:
-    * `graft_sitemaps` (plans/Frontier); fallback: a null-safe
-    * ScalaUDF over the same scan. */
-  def sitemapsCol(spark: SparkSession, robotsTxt: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_sitemaps"))
-      call_function("graft_sitemaps", robotsTxt)
-    else udf((r: String) => if (r == null) null else sitemaps(r)).apply(robotsTxt)
+    * `Urls.canonCol` to turn into crawl seeds: the `graft_sitemaps`
+    * kernel (plans/Frontier). */
+  def sitemapsCol(robotsTxt: Column): Column = Kernels("graft_sitemaps", robotsTxt)
 
   /** The `Crawl-delay` governing `agent`, in MILLISECONDS — same
     * group selection as `rulesFor` (longest agent token, `*`
@@ -184,15 +182,11 @@ object Robots {
 
   /** The COLUMN-level delay API: per-policy `Crawl-delay` in ms, NULL
     * when the policy declares none (the caller coalesces its own
-    * default) or on null input. Kernel path: `graft_crawl_delay`
+    * default) or on null input: the `graft_crawl_delay` kernel
     * (plans/Frontier, per-thread LRU over the parse like the verdict
-    * kernel); fallback: a null-safe ScalaUDF over the same walk. */
-  def delayCol(spark: SparkSession, robotsTxt: Column,
-      agent: String = "graftbot/1.0"): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_crawl_delay"))
-      call_function("graft_crawl_delay", robotsTxt, lit(agent))
-    else udf((r: String) =>
-      if (r == null) None else crawlDelayMs(parse(r), agent)).apply(robotsTxt)
+    * kernel). */
+  def delayCol(robotsTxt: Column, agent: String = "graftbot/1.0"): Column =
+    Kernels("graft_crawl_delay", robotsTxt, lit(agent))
 
   /** Does `pattern` (with `*` wildcards, optional trailing `$`
     * anchor) match a prefix of `path`? Iterative backtracking over
@@ -215,7 +209,7 @@ object Robots {
   /** Tri-state bounded-match verdicts. */
   private final val NoMatch = 0
   private final val Matched = 1
-  private final val Exhausted = -1
+  private[graft] final val Exhausted = -1
 
   private[graft] def matchBounded(pattern: String, path: String): Int = {
     if (pattern.isEmpty) return NoMatch // empty pattern matches nothing
@@ -272,23 +266,14 @@ object Robots {
   }
 
   /** The COLUMN-level verdict API: "may `agent` fetch `path` under
-    * `robotsTxt`" as a plain boolean column. Kernel path: the
-    * codegen'd `graft_robots_allowed` (plans/Frontier), whose
+    * `robotsTxt`" as a plain boolean column: the
+    * `graft_robots_allowed` kernel (plans/Frontier), whose
     * per-thread bounded LRU runs the policy parse once per DISTINCT
     * robots.txt per task — a broadcast-joined policy column costs
-    * ~one parse per host per task, not one per row. Fallback: a
-    * ScalaUDF over the same parse+match (correct, but re-parsing per
-    * row — the kernel is the production path). Null in → null out on
-    * BOTH paths: the kernel's nullSafeEval skips nulls, so the
-    * fallback must too or the two stop being bit-identical. */
-  def allowedCol(spark: SparkSession, robotsTxt: Column, path: Column,
-      agent: String = "graftbot/1.0"): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_robots_allowed"))
-      call_function("graft_robots_allowed", robotsTxt, path, lit(agent))
-    else udf((r: String, p: String) =>
-      if (r == null || p == null) None
-      else Some(isAllowed(rulesFor(parse(r), agent), p)))
-      .apply(robotsTxt, path)
+    * ~one parse per host per task, not one per row. Null in → null
+    * out. */
+  def allowedCol(robotsTxt: Column, path: Column, agent: String = "graftbot/1.0"): Column =
+    Kernels("graft_robots_allowed", robotsTxt, path, lit(agent))
 
   /** The ORACLED seed-discovery leg (`llm_sitemap_seeds`) — where a
     * crawl STARTS: each host's robots.txt names its sitemaps
@@ -312,10 +297,10 @@ object Robots {
       lit(".xml\nAllow: /\nSitemap: https://"), h, lit("/sitemap-index.xml\n"))
     Tables.documents(spark, dir)
       .filter(col("text").isNotNull)
-      .select(col("doc_id"), sitemapsCol(spark, robotsTxt).as("maps"))
+      .select(col("doc_id"), sitemapsCol(robotsTxt).as("maps"))
       .select(col("doc_id"), posexplode(col("maps")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("sitemap_no"),
-        coalesce(graft.sources.Urls.canonCol(spark, col("col")), lit("!"))
+        coalesce(graft.sources.Urls.canonCol(col("col")), lit("!"))
           .as("sitemap_url")) // failure is visible, never silently dropped
   }
 
@@ -355,6 +340,6 @@ object Robots {
       // verdicts via the graft_robots_allowed column kernel — the
       // policy parse runs once per thread (LRU), the whole query is
       // one codegen scan projection
-      .withColumn("allowed", allowedCol(spark, lit(robotsTxt), col("url_path")))
+      .withColumn("allowed", allowedCol(lit(robotsTxt), col("url_path")))
   }
 }

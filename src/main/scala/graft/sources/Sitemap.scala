@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Kernels
+
 /** Sitemap DOCUMENT parsing — the hop `llm_sitemap_seeds` stops short
   * of (the round-19 verdict's item 2): robots.txt names sitemap URLs,
   * but the URLs a crawl actually seeds from live INSIDE those
@@ -143,16 +145,9 @@ object Sitemap {
 
   /** The COLUMN-level entries API: `array<string>` of
     * `kind \t loc` rows (the two-field framing is safe because locs
-    * containing control characters are dropped at parse). Kernel
-    * path: the codegen'd `graft_sitemap_entries` (plans/Frontier);
-    * fallback: a null-safe ScalaUDF over the SAME `parseEntries`,
-    * bit-identical across the gate (KernelParitySpec). */
-  def entriesCol(spark: SparkSession, xml: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_sitemap_entries"))
-      call_function("graft_sitemap_entries", xml)
-    else udf((s: String) =>
-      if (s == null) null else parseEntries(s).map { case (k, l) => s"$k\t$l" }
-    ).apply(xml)
+    * containing control characters are dropped at parse): the
+    * `graft_sitemap_entries` kernel (plans/Frontier). */
+  def entriesCol(xml: Column): Column = Kernels("graft_sitemap_entries", xml)
 
   /** Depth-capped sitemap-index EXPANSION — the crawl-side recursion:
     * starting from `seeds` (canonical sitemap URLs, e.g.
@@ -168,7 +163,6 @@ object Sitemap {
     * first depth. Driver work is `maxDepth` bounded job rounds; the
     * data itself never collects. */
   def expand(fetched: DataFrame, seeds: DataFrame, maxDepth: Int = 2): DataFrame = {
-    val spark = fetched.sparkSession
     var frontier = seeds.select(col("sitemap_url")).distinct()
     var seen = frontier
     var pages: DataFrame = null
@@ -177,11 +171,11 @@ object Sitemap {
       val parsed = frontier
         .join(fetched, Seq("sitemap_url"))
         .select(col("sitemap_url").as("via_sitemap"),
-          explode(entriesCol(spark, col("xml"))).as("entry"))
+          explode(entriesCol(col("xml"))).as("entry"))
         .select(col("via_sitemap"),
           substring_index(col("entry"), "\t", 1).as("kind"),
           substring_index(col("entry"), "\t", -1).as("loc"))
-        .withColumn("loc_canon", Urls.canonCol(spark, col("loc")))
+        .withColumn("loc_canon", Urls.canonCol(col("loc")))
         .filter(col("loc_canon").isNotNull)
       val pageRows = parsed.filter(col("kind") === "url")
         .select(col("loc_canon").as("page_url"), col("via_sitemap"),
@@ -245,12 +239,12 @@ object Sitemap {
       .filter(col("text").isNotNull)
       .select(col("doc_id"), c.as("sitemap_case"), xml.as("xml"))
       .select(col("doc_id"), col("sitemap_case"),
-        posexplode(entriesCol(spark, col("xml"))))
+        posexplode(entriesCol(col("xml"))))
       .select(col("doc_id"), col("sitemap_case"),
         (col("pos") + 1).cast("long").as("entry_no"),
         substring_index(col("col"), "\t", 1).as("kind"),
         coalesce(
-          Urls.canonCol(spark, substring_index(col("col"), "\t", -1)),
+          Urls.canonCol(substring_index(col("col"), "\t", -1)),
           lit("!")).as("loc_url"))
   }
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.plans.Kernels
+
 /** URL canonicalization (RFC 3986 syntax-based normalization, §6.2.2)
   * — the crawl-frontier dedup primitive: the same resource arrives
   * under `HTTP://ExAmPle.com:80/a/../b` and `http://example.com/b`,
@@ -218,28 +220,16 @@ object Urls {
 
   /** The COLUMN-level resolution API — per extracted link in the
     * discover path, so it must stay inside WholeStageCodegen like its
-    * neighbors. Kernel: the codegen'd `graft_url_resolve`
-    * (plans/Frontier); fallback: a ScalaUDF over the SAME `resolve`,
-    * bit-identical across the gate (KernelParitySpec). NULL on null
-    * inputs or an unresolvable (scheme-less) base. */
-  def resolveCol(spark: SparkSession, base: Column, ref: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_url_resolve"))
-      call_function("graft_url_resolve", base, ref)
-    else udf((b: String, r: String) =>
-      if (b == null || r == null) None else resolve(b, r)).apply(base, ref)
+    * neighbors: the `graft_url_resolve` kernel (plans/Frontier). NULL
+    * on null inputs or an unresolvable (scheme-less) base. */
+  def resolveCol(base: Column, ref: Column): Column = Kernels("graft_url_resolve", base, ref)
 
   /** The COLUMN-level canonicalization API — the frontier's per-URL
     * hot path (seen-set keys, politeness grouping, alias collapse)
-    * as a plain column, NULL when the input is not an absolute URL.
-    * Kernel path: the codegen'd `graft_url_canon` (plans/Frontier) —
-    * a static call inside WholeStageCodegen; fallback: a ScalaUDF
-    * over the SAME `normalizeUrl`, so the paths agree bit-for-bit
-    * (KernelParitySpec pins the whole frontier query across the
-    * gate). */
-  def canonCol(spark: SparkSession, url: Column): Column =
-    if (graft.operators.Llm.kernelOn(spark, "graft_url_canon"))
-      call_function("graft_url_canon", url)
-    else udf((s: String) => normalizeUrl(s).orNull).apply(url)
+    * as a plain column, NULL when the input is not an absolute URL:
+    * the `graft_url_canon` kernel (plans/Frontier), a static call
+    * inside WholeStageCodegen. */
+  def canonCol(url: Column): Column = Kernels("graft_url_canon", url)
 
   /** Host (authority) extraction from a URL column — the frontier,
     * schedule and link-graph keying primitive, shared so every
@@ -351,15 +341,15 @@ object Urls {
       lit("<html><body><!-- <a href=\"http://decoy.example.com/never\"> -->\n<a href=\""),
       primary, lit("\">p</a> <a href='"), alias, lit("'>a</a></body></html>"))
     val candidates = docs
-      .select(col("doc_id"), explode(Html.linksCol(spark, page)).as("ref"))
-      .select(col("doc_id"), resolveCol(spark,
+      .select(col("doc_id"), explode(Html.linksCol(page)).as("ref"))
+      .select(col("doc_id"), resolveCol(
         lit("http://seed.example.com/frontier"), col("ref")).as("url"))
 
     // 2. canonical key + frontier keys (host for the robots join,
     //    query-less path for the verdict) — columnar, parse failure
     //    visible as the '!' sentinel
     val canon = candidates
-      .withColumn("canonical_url", coalesce(canonCol(spark, col("url")), lit("!")))
+      .withColumn("canonical_url", coalesce(canonCol(col("url")), lit("!")))
       .withColumn("host", hostCol(col("canonical_url")))
       .withColumn("path",
         regexp_extract(col("canonical_url"), "^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)", 1))
@@ -380,7 +370,7 @@ object Urls {
     //    through as allowed (RFC 9309 — absent policy restricts
     //    nothing) instead of silently vanishing from the frontier.
     canon.join(broadcast(hosts), Seq("host"), "left_outer")
-      .withColumn("allowed", Robots.allowedCol(spark,
+      .withColumn("allowed", Robots.allowedCol(
         coalesce(col("robots_txt"), lit("")), col("path")))
       .groupBy(col("canonical_url"))
       .agg(first(col("host")).as("host"),
@@ -430,7 +420,7 @@ object Urls {
         when(length(col("source")) % 2 === 0, lit(evenPolicy))
           .otherwise(lit(oddPolicy)).as("robots_txt"))
       .select(col("host"),
-        Robots.delayCol(spark, col("robots_txt")).as("declared_delay_ms"))
+        Robots.delayCol(col("robots_txt")).as("declared_delay_ms"))
     val w = Window.partitionBy(col("host"))
       .orderBy(col("first_doc_id"), col("canonical_url"))
     urlFrontier(spark, dir)
@@ -467,6 +457,6 @@ object Urls {
       .filter(col("text").isNotNull)
       .select(col("doc_id"), messy.as("url"))
       .withColumn("canonical_url",
-        coalesce(canonCol(spark, col("url")), lit("!"))) // failure is visible
+        coalesce(canonCol(col("url")), lit("!"))) // failure is visible
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 
 import scala.concurrent.duration._
 
-import graft.plans.Dgim
+import graft.plans.{Dgim, Kernels}
 
 /** Structured Streaming surface (SURVEY §2.9): the reference IS a
   * stream processor — Kafka consumer feeding an in-memory windowed
@@ -423,10 +423,9 @@ object Streaming {
     * batch leg, the same split as dedup. */
   def frontierStream(urls: DataFrame, robots: DataFrame,
       agent: String = "graftbot/1.0", lateness: String = "1 hour"): DataFrame = {
-    val spark = urls.sparkSession
     urls.select(col("cand_id"), col("ts"), col("url"))
       .withColumn("canonical_url",
-        coalesce(graft.sources.Urls.canonCol(spark, col("url")), lit("!")))
+        coalesce(graft.sources.Urls.canonCol(col("url")), lit("!")))
       .withColumn("host", graft.sources.Urls.hostCol(col("canonical_url")))
       .withColumn("path",
         regexp_extract(col("canonical_url"), "^[a-z][a-z0-9+.-]*://[^/?#]*(/[^?#]*)", 1))
@@ -436,7 +435,7 @@ object Streaming {
       // rows) from the frontier. The coalesce-to-"" makes the absent
       // policy parse to zero rules -> allowed.
       .join(broadcast(robots), Seq("host"), "left_outer")
-      .withColumn("allowed", graft.sources.Robots.allowedCol(spark,
+      .withColumn("allowed", graft.sources.Robots.allowedCol(
         coalesce(col("robots_txt"), lit("")), col("path"), agent))
       .select(col("cand_id"), col("ts"), col("canonical_url"), col("host"), col("allowed"))
       .withWatermark("ts", lateness)
@@ -536,8 +535,8 @@ object Streaming {
       .withColumn("sh", array_distinct(expr(
         "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")))
     val sig =
-      if (Llm.kernelOn(spark, "graft_minhash_sig"))
-        withSh.withColumn("sig", expr("graft_minhash_sig(toks)").getField("sig"))
+      if (Llm.kernelOn(spark))
+        withSh.withColumn("sig", Kernels("graft_minhash_sig", col("toks")).getField("sig"))
       else withSh.withColumn("sig", expr(Llm.rowSigSql))
     val streamBands = sig
       .select(col("doc_id"), col("ts"), posexplode(Llm.bandHashesExpr(spark)))
@@ -580,9 +579,9 @@ object Streaming {
         regexp_replace(lower(trim(col("text"))), "\\s+", " ").as("t"))
       .filter(length(col("t")) >= Llm.MinWinnowLen)
     val sel =
-      if (Llm.kernelOn(spark, "graft_winnow"))
+      if (Llm.kernelOn(spark))
         normed.select(col("doc_id"), col("ts"),
-          explode(expr("graft_winnow(t).sel")).as("h"))
+          explode(Kernels("graft_winnow", col("t")).getField("sel")).as("h"))
       else
         Llm.withRowWinnowCols(normed)
           .select(col("doc_id"), col("ts"),

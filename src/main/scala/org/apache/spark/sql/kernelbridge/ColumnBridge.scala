@@ -1,0 +1,15 @@
+package org.apache.spark.sql.kernelbridge
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+
+/** Column <-> Catalyst expression conversion for the engine's kernel
+  * columns. Spark keeps both converters `private[sql]`; this object
+  * lives under `org.apache.spark.sql` only to reach them. `expression`
+  * converts eagerly, so a `lit(...)` argument arrives as a `Literal`
+  * that the kernel table can check. */
+object ColumnBridge {
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
+}

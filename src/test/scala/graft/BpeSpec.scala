@@ -159,39 +159,27 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
-  test("trained-model encode kernel equals the ScalaUDF fallback on real corpus text") {
+  test("trained-model encode kernel equals Bpe.encode on real corpus text") {
     val s = spark
+    import org.apache.spark.sql.functions.col
     val docs = graft.sources.Tables.documents(s, TestSpark.sf)
       .select("doc_id", "text").filter("text is not null")
     // a REAL trained table (not the seed): merges learned from the
     // corpus itself, the production shape tokensCol exists for
     val merges = Bpe.trainFromCorpus(docs, "text", numMerges = 256)
     assert(merges.nonEmpty)
-    def run(kernels: Boolean): Map[Long, Seq[String]] = {
-      s.conf.set("spark.graft.kernels.enabled", kernels.toString)
-      try docs.select(org.apache.spark.sql.functions.col("doc_id"),
-          Bpe.tokensCol(s, merges)(org.apache.spark.sql.functions.col("text")).as("toks"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      finally s.conf.unset("spark.graft.kernels.enabled")
-    }
-    val kernel = run(kernels = true)
-    val fallback = run(kernels = false)
-    assert(kernel.nonEmpty && kernel.keySet == fallback.keySet)
+    val encoded = docs.select(col("doc_id"), Bpe.tokensCol(merges)(col("text")).as("toks"))
+    val kernel = encoded.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(kernel.nonEmpty)
     val ranks = Bpe.ranksOf(merges)
     val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    for ((id, toks) <- kernel) {
-      assert(toks == fallback(id), s"doc $id: kernel != UDF fallback")
-      // both paths must also equal the uncached driver reference
+    assert(kernel.keySet == texts.keySet)
+    for ((id, toks) <- kernel)
       assert(toks == Bpe.encode(texts(id), ranks).toSeq,
-        s"doc $id: distributed encode != driver reference")
-    }
-    // plan pin: the kernel path is the native expression (no ScalaUDF
-    // dispatch on the production encode), the fallback is the UDF
-    s.conf.set("spark.graft.kernels.enabled", "true")
-    val kernelPlan =
-      try docs.select(Bpe.tokensCol(s, merges)(org.apache.spark.sql.functions.col("text")))
-        .queryExecution.executedPlan.toString
-      finally s.conf.unset("spark.graft.kernels.enabled")
+        s"doc $id: distributed encode != Bpe.encode")
+    // plan pin: the production encode is the native expression, no
+    // ScalaUDF dispatch
+    val kernelPlan = encoded.queryExecution.executedPlan.toString
     assert(kernelPlan.contains("graft_bpe_tokens_with"),
       "trained-model encode must plan the native kernel expression")
     assert(!kernelPlan.contains("UDF"),

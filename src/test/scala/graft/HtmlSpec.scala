@@ -136,23 +136,16 @@ class HtmlSpec extends AnyFunSuite {
     assert(extractLinks(null) == Nil)
   }
 
-  test("linksCol null semantics match across the kernel gate: null in, null out") {
+  test("linksCol null semantics: null in, null out") {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val df = Seq((1L, "<a href=\"/x\">t</a>"), (2L, null.asInstanceOf[String]))
       .toDF("id", "html")
-    def run(on: Boolean): Map[Long, Any] = {
-      spark.conf.set("spark.graft.kernels.enabled", on.toString)
-      try df.select(col("id"), graft.sources.Html.linksCol(spark, col("html")).as("l"))
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) null else r.getSeq[String](1).toList)).toMap
-      finally spark.conf.unset("spark.graft.kernels.enabled")
-    }
-    val kernel = run(on = true)
-    assert(kernel == Map(1L -> List("/x"), 2L -> null))
-    assert(run(on = false) == kernel,
-      "the ScalaUDF fallback must be null-safe exactly like the kernel (null html -> NULL, not [])")
+    val links = df.select(col("id"), graft.sources.Html.linksCol(col("html")).as("l"))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) null else r.getSeq[String](1).toList)).toMap
+    assert(links == Map(1L -> List("/x"), 2L -> null), "null html must be NULL, not []")
   }
 
   test("extractLinks hostile input: unterminated constructs bounded, LINEAR time") {

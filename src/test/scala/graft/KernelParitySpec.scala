@@ -1,23 +1,33 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Llm
+import graft.plans.Kernels
 
-/** Whole-query drift pin for the no-extension path.
+/** Whole-query drift pin between the kernels and the independent SQL
+  * reference formulations.
   *
-  * Every native-kernel call site routes through `Llm.kernelOn`, which
-  * honors the `spark.graft.kernels.enabled` escape hatch in addition
-  * to extension presence — so flipping the conf in THIS session takes
-  * exactly the branches a session without `GraftExtensions` would
-  * take. Running each kernel-using declared query under both settings
-  * and requiring identical results pins all twenty decision points
-  * end-to-end: the per-expression bit-parity tests (LlmSpec /
-  * PropertySpec) prove each kernel equals its pinned fallback
-  * FORMULA; this proves each operator actually WIRES the equivalent
-  * pair, so a no-extension deployment hash-matches the oracle too.
+  * The kernel call sites that keep a reference formulation (MinHash
+  * fold, SimHash, band hashes, ADC, char/gram run stats, gram hashes,
+  * fingerprint, winnow, term counts, segments, postings, cosine,
+  * SRP, dequant, centroid) select it with `Llm.kernelOn` from
+  * `spark.graft.kernels.enabled`. Each test below runs a declared
+  * query twice: with kernels on in the extension session, and with
+  * kernels disabled in a session whose function registry has no
+  * `graft_*` names — a deployment that never registered
+  * `GraftExtensions`. The per-expression bit-parity tests (LlmSpec /
+  * PropertySpec) prove each kernel equals its reference FORMULA;
+  * this proves each operator actually WIRES the equivalent pair, so
+  * the reference path hash-matches the oracle too. Queries whose
+  * only kernels have no reference formulation (html, frontier, link
+  * graph, language ID, BPE) run the same kernels on both sides, so
+  * for them the pin is that a session without the extension
+  * computes the same rows.
   *
   * `llm_ann_ivf` is the one exception to exact equality: within one
   * path Lloyd is reproducible (the training layout is width-pinned,
@@ -28,7 +38,7 @@ import graft.operators.Llm
   * flip a boundary assignment. Its pin is per-probe neighbor-set
   * overlap instead.
   */
-class KernelParitySpec extends AnyFunSuite {
+class KernelParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def spark = TestSpark.spark
   private val dir = TestSpark.sf
 
@@ -50,11 +60,22 @@ class KernelParitySpec extends AnyFunSuite {
       .sorted.toSeq
   }
 
-  private def withKernels[A](on: Boolean)(body: => A): A = {
-    spark.conf.set("spark.graft.kernels.enabled", on.toString)
-    try body
-    finally spark.conf.unset("spark.graft.kernels.enabled")
+  /** A session whose function registry has no `graft_*` names. */
+  private lazy val bare: SparkSession = {
+    val s = spark.newSession()
+    Kernels.names.foreach(n => s.sql(s"DROP TEMPORARY FUNCTION IF EXISTS $n"))
+    s
   }
+
+  /** `body` in the extension session with kernels on, or in the bare
+    * session with kernels disabled (the reference formulations). */
+  private def withKernels[A](on: Boolean)(body: SparkSession => A): A =
+    if (on) body(spark)
+    else {
+      bare.conf.set("spark.graft.kernels.enabled", "false")
+      try body(bare)
+      finally bare.conf.unset("spark.graft.kernels.enabled")
+    }
 
   // Minimal declared-query set covering every kernelOn site:
   // nearDupCandidates + bandJoin (dedup_near), nearDupCore
@@ -78,25 +99,16 @@ class KernelParitySpec extends AnyFunSuite {
     // the gate — exact parity holds, unlike IVF's float-boundary case
     // (llm_ann_probe additionally crosses the parquet snapshot)
     "llm_ann_pq", "llm_ann_ivfpq", "llm_ann_probe",
-    // html extraction / frontier: kernels (graft_html_text,
-    // graft_url_canon, graft_robots_allowed) vs ScalaUDFs over the
-    // same Scala walks — bit-identical by construction, pinned
-    // end-to-end anyway
+    // html extraction / frontier / language ID: kernels only (no
+    // reference formulation), so these pin the session without the
+    // extension
     "llm_html_extract", "llm_crawl_extract", "llm_url_frontier",
     "llm_url_normalize", "llm_robots_filter", "llm_html_links",
     "llm_lang_id", "llm_frontier_schedule", "llm_sitemap_seeds",
     "llm_sitemap_urls", "llm_anchor_terms",
-    // link-graph family: the edge build crosses the three discover
-    // kernels; hostRank/linkBfs consume the same stream, and their
-    // long arithmetic is kernel-free — the edge leg covers the gate
+    // link-graph and BPE families: kernels only, like the html legs
     "llm_link_graph", "llm_host_rank", "llm_host_rank_warm",
-    "llm_mix_ranked", "llm_link_bfs",
-    // the cross-era leg's snapshot cache keys on the kernel gate, so
-    // BOTH eras rebuild through the fallback path under the flip —
-    // the parity pin covers the whole corpus, not just the delta
-    "llm_link_incr",
-    // BPE family: graft_bpe_tokens vs the ScalaUDF over the same
-    // encodeSeed — bit-identical by construction, pinned end-to-end
+    "llm_mix_ranked", "llm_link_bfs", "llm_link_incr",
     "llm_bpe_tokenize", "llm_chunk_bpe",
     // winnowing family: graft_winnow vs the gram-explode + two-window
     // SQL formulation (LlmSpec pins the selected sets; these pin the
@@ -105,21 +117,45 @@ class KernelParitySpec extends AnyFunSuite {
 
   for (q <- covering)
     test(s"$q is identical with kernels disabled") {
-      val on  = withKernels(on = true)  { canon(SparkEntry.queries(q)(spark, dir)) }
-      val off = withKernels(on = false) { canon(SparkEntry.queries(q)(spark, dir)) }
+      val on  = withKernels(on = true)(s => canon(SparkEntry.queries(q)(s, dir)))
+      val off = withKernels(on = false)(s => canon(SparkEntry.queries(q)(s, dir)))
       assert(on.nonEmpty, s"$q returned no rows — parity would be vacuous")
       assert(off == on, s"$q diverges between kernel and fallback paths")
     }
 
+  // No silent slow path: without the extension's SQL names the
+  // operators still plan their kernels, inside WholeStageCodegen,
+  // with no ScalaUDF — and answer exactly what the extension
+  // session answers.
+  test("kernels run inside WholeStageCodegen in a session without GraftExtensions") {
+    assert(Kernels.names.forall(n => !bare.catalog.functionExists(n)))
+    for ((q, kernel) <- Seq("llm_lang_id" -> "graft_lang_id",
+        "llm_html_extract" -> "graft_html_text", "llm_bpe_tokenize" -> "graft_bpe_tokens",
+        "llm_url_frontier" -> "graft_robots_allowed", "llm_winnow" -> "graft_winnow"))
+      withClue(s"$q: ") {
+        val df = SparkEntry.queries(q)(bare, dir)
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        assert(plan.treeString.linesIterator.exists(l => l.contains(kernel) && l.contains("*(")),
+          s"$kernel is not called inside WholeStageCodegen:\n$plan")
+        // structural: a ScalaUDF prints as `UDF(...)`, not by class name
+        val udfs = collectWithSubqueries(plan) {
+          case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p.nodeName
+        }
+        assert(udfs.isEmpty, s"ScalaUDF in the plan:\n$plan")
+        assert(canon(df) == canon(SparkEntry.queries(q)(spark, dir)))
+      }
+  }
+
   test("llm_ann_ivf neighbor sets overlap with kernels disabled") {
-    def neighbors(): Map[Long, Set[Long]] =
-      Llm.annIvf(spark, dir)
+    def neighbors(s: SparkSession): Map[Long, Set[Long]] =
+      Llm.annIvf(s, dir)
         .select(col("probe_id"), col("vec_id"))
         .collect()
         .groupBy(_.getLong(0))
         .map { case (p, rs) => p -> rs.map(_.getLong(1)).toSet }
-    val on  = withKernels(on = true)(neighbors())
-    val off = withKernels(on = false)(neighbors())
+    val on  = withKernels(on = true)(neighbors)
+    val off = withKernels(on = false)(neighbors)
     assert(on.keySet == off.keySet)
     val overlaps = on.keySet.toSeq.map { p =>
       val (a, b) = (on(p), off(p))
@@ -165,8 +201,8 @@ class KernelParitySpec extends AnyFunSuite {
   // threshold); cover its SRP-bucket + verify-cosine sites at a low
   // threshold where real pairs exist.
   test("embed near-dup pairs are identical with kernels disabled") {
-    val on  = withKernels(on = true)  { canon(Llm.embedNearDup(spark, dir, 0.25)) }
-    val off = withKernels(on = false) { canon(Llm.embedNearDup(spark, dir, 0.25)) }
+    val on  = withKernels(on = true)(s => canon(Llm.embedNearDup(s, dir, 0.25)))
+    val off = withKernels(on = false)(s => canon(Llm.embedNearDup(s, dir, 0.25)))
     assert(on.nonEmpty, "no pairs at threshold 0.25 — lower it so the pin bites")
     assert(off == on, "embedNearDup diverges between kernel and fallback paths")
   }

@@ -8,7 +8,7 @@ import graft.operators.LangId
 /** Pins for the Cavnar–Trenkle language identifier: the 15/15
   * held-out accuracy floor that makes the `llm_lang_id` oracle
   * closed-form, profile determinism, the mergeable-aggregate trainer
-  * matching the in-memory builder, kernel/fallback parity, and the
+  * matching `buildProfile`, the column's null semantics, and the
   * hard per-row cost bound on hostile input. */
 class LangIdSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -61,26 +61,19 @@ class LangIdSpec extends AnyFunSuite {
     }
   }
 
-  test("kernel and UDF fallback agree on every held-out snippet AND on nulls (bit-identical gate)") {
+  test("langCol: null text is SQL NULL, held-out labels stay in the five-language set") {
     import spark.implicits._
     val df = (LangId.heldOut.toSeq.sortBy(_._1)
       .flatMap { case (l, ss) => ss.map(l -> _) }
       .zipWithIndex.map { case ((l, s), i) => (i.toLong, l, s) }
-      :+ ((99L, "none", null.asInstanceOf[String]))) // null text: NULL on BOTH paths
+      :+ ((99L, "none", null.asInstanceOf[String])))
       .toDF("id", "lang", "text")
-    def run(on: Boolean): Map[Long, String] = {
-      spark.conf.set("spark.graft.kernels.enabled", on.toString)
-      try df.select(col("id"), LangId.langCol(spark, col("text")).as("pred"))
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) null else r.getString(1))).toMap
-      finally spark.conf.unset("spark.graft.kernels.enabled")
-    }
-    val kernel = run(on = true)
-    val fallback = run(on = false)
-    assert(kernel == fallback, "graft_lang_id and the ScalaUDF fallback diverge")
-    assert(kernel(99L) == null,
+    val pred = df.select(col("id"), LangId.langCol(col("text")).as("pred"))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) null else r.getString(1))).toMap
+    assert(pred(99L) == null,
       "null text must be SQL NULL, not 'und' — 'und' is for letterless NON-null text")
-    assert((kernel - 99L).values.toSet.subsetOf(Set("de", "en", "es", "fr", "zh")))
+    assert((pred - 99L).values.toSet.subsetOf(Set("de", "en", "es", "fr", "zh")))
   }
 
   test("streamlined classifier equals the grams+profileOf reference composition on random text") {

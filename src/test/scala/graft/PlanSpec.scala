@@ -62,7 +62,7 @@ class PlanSpec extends AnyFunSuite {
   test("similarity-search paths carry no Scala UDF (ann_lsh, ann_ivf, knn)") {
     for (q <- Seq("llm_ann_lsh", "llm_knn_exact", "llm_ann_ivf")) {
       val p = plan(q)
-      assert(!p.contains("ScalaUDF"), s"$q has a Scala UDF in its plan")
+      assert(!p.contains("UDF("), s"$q has a Scala UDF in its plan")
       assert(p.contains("graft_cosine") || p.contains("aggregate("),
         s"$q must use the native cosine kernel")
     }
@@ -406,7 +406,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("llm_knn_quantized")
     assert(p.contains("graft_dequant_dot"), s"quantized rank off the kernel:\n$p")
     assert(!p.contains("zip_with"), "interpreted dequantize fold resurfaced")
-    assert(!p.contains("ScalaUDF"), "quantized path must carry no Scala UDF")
+    assert(!p.contains("UDF("), "quantized path must carry no Scala UDF")
   }
 
   test("chunker is a pure map-side scan — no exchange anywhere in the plan") {
@@ -416,7 +416,7 @@ class PlanSpec extends AnyFunSuite {
     // grouping/ordering step the operator doesn't need.
     val p = plan("llm_chunk")
     assert(!p.contains("Exchange"), s"chunker plan acquired a shuffle:\n$p")
-    assert(!p.contains("ScalaUDF"), "chunker must stay declarative/codegen")
+    assert(!p.contains("UDF("), "chunker must stay declarative/codegen")
   }
 
   test("mix_ranked joins the host-sized rank table BROADCAST — never a doc-sized shuffle join") {
@@ -436,7 +436,7 @@ class PlanSpec extends AnyFunSuite {
     for (q <- Seq("llm_bpe_tokenize", "llm_chunk_bpe")) {
       val p = plan(q)
       assert(p.contains("graft_bpe_tokens"), s"$q not on the kernel:\n$p")
-      assert(!p.contains("ScalaUDF"), s"$q must carry no Scala UDF")
+      assert(!p.contains("UDF("), s"$q must carry no Scala UDF")
       assert(!p.contains("Exchange"), s"$q acquired a shuffle:\n$p")
     }
   }
@@ -448,7 +448,7 @@ class PlanSpec extends AnyFunSuite {
     // round-16 verdict's missing column API)
     val p = plan("llm_html_extract")
     assert(p.contains("graft_html_text"), s"html extract not on the kernel:\n$p")
-    assert(!p.contains("ScalaUDF"), "html extract must carry no Scala UDF")
+    assert(!p.contains("UDF("), "html extract must carry no Scala UDF")
     assert(!p.contains("Exchange"), s"html extract acquired a shuffle:\n$p")
   }
 
@@ -461,7 +461,7 @@ class PlanSpec extends AnyFunSuite {
     val chained = graft.operators.Llm.chunkFrame(extracted, chunkTokens = 32, overlap = 8)
     val p = chained.queryExecution.executedPlan.toString
     assert(p.contains("graft_html_text"), s"composed chain lost the kernel:\n$p")
-    assert(!p.contains("ScalaUDF"), "composed chain must carry no Scala UDF")
+    assert(!p.contains("UDF("), "composed chain must carry no Scala UDF")
     assert(!p.contains("Exchange"), s"composed chain acquired a shuffle:\n$p")
   }
 
@@ -471,7 +471,7 @@ class PlanSpec extends AnyFunSuite {
     // codegen'd kernel, and the whole chain must never shuffle
     val p = plan("llm_crawl_extract")
     assert(p.contains("graft_html_text"), s"seam lost the html kernel:\n$p")
-    assert(!p.contains("ScalaUDF"), "seam must carry no Scala UDF")
+    assert(!p.contains("UDF("), "seam must carry no Scala UDF")
     // r21: the narrow input widens through ONE round-robin exchange
     // (Tables.widened — the single-split scan serialized the whole
     // byte-walk chain into one task); the chain itself must stay
@@ -497,7 +497,7 @@ class PlanSpec extends AnyFunSuite {
   test("url-normalize and robots-filter legs are zero-boundary codegen scans") {
     for (q <- Seq("llm_url_normalize", "llm_robots_filter", "llm_sitemap_seeds")) {
       val p = plan(q)
-      assert(!p.contains("ScalaUDF"), s"$q must carry no Scala UDF")
+      assert(!p.contains("UDF("), s"$q must carry no Scala UDF")
       assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
         s"$q acquired an object boundary:\n$p")
       assert(!p.contains("Exchange"), s"$q acquired a shuffle:\n$p")
@@ -513,7 +513,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("graft_url_resolve"), s"frontier lost the resolve kernel:\n$p")
     assert(p.contains("graft_url_canon"), s"frontier lost the canon kernel:\n$p")
     assert(p.contains("graft_robots_allowed"), s"frontier lost the verdict kernel:\n$p")
-    assert(!p.contains("ScalaUDF"), "frontier must carry no Scala UDF")
+    assert(!p.contains("UDF("), "frontier must carry no Scala UDF")
     assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
       s"frontier acquired an object-serialization boundary:\n$p")
   }
@@ -544,7 +544,7 @@ class PlanSpec extends AnyFunSuite {
     // runtime; over a real robots column it stays a per-row kernel,
     // which KernelParitySpec covers). What must not appear either way
     // is an interpreted boundary:
-    assert(!p.contains("ScalaUDF"), s"schedule's delay lookup fell back to a Scala UDF:\n$p")
+    assert(!p.contains("UDF("), s"schedule's delay lookup fell back to a Scala UDF:\n$p")
     assert(!p.contains("SortMergeJoin"), s"the delay dim must broadcast, never sort-merge:\n$p")
     assert(p.contains("Window"), s"schedule lost the window operator:\n$p")
   }
@@ -556,7 +556,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("llm_html_links")
     for (k <- Seq("graft_html_links", "graft_url_resolve", "graft_url_canon"))
       assert(p.contains(k), s"llm_html_links lost kernel $k:\n$p")
-    assert(!p.contains("ScalaUDF"), "llm_html_links must carry no Scala UDF")
+    assert(!p.contains("UDF("), "llm_html_links must carry no Scala UDF")
     assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
       s"llm_html_links acquired an object boundary:\n$p")
     assert(!p.contains("Exchange"), s"llm_html_links acquired a shuffle:\n$p")
@@ -571,7 +571,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("llm_link_graph")
     for (k <- Seq("graft_html_links", "graft_url_resolve", "graft_url_canon"))
       assert(p.contains(k), s"llm_link_graph lost kernel $k:\n$p")
-    assert(!p.contains("ScalaUDF"), "llm_link_graph must carry no Scala UDF")
+    assert(!p.contains("UDF("), "llm_link_graph must carry no Scala UDF")
     assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
       s"llm_link_graph acquired an object boundary:\n$p")
     val shuffles = "Exchange hashpartitioning".r.findAllMatchIn(p).size
@@ -608,7 +608,7 @@ class PlanSpec extends AnyFunSuite {
     // exchange, which is not part of the step)
     assert("Exchange hashpartitioning\\(host".r.findAllMatchIn(p).size == 1,
       s"contrib aggregation must be the single step exchange:\n$p")
-    assert(!p.contains("ScalaUDF"), s"rank arithmetic must stay codegen:\n$p")
+    assert(!p.contains("UDF("), s"rank arithmetic must stay codegen:\n$p")
   }
 
   test("PageRank step plans zero edge-side exchanges even with auto-broadcast off") {
@@ -657,7 +657,7 @@ class PlanSpec extends AnyFunSuite {
       val p = plan(q)
       assert(p.contains("graft_adc"), s"$q ADC scan off the kernel:\n$p")
       assert(!p.contains("sequence(0"), s"$q: interpreted ADC fold resurfaced")
-      assert(!p.contains("ScalaUDF"), s"$q ADC path must carry no Scala UDF")
+      assert(!p.contains("UDF("), s"$q ADC path must carry no Scala UDF")
     }
   }
 
@@ -700,12 +700,12 @@ class PlanSpec extends AnyFunSuite {
       .withColumn("ref_bomb", concat(repeat(lit("../"), 100000), lit("g")))
     val t0 = System.nanoTime()
     val agg = df.select(
-      sum(length(coalesce(Urls.canonCol(spark, col("dot_bomb")), lit("")))).as("dot"),
-      sum(length(coalesce(Urls.canonCol(spark, col("esc_bomb")), lit("")))).as("esc"),
-      sum(when(Robots.allowedCol(spark, col("star_policy"), col("long_path")), 1L)
+      sum(length(coalesce(Urls.canonCol(col("dot_bomb")), lit("")))).as("dot"),
+      sum(length(coalesce(Urls.canonCol(col("esc_bomb")), lit("")))).as("esc"),
+      sum(when(Robots.allowedCol(col("star_policy"), col("long_path")), 1L)
         .otherwise(0L)).as("star_allowed"),
-      sum(size(Html.linksCol(spark, col("attr_bomb")))).as("links"),
-      sum(length(coalesce(Urls.resolveCol(spark,
+      sum(size(Html.linksCol(col("attr_bomb")))).as("links"),
+      sum(length(coalesce(Urls.resolveCol(
         lit("http://a/b/c"), col("ref_bomb")), lit("")))).as("resolved"))
       .collect()(0)
     val sec = (System.nanoTime() - t0) / 1e9

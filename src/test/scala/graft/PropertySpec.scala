@@ -30,7 +30,7 @@ class PropertySpec extends AnyFunSuite {
         Gen.oneOf(':', '/', '?', '#', '%', '.', '@', '*', '$', ' ', '~', 'é')))
     } yield s.mkString
     check(Prop.forAll(junkGen) { s =>
-      val k = graft.plans.FrontierKernel.canon(UTF8String.fromString(s))
+      val k = graft.plans.FrontierKernel.graft_url_canon(UTF8String.fromString(s))
       val f = graft.sources.Urls.normalizeUrl(s)
       (k == null && f.isEmpty) || (k != null && f.contains(k.toString))
     }, n = 500)
@@ -43,18 +43,18 @@ class PropertySpec extends AnyFunSuite {
         junkGen)) // junk lines exercise parser tolerance
     } yield lines.mkString("\n")
     check(Prop.forAll(policyGen, junkGen.map("/" + _)) { (policy, path) =>
-      val k = graft.plans.FrontierKernel.allowed(
-        UTF8String.fromString(policy), UTF8String.fromString(path), "graftbot/1.0")
+      val k = graft.plans.FrontierKernel.graft_robots_allowed(
+        UTF8String.fromString(policy), UTF8String.fromString(path), UTF8String.fromString("graftbot/1.0"))
       val f = graft.sources.Robots.isAllowed(
         graft.sources.Robots.rulesFor(graft.sources.Robots.parse(policy), "graftbot/1.0"), path)
       k == f
     }, n = 300)
     check(Prop.forAll(policyGen) { policy =>
-      val k = graft.plans.FrontierKernel.delayMs(
-        UTF8String.fromString(policy), "graftbot/1.0")
+      val k = graft.plans.FrontierKernel.graft_crawl_delay(
+        UTF8String.fromString(policy), UTF8String.fromString("graftbot/1.0"))
       val f = graft.sources.Robots.crawlDelayMs(
         graft.sources.Robots.parse(policy), "graftbot/1.0")
-      (k == -1L && f.isEmpty) || f.contains(k)
+      (k == null && f.isEmpty) || (k != null && f.contains(k.longValue))
     }, n = 300)
   }
 
@@ -202,7 +202,7 @@ class PropertySpec extends AnyFunSuite {
       1 -> Gen.oneOf("😀", "𐀀")) // astral (surrogate pairs)
     val textGen = Gen.listOf(charGen).map(_.mkString)
     check(Prop.forAll(textGen) { s =>
-      val row = RunStatsKernel.charStats(UTF8String.fromString(s))
+      val row = RunStatsKernel.graft_char_run_stats(UTF8String.fromString(s))
       val (n, runs, maxRun, sum) = spec(s)
       row.getLong(0) == n && row.getLong(1) == runs &&
         row.getLong(2) == maxRun && row.getDouble(3) == sum
@@ -219,7 +219,7 @@ class PropertySpec extends AnyFunSuite {
       1 -> Gen.oneOf("é", "中文", "😀", "")))
     check(Prop.forAll(tokGen) { toks =>
       val arr = new GenericArrayData(toks.map(UTF8String.fromString).toArray[Any])
-      val out = RunStatsKernel.termCounts(arr)
+      val out = RunStatsKernel.graft_term_counts(arr)
       val got = (0 until out.numElements()).map { i =>
         val r = out.getStruct(i, 2).asInstanceOf[InternalRow]
         (r.getUTF8String(0).toString, r.getLong(1))
@@ -245,7 +245,7 @@ class PropertySpec extends AnyFunSuite {
       val arr = new GenericArrayData(ps.map { case (d, p) =>
         new GenericInternalRow(Array[Any](d, p))
       }.toArray[Any])
-      RunStatsKernel.postingsDigest(arr).toString == spec(ps)
+      RunStatsKernel.graft_postings_digest(arr).toString == spec(ps)
     })
   }
 
@@ -289,7 +289,7 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     import org.apache.spark.unsafe.types.UTF8String
     check(Prop.forAll(tokGen, Gen.choose(1, 5)) { (toks, g) =>
-      val out = graft.plans.RunStatsKernel.gramHashes(arr(toks), g)
+      val out = graft.plans.RunStatsKernel.graft_gram_hashes(arr(toks), g)
       val m = math.max(0, toks.length - g + 1)
       out.numElements() == m && (0 until m).forall { i =>
         out.getLong(i) == XXH64.hashUTF8String(
@@ -300,7 +300,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("segment kernel partitions the token array exactly, any width") {
     check(Prop.forAll(tokGen.suchThat(_.nonEmpty), Gen.choose(1, 7)) { (toks, w) =>
-      val out = graft.plans.RunStatsKernel.segments(arr(toks), w)
+      val out = graft.plans.RunStatsKernel.graft_segments(arr(toks), w)
       val nSeg = (toks.length - 1) / w + 1
       out.numElements() == nSeg && (0 until nSeg).forall { s =>
         out.getUTF8String(s).toString == toks.slice(s * w, s * w + w).mkString(" ")
@@ -333,7 +333,7 @@ class PropertySpec extends AnyFunSuite {
   test("band-hash kernel matches the seed-chained model for any signature length") {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     check(Prop.forAll(Gen.listOf(Gen.long)) { sig =>
-      val out = graft.plans.BandHashes.compute(
+      val out = graft.plans.BandHashes.graft_band_hashes(
         new org.apache.spark.sql.catalyst.util.GenericArrayData(sig.toArray))
       out.numElements() == 32 && (0 until 32).forall { b =>
         var h = XXH64.hashInt(b, 42L)

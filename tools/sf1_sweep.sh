@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # One-command sf1 scale sweep (round-10 verdict item 7): regenerate the
 # deterministic 10x testdata if absent, run the full Verify surface at
-# sf1 twice (local[8] vs local[16]) plus a kernels-off leg, compare all
+# sf1 twice (local[8] vs local[16]) plus a SQL-reference leg, compare all
 # three for bit-parity, then bench at sf1. Surfaces scale regressions
 # every round instead of only when someone remembers the recipe.
 #
@@ -21,7 +21,7 @@ echo "== Verify leg A: local[8] =="
 SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $SF1 /tmp/sf1_a"
 echo "== Verify leg B: local[16] (layout determinism) =="
 SPARK_GRAFT_CPUS=16 sbt -batch "runMain graft.Verify $SF1 /tmp/sf1_b"
-echo "== Verify leg C: local[8], kernels off (fallback parity) =="
+echo "== Verify leg C: local[8], SQL reference formulations where a kernel has one =="
 SPARK_GRAFT_CPUS=8 GRAFT_CONF="spark.graft.kernels.enabled=false" \
   sbt -batch "runMain graft.Verify $SF1 /tmp/sf1_c"
 
@@ -29,7 +29,7 @@ SPARK_GRAFT_CPUS=8 GRAFT_CONF="spark.graft.kernels.enabled=false" \
 # order differs by design) — same overlap carve-out as round 10
 echo "== cross-layout parity A vs B =="
 python3 tools/verify_compare.py /tmp/sf1_a /tmp/sf1_b
-echo "== kernel parity A vs C =="
+echo "== kernel vs SQL reference parity A vs C =="
 python3 tools/verify_compare.py /tmp/sf1_a /tmp/sf1_c --overlap llm_ann_ivf
 
 if [ "${SF1_SKIP_BENCH:-0}" != "1" ]; then
