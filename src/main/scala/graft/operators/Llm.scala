@@ -66,20 +66,31 @@ object Llm {
   /** Selects, at the kernel call sites that keep an independent SQL
     * formulation (MinHash fold, SimHash, band hashes, ADC, char/gram
     * run stats, gram hashes, fingerprint, winnow, term counts,
-    * segments, postings, cosine, SRP, dequant, centroid), between the
-    * kernel and that reference:
+    * segments, postings, cosine, SRP, dequant, centroid, wire decode),
+    * between the kernel and that reference:
     * `spark.graft.kernels.enabled`, default true. Kernels never need
     * the session extension, so the conf is the only switch;
     * `KernelParitySpec` flips it to pin whole-query agreement between
-    * the two formulations. */
+    * the two formulations. The first `false` answer in a session logs
+    * one WARN, so the slower reference path is never silent. */
   private[graft] def kernelOn(spark: SparkSession): Boolean =
     spark.conf.get("spark.graft.kernels.enabled", "true").trim.toLowerCase match {
       case "true" | "1" | "yes" | "on"  => true
-      case "false" | "0" | "no" | "off" => false
+      case "false" | "0" | "no" | "off" =>
+        if (kernelsOffWarned.put(spark, java.lang.Boolean.TRUE) == null)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            "graft: spark.graft.kernels.enabled=false selects the SQL reference " +
+              "formulations instead of the native kernels in this session")
+        false
       case other => throw new IllegalArgumentException(
         s"spark.graft.kernels.enabled must be a boolean ('$other' given); " +
           "use true/false (1/0, yes/no, on/off accepted)")
     }
+
+  /** The sessions `kernelOn` has warned about (weak: a stopped session
+    * is not retained). */
+  private val kernelsOffWarned = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** The ADC table-lookup sum shared by the three PQ scan sites
     * (`annPq`, `probeAnnIndex`, streaming `annSuspects`): approx

@@ -83,6 +83,7 @@ object Kernels {
     static(HtmlTextKernel, "graft_link_anchors", StrArray, StringType)(orNull = true),
     static(LangIdKernel, "graft_lang_id", StringType, StringType)(),
     static(BpeKernel, "graft_bpe_tokens", StrArray, StringType)(orNull = true),
+    static(WireKernel, "graft_wire_decode", WireKernel.eventSchema, StringType)(orNull = true),
     "graft_cosine" -> Fn(2, a => CosineSimilarity(a(0), a(1))),
     "graft_srp_buckets" -> Fn(1, a => SrpBuckets(a(0))),
     "graft_nearest_centroid" -> Fn(2, a => NearestCentroid(a(0), a(1))),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 
 import scala.concurrent.duration._
 
-import graft.plans.{Dgim, Kernels}
+import graft.plans.{Dgim, Kernels, WireKernel}
 
 /** Structured Streaming surface (SURVEY §2.9): the reference IS a
   * stream processor — Kafka consumer feeding an in-memory windowed
@@ -21,7 +21,9 @@ import graft.plans.{Dgim, Kernels}
   *  - late-data drop >1 h behind (consumer.py:82-83)  → withWatermark
   *  - tumbling window lists/counters (consumer.py:112-117) → window()
   *  - 2 h TTL eviction (consumer.py:119-148)  → watermark-driven state GC
-  *  - last-write-wins by _id (consumer.py:66) → dropDuplicates within watermark
+  *  - upsert by _id (consumer.py:66)          → first-seen dropDuplicatesWithinWatermark
+  *  - json.loads per message (consumer.py:407) → graft_wire_decode kernel,
+  *    from_json for the rows it rejects
   *  - RLock-guarded concurrent reads (ST7)    → memory-sink tables are
   *    transactionally versioned; `spark.sql` reads never block ingest
   *  - no delivery guarantees (ST8)            → checkpointLocation upgrades
@@ -33,8 +35,7 @@ object Streaming {
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
 
-  val eventSchema: StructType = StructType.fromDDL(
-    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE")
+  val eventSchema: StructType = WireKernel.eventSchema
 
   /** ST1/ST2/ST3: tumbling event-time window counts with a watermark
     * that drops data later than `lateness` (the reference's 1-hour
@@ -49,13 +50,15 @@ object Streaming {
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("wstart"), col("event_type"), col("n"))
 
-  /** ST4/ST5: last-write-wins upsert keyed by event_id with
+  /** ST4/ST5: first-seen upsert keyed by event_id with
     * watermark-bounded state (the id-index + 2 h TTL sweep,
-    * consumer.py:66,119-148). State for ids older than the watermark
-    * is evicted automatically — the sweep thread becomes a property
-    * of the engine. */
+    * consumer.py:66,119-148): the first arrival of an id is emitted,
+    * later copies drop. `dropDuplicatesWithinWatermark` keeps an id
+    * until the watermark passes its event time plus `lateness`, then
+    * evicts it, so the sweep thread becomes a property of the engine
+    * and the state holds only the ids of that horizon. */
   def upsertLatest(events: DataFrame, lateness: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", lateness).dropDuplicates("event_id")
+    events.withWatermark("ts", lateness).dropDuplicatesWithinWatermark("event_id")
 
   /** ST6-adjacent: streaming gap sessionization — the streaming twin
     * of `Ecosystem.sessions` via Spark's native `session_window`
@@ -671,13 +674,29 @@ object Streaming {
   def wireEncode(events: DataFrame): DataFrame =
     events.select(to_json(struct(events.columns.map(col): _*)).as("value"))
 
-  /** The wire format, decode side: PERMISSIVE `from_json` against the
-    * event schema — the reference's `json.loads` + try/except skip
+  /** One wire value's event struct: exactly PERMISSIVE `from_json`
+    * against the event schema. With kernels on, the `graft_wire_decode`
+    * kernel decodes every row it fully accepts in one byte pass and
+    * `from_json` runs only for the rows it rejects (corrupt, null or
+    * unusual input), so the result is the same struct either way.
+    * The legacy time parser reads timestamps its own way, so under it
+    * `from_json` decodes every row. */
+  private[graft] def wireEvent(spark: SparkSession, value: Column): Column = {
+    val reference = from_json(value, eventSchema)
+    val legacyTime =
+      spark.conf.get("spark.sql.legacy.timeParserPolicy").equalsIgnoreCase("LEGACY")
+    if (graft.operators.Llm.kernelOn(spark) && !legacyTime)
+      coalesce(Kernels("graft_wire_decode", value), reference)
+    else reference
+  }
+
+  /** The wire format, decode side: `wireEvent` over the `value`
+    * column — the reference's `json.loads` + try/except skip
     * (consumer.py:405-423). Corrupt rows decode to all-null structs
     * and are dropped by the `event_id` filter, mirroring the skip. */
   def wireDecode(wire: DataFrame): DataFrame =
     wire
-      .select(from_json(col("value").cast("string"), eventSchema).as("e"))
+      .select(wireEvent(wire.sparkSession, col("value").cast("string")).as("e"))
       .select(col("e.*"))
       .filter(col("event_id").isNotNull)
 

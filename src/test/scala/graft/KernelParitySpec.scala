@@ -15,9 +15,9 @@ import graft.plans.Kernels
   * The kernel call sites that keep a reference formulation (MinHash
   * fold, SimHash, band hashes, ADC, char/gram run stats, gram hashes,
   * fingerprint, winnow, term counts, segments, postings, cosine,
-  * SRP, dequant, centroid) select it with `Llm.kernelOn` from
-  * `spark.graft.kernels.enabled`. Each test below runs a declared
-  * query twice: with kernels on in the extension session, and with
+  * SRP, dequant, centroid, wire decode) select it with `Llm.kernelOn`
+  * from `spark.graft.kernels.enabled`. Each test below runs a declared
+  * query (or the wire decode) twice: with kernels on in the extension session, and with
   * kernels disabled in a session whose function registry has no
   * `graft_*` names — a deployment that never registered
   * `GraftExtensions`. The per-expression bit-parity tests (LlmSpec /
@@ -122,6 +122,51 @@ class KernelParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(on.nonEmpty, s"$q returned no rows — parity would be vacuous")
       assert(off == on, s"$q diverges between kernel and fallback paths")
     }
+
+  test("wire decode is identical with kernels disabled") {
+    // graft_wire_decode with from_json for its rejects, against
+    // from_json alone: the sf events as wire rows, json.dumps-spaced
+    // copies, and rows the kernel hands to from_json
+    def decoded(s: SparkSession): Seq[String] = {
+      import s.implicits._
+      val wire = graft.streaming.Streaming.wireEncode(graft.sources.Tables.events(s, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value"))
+      val spaced = wire.select(org.apache.spark.sql.functions.regexp_replace(
+        col("value"), "([:,])", "$1 ").as("value"))
+      val odd = Seq("{not json", """{"event_id": null}""", """{"event_id":-0,"value":-0}""",
+        """{"event_id":1,"ts":"2024-01-01T10:00:00","user_id":2,"event_type":"x","value":1}""",
+        """{"event_id":2,"ts":1704103200,"user_id":2,"event_type":"café","value":"NaN"}""").toDF("value")
+      canon(graft.streaming.Streaming.wireDecode(wire.union(spaced).union(odd)))
+    }
+    val on = withKernels(on = true)(decoded)
+    assert(on.nonEmpty)
+    assert(withKernels(on = false)(decoded) == on)
+  }
+
+  test("a session that disables the kernels logs one WARN, once") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("kernels-off", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == org.apache.logging.log4j.Level.WARN) warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(Llm.getClass.getName).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      val a = spark.newSession()
+      val b = spark.newSession()
+      a.conf.set("spark.graft.kernels.enabled", "false")
+      b.conf.set("spark.graft.kernels.enabled", "off")
+      assert(!Llm.kernelOn(a) && !Llm.kernelOn(a) && !Llm.kernelOn(b) && !Llm.kernelOn(b))
+      assert(Llm.kernelOn(spark))
+      assert(warned.size == 2 && warned.iterator.next().contains("SQL reference formulations"),
+        s"expected one WARN per kernels-off session, got $warned")
+    } finally { logger.removeAppender(appender); appender.stop() }
+  }
 
   // No silent slow path: without the extension's SQL names the
   // operators still plan their kernels, inside WholeStageCodegen,

@@ -43,8 +43,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("every graft_* SQL name resolves through spark.sql and equals its column twin") {
-    // rows 0-2 feed each kernel a page, a robots.txt and a sitemap;
-    // row 3 is NULL in every non-literal argument
+    // rows 0-2 feed each kernel a page, a robots.txt and a sitemap
+    // (and a wire event); row 3 is NULL in every non-literal argument
     spark.range(4).selectExpr("id",
       """CASE id WHEN 0 THEN '<p>Hello <a href="/a?b">the world</a> hello there world, hello again</p>'
          WHEN 1 THEN 'User-agent: *\nDisallow: /x\nCrawl-delay: 2\nSitemap: http://h.example/s.xml'
@@ -58,7 +58,9 @@ class SqlSurfaceSpec extends AnyFunSuite {
         "CASE WHEN s IS NOT NULL THEN array(1.0D, 2.0D, cast(id AS double)) END AS v",
         "CASE WHEN s IS NOT NULL THEN array(1, 2, cast(id AS int)) END AS code",
         "CASE WHEN s IS NOT NULL THEN array(0.5D, 0.25D, 1.0D, 2.0D) END AS ptab",
-        "CASE WHEN s IS NOT NULL THEN unhex('0001') END AS pq")
+        "CASE WHEN s IS NOT NULL THEN unhex('0001') END AS pq",
+        """CASE WHEN s IS NOT NULL THEN concat('{"event_id": ', id,
+          ', "ts": "2024-01-01T10:00:00Z", "user_id": 7, "event_type": "click", "value": 1.5}') END AS w""")
       .createOrReplaceTempView("graft_kernel_in")
     val calls = Map(
       "graft_char_run_stats" -> Seq("s"), "graft_term_counts" -> Seq("toks"),
@@ -77,7 +79,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
       "graft_nearest_centroid" -> Seq("v", "array(array(1.0D, 0.0D, 0.0D), array(0.0D, 0.0D, 1.0D))"),
       "graft_dequant_dot" -> Seq("code", "array(0.5D, 0.25D, 1.0D)", "0.0D", "1.0D"),
       "graft_adc" -> Seq("ptab", "pq", "2"),
-      "graft_bpe_tokens_with" -> Seq("s", "array(array('h', 'e'), array('l', 'l'))"))
+      "graft_bpe_tokens_with" -> Seq("s", "array(array('h', 'e'), array('l', 'l'))"),
+      "graft_wire_decode" -> Seq("w"))
     assert(calls.keySet == Kernels.names.toSet, "every SQL name needs a case here")
     val in = spark.table("graft_kernel_in")
     for ((name, args) <- calls) withClue(s"$name: ") {

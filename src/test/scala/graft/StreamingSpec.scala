@@ -9,7 +9,7 @@ import graft.streaming.Streaming
 import graft.streaming.Streaming.Event
 
 /** Batch-by-batch Structured Streaming semantics (SURVEY §5.5):
-  * tumbling windows, watermark late-data drop, last-write-wins
+  * tumbling windows, watermark late-data drop, first-seen upsert
   * dedup — driven through MemoryStream, no broker needed. */
 class StreamingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -319,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally { consolidated.stop(); independents.foreach(_.stop()) }
   }
 
-  test("last-write-wins upsert: duplicate event ids emitted once") {
+  test("first-seen upsert: duplicate event ids emitted once") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Event]
     val q = Streaming.serveMemory(
@@ -332,6 +332,31 @@ class StreamingSpec extends AnyFunSuite {
       val ids = spark.sql("SELECT event_id FROM upserted").collect().map(_.getLong(0))
       assert(ids.sorted.sameElements(Array(10L, 11L, 12L)),
         s"duplicate id must appear once, got ${ids.mkString(",")}")
+    } finally q.stop()
+  }
+
+  test("upsert state is evicted once the watermark passes the 2 h horizon") {
+    // the reference's 2 h TTL sweep (consumer.py:119-148): an id's
+    // state lives until the watermark passes its event time + 2 h
+    implicit val sqlCtx = spark.sqlContext
+    val ms = MemoryStream[Event]
+    val q = Streaming.serveMemory(
+      Streaming.upsertLatest(ms.toDF(), "2 hours"), "upsert_evict", mode = "append")
+    def stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    try {
+      ms.addData(ev(20, "2024-01-01 10:00:00"), ev(21, "2024-01-01 10:00:30"),
+        ev(22, "2024-01-01 10:01:00"))
+      q.processAllAvailable()
+      assert(stateRows == 3L)
+      // 15:00 moves the watermark to 13:00, past 10:01 + 2 h; the next
+      // batch evicts the three 10:00 ids and keeps the two new ones
+      ms.addData(ev(23, "2024-01-01 15:00:00"))
+      q.processAllAvailable()
+      ms.addData(ev(24, "2024-01-01 15:00:10"), ev(23, "2024-01-01 15:00:00"))
+      q.processAllAvailable()
+      assert(stateRows == 2L, s"state must drop the ids behind the horizon, holds $stateRows rows")
+      val ids = spark.sql("SELECT event_id FROM upsert_evict").collect().map(_.getLong(0))
+      assert(ids.sorted.sameElements(Array(20L, 21L, 22L, 23L, 24L)), ids.mkString(","))
     } finally q.stop()
   }
 
@@ -430,6 +455,148 @@ class StreamingSpec extends AnyFunSuite {
       .union(Seq("{not json", """{"event_id": null}""").toDF("value"))
     assert(Streaming.wireDecode(withJunk).count() == 3,
       "corrupt/null-id records must be skipped like the reference's try/except")
+  }
+
+  test("wire decode equals a from_json-only decode row for row, in UTC and a non-UTC zone (property)") {
+    // wireDecode runs graft_wire_decode and keeps from_json for the
+    // rows the kernel rejects; every row must decode to exactly the
+    // struct from_json alone gives (doubles compared by bits, ts by
+    // micros) and the same rows must be dropped as corrupt
+    import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+    import org.apache.spark.sql.functions.{col, from_json, unix_micros}
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    def q(x: String) = "\"" + x + "\""
+    def num(lo: Int, hi: Int): Gen[String] = for {
+      n <- Gen.choose(lo, hi); first <- Gen.choose('1', '9'); rest <- Gen.listOfN(n - 1, Gen.numChar)
+    } yield (first :: rest).mkString
+    val idTok = Gen.frequency(
+      6 -> Gen.choose(-100000L, 100000L).map(_.toString),
+      1 -> Gen.oneOf("0", "-0"),
+      2 -> num(18, 18).flatMap(d => Gen.oneOf(d, "-" + d)),
+      2 -> num(19, 19).flatMap(d => Gen.oneOf(d, "-" + d)),
+      1 -> Gen.oneOf(Long.MinValue.toString, "01", "1.0", "1e3", q("7"), "null", "true", "-", "+1"))
+    val valueTok = Gen.frequency(
+      4 -> Gen.choose(-1e6, 1e6).map(d => (math.round(d * 100) / 100.0).toString),
+      3 -> org.scalacheck.Arbitrary.arbitrary[Double].map(_.toString),
+      3 -> (for {
+        neg <- Gen.oneOf("", "-"); ip <- Gen.oneOf(Gen.const("0"), num(1, 20))
+        fp <- Gen.option(Gen.choose(1, 25).flatMap(Gen.listOfN(_, Gen.numChar)).map("." + _.mkString))
+        ex <- Gen.option(for {
+          e <- Gen.oneOf("e", "E"); sg <- Gen.oneOf("", "+", "-"); d <- Gen.choose(0, 400)
+        } yield s"$e$sg$d")
+      } yield neg + ip + fp.getOrElse("") + ex.getOrElse("")),
+      2 -> Gen.oneOf("-0", "-0.0", "0", "0.0", "-0e0", "1e400", "-1e400", "1e-400", "4.9e-324",
+        "2.2250738585072014E-308", "1.7976931348623157E308", "9007199254740993", "0.1",
+        "123456789012345678", "1234567890123456789", "1.", ".5", "01.5", "1.5e", "-",
+        q("1.5"), q("NaN"), "NaN", "Infinity", "null"))
+    val typeTok = Gen.frequency(
+      6 -> Gen.oneOf("click", "view", "purchase", "error", "login").map(q),
+      2 -> Gen.oneOf(q(""), q("a\\\"b"), q("\\u0041"), q("caf\u00e9"), q("\u65e5\u672c"),
+        q("tab\there"), q("a/b"), q("\u007f"), "42", "null", "\"open"))
+    val tsTok = Gen.frequency(
+      6 -> (for {
+        y <- Gen.choose(0, 9999); mo <- Gen.choose(1, 12); d <- Gen.choose(1, 31)
+        h <- Gen.frequency(20 -> Gen.choose(0, 23), 1 -> Gen.const(24))
+        mi <- Gen.choose(0, 59); sec <- Gen.frequency(20 -> Gen.choose(0, 59), 1 -> Gen.const(60))
+        sep <- Gen.frequency(10 -> Gen.const("T"), 1 -> Gen.const(" "))
+        frac <- Gen.frequency(3 -> Gen.const(""), 3 -> Gen.const(".000"),
+          2 -> Gen.choose(1, 9).flatMap(Gen.listOfN(_, Gen.numChar)).map("." + _.mkString), 1 -> Gen.const("."))
+        zone <- Gen.frequency(6 -> Gen.const("Z"), 2 -> Gen.const(""), 1 -> Gen.const("+0530"),
+          4 -> (for {
+            sg <- Gen.oneOf("+", "-"); oh <- Gen.choose(0, 19); om <- Gen.oneOf(0, 30, 45, 59, 60)
+          } yield f"$sg$oh%02d:$om%02d"), 1 -> Gen.const("-07:52:58"))
+      } yield q(f"$y%04d-$mo%02d-$d%02d$sep$h%02d:$mi%02d:$sec%02d$frac$zone")),
+      2 -> Gen.oneOf("1900-02-29", "2000-02-29", "2100-02-29", "2400-02-29", "2023-02-29", "2024-02-29",
+        "0000-02-29", "2024-04-31", "2024-12-31", "1582-10-10", "1969-12-31").flatMap(d =>
+        Gen.oneOf("T00:00:00Z", "T23:59:59.999999Z", "T12:00:00.5+14:00", "T00:00:00-12:00").map(t => q(d + t))),
+      1 -> Gen.choose(0, 9999).map(y => q(f"$y%04d-06-15")),
+      1 -> Gen.choose(0L, 4000000000L).map(_.toString),
+      1 -> Gen.oneOf("null", q(""), q("garbage"), "1.5"))
+    val keys = Streaming.eventSchema.fieldNames.toSeq
+    val spaced = Gen.frequency(4 -> Gen.const(""), 3 -> Gen.const(" "), 1 -> Gen.oneOf("  ", "\n", "\t", "\r\n"))
+    val objGen = for {
+      toks <- Gen.sequence[List[String], String](List(idTok, tsTok, idTok, typeTok, valueTok))
+      order <- Gen.oneOf(keys.indices.permutations.toSeq)
+      fields = order.map(i => (q(keys(i)), toks(i)))
+      edit <- Gen.frequency(
+        12 -> Gen.const((f: Seq[(String, String)]) => f),
+        1 -> Gen.const((f: Seq[(String, String)]) => f :+ f.head),
+        1 -> Gen.const((f: Seq[(String, String)]) => f.tail),
+        1 -> Gen.const((f: Seq[(String, String)]) => f :+ (q("props") -> "{\"k\": 1}")),
+        1 -> Gen.const((f: Seq[(String, String)]) => (f.head._1 -> "null") +: f.tail))
+      a <- spaced; b <- spaced; c <- spaced
+      body = edit(fields).map { case (k, v) => s"$k$a:$b$v" }.mkString("{" + c, s"$a,$b", c + "}")
+      cut <- Gen.frequency(12 -> Gen.const(body.length), 1 -> Gen.choose(0, body.length))
+      tail <- Gen.frequency(12 -> Gen.const(""), 1 -> Gen.oneOf(" ", "x", "}", ",{}"))
+    } yield body.take(cut) + tail
+    val wireGen = Gen.frequency(40 -> objGen, 1 -> Gen.oneOf("", null, "{}", "[]", "corrupt\u0000"))
+    // wireEncode output of events with extreme ids, values and times
+    val eventGen = for {
+      id <- Gen.oneOf(Gen.choose(-1000L, 1000L), Gen.choose(Long.MinValue, Long.MaxValue))
+      us <- Gen.choose(-62135596800000000L, 253402300799999999L)
+      typ <- Gen.oneOf("click", "error", "", "caf\u00e9", "q\"uote", "new\nline")
+      v <- Gen.oneOf(Gen.choose(-1e3, 1e3), org.scalacheck.Arbitrary.arbitrary[Double],
+        Gen.oneOf(-0.0, 0.0, 1e22, 1e23, 5e-324, Double.NaN, Double.PositiveInfinity))
+    } yield (id, us, id / 3, typ, v)
+
+    def canon(events: DataFrame): Array[Row] =
+      events.select(col("idx"), col("e").isNull, col("e.event_id"), unix_micros(col("e.ts")),
+        col("e.user_id"), col("e.event_type"), col("e.value")).collect().sortBy(_.getInt(0))
+    def same(a: Row, b: Row): Boolean = (0 until 7).forall { i =>
+      (a.isNullAt(i), b.isNullAt(i)) match {
+        case (true, true) => true
+        case (false, false) if i == 6 => java.lang.Double.doubleToRawLongBits(a.getDouble(i)) ==
+          java.lang.Double.doubleToRawLongBits(b.getDouble(i)) || (a.getDouble(i).isNaN && b.getDouble(i).isNaN)
+        case (false, false) => a.get(i) == b.get(i)
+        case _ => false
+      }
+    }
+    def compare(session: SparkSession, values: Seq[String]): Unit = {
+      import session.implicits._
+      val in = values.zipWithIndex.toDF("value", "idx")
+      val want = canon(in.select(col("idx"), from_json(col("value"), Streaming.eventSchema).as("e")))
+      // a local frame folds its projection at planning (interpreted
+      // eval); a repartitioned one runs it in generated code
+      for (wire <- Seq(in, in.repartition(3))) {
+        val got = canon(wire.select(col("idx"), Streaming.wireEvent(session, col("value")).as("e")))
+        assert(got.length == want.length)
+        for ((g, w) <- got.zip(want))
+          assert(same(g, w), s"row ${values(g.getInt(0))} decoded to $g, from_json gives $w")
+        assert(Streaming.wireDecode(wire).count() == want.count(r => !r.isNullAt(2)))
+      }
+    }
+    for (zone <- Seq("UTC", "America/St_Johns")) withClue(s"$zone: ") {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.session.timeZone", zone)
+      import session.implicits._
+      val props = Prop.forAllNoShrink(Gen.listOfN(400, wireGen), Gen.listOfN(100, eventGen)) { (raw, evs) =>
+        val encoded = Streaming.wireEncode(evs.toDF("event_id", "us", "user_id", "event_type", "value")
+          .select(col("event_id"), org.apache.spark.sql.functions.timestamp_micros(col("us")).as("ts"),
+            col("user_id"), col("event_type"), col("value"))).as[String].collect()
+        compare(session, raw ++ encoded)
+        true
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), props)
+      assert(res.passed, res.status match {
+        case SCTest.PropException(_, e, _) => e.getMessage
+        case other => other.getClass.getSimpleName
+      })
+      // the kernel itself takes the reference producer's shape (json.dumps
+      // spacing) and the engine's own encoding of present-day events
+      val dumps = """{"event_id": 7, "ts": "2024-01-01T10:00:10.000Z", "user_id": 3, "event_type": "click", "value": 1.25}"""
+      val modern = Streaming.wireEncode(Seq((1L, java.sql.Timestamp.valueOf("2024-03-10 12:34:56.789"), 2L, "view", -0.5),
+          (2L, java.sql.Timestamp.valueOf("1999-12-31 23:59:59"), 3L, "error", 1e-7))
+        .toDF("event_id", "ts", "user_id", "event_type", "value")).as[String].collect()
+      val accepted = (dumps +: modern).toSeq.toDF("value")
+        .select(graft.plans.Kernels("graft_wire_decode", col("value")).isNotNull).as[Boolean].collect()
+      assert(accepted.forall(identity), s"kernel rejected ${(dumps +: modern).mkString(" ")}")
+    }
+    // the legacy time parser reads ".5" as 5 ms, so under it from_json
+    // decodes every row
+    val legacy = spark.newSession()
+    legacy.conf.set("spark.sql.legacy.timeParserPolicy", "LEGACY")
+    compare(legacy, Seq(".5", ".05", ".123", ".123456", "").map(f =>
+      s"""{"event_id": 1, "ts": "2024-01-01T10:00:00${f}Z", "user_id": 2, "event_type": "x", "value": 1}"""))
   }
 
   test("Kafka E2E: sink -> broker -> source round-trip (gated on a live broker)") {
