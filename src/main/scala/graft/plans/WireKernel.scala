@@ -8,9 +8,10 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The wire-event decode kernel: one byte-level pass over a JSON
   * event row, accepting only input whose `from_json(value,
   * eventSchema)` decode is provably the same struct, and NULL for
-  * everything else, so `coalesce(graft_wire_decode(v), from_json(v,
-  * eventSchema))` equals `from_json` alone while Jackson runs only
-  * for the rows the kernel rejects (corrupt, null or unusual input).
+  * everything else, so `coalesce(graft_wire_decode(v), <from_json's
+  * evaluator>(v))` (`Streaming.wireEvent`) equals `from_json` alone
+  * while Jackson runs only for the rows the kernel rejects (corrupt,
+  * null or unusual input).
   *
   * Accepted: an object holding exactly the five schema keys, in any
   * order, each once and non-null, with optional JSON whitespace

@@ -3,7 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
+import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.kernelbridge.ColumnBridge
+import org.apache.spark.sql.types.{ObjectType, StructType}
 import org.apache.spark.sql.Row
 
 import scala.concurrent.duration._
@@ -23,7 +27,8 @@ import graft.plans.{Dgim, Kernels, WireKernel}
   *  - 2 h TTL eviction (consumer.py:119-148)  → watermark-driven state GC
   *  - upsert by _id (consumer.py:66)          → first-seen dropDuplicatesWithinWatermark
   *  - json.loads per message (consumer.py:407) → graft_wire_decode kernel,
-  *    from_json for the rows it rejects
+  *    from_json's own evaluator for the rows it rejects, in one
+  *    whole-stage-codegen stage of at most one task per core
   *  - RLock-guarded concurrent reads (ST7)    → memory-sink tables are
   *    transactionally versioned; `spark.sql` reads never block ingest
   *  - no delivery guarantees (ST8)            → checkpointLocation upgrades
@@ -676,26 +681,46 @@ object Streaming {
 
   /** One wire value's event struct: exactly PERMISSIVE `from_json`
     * against the event schema. With kernels on, the `graft_wire_decode`
-    * kernel decodes every row it fully accepts in one byte pass and
-    * `from_json` runs only for the rows it rejects (corrupt, null or
-    * unusual input), so the result is the same struct either way.
-    * The legacy time parser reads timestamps its own way, so under it
+    * kernel decodes every row it fully accepts in one byte pass, and
+    * the rows it rejects (corrupt, null or unusual input) go to the
+    * evaluator `from_json` itself runs, built with the arguments
+    * `JsonToStructs` gives it and called through Spark's `Invoke`.
+    * `from_json` is a `CodegenFallback` expression, which keeps its
+    * operator out of whole-stage codegen and makes every task build
+    * its projection anew; `Invoke` is not, so the decode joins the
+    * surrounding `*(n)` stage. The legacy time parser reads
+    * timestamps its own way, so under it, and with kernels off,
     * `from_json` decodes every row. */
   private[graft] def wireEvent(spark: SparkSession, value: Column): Column = {
-    val reference = from_json(value, eventSchema)
     val legacyTime =
       spark.conf.get("spark.sql.legacy.timeParserPolicy").equalsIgnoreCase("LEGACY")
-    if (graft.operators.Llm.kernelOn(spark) && !legacyTime)
-      coalesce(Kernels("graft_wire_decode", value), reference)
-    else reference
+    if (graft.operators.Llm.kernelOn(spark) && !legacyTime) {
+      // eventSchema's DDL fields are all nullable, as JsonToStructs
+      // makes the schema it hands its evaluator
+      val json = JsonToStructsEvaluator(Map.empty, eventSchema,
+        spark.conf.get("spark.sql.columnNameOfCorruptRecord"),
+        Some(spark.conf.get("spark.sql.session.timeZone")),
+        spark.conf.get("spark.sql.variant.allowDuplicateKeys").toBoolean)
+      val reference = Invoke(Literal(json, ObjectType(json.getClass)), "evaluate", eventSchema,
+        Seq(ColumnBridge.expression(value)))
+      coalesce(Kernels("graft_wire_decode", value), ColumnBridge.column(reference))
+    } else from_json(value, eventSchema)
   }
 
   /** The wire format, decode side: `wireEvent` over the `value`
     * column — the reference's `json.loads` + try/except skip
     * (consumer.py:405-423). Corrupt rows decode to all-null structs
-    * and are dropped by the `event_id` filter, mirroring the skip. */
+    * and are dropped by the `event_id` filter, mirroring the skip.
+    * The wire frame is first coalesced, without a shuffle, to one
+    * partition per core: a `MemoryStream` batch has one partition per
+    * appended block, and each task pays a fixed cost (deserializing
+    * its binary, setting up its operators) that dwarfs the decode of a
+    * small block. The coalesce does nothing when the input has that
+    * many partitions or fewer (a one-block batch, a one-partition
+    * Kafka topic); the stateful operators downstream shuffle by key
+    * either way. */
   def wireDecode(wire: DataFrame): DataFrame =
-    wire
+    wire.coalesce(wire.sparkSession.sparkContext.defaultParallelism)
       .select(wireEvent(wire.sparkSession, col("value").cast("string")).as("e"))
       .select(col("e.*"))
       .filter(col("event_id").isNotNull)

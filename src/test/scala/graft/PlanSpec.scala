@@ -443,11 +443,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("wire decode calls the graft_wire_decode kernel ahead of from_json, no UDF") {
     // the reference's per-message json.loads (consumer.py:407) is one
-    // static kernel call per row, with from_json only behind it for
-    // the rows the kernel rejects. from_json is a CodegenFallback
-    // expression, which keeps its operator out of whole-stage codegen
-    // with or without the kernel; the operator's projection is still
-    // compiled, so the kernel is a direct call there.
+    // static kernel call per row, with from_json's own evaluator only
+    // behind it for the rows the kernel rejects. That evaluator is
+    // called through Invoke, not the CodegenFallback from_json
+    // expression, so the decode runs inside a *(n) whole-stage-codegen
+    // stage rather than in a projection every task builds anew.
     val events = spark.range(16).selectExpr("id AS event_id", "timestamp_seconds(id) AS ts",
       "id % 3 AS user_id", "'click' AS event_type", "id * 0.5D AS value")
     val p = graft.streaming.Streaming.wireDecode(graft.streaming.Streaming.wireEncode(events))
@@ -455,6 +455,9 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("coalesce(static_invoke(graft.plans.WireKernel.graft_wire_decode("),
       s"wire decode is not on the kernel:\n$p")
     assert(!p.contains("UDF("), s"wire decode must carry no Scala UDF:\n$p")
+    assert(p.linesIterator.exists(l => l.contains("graft_wire_decode") && """\*\(\d+\) """.r.findFirstIn(l).isDefined),
+      s"wire decode is not whole-stage codegen'd:\n$p")
+    assert(!p.contains("from_json("), s"wire decode must not plan the CodegenFallback from_json:\n$p")
   }
 
   test("html extraction runs on the graft_html_text kernel — no ScalaUDF, no exchange") {

@@ -457,6 +457,53 @@ class StreamingSpec extends AnyFunSuite {
       "corrupt/null-id records must be skipped like the reference's try/except")
   }
 
+  test("a micro-batch of many appended blocks decodes in at most one task per core (counted work)") {
+    // a MemoryStream batch has one input partition per appended block;
+    // wireDecode coalesces them to one task per core, so the stage's
+    // fixed per-task cost is paid defaultParallelism times, not once
+    // per block. Counted in tasks, not seconds.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    implicit val sqlCtx = spark.sqlContext
+    val cores = spark.sparkContext.defaultParallelism
+    val blocks = Seq.tabulate(3 * cores) { b =>
+      Seq.tabulate(5) { i =>
+        val id = b * 5 + i
+        val minute = f"${id % 60}%02d"
+        // one corrupt row, and one escaped event_type the kernel leaves
+        // to from_json's evaluator
+        val typ = if (i == 4) "a\\u0062" else "click"
+        if (i == 3) "{not json"
+        else s"""{"event_id":$id,"ts":"2024-01-01T10:$minute:00Z","user_id":${id % 7},"event_type":"$typ","value":$id.5}"""
+      }
+    }
+    val ms = MemoryStream[String]
+    blocks.foreach(ms.addData(_))
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        Option(job.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(id => job.stageInfos.foreach(s => stageTasks.add(id -> s.numTasks)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = Streaming.serveMemory(Streaming.wireDecode(ms.toDF()), "wire_tasks", mode = "append")
+    try {
+      q.processAllAvailable()
+      val served = spark.table("wire_tasks").orderBy("event_id").collect().toSeq
+      val batch = Streaming.wireDecode(blocks.flatten.toDF("value")).orderBy("event_id").collect().toSeq
+      assert(served.length == 3 * cores * 4 && served == batch,
+        s"streamed decode differs from the batch decode:\n$served\nvs\n$batch")
+      val deadline = System.nanoTime() + 10000000000L
+      def ours = stageTasks.toArray(Array.empty[(String, Int)]).filter(_._1 == q.id.toString).map(_._2)
+      while (ours.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(ours.nonEmpty, "the listener saw no job of the query")
+      assert(ours.max <= cores,
+        s"${blocks.length} blocks ran ${ours.mkString(", ")} tasks per stage, more than $cores cores")
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("wire decode equals a from_json-only decode row for row, in UTC and a non-UTC zone (property)") {
     // wireDecode runs graft_wire_decode and keeps from_json for the
     // rows the kernel rejects; every row must decode to exactly the

@@ -8,18 +8,22 @@ Usage:
 Keeps the samples of Spark executor threads ("Executor task launch
 worker ..."), optionally only those taken S seconds or more after the
 recording's first sample (--start) and before --end, and prints each
-bucket's sample count and share:
+bucket's sample count and share. `jfr print` gives each sample's time
+of day only, so times are unwrapped across midnight (a recording must
+be shorter than 12 hours):
 
   task_deser    deserializing task binaries (ObjectInputStream)
   wire_decode   from_json / Jackson, or the graft_wire_decode kernel
-  codegen       compiling generated code (Janino)
+  codegen       generating and compiling expression code (Spark's
+                codegen package, its interpreted-fallback factories, Janino)
   shuffle_write the shuffle writers and their sorters
   state_store   streaming state store reads, writes and commits
   other         everything else
 
-A sample goes to the bucket of its innermost matching frame. Profiled
-runs only say where time goes; they are never evidence for a speed
-claim (the recording itself costs CPU).
+A sample goes to the bucket of its innermost matching frame; frames of
+the codegen package's per-row helpers (row writers, projections,
+orderings) match none. Profiled runs only say where time goes; they
+are never evidence for a speed claim (the recording itself costs CPU).
 """
 import argparse
 import re
@@ -32,14 +36,22 @@ BUCKETS = [
                      "org.apache.spark.sql.catalyst.expressions.JsonToStructs", "com.fasterxml.jackson.",
                      "graft.plans.WireKernel")),
     ("codegen", ("org.codehaus.janino.", "org.codehaus.commons.compiler.",
-                 "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator")),
+                 "org.apache.spark.sql.catalyst.expressions.codegen.",
+                 "org.apache.spark.sql.catalyst.expressions.CodeGeneratorWithInterpretedFallback")),
     ("shuffle_write", ("org.apache.spark.shuffle.ShuffleWriteProcessor", "org.apache.spark.shuffle.sort.",
                        "org.apache.spark.util.collection.ExternalSorter",
                        "org.apache.spark.storage.DiskBlockObjectWriter")),
     ("state_store", ("org.apache.spark.sql.execution.streaming.state.",)),
 ]
+# classes of the codegen package that run per row rather than generate
+# code: their frames match no bucket, so the sample goes to the caller's
+ROW_HELPERS = tuple(f"org.apache.spark.sql.catalyst.expressions.codegen.{c}."
+                    for c in ("UnsafeRowWriter", "UnsafeArrayWriter", "UnsafeWriter", "BufferHolder",
+                              "UnsafeRowJoiner", "BaseProjection", "BaseMutableProjection",
+                              "LazilyGeneratedOrdering"))
 NAMES = [b for b, _ in BUCKETS] + ["other"]
 TIME = re.compile(r"startTime = (\d+):(\d+):(\d+(?:\.\d+)?)")
+DAY = 24 * 3600
 THREAD = re.compile(r'sampledThread = "([^"]*)"')
 
 
@@ -67,6 +79,8 @@ def samples(lines):
 
 def bucket(frames):
     for f in frames:
+        if f.startswith(ROW_HELPERS):
+            continue
         for name, prefixes in BUCKETS:
             if f.startswith(prefixes):
                 return name
@@ -79,8 +93,11 @@ def split(lines, start=None, end=None):
     counts = dict.fromkeys(NAMES, 0)
     if not all_samples:
         return counts
-    first = min(t for t, _, _ in all_samples)
-    for t, thread, frames in all_samples:
+    # times of day, unwrapped to the nearest day of the first printed sample
+    ref = all_samples[0][0]
+    times = [t - ref - DAY * round((t - ref) / DAY) for t, _, _ in all_samples]
+    first = min(times)
+    for t, (_, thread, frames) in zip(times, all_samples):
         rel = t - first
         if not thread.startswith("Executor task launch worker"):
             continue
