@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: the steady-state ANN cost a capacity planner actually
@@ -21,38 +20,17 @@ import org.apache.spark.sql.functions._
   * Usage: sbt "runMain graft.AnnProbeBench <sfDir> [probeRuns]"
   * Prints one JSON line:
   *   {"metric":"ann_probe","build_sec":…,"probe_secs":[…],
-  *    "probe_min_sec":…,"build_cpu_sec":…,"probe_cpu_secs":[…],"sf_dir":…}
+  *    "probe_min_sec":…,"build_cpu_sec":…,"probe_cpu_secs":[…],
+  *    "cpu_suspect":…,"sf_dir":…}
   */
 object AnnProbeBench {
   def main(args: Array[String]): Unit = {
     val (confs, rest) = args.partition(_.contains("="))
     val sfDir = rest.headOption.getOrElse(sys.env("SPARK_GRAFT_SF_DIR"))
     val runs = if (rest.length > 1) rest(1).toInt else 5
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    confs.foreach { c => val Array(k, v) = c.split("=", 2); builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Harness.session(32, confs.toSeq)
     spark.sparkContext.setLogLevel("WARN")
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-      }
-    })
-    def settle(): Long = {
-      var prev = -1L; var cur = cpuNs.get(); var spins = 0
-      while (cur != prev && spins < 40) { Thread.sleep(50); prev = cur; cur = cpuNs.get(); spins += 1 }
-      cur
-    }
+    val meter = new Harness.CpuMeter(spark)
     import graft.operators.Llm
 
     val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -63,14 +41,12 @@ object AnnProbeBench {
 
     val tmp = java.nio.file.Files.createTempDirectory("graft_ann_probe_bench").toString
     // --- build: train + encode + persist (once per corpus snapshot) ---
-    val cpuB0 = settle()
-    val tB0 = System.nanoTime()
-    val built = Llm.buildAnnIndex(spark, all.select(col("vec_id"), col("v")))
-    built.centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
-    built.books.write.mode("overwrite").parquet(s"$tmp/books")
-    built.codes.write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/codes")
-    val buildWall = (System.nanoTime() - tB0) / 1e9
-    val buildCpu = (settle() - cpuB0) / 1e9
+    val build = meter.timed {
+      val built = Llm.buildAnnIndex(spark, all.select(col("vec_id"), col("v")))
+      built.centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
+      built.books.write.mode("overwrite").parquet(s"$tmp/books")
+      built.codes.write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/codes")
+    }
 
     // --- probe: steady-state — reload once, probe `runs` times ---
     val index = Llm.AnnIndex(
@@ -79,24 +55,22 @@ object AnnProbeBench {
       spark.read.parquet(s"$tmp/codes"))
     val probes = all.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val walls = new scala.collection.mutable.ArrayBuffer[Double]()
-    val cpus = new scala.collection.mutable.ArrayBuffer[Double]()
-    for (_ <- 0 until (runs + 1)) { // first run warms reload + codegen
-      val cpu0 = settle()
-      val t0 = System.nanoTime()
-      Llm.probeAnnIndex(spark, index, probes, all)
-        .write.mode("overwrite").format("noop").save()
-      walls += (System.nanoTime() - t0) / 1e9
-      cpus += (settle() - cpu0) / 1e9
+    // first run warms reload + codegen
+    val reads = (0 until (runs + 1)).map { _ =>
+      meter.timed(Llm.probeAnnIndex(spark, index, probes, all)
+        .write.mode("overwrite").format("noop").save())
     }
-    val probeSecs = walls.drop(1)
+    val timed = reads.drop(1)
+    // a CPU reading whose settle hit its cap may hold a neighbour's
+    // stages (Bench's `cpu_attribution_suspect`)
+    val suspect = (build +: timed).exists(_.suspect)
     println(
-      f"""{"metric":"ann_probe","build_sec":$buildWall%.2f,"build_cpu_sec":$buildCpu%.2f,""" +
-      s""""probe_secs":[${probeSecs.map(w => f"$w%.2f").mkString(",")}],""" +
-      f""""probe_min_sec":${probeSecs.min}%.2f,""" +
-      s""""probe_cpu_secs":[${cpus.drop(1).map(c => f"$c%.2f").mkString(",")}],""" +
-      f""""probe_cpu_min_sec":${cpus.drop(1).min}%.2f,"warm_sec":${walls.head}%.2f,""" +
-      s""""runs":$runs,"sf_dir":"$sfDir"}""")
+      f"""{"metric":"ann_probe","build_sec":${build.wallSec}%.2f,"build_cpu_sec":${build.cpuSec}%.2f,""" +
+      s""""probe_secs":[${timed.map(r => f"${r.wallSec}%.2f").mkString(",")}],""" +
+      f""""probe_min_sec":${timed.map(_.wallSec).min}%.2f,""" +
+      s""""probe_cpu_secs":[${timed.map(r => f"${r.cpuSec}%.2f").mkString(",")}],""" +
+      f""""probe_cpu_min_sec":${timed.map(_.cpuSec).min}%.2f,"warm_sec":${reads.head.wallSec}%.2f,""" +
+      s""""cpu_suspect":$suspect,"runs":$runs,"sf_dir":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark harness. Runs every declared query against
   * `SPARK_GRAFT_SF_DIR` and emits one JSON metrics line, both to
@@ -243,59 +239,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM (not ICU) case mappings: Unicode-correct either way, and
-      // the ICU path was the top CPU frame in round-7 stack profiles
-      // of the shingle/tokenize pipelines (execBinaryICU per row)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // never bypass-merge shuffle: bypass opens one file per reduce
-      // partition per map task (32x32 per exchange); the unsafe/sort
-      // writers open one file per map task
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
-    // Stage-level executor metrics, accumulated across the whole run;
-    // per-query attribution snapshots the counters around each
+    // Stage-level executor CPU, accumulated across the whole run;
+    // per-query attribution reads the counter around each
     // materialization (queries run one at a time, so deltas are
-    // unambiguous up to listener-bus lag — see settle()).
-    val cpuNs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-      }
-    })
-    // The listener bus is asynchronous: stage-completed events can
-    // trail the job by a beat. Poll until the counter is stable so a
-    // query's stages don't get attributed to its successor. (Settle
-    // time is outside the wall-clock timing window.) Returns the
-    // settled counter AND whether the poll hit its 2 s cap while the
-    // counter was still moving — the exact mechanism behind the
-    // round-10/11 attribution inflations (a throttled stage drains
-    // past the cap and its CPU lands on the NEXT query), so the
-    // timeout bit is recorded per sample and surfaces in the JSON as
+    // unambiguous up to listener-bus lag). A settle that hit its cap
+    // is recorded per sample and surfaces in the JSON as
     // `cpu_attribution_suspect` (round-11 verdict item 2: the ledger
     // must self-identify instead of needing a judge to diff records).
-    def settle(): (Long, Boolean) = {
-      var prev = -1L
-      var cur = cpuNs.get()
-      var spins = 0
-      while (cur != prev && spins < 40) { // <= 2 s
-        Thread.sleep(50)
-        prev = cur
-        cur = cpuNs.get()
-        spins += 1
-      }
-      (cur, cur != prev)
-    }
+    val meter = new Harness.CpuMeter(spark)
 
     def materialize(name: String): Unit = {
       // label the jobs (guide §1.5) so UI/event-log reads attribute
@@ -384,14 +338,11 @@ object Bench {
       windows += ((p0, Double.NaN))
       var inWin = 0
       for (name <- qs) {
-        val (cpu0, pre) = settle()
-        val t0 = System.nanoTime()
         try {
-          materialize(name)
-          wall(name) ::= (System.nanoTime() - t0) / 1e9
-          val (cpu1, post) = settle()
-          cpu(name) ::= (cpu1 - cpu0) / 1e9
-          cpuSus(name) ::= (pre || post)
+          val r = meter.timed(materialize(name))
+          wall(name) ::= r.wallSec
+          cpu(name) ::= r.cpuSec
+          cpuSus(name) ::= r.suspect
           winIdx(name) ::= cur
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")

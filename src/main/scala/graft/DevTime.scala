@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time named queries one at a time in a fresh session
   * (isolates per-query cost from bench-order JVM contamination).
   * Usage: sbt "runMain graft.DevTime <sfDir> <query> [query ...]"
@@ -10,23 +8,7 @@ object DevTime {
   def main(args: Array[String]): Unit = {
     val (confs, rest) = args.partition(_.contains("="))
     val sfDir = rest.head
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM (not ICU) case mappings: Unicode-correct either way, and
-      // the ICU path was the top CPU frame in round-7 stack profiles
-      // of the shingle/tokenize pipelines (execBinaryICU per row)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // never bypass-merge shuffle: bypass opens one file per reduce
-      // partition per map task (32x32 per exchange); the unsafe/sort
-      // writers open one file per map task
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    confs.foreach { c => val Array(k, v) = c.split("=", 2); builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Harness.session(32, confs.toSeq)
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
@@ -60,29 +42,17 @@ object DevTime {
     })
     sampler.setDaemon(true)
     if (sys.env.contains("DEVTIME_SAMPLE")) sampler.start()
-    // executor CPU per query (same listener+settle pattern as Bench):
-    // CPU is the number to compare across A/B runs on this host —
-    // wall swings 10-50x under the VM's throttling, CPU only
-    // stretches with frequency scaling
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) cpuNs.addAndGet(m.executorCpuTime)
-      }
-    })
-    def settle(): Long = {
-      var prev = -1L; var cur = cpuNs.get(); var spins = 0
-      while (cur != prev && spins < 40) { Thread.sleep(50); prev = cur; cur = cpuNs.get(); spins += 1 }
-      cur
-    }
+    // executor CPU per query (the meter Bench uses): CPU is the
+    // number to compare across A/B runs on this host — wall swings
+    // 10-50x under the VM's throttling, CPU only stretches with
+    // frequency scaling. `cpu?` marks a reading whose settle hit its
+    // cap (Bench's `cpu_attribution_suspect`): re-run before trusting it.
+    val meter = new Harness.CpuMeter(spark)
     rest.drop(1).foreach { n =>
-      val cpu0 = settle()
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"TIMING $n $wall%.2f s  cpu ${(settle() - cpu0) / 1e9}%.2f s")
+      val r = meter.timed(
+        SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save())
+      val cpu = if (r.suspect) "cpu?" else "cpu"
+      println(f"TIMING $n ${r.wallSec}%.2f s  $cpu ${r.cpuSec}%.2f s")
     }
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for the named queries
   * (all of them by default) so scan pruning / pushdown / join
   * strategies can be audited. Usage:
@@ -11,22 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM (not ICU) case mappings: Unicode-correct either way, and
-      // the ICU path was the top CPU frame in round-7 stack profiles
-      // of the shingle/tokenize pipelines (execBinaryICU per row)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // never bypass-merge shuffle: bypass opens one file per reduce
-      // partition per map task (32x32 per exchange); the unsafe/sort
-      // writers open one file per map task
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")

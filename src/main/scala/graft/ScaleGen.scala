@@ -64,14 +64,7 @@ object ScaleGen {
     val cliqueCap = if (args.length == 4) args(3).toInt else 0
     require(factor >= 1, s"factor must be >= 1, got $factor")
     require(cliqueCap >= 0, s"cliqueCap must be >= 0, got $cliqueCap")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, out, factor, cliqueCap)
     spark.stop()

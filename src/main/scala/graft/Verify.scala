@@ -1,28 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** oracle_sql.json: query name → oracle SQL for every record that
+    * carries one, keys sorted. */
+  private[graft] def oracleJson: String = {
+    val m = new java.util.TreeMap[String, String]()
+    for (q <- SparkEntry.registry; sql <- q.oracle) m.put(q.name, sql)
+    new ObjectMapper().writeValueAsString(m)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, only @ _*) = args // trailing names = dev subset
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JVM (not ICU) case mappings: Unicode-correct either way, and
-      // the ICU path was the top CPU frame in round-7 stack profiles
-      // of the shingle/tokenize pipelines (execBinaryICU per row)
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // never bypass-merge shuffle: bypass opens one file per reduce
-      // partition per map task (32x32 per exchange); the unsafe/sort
-      // writers open one file per map task
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -34,21 +29,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
     spark.stop()
   }
 }

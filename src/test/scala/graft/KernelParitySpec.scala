@@ -258,14 +258,11 @@ class KernelParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   // queries (curate crosses Ckpt.par2 + multiple ckptLocal barriers;
   // dedup_near crosses the working-set checkpoint).
   test("deserialized-checkpoint escape hatch changes storage, not results") {
-    def withDeserCkpt[A](body: => A): A = {
-      spark.conf.set("spark.graft.ckpt.deserialized", "true")
-      try body
-      finally spark.conf.unset("spark.graft.ckpt.deserialized")
-    }
     for (q <- Seq("llm_curate", "llm_dedup_near")) {
       val ser   = canon(SparkEntry.queries(q)(spark, dir))
-      val deser = withDeserCkpt { canon(SparkEntry.queries(q)(spark, dir)) }
+      val deser = TestSpark.withConf("spark.graft.ckpt.deserialized" -> "true") {
+        canon(SparkEntry.queries(q)(spark, dir))
+      }
       assert(ser.nonEmpty, s"$q returned no rows — parity would be vacuous")
       assert(deser == ser, s"$q diverges under deserialized checkpoint blocks")
     }

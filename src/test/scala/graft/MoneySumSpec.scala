@@ -38,12 +38,10 @@ class MoneySumSpec extends AnyFunSuite {
       // repartition after the agg only reshuffles the RESULT — instead
       // re-run with a different shuffle width to move the partial-agg
       // boundaries
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
+      TestSpark.withConf("spark.sql.shuffle.partitions" -> "3") {
         val alt = canon(SparkEntry.queries(q)(spark, TestSpark.sf).collect())
         assert(base == alt, s"$q drifted across shuffle widths")
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       assert(base == relaid, s"$q unstable under result repartition")
     }
   }

@@ -360,9 +360,7 @@ class PlanSpec extends AnyFunSuite {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    TestSpark.withConf(confs: _*) {
       // 4k distinct cold keys + one hot key (7) holding half the rows
       val left = spark.range(0, 200000)
         .select(org.apache.spark.sql.functions.when(col("id") % 2 === 0, lit(7L))
@@ -381,9 +379,6 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val nOff = left.join(right, "k").collect().length
       assert(n == nOff, s"skew-split changed the join result: $n vs $nOff")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -2,18 +2,28 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the registry index: `queryDoc` documents exactly the declared
-  * registry (no missing, no stale entries), and README.md's generated
-  * section equals `RegistryDoc.table` — adding a query without
-  * documenting it, or documenting without regenerating the README,
-  * fails here with the one command that fixes it. */
+/** Pins the registry index: the registry's names are unique, and
+  * README.md's generated section equals `RegistryDoc.table` —
+  * documenting without regenerating the README fails here with the
+  * one command that fixes it. Also pins Verify's oracle_sql.json to
+  * the registry's oracle SQL. */
 class RegistryDocSpec extends AnyFunSuite {
 
-  test("queryDoc covers the registry exactly") {
-    val q = SparkEntry.queries.keySet
-    val d = SparkEntry.queryDoc.keySet
-    assert((q -- d).isEmpty, s"queries missing from queryDoc: ${(q -- d).toSeq.sorted}")
-    assert((d -- q).isEmpty, s"stale queryDoc entries: ${(d -- q).toSeq.sorted}")
+  test("registry names are unique") {
+    // `queries` is `registry.toMap`, which would keep one of two
+    // records sharing a name and drop the other without a word
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"names declared twice: ${dups.toSeq.sorted}")
+    assert(SparkEntry.queries.size == SparkEntry.registry.size)
+  }
+
+  test("Verify's oracle_sql.json parses back to exactly the registry's oracle SQL") {
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.oracleJson, classOf[java.util.Map[String, String]])
+    val expected = SparkEntry.registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    assert(expected.size == 114)
+    assert(parsed.size == expected.size)
+    expected.foreach { case (n, sql) => assert(parsed.get(n) == sql, s"$n round-trips changed") }
   }
 
   // Stale docs regenerate ONLY when opted in (GRAFT_REGEN_DOCS=1):

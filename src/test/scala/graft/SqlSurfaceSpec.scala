@@ -26,10 +26,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val lazyNames =
       SparkEntry.registerSqlSurface(spark, TestSpark.sf, includeSnapshotLegs = false)
     assert(lazyNames.toSet ==
-      SparkEntry.queries.keySet -- SparkEntry.snapshotLegs,
+      SparkEntry.registry.filterNot(_.snapshot).map(_.name).toSet,
       "lazy surface must exclude exactly the snapshot-semantics legs")
-    assert(SparkEntry.snapshotLegs.subsetOf(SparkEntry.queries.keySet),
-      "snapshotLegs must name real registry queries")
   }
 
   test("the SQL surface composes: user predicates apply over a registered view") {

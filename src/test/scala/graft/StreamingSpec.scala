@@ -14,6 +14,10 @@ import graft.streaming.Streaming.Event
 class StreamingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.withConf
+
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private def ts(s: String) = Timestamp.valueOf(s)
   private def ev(id: Long, t: String, typ: String = "click") =
@@ -241,11 +245,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")).isSuccess,
       "RocksDB state store provider not on the classpath")
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbProvider) {
       val robots = Seq(("src0.example.com", graft.sources.Urls.frontierPolicy("src0")))
         .toDF("host", "robots_txt")
       val ms = MemoryStream[Streaming.UrlCand]
@@ -266,8 +266,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(ids == Seq(1L, 4L),
           s"RocksDB-backed admission state must dedup aliases across batches: $ids")
       } finally q.stop()
-    } finally {
-      prev match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
     }
   }
 
@@ -1118,10 +1116,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(runStream("ndx_suspects_on") == expected,
       "kernel-path streaming suspects diverged from batch candidates")
-    spark.conf.set("spark.graft.kernels.enabled", "false")
-    try assert(runStream("ndx_suspects_off") == expected,
-      "fallback rowSigSql suspects diverged — per-row sig not bit-equal")
-    finally spark.conf.unset("spark.graft.kernels.enabled")
+    withConf("spark.graft.kernels.enabled" -> "false") {
+      assert(runStream("ndx_suspects_off") == expected,
+        "fallback rowSigSql suspects diverged — per-row sig not bit-equal")
+    }
   }
 
   test("streaming dup-span suspects equal the batch fingerprint join — kernels on AND off") {
@@ -1169,10 +1167,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(runStream("winnow_suspects_on") == expected,
       "kernel-path streaming dup-span suspects diverged from the batch join")
-    spark.conf.set("spark.graft.kernels.enabled", "false")
-    try assert(runStream("winnow_suspects_off") == expected,
-      "fallback rowWinnowSql suspects diverged — per-row winnow not bit-equal")
-    finally spark.conf.unset("spark.graft.kernels.enabled")
+    withConf("spark.graft.kernels.enabled" -> "false") {
+      assert(runStream("winnow_suspects_off") == expected,
+        "fallback rowWinnowSql suspects diverged — per-row winnow not bit-equal")
+    }
   }
 
   test("near-dup suspects index refresh: stop, rebuild, restart swaps the static side; dedup state carries over") {
@@ -1507,11 +1505,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")).isSuccess,
       "RocksDB state store provider not on the classpath")
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbProvider) {
       val ms = MemoryStream[Event]
       val q = Streaming.asofEnrich(ms.toDF(), lateness = "0 seconds")
         .writeStream.format("memory").queryName("rocksdb_asof")
@@ -1535,11 +1529,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(metricNames.exists(_.contains("rocksdb")),
           s"state ran on the default provider, not RocksDB: ${metricNames.take(8).mkString(",")}")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -1705,11 +1694,7 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")).isSuccess,
       "RocksDB state store provider not on the classpath")
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(RocksDbProvider) {
       val ms = MemoryStream[Event]
       val q = Streaming.sessionsCustom(ms.toDF(), gapSec = 1800L, lateness = "0 seconds")
         .writeStream.format("memory").queryName("rocksdb_sessions")
@@ -1757,9 +1742,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(latest.getLong(1) > 30,
           "DGIM sketch state lost between micro-batches under RocksDB")
       } finally q2.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -5,22 +5,19 @@ import org.apache.spark.sql.SparkSession
 /** One shared session for the whole test JVM (never stopped — suites
   * run sequentially in the forked JVM; see build.sbt). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // JVM (not ICU) case mappings: Unicode-correct either way, and
-    // the ICU path was the top CPU frame in round-7 stack profiles
-    // of the shingle/tokenize pipelines (execBinaryICU per row)
-    .config("spark.sql.icu.caseMappings.enabled", "false")
-    // never bypass-merge shuffle: bypass opens one file per reduce
-    // partition per map task (32x32 per exchange); the unsafe/sort
-    // writers open one file per map task
-    .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the session confs `pairs` set, then restores
+    * each key's prior value, or unsets a key that had none. */
+  def withConf[A](pairs: (String, String)*)(body: => A): A = {
+    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
