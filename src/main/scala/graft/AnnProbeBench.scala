@@ -29,30 +29,18 @@ object AnnProbeBench {
     val sfDir = rest.headOption.getOrElse(sys.env("SPARK_GRAFT_SF_DIR"))
     val runs = if (rest.length > 1) rest(1).toInt else 5
     val spark = Harness.session(32, confs.toSeq)
-    spark.sparkContext.setLogLevel("WARN")
     val meter = new Harness.CpuMeter(spark)
     import graft.operators.Llm
 
-    val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"),
-        expr("transform(embedding, x -> cast(x AS double))").as("v"))
-      .withColumn("nrm", expr(
-        "sqrt(aggregate(v, cast(0.0 as double), (a, x) -> a + x * x))"))
-
+    val all = Llm.vecs(spark, sfDir)
     val tmp = java.nio.file.Files.createTempDirectory("graft_ann_probe_bench").toString
     // --- build: train + encode + persist (once per corpus snapshot) ---
     val build = meter.timed {
-      val built = Llm.buildAnnIndex(spark, all.select(col("vec_id"), col("v")))
-      built.centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
-      built.books.write.mode("overwrite").parquet(s"$tmp/books")
-      built.codes.write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/codes")
+      Llm.buildAnnIndex(spark, all.select(col("vec_id"), col("v"))).write(tmp)
     }
 
     // --- probe: steady-state — reload once, probe `runs` times ---
-    val index = Llm.AnnIndex(
-      spark.read.parquet(s"$tmp/centroids"),
-      spark.read.parquet(s"$tmp/books"),
-      spark.read.parquet(s"$tmp/codes"))
+    val index = Llm.AnnIndex.read(spark, tmp)
     val probes = all.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("v"), col("nrm"))
     // first run warms reload + codegen

@@ -9,7 +9,6 @@ object DevTime {
     val (confs, rest) = args.partition(_.contains("="))
     val sfDir = rest.head
     val spark = Harness.session(32, confs.toSeq)
-    spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {

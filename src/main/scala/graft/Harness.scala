@@ -11,8 +11,8 @@ object Harness {
 
   /** A `local[cpus]` session with `cpus` shuffle partitions and the
     * engine's settings. `overrides` are `k=v` strings (the trailing
-    * arguments of DevTime and AnnProbeBench), applied last. The log
-    * level stays the caller's. */
+    * arguments of DevTime and AnnProbeBench), applied last. Spark
+    * logs at WARN from the start (src/main/resources/log4j2.properties). */
   def session(cpus: Int, overrides: Seq[String] = Nil): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -65,7 +65,6 @@ object ScaleGen {
     require(factor >= 1, s"factor must be >= 1, got $factor")
     require(cliqueCap >= 0, s"cliqueCap must be >= 0, got $cliqueCap")
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
     run(spark, src, out, factor, cliqueCap)
     spark.stop()
   }

@@ -18,7 +18,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, only @ _*) = args // trailing names = dev subset
     val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }

@@ -1837,7 +1837,9 @@ object Llm {
 
   // ---- similarity search -------------------------------------------------
 
-  private def vecs(spark: SparkSession, dir: String): DataFrame =
+  /** `(vec_id, v, nrm)`: the embeddings as double vectors with their
+    * norms, the input of every kNN and ANN query. */
+  private[graft] def vecs(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x AS double))").as("v"))
       .withColumn("nrm", expr("sqrt(aggregate(v, cast(0.0 AS double), (a, x) -> a + x * x))"))
@@ -1853,22 +1855,53 @@ object Llm {
     else expr("aggregate(zip_with(v, pv, (x, y) -> x * y), cast(0.0 AS double), (a, x) -> a + x)") /
       (col("nrm") * col("pn"))
 
-  /** Exact cosine top-k (k=10) for each probe vector (vec_id < 10):
-    * the brute-force baseline and the oracle-checked twin of the ANN
-    * path. Probes are broadcast, the corpus is scanned once, ranking
-    * is a partitioned window (TakeOrdered per probe, no global
-    * sort) — exactly the plan a 100 TB brute-force rerank uses. */
-  def knnExact(spark: SparkSession, dir: String): DataFrame = {
-    val all = vecs(spark, dir)
-    val probes = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
+  /** `(vec_id, v, nrm)` rows as the probe side of a re-rank:
+    * `(probe_id, pv, pn)`. */
+  private def asProbes(vecs: DataFrame): DataFrame =
+    vecs.select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
+
+  /** The exact stage every kNN and ANN query ends with: per probe, the
+    * 10 candidates of highest cosine (rounded to 6 places, ties by
+    * vec_id). `cand` rows carry `(probe_id, vec_id, v, nrm, pv, pn)`;
+    * ranking is a partitioned window (TakeOrdered per probe, no global
+    * sort). */
+  private def top10(spark: SparkSession, cand: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    all.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
+    cand
       .withColumn("sim", round(cosineSim(spark), 6))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 10)
       .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+  }
+
+  /** `top10` over ids-only candidates `(probe_id, vec_id)`: the float
+    * vectors re-join from `corpus` and from the broadcast `probes`
+    * (`asProbes` rows). Candidates carry ids only until here, so the
+    * vectors cross no shuffle of the candidate stage. */
+  private def rerank(spark: SparkSession, ids: DataFrame, corpus: DataFrame,
+      probes: DataFrame): DataFrame =
+    top10(spark, ids.join(corpus, Seq("vec_id")).join(broadcast(probes), Seq("probe_id")))
+
+  /** The approximate stage of a two-stage kNN: per probe, the `keep`
+    * candidates of highest `simq` (ties by vec_id), as
+    * `(probe_id, vec_id)`. */
+  private def approxTop(cand: DataFrame, simq: Column, keep: Int): DataFrame = {
+    val wq = Window.partitionBy(col("probe_id")).orderBy(col("simq").desc, col("vec_id").asc)
+    cand
+      .withColumn("simq", simq)
+      .withColumn("rnq", row_number().over(wq))
+      .filter(col("rnq") <= keep)
+      .select(col("probe_id"), col("vec_id"))
+  }
+
+  /** Exact cosine top-k (k=10) for each probe vector (vec_id < 10):
+    * the brute-force baseline and the oracle-checked twin of the ANN
+    * path. Probes are broadcast and the corpus is scanned once —
+    * exactly the plan a 100 TB brute-force rerank uses. */
+  def knnExact(spark: SparkSession, dir: String): DataFrame = {
+    val all = vecs(spark, dir)
+    top10(spark, all.crossJoin(broadcast(asProbes(all.filter(col("vec_id") < 10))))
+      .filter(col("vec_id") =!= col("probe_id")))
   }
 
   /** The SRP bucket kernel in plain Scala — the UDF fallback's body,
@@ -1937,17 +1970,7 @@ object Llm {
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"))
       .distinct()
-    val probes = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
-    val cand = candIds
-      .join(all, Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    cand
-      .withColumn("sim", round(cosineSim(spark), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+    rerank(spark, candIds, all, asProbes(all.filter(col("vec_id") < 10)))
   }
 
   /** ANN via IVF (inverted-file) coarse quantization — the cluster-
@@ -1968,88 +1991,8 @@ object Llm {
              iters: Int = 2, trainCap: Int = 100000): DataFrame = {
     import spark.implicits._
     val all = vecs(spark, dir)
-    // widen the Lloyd input: a single-file embeddings scan is ONE
-    // partition, which serializes the per-round assignment
-    // mapPartitions into one task (measured 0.85 s/round at sf0.1 —
-    // the bulk of the query's wall). The layout is PINNED the strong
-    // way (hash-partition on vec_id into exactly 64 + in-partition
-    // sort, Tables.pinnedLayout): the centroid update sums floats in
-    // partition-then-row order, so the codebook — and therefore every
-    // assignment — is bit-reproducible only if row→partition and
-    // within-partition order are functions of the data alone. A
-    // round-robin widen held that only for inputs narrower than the
-    // pin (round-9 ADVICE); hashing on the unique vec_id holds it for
-    // ANY input split layout. 64 tasks is ample for a codebook
-    // training pass, and the sort is per-partition over training
-    // rows only (at 100 TB the codebook trains on a sample, not
-    // the corpus; only the final assignment scan is corpus-sized).
-    // pinned layout materialized ONCE (r21, the annPq note): both
-    // Lloyd rounds, the seed collect and the count read these blocks
-    // instead of re-running the pin shuffle per job
-    val typedDf = Tables.pinnedLayout(all.select(col("vec_id"), col("v")), 64, "vec_id")
-      .ckptLocal()
-    val typed = typedDf.as[(Long, Array[Double])]
-    val trainTyped = trainView(spark, typedDf, typedDf.count(), trainCap)
-    // deterministic centroid seeds
-    var centroids: Array[Array[Double]] = typedDf
-      .select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
-      .orderBy(col("hk")).limit(k)
-      .select(col("v")).as[Array[Double]].collect()
-
-    // centroid norms are hoisted out of the per-vector loop: computed
-    // once per codebook (per partition after broadcast), they drop a
-    // third of the Lloyd assignment arithmetic — per vector only the
-    // dot products and the vector's own norm remain
-    def centroidNorms(cs: Array[Array[Double]]): Array[Double] =
-      cs.map { c =>
-        var nc = 0.0; var i = 0
-        while (i < c.length) { nc += c(i) * c(i); i += 1 }
-        math.sqrt(nc)
-      }
-
-    def nearest(v: Array[Double], cs: Array[Array[Double]],
-                norms: Array[Double], n: Int): Array[Int] = {
-      var nv = 0.0
-      var i = 0
-      while (i < v.length) { nv += v(i) * v(i); i += 1 }
-      val vNorm = math.sqrt(nv)
-      val sims = new Array[Double](cs.length)
-      var c = 0
-      while (c < cs.length) {
-        val cc = cs(c)
-        var dot = 0.0
-        i = 0
-        while (i < v.length) { dot += v(i) * cc(i); i += 1 }
-        sims(c) = dot / (vNorm * norms(c))
-        c += 1
-      }
-      sims.zipWithIndex.sortBy(-_._1).take(n).map(_._2)
-    }
-
-    // Lloyd refinement: distributed assign + partial sums, K×dim to driver
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      val sums = trainTyped.mapPartitions { rows =>
-        val cs = bc.value
-        val norms = centroidNorms(cs)
-        val acc = Array.fill(cs.length)(new Array[Double](cs(0).length))
-        val cnt = new Array[Long](cs.length)
-        rows.foreach { case (_, v) =>
-          val c = nearest(v, cs, norms, 1)(0)
-          var i = 0
-          while (i < v.length) { acc(c)(i) += v(i); i += 1 }
-          cnt(c) += 1
-        }
-        acc.indices.iterator.filter(cnt(_) > 0).map(c => (c, acc(c), cnt(c)))
-      }.collect()
-      val merged = sums.groupBy(_._1).map { case (c, parts) =>
-        val s = new Array[Double](centroids(0).length)
-        var n = 0L
-        parts.foreach { case (_, a, m) => var i = 0; while (i < s.length) { s(i) += a(i); i += 1 }; n += m }
-        c -> s.map(_ / n)
-      }
-      centroids = centroids.indices.map(c => merged.getOrElse(c, centroids(c))).toArray
-    }
+    val p = pinned(spark, all, trainCap)
+    val centroids = lloyd(spark, p.trainVecs, p.seeds(k), 1, iters, byCosine)(0)
 
     // Assignment pass: every vector → its inverted-list id. The
     // codebook is K×dim (driver-small) and travels as a constant-
@@ -2065,10 +2008,10 @@ object Llm {
           Kernels("graft_nearest_centroid", col("v"), codebook).as("cluster"))
       } else {
         val bc = spark.sparkContext.broadcast(centroids)
-        typed.mapPartitions { rows =>
+        p.all.mapPartitions { rows =>
           val cs = bc.value
-          val norms = centroidNorms(cs)
-          rows.map { case (id, v) => (id, nearest(v, cs, norms, 1)(0)) }
+          val norms = annCentroidNorms(cs)
+          rows.map { case (id, v) => (id, annNearest(v, cs, norms, 1)(0)) }
         }.toDF("vec_id", "cluster")
       }
     val listed = all.join(assigned, Seq("vec_id"))
@@ -2076,19 +2019,14 @@ object Llm {
     val probes = all.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("v"), col("nrm")).as[(Long, Array[Double], Double)]
       .collect()
-    val finalNorms = centroidNorms(centroids)
+    val finalNorms = annCentroidNorms(centroids)
     val probeClusters = probes.flatMap { case (pid, pv, _) =>
-      nearest(pv, centroids, finalNorms, nprobe).map(c => (pid, c)) }.toSeq
+      annNearest(pv, centroids, finalNorms, nprobe).map(c => (pid, c)) }.toSeq
       .toDF("probe_id", "cluster")
     val probeVecs = probes.toSeq.toDF("probe_id", "pv", "pn")
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    listed.join(probeClusters, Seq("cluster"))
+    top10(spark, listed.join(probeClusters, Seq("cluster"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .join(broadcast(probeVecs), Seq("probe_id"))
-      .withColumn("sim", round(cosineSim(spark), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+      .join(broadcast(probeVecs), Seq("probe_id")))
   }
 
   /** Embedding-cosine near-duplicate pairs — the vector-space member
@@ -2371,15 +2309,6 @@ object Llm {
         round(col("wkey"), 6).as("wkey"))
   }
 
-  /** SQ8 kNN: scalar-quantized search + exact re-rank — the
-    * two-stage pattern a memory-bound ANN deployment actually runs
-    * (FAISS SQ8 et al.). Stage 1 scans int8 codes (4x smaller than
-    * float32 — at 100 TB that is 4x less scan I/O, which is the whole
-    * point) and ranks by approximate cosine against the full-precision
-    * broadcast probes; stage 2 re-ranks the top-30 candidates with
-    * the exact kernel and keeps 10. Candidates carry ids only between
-    * stages; vectors re-join for the re-rank. no_oracle by design
-    * (approximate stage); LlmSpec pins recall against `knnExact`. */
   /** Product-quantized ADC kNN (`llm_ann_pq`) — the third quantized
     * similarity path beside SQ8 (`knnQuantized`) and the bucketed
     * indexes (LSH/IVF), and the canonical 100 TB ANN memory layout
@@ -2393,11 +2322,8 @@ object Llm {
     * subspaces (4 dims each) clears the 0.75 floor with margin —
     * finer subspaces quantize better at equal total bits.
     *
-    * Spark shape: subspace codebooks train with the same
-    * pinned-layout Lloyd loop as IVF (hash-partition on vec_id +
-    * in-partition sort, so per-subspace partial sums accumulate in a
-    * data-deterministic order → bit-reproducible codebooks on any
-    * input split; only m×16×8 doubles cross to the driver per
+    * Spark shape: subspace codebooks train with `lloyd` on the
+    * pinned layout (only m×16×4 doubles cross to the driver per
     * round). Encode is one map-only pass. The ADC scan ranks by
     * approximate inner product, the top-50 candidates re-join the
     * float vectors for an exact cosine re-rank (ids-only until then)
@@ -2415,77 +2341,8 @@ object Llm {
       iters: Int = 3, trainCap: Int = 100000): DataFrame = {
     import spark.implicits._
     val all = vecs(spark, dir)
-    // the pinned training layout materializes ONCE (r21; guide §1.2):
-    // every Lloyd round's collect previously re-ran the hash-exchange
-    // + in-partition sort as its own job — iters+1 executions of the
-    // same shuffle. The checkpoint preserves both the partitioning
-    // and the within-partition order, so the partial-sum fold order
-    // (and therefore the codebook bits) is unchanged. Count, dim and
-    // seeds read the materialized blocks instead of re-scanning
-    // parquet (same rows, same values).
-    val typedDf = Tables.pinnedLayout(all.select(col("vec_id"), col("v")), 64, "vec_id")
-      .ckptLocal()
-    val typed = typedDf.as[(Long, Array[Double])]
-    val nAll = typedDf.count()
-    val trainTyped = trainView(spark, typedDf, nAll, trainCap)
-    val dim = typedDf.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"PQ needs dim % m == 0, got $dim % $m")
-    val sub = dim / m
-
-    // deterministic seeds: the ks hash-ordered vectors' subvectors
-    val seedVecs = typedDf
-      .select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
-      .orderBy(col("hk")).limit(ks)
-      .select(col("v")).as[Array[Double]].collect()
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
-      seedVecs.map(_.slice(j * sub, (j + 1) * sub)))
-
-    // nearest subspace centroid by L2 (k-means metric); first-minimum
-    // tie-break — deterministic
-    def nearestSub(v: Array[Double], off: Int, bk: Array[Array[Double]]): Int = {
-      var best = 0; var bestD = Double.MaxValue
-      var c = 0
-      while (c < bk.length) {
-        val cc = bk(c)
-        var d = 0.0; var i = 0
-        while (i < cc.length) { val t = v(off + i) - cc(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      best
-    }
-
-    // Lloyd per subspace: distributed assign + partial sums,
-    // m×ks×sub doubles to the driver per round
-    for (_ <- 0 until iters) {
-      val bc = spark.sparkContext.broadcast(books)
-      val sums = trainTyped.mapPartitions { rows =>
-        val bks = bc.value
-        val acc = Array.tabulate(m, ks)((_, _) => new Array[Double](sub))
-        val cnt = Array.ofDim[Long](m, ks)
-        rows.foreach { case (_, v) =>
-          var j = 0
-          while (j < m) {
-            val c = nearestSub(v, j * sub, bks(j))
-            var i = 0
-            while (i < sub) { acc(j)(c)(i) += v(j * sub + i); i += 1 }
-            cnt(j)(c) += 1
-            j += 1
-          }
-        }
-        for (j <- (0 until m).iterator; c <- (0 until ks).iterator if cnt(j)(c) > 0)
-          yield (j, c, acc(j)(c), cnt(j)(c))
-      }.collect()
-      val merged = sums.groupBy(t => (t._1, t._2)).map { case ((j, c), parts) =>
-        val s = new Array[Double](sub)
-        var n = 0L
-        parts.foreach { case (_, _, a, k) =>
-          var i = 0; while (i < sub) { s(i) += a(i); i += 1 }; n += k
-        }
-        (j, c) -> s.map(_ / n)
-      }
-      books = Array.tabulate(m, ks)((j, c) => merged.getOrElse((j, c), books(j)(c)))
-    }
+    val p = pinned(spark, all, trainCap)
+    val books = lloyd(spark, p.trainVecs, p.seeds(ks), m, iters, byL2)
 
     // encode: one map-only pass — m (default 16) codes per vector plus the
     // RECONSTRUCTED norm |x̂| (known exactly at encode time), so the
@@ -2495,61 +2352,28 @@ object Llm {
     // neighbors (measured at sf0.001: recall 0.57 raw-dot → 0.71
     // cosine-normalized at m=8, past the floor at m=16)
     val bcB = spark.sparkContext.broadcast(books)
-    val codes = typed.mapPartitions { rows =>
+    val codes = p.all.mapPartitions { rows =>
       val bks = bcB.value
+      val origin = new Array[Double](m * bks(0)(0).length)
       rows.map { case (id, v) =>
-        val code = new Array[Byte](m)
-        var n2 = 0.0
-        var j = 0
-        while (j < m) {
-          val c = nearestSub(v, j * sub, bks(j))
-          code(j) = c.toByte
-          val cc = bks(j)(c)
-          var i = 0
-          while (i < sub) { n2 += cc(i) * cc(i); i += 1 }
-          j += 1
-        }
-        (id, code, math.sqrt(n2))
+        val (code, qn) = pqEncode(v, origin, bks)
+        (id, code, qn)
       }
     }.toDF("vec_id", "code", "qn").ckptLocal()
 
-    // probes (vec_id < 10) + their ADC tables: table[j*ks + c] =
-    // dot(probe subvector j, codebook(j)(c)) — 10 rows, driver-built
+    // probes (vec_id < 10) + their ADC tables — 10 rows, driver-built
     // (read from the materialized layout, not another parquet scan)
-    val probeRows = typedDf.filter(col("vec_id") < 10)
+    val ptabs = p.all.filter(col("vec_id") < 10)
       .select(col("vec_id"), col("v")).as[(Long, Array[Double])].collect()
-    val ptabs = probeRows.toSeq.map { case (pid, pv) =>
-      val t = new Array[Double](m * ks)
-      for (j <- 0 until m; c <- 0 until ks) {
-        var d = 0.0; var i = 0
-        while (i < sub) { d += pv(j * sub + i) * books(j)(c)(i); i += 1 }
-        t(j * ks + c) = d
-      }
-      (pid, t.toSeq)
-    }
+      .toSeq.map { case (pid, pv) => (pid, adcTable(pv, books).toSeq) }
     val probeTab = broadcast(ptabs.toDF("probe_id", "ptab"))
 
     // ADC scan: approx dot = sum of m table lookups per (vector, probe)
     // — the codegen'd graft_adc kernel over the packed byte codes,
     // HOF reference with kernels disabled (bit parity, adcExpr)
-    val adc = adcExpr(spark, m, ks)
-    val wq = Window.partitionBy(col("probe_id")).orderBy(col("simq").desc, col("vec_id").asc)
-    val cand = codes.crossJoin(probeTab)
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("simq", adc / greatest(col("qn"), lit(1e-12)))
-      .withColumn("rnq", row_number().over(wq))
-      .filter(col("rnq") <= 50)
-      .select(col("probe_id"), col("vec_id"))
-    // exact re-rank: ids-only candidates re-join the float vectors
-    val probes = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    cand.join(all, Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("sim", round(cosineSim(spark), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+    val cand = approxTop(codes.crossJoin(probeTab).filter(col("vec_id") =!= col("probe_id")),
+      adcExpr(spark, m, ks) / greatest(col("qn"), lit(1e-12)), 50)
+    rerank(spark, cand, all, asProbes(all.filter(col("vec_id") < 10)))
   }
 
   /** IVF-PQ composed kNN (`llm_ann_ivfpq`) — the production 100 TB
@@ -2613,44 +2437,95 @@ object Llm {
     * once, encode once, probe many" is a parquet write away (the
     * same build/probe contract as `buildNearDupIndex`). At 100 TB:
     * `codes` is the corpus's 16 B/vector representation (`code` is
-    * a packed `binary`, one byte per subspace) — write it
-    * partitioned by `cluster` and a probe becomes a partition-pruned
-    * scan (IvfIndexSpec demonstrates the pruned-read shape);
+    * a packed `binary`, one byte per subspace) — written partitioned
+    * by `cluster`, a probe becomes a partition-pruned scan
+    * (IvfIndexSpec demonstrates the pruned-read shape);
     * `centroids` (k×dim) and `books` (m×ks×dim/m) are driver-small
     * model tables any session can reload. */
   final case class AnnIndex(centroids: DataFrame, books: DataFrame,
-                            codes: DataFrame)
-
-  /** Bounded codebook-training view: the full pinned frame while the
-    * corpus fits `cap` (bit-identical to training on everything —
-    * every test SF takes this branch), else the `cap` hash-lowest
-    * rows re-pinned to the same layout. The xxhash64 order is
-    * layout-independent and the `vec_id` tiebreak makes the row set
-    * total, so the sample — and therefore the codebooks — stay
-    * bit-reproducible on any input split. At 100 TB this is the line
-    * that keeps "train once" sample-sized instead of corpus-sized
-    * (each Lloyd round costs `cap` rows, not the corpus; the
-    * assignment and encode passes still cover every row — the
-    * standard FAISS `train(sample)` / `add(corpus)` split). */
-  private def trainView(spark: SparkSession, pinnedAll: DataFrame, n: Long,
-      cap: Int): Dataset[(Long, Array[Double])] = {
-    import spark.implicits._
-    // `pinnedAll` is the ALREADY pinned-and-materialized (vec_id, v)
-    // frame (r21 — callers checkpoint it once so the Lloyd rounds stop
-    // re-running the pin shuffle per collect): under the cap it IS the
-    // training view; above it, the cap hash-lowest rows re-pin to the
-    // same layout and materialize once themselves (sample-sized) — the
-    // row set, layout and therefore the codebook bits are unchanged
-    // from the pre-r21 form.
-    if (n <= cap) pinnedAll.as[(Long, Array[Double])]
-    else Tables.pinnedLayout(
-      pinnedAll.select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
-        .orderBy(col("hk"), col("vec_id")).limit(cap)
-        .select(col("vec_id"), col("v")), 64, "vec_id")
-      .ckptLocal().as[(Long, Array[Double])]
+                            codes: DataFrame) {
+    /** Writes the three tables as parquet under `dir`, codes
+      * partitioned by `cluster`; `AnnIndex.read` loads them back. */
+    def write(dir: String): Unit = {
+      centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+      books.write.mode("overwrite").parquet(s"$dir/books")
+      codes.write.mode("overwrite").partitionBy("cluster").parquet(s"$dir/codes")
+    }
   }
 
-  private[graft] def annCentroidNorms(cs: Array[Array[Double]]): Array[Double] =
+  object AnnIndex {
+    /** The index `write` left under `dir`. */
+    def read(spark: SparkSession, dir: String): AnnIndex = AnnIndex(
+      spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/books"),
+      spark.read.parquet(s"$dir/codes"))
+  }
+
+  // ---- the vector quantizer: one definition of each piece ----------------
+  //
+  // `annIvf`, `annPq`, `buildAnnIndex`, `appendAnnIndex`,
+  // `probeAnnIndex` and the streaming `annSuspects` all train, encode
+  // and probe through the helpers below, so one arithmetic order gives
+  // every caller the same codebooks and codes (AnnIndexSpec pins the
+  // bits).
+
+  /** A quantizer's training input. `all` is the `(vec_id, v)` rows
+    * hash-partitioned on vec_id into exactly 64 partitions and sorted
+    * within each (`Tables.pinnedLayout`), materialized once. The Lloyd
+    * update sums floats in partition-then-row order, so the codebooks
+    * are bit-reproducible only if row→partition and within-partition
+    * order are functions of the data alone; hashing on the unique
+    * vec_id holds that for ANY input split layout (a round-robin widen
+    * held it only for inputs narrower than the pin, round-9 ADVICE).
+    * The pin also widens a single-file scan, which would otherwise run
+    * each Lloyd round as one task (measured 0.85 s/round at sf0.1).
+    * The checkpoint keeps the partitioning and the row order, and
+    * every Lloyd round, seed pick and count reads its blocks instead
+    * of re-running the pin shuffle and the parquet scan behind it
+    * (r21).
+    *
+    * `train` is the bounded codebook-training view: `all` itself
+    * while the corpus fits `cap` (bit-identical to training on
+    * everything — every test SF takes this branch), else the `cap`
+    * hash-lowest rows re-pinned to the same layout and materialized
+    * once themselves. The xxhash64 order is layout-independent and the
+    * `vec_id` tiebreak makes the row set total, so the sample — and
+    * therefore the codebooks — stay bit-reproducible on any input
+    * split. At 100 TB this keeps "train once" sample-sized (each Lloyd
+    * round costs `cap` rows, not the corpus) while the assignment and
+    * encode passes still cover every row — the standard FAISS
+    * `train(sample)` / `add(corpus)` split. */
+  private final case class Pinned(all: Dataset[(Long, Array[Double])], n: Long,
+                                  train: Dataset[(Long, Array[Double])]) {
+    private val spark = all.sparkSession
+    import spark.implicits._
+
+    /** The `count` vectors of lowest xxhash64(vec_id): every
+      * codebook's deterministic seeds. */
+    def seeds(count: Int): Array[Array[Double]] =
+      all.select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
+        .orderBy(col("hk")).limit(count)
+        .select(col("v")).as[Array[Double]].collect()
+
+    def trainVecs: Dataset[Array[Double]] = train.select(col("v")).as[Array[Double]]
+  }
+
+  private def pinned(spark: SparkSession, vecsDf: DataFrame, cap: Int): Pinned = {
+    import spark.implicits._
+    val all = Tables.pinnedLayout(vecsDf.select(col("vec_id"), col("v")), 64, "vec_id")
+      .ckptLocal()
+    val n = all.count()
+    val train =
+      if (n <= cap) all
+      else Tables.pinnedLayout(
+        all.select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
+          .orderBy(col("hk"), col("vec_id")).limit(cap)
+          .select(col("vec_id"), col("v")), 64, "vec_id")
+        .ckptLocal()
+    Pinned(all.as[(Long, Array[Double])], n, train.as[(Long, Array[Double])])
+  }
+
+  private def annCentroidNorms(cs: Array[Array[Double]]): Array[Double] =
     cs.map { c =>
       var nc = 0.0; var i = 0
       while (i < c.length) { nc += c(i) * c(i); i += 1 }
@@ -2666,8 +2541,12 @@ object Llm {
   // contiguous reads; identical values in identical order, so the
   // codebook bits are unchanged (LlmSpec/AnnIndexSpec determinism and
   // round-trip pins).
-  private[graft] def annNearest(v: Array[Double], cs: Array[Array[Double]],
-                                norms: Array[Double], n: Int): Array[Int] = {
+  /** The `n` centroids of highest cosine to `v`, best first (first
+    * index on ties). `norms` are the centroids' norms, hoisted out of
+    * the per-vector loop: per vector only the dot products and its own
+    * norm remain. */
+  private def annNearest(v: Array[Double], cs: Array[Array[Double]],
+                         norms: Array[Double], n: Int): Array[Int] = {
     var nv = 0.0
     var i = 0
     while (i < v.length) { nv += v(i) * v(i); i += 1 }
@@ -2685,6 +2564,8 @@ object Llm {
     sims.zipWithIndex.sortBy(-_._1).take(n).map(_._2)
   }
 
+  /** The codeword of `bk` nearest by L2 (the k-means metric) to the
+    * subvector of `v` at `off`; first minimum on ties. */
   private def annNearestSub(v: Array[Double], off: Int,
                             bk: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MaxValue
@@ -2699,6 +2580,197 @@ object Llm {
     best
   }
 
+  /** Given the broadcast codebooks, once per partition: a row's
+    * nearest centroid in subspace j. */
+  private type Assign = Array[Array[Array[Double]]] => (Array[Double], Int) => Int
+
+  /** The coarse quantizer's metric: highest cosine (`annNearest`). */
+  private val byCosine: Assign = { bks =>
+    val norms = annCentroidNorms(bks(0))
+    (v, _) => annNearest(v, bks(0), norms, 1)(0)
+  }
+
+  /** The product quantizer's metric: lowest L2 per subspace. */
+  private val byL2: Assign = { bks =>
+    val sub = bks(0)(0).length
+    (v, j) => annNearestSub(v, j * sub, bks(j))
+  }
+
+  /** Lloyd refinement of `m` codebooks, codebook j over dims
+    * [j·sub, (j+1)·sub) of the vectors (m = 1 is the coarse
+    * quantizer). Codebook j starts from the seeds' j-th subvectors.
+    * Each round, every partition assigns its rows with `assign` and
+    * sums them per (j, centroid); only those m×ks×sub partial sums
+    * cross to the driver, which adds them in partition order and
+    * divides. On the pinned layout that order is data-deterministic,
+    * so the codebooks are bit-reproducible. A centroid no row chose
+    * keeps its value. */
+  private def lloyd(spark: SparkSession, rows: Dataset[Array[Double]],
+      seeds: Array[Array[Double]], m: Int, iters: Int,
+      assign: Assign): Array[Array[Array[Double]]] = {
+    import spark.implicits._
+    val dim = seeds(0).length
+    require(dim % m == 0, s"PQ needs dim % m == 0, got $dim % $m")
+    val sub = dim / m
+    val ks = seeds.length
+    var books = Array.tabulate(m)(j => seeds.map(_.slice(j * sub, (j + 1) * sub)))
+    for (_ <- 0 until iters) {
+      val bc = spark.sparkContext.broadcast(books)
+      val sums = rows.mapPartitions { vs =>
+        val nearest = assign(bc.value)
+        val acc = Array.tabulate(m, ks)((_, _) => new Array[Double](sub))
+        val cnt = Array.ofDim[Long](m, ks)
+        vs.foreach { v =>
+          var j = 0
+          while (j < m) {
+            val c = nearest(v, j)
+            var i = 0
+            while (i < sub) { acc(j)(c)(i) += v(j * sub + i); i += 1 }
+            cnt(j)(c) += 1
+            j += 1
+          }
+        }
+        for (j <- (0 until m).iterator; c <- (0 until ks).iterator if cnt(j)(c) > 0)
+          yield (j, c, acc(j)(c), cnt(j)(c))
+      }.collect()
+      val merged = sums.groupBy(t => (t._1, t._2)).map { case (jc, parts) =>
+        val s = new Array[Double](sub)
+        var n = 0L
+        parts.foreach { case (_, _, a, cn) =>
+          var i = 0; while (i < sub) { s(i) += a(i); i += 1 }; n += cn
+        }
+        jc -> s.map(_ / n)
+      }
+      books = Array.tabulate(m, ks)((j, c) => merged.getOrElse((j, c), books(j)(c)))
+    }
+    books
+  }
+
+  /** r = v − centroid. */
+  private def residual(v: Array[Double], centroid: Array[Double]): Array[Double] = {
+    val r = new Array[Double](v.length)
+    var i = 0
+    while (i < v.length) { r(i) = v(i) - centroid(i); i += 1 }
+    r
+  }
+
+  /** `(vec_id, v)` rows → `(vec_id, cell, r)`: each vector's nearest
+    * coarse centroid and its residual. A narrow map, so the rows keep
+    * their partitions and order. */
+  private def residuals(spark: SparkSession, rows: Dataset[(Long, Array[Double])],
+      centroids: Array[Array[Double]]): DataFrame = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(centroids)
+    rows.mapPartitions { it =>
+      val cs = bc.value
+      val norms = annCentroidNorms(cs)
+      it.map { case (id, v) =>
+        val c = annNearest(v, cs, norms, 1)(0)
+        (id, c, residual(v, cs(c)))
+      }
+    }.toDF("vec_id", "cell", "r")
+  }
+
+  /** `x`'s PQ code — per subspace, one byte: its nearest codeword by
+    * L2 — and the norm of the reconstruction `base + x̂`, known exactly
+    * at encode time (`base` is the coarse centroid for a residual,
+    * zeros for a plain vector, where 0.0 + y squares to the bits of
+    * y·y). */
+  private def pqEncode(x: Array[Double], base: Array[Double],
+      bks: Array[Array[Array[Double]]]): (Array[Byte], Double) = {
+    val m = bks.length
+    val sub = bks(0)(0).length
+    val code = new Array[Byte](m)
+    var n2 = 0.0
+    var j = 0
+    while (j < m) {
+      val c = annNearestSub(x, j * sub, bks(j))
+      code(j) = c.toByte
+      val cc = bks(j)(c)
+      var i = 0
+      while (i < sub) {
+        val xi = base(j * sub + i) + cc(i)
+        n2 += xi * xi
+        i += 1
+      }
+      j += 1
+    }
+    (code, math.sqrt(n2))
+  }
+
+  /** `(vec_id, cell, r)` residuals → the index's codes table
+    * `(vec_id, cluster, code, qn)`, in one map-only pass. */
+  private def encodeResiduals(spark: SparkSession, res: DataFrame,
+      model: AnnModel): DataFrame = {
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model)
+    res.as[(Long, Int, Array[Double])].mapPartitions { it =>
+      val md = bc.value
+      it.map { case (id, cell, r) =>
+        val (code, qn) = pqEncode(r, md.centroids(cell), md.books)
+        (id, cell, code, qn)
+      }
+    }.toDF("vec_id", "cluster", "code", "qn")
+  }
+
+  /** A probe's ADC table: t(j·ks + c) = dot(pv's subvector j,
+    * books(j)(c)), so the approximate dot with a code is a sum of m
+    * lookups (`adcExpr`). */
+  private def adcTable(pv: Array[Double], books: Array[Array[Array[Double]]]): Array[Double] = {
+    val m = books.length
+    val ks = books(0).length
+    val sub = books(0)(0).length
+    val t = new Array[Double](m * ks)
+    for (j <- 0 until m; c <- 0 until ks) {
+      var d = 0.0; var i = 0
+      while (i < sub) { d += pv(j * sub + i) * books(j)(c)(i); i += 1 }
+      t(j * ks + c) = d
+    }
+    t
+  }
+
+  /** The driver-small model half of an `AnnIndex`: k×dim coarse
+    * centroids and m×ks×(dim/m) residual codebooks. */
+  private[graft] final case class AnnModel(centroids: Array[Array[Double]],
+                                           books: Array[Array[Array[Double]]]) {
+    def m: Int = books.length
+    def ks: Int = books(0).length
+    private val norms = annCentroidNorms(centroids)
+
+    /** The probe side of an IVFADC scan for one probe vector: its
+      * `nprobe` closest cells, each as (cell, dot(pv, centroid), pv's
+      * residual ADC table). The table is one per probe, as the
+      * codebooks are shared across cells. */
+    def probe(pv: Array[Double], nprobe: Int): Array[(Int, Double, Seq[Double])] = {
+      val t = adcTable(pv, books).toSeq
+      annNearest(pv, centroids, norms, math.min(nprobe, centroids.length)).map { cell =>
+        val cv = centroids(cell)
+        var cd = 0.0; var i = 0
+        while (i < cv.length) { cd += pv(i) * cv(i); i += 1 }
+        (cell, cd, t)
+      }
+    }
+  }
+
+  /** The model tables of `index` back as arrays, in deterministic
+    * (c / j,c) order. Shared by `probeAnnIndex`, `appendAnnIndex` and
+    * the streaming `annSuspects` leg (which freezes this snapshot at
+    * plan build, like `nearDupSuspects` does its band index). */
+  private[graft] def annModelOf(index: AnnIndex): AnnModel = {
+    val spark = index.centroids.sparkSession
+    import spark.implicits._
+    val centroids: Array[Array[Double]] = index.centroids
+      .select(col("c"), col("cv")).as[(Int, Array[Double])]
+      .collect().sortBy(_._1).map(_._2)
+    val bookRows = index.books.select(col("j"), col("c"), col("bv"))
+      .as[(Int, Int, Array[Double])].collect()
+    val m = bookRows.map(_._1).max + 1
+    val ks = bookRows.map(_._2).max + 1
+    val books = Array.ofDim[Array[Double]](m, ks)
+    bookRows.foreach { case (j, c, bv) => books(j)(c) = bv }
+    AnnModel(centroids, books)
+  }
+
   /** Train + encode half of the IVFADC pipeline (see `annIvfPq` for
     * the algorithm doc): coarse Lloyd on the pinned layout, residual
     * PQ Lloyd on the (once-materialized) residuals, one map-only
@@ -2708,142 +2780,30 @@ object Llm {
       m: Int = 16, ks: Int = 16, coarseIters: Int = 2,
       pqIters: Int = 3, trainCap: Int = 100000): AnnIndex = {
     import spark.implicits._
-    // pinned layout materialized ONCE (r21, the annPq note): the
-    // coarse Lloyd rounds, the residual pass and the seed/count/dim
-    // reads all consume these blocks instead of re-running the pin
-    // shuffle (and the parquet scan behind it) per job
-    val typedDf = Tables.pinnedLayout(vecsDf.select(col("vec_id"), col("v")), 64, "vec_id")
-      .ckptLocal()
-    val typed = typedDf.as[(Long, Array[Double])]
-    val nAll = typedDf.count()
-    val trainTyped = trainView(spark, typedDf, nAll, trainCap)
-    val dim = typedDf.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"PQ needs dim % m == 0, got $dim % $m")
-    val sub = dim / m
-
-    // 1. coarse centroids: deterministic seeds + Lloyd, exactly the
-    //    annIvf recipe (same arithmetic order -> same codebook)
-    var centroids: Array[Array[Double]] = typedDf
-      .select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
-      .orderBy(col("hk")).limit(k)
-      .select(col("v")).as[Array[Double]].collect()
-    for (_ <- 0 until coarseIters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      val sums = trainTyped.mapPartitions { rows =>
-        val cs = bc.value
-        val norms = annCentroidNorms(cs)
-        val acc = Array.fill(cs.length)(new Array[Double](cs(0).length))
-        val cnt = new Array[Long](cs.length)
-        rows.foreach { case (_, v) =>
-          val c = annNearest(v, cs, norms, 1)(0)
-          var i = 0
-          while (i < v.length) { acc(c)(i) += v(i); i += 1 }
-          cnt(c) += 1
-        }
-        acc.indices.iterator.filter(cnt(_) > 0).map(c => (c, acc(c), cnt(c)))
-      }.collect()
-      val merged = sums.groupBy(_._1).map { case (c, parts) =>
-        val s = new Array[Double](centroids(0).length)
-        var n = 0L
-        parts.foreach { case (_, a, cn) => var i = 0; while (i < s.length) { s(i) += a(i); i += 1 }; n += cn }
-        c -> s.map(_ / n)
-      }
-      centroids = centroids.indices.map(c => merged.getOrElse(c, centroids(c))).toArray
-    }
-    val cNorms = annCentroidNorms(centroids)
-    val bcCent = spark.sparkContext.broadcast(centroids)
+    val p = pinned(spark, vecsDf, trainCap)
+    // 1. coarse centroids: `annIvf`'s quantizer
+    val centroids = lloyd(spark, p.trainVecs, p.seeds(k), 1, coarseIters, byCosine)(0)
 
     // residuals in the pinned layout, materialized ONCE (localCheckpoint
     // keeps partitioning and within-partition order, so the PQ Lloyd
     // partial sums below stay data-deterministic) — without the
     // checkpoint each Lloyd round plus the encode would re-run the
-    // assignment scan
-    def resOf(ds: Dataset[(Long, Array[Double])]) = ds.mapPartitions { rows =>
-      val cs = bcCent.value
-      val norms = annCentroidNorms(cs)
-      rows.map { case (id, v) =>
-        val c = annNearest(v, cs, norms, 1)(0)
-        val r = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { r(i) = v(i) - cs(c)(i); i += 1 }
-        (id, c, r)
-      }
-    }.toDF("vec_id", "cell", "r").ckptLocal().as[(Long, Int, Array[Double])]
-    val residuals = resOf(typed)
-    // PQ Lloyd trains on the SAMPLE's residuals; when the corpus fits
-    // the cap that is the `residuals` frame itself (same object, same
-    // bits as training on everything)
-    val trainRes = if (nAll <= trainCap) residuals else resOf(trainTyped)
+    // assignment scan. PQ Lloyd trains on the SAMPLE's residuals; when
+    // the corpus fits the cap that is the `res` frame itself.
+    val res = residuals(spark, p.all, centroids).ckptLocal()
+    val trainRes = if (p.n <= trainCap) res else residuals(spark, p.train, centroids).ckptLocal()
 
     // 2. residual PQ codebooks: seeds are the ks hash-ordered
-    //    vectors' RESIDUALS (driver-computed — ks rows), refined by
-    //    the same per-subspace Lloyd as annPq over pooled residuals
-    val seedVecs = typedDf
-      .select(col("vec_id"), col("v"), xxhash64(col("vec_id")).as("hk"))
-      .orderBy(col("hk")).limit(ks)
-      .select(col("v")).as[Array[Double]].collect()
-    val seedRes = seedVecs.map { v =>
-      val c = annNearest(v, centroids, cNorms, 1)(0)
-      Array.tabulate(v.length)(i => v(i) - centroids(c)(i))
-    }
-    var books: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
-      seedRes.map(_.slice(j * sub, (j + 1) * sub)))
-    for (_ <- 0 until pqIters) {
-      val bc = spark.sparkContext.broadcast(books)
-      val sums = trainRes.mapPartitions { rows =>
-        val bks = bc.value
-        val acc = Array.tabulate(m, ks)((_, _) => new Array[Double](sub))
-        val cnt = Array.ofDim[Long](m, ks)
-        rows.foreach { case (_, _, r) =>
-          var j = 0
-          while (j < m) {
-            val c = annNearestSub(r, j * sub, bks(j))
-            var i = 0
-            while (i < sub) { acc(j)(c)(i) += r(j * sub + i); i += 1 }
-            cnt(j)(c) += 1
-            j += 1
-          }
-        }
-        for (j <- (0 until m).iterator; c <- (0 until ks).iterator if cnt(j)(c) > 0)
-          yield (j, c, acc(j)(c), cnt(j)(c))
-      }.collect()
-      val merged = sums.groupBy(t => (t._1, t._2)).map { case ((j, c), parts) =>
-        val s = new Array[Double](sub)
-        var n = 0L
-        parts.foreach { case (_, _, a, cn) =>
-          var i = 0; while (i < sub) { s(i) += a(i); i += 1 }; n += cn
-        }
-        (j, c) -> s.map(_ / n)
-      }
-      books = Array.tabulate(m, ks)((j, c) => merged.getOrElse((j, c), books(j)(c)))
-    }
+    //    vectors' RESIDUALS (driver-computed — ks rows)
+    val cNorms = annCentroidNorms(centroids)
+    val seedRes = p.seeds(ks).map(v =>
+      residual(v, centroids(annNearest(v, centroids, cNorms, 1)(0))))
+    val books = lloyd(spark, trainRes.select(col("r")).as[Array[Double]],
+      seedRes, m, pqIters, byL2)
 
-    // 3. encode: one map-only pass — cell id, m residual codes, and
-    //    the reconstructed norm |x̂| = |centroid + r̂| (exact at
-    //    encode time) so the ADC scan ranks by approximate cosine
-    val bcB = spark.sparkContext.broadcast(books)
-    val codes = residuals.mapPartitions { rows =>
-      val cs = bcCent.value
-      val bks = bcB.value
-      rows.map { case (id, cell, r) =>
-        val code = new Array[Byte](m)
-        var n2 = 0.0
-        var j = 0
-        while (j < m) {
-          val c = annNearestSub(r, j * sub, bks(j))
-          code(j) = c.toByte
-          val cc = bks(j)(c)
-          var i = 0
-          while (i < sub) {
-            val xi = cs(cell)(j * sub + i) + cc(i)
-            n2 += xi * xi
-            i += 1
-          }
-          j += 1
-        }
-        (id, cell, code, math.sqrt(n2))
-      }
-    }.toDF("vec_id", "cluster", "code", "qn").ckptLocal()
+    // 3. encode: cell id, m residual codes, and |x̂| = |centroid + r̂|
+    //    so the ADC scan ranks by approximate cosine
+    val codes = encodeResiduals(spark, res, AnnModel(centroids, books)).ckptLocal()
 
     val centroidsDf = centroids.zipWithIndex
       .map { case (cv, c) => (c, cv.toSeq) }.toSeq.toDF("c", "cv")
@@ -2862,52 +2822,18 @@ object Llm {
     * tables are untouched, so every existing code stays valid and a
     * running `annSuspects` stream can swap to the appended index via
     * the refresh runbook without invalidating anything. The encode
-    * arithmetic is the same operations in the same order as
-    * `buildAnnIndex`'s pass, so appending vectors the build would
-    * have encoded yields bit-identical codes (AnnIndexSpec pins it).
-    * Periodic full retrains remain the operator's call once drift
-    * accumulates — exactly the production IVFADC cadence. */
+    * runs `buildAnnIndex`'s `residuals` + `encodeResiduals`, so
+    * appending vectors the build would have encoded yields
+    * bit-identical codes (AnnIndexSpec pins it). Periodic full
+    * retrains remain the operator's call once drift accumulates —
+    * exactly the production IVFADC cadence. */
   def appendAnnIndex(spark: SparkSession, index: AnnIndex,
       newVecs: DataFrame): AnnIndex = {
     import spark.implicits._
-    val (cents, books) = annModelOf(index)
-    val m = books.length
-    val ks = books(0).length
-    val dim = cents(0).length
-    val sub = dim / m
-    val bcC = spark.sparkContext.broadcast(cents)
-    val bcB = spark.sparkContext.broadcast(books)
+    val model = annModelOf(index)
     val typed = Tables.pinnedLayout(newVecs.select(col("vec_id"), col("v")), 64, "vec_id")
       .as[(Long, Array[Double])]
-    val newCodes = typed.mapPartitions { rows =>
-      val cs = bcC.value
-      val bks = bcB.value
-      val norms = annCentroidNorms(cs)
-      rows.map { case (id, v) =>
-        val cell = annNearest(v, cs, norms, 1)(0)
-        // residual on the fly, same op order as buildAnnIndex's
-        // resOf + encode (r = v − centroid, then (r − book)²)
-        val r = new Array[Double](dim)
-        var i = 0
-        while (i < dim) { r(i) = v(i) - cs(cell)(i); i += 1 }
-        val code = new Array[Byte](m)
-        var n2 = 0.0
-        var j = 0
-        while (j < m) {
-          val c = annNearestSub(r, j * sub, bks(j))
-          code(j) = c.toByte
-          val cc = bks(j)(c)
-          i = 0
-          while (i < sub) {
-            val xi = cs(cell)(j * sub + i) + cc(i)
-            n2 += xi * xi
-            i += 1
-          }
-          j += 1
-        }
-        (id, cell, code, math.sqrt(n2))
-      }
-    }.toDF("vec_id", "cluster", "code", "qn")
+    val newCodes = encodeResiduals(spark, residuals(spark, typed, model.centroids), model)
     AnnIndex(index.centroids, index.books,
       index.codes.unionByName(newCodes))
   }
@@ -2920,9 +2846,10 @@ object Llm {
     * runs (and what Bench's min-over-sweeps captures: sweep 1 pays
     * the one-time build, sweep 2+ is pure probe); both build halves
     * are deterministic, so the output is bit-identical to
-    * `llm_ann_ivfpq` (LlmSpec pins the equality). no_oracle like the
-    * rest of the ANN family. */
-  /** Cache key = dir + a fingerprint of the embeddings input
+    * `llm_ann_ivfpq` (AnnIndexSpec pins the equality). no_oracle like
+    * the rest of the ANN family.
+    *
+    * Cache key = dir + a fingerprint of the embeddings input
     * (`Tables.inputFingerprint` — file names, sizes, mtimes via the
     * Hadoop FS the read itself uses) — data REPLACED under the same
     * path invalidates the snapshot instead of serving stale probes;
@@ -2932,18 +2859,10 @@ object Llm {
       rerankKeep: Int = 100): DataFrame = {
     val fp = graft.sources.Tables.inputFingerprint(spark, dir, "embeddings")
     val snap = Snapshots.of(dir, fp, "graft_ann_snapshot") { tmp =>
-      val all = vecs(spark, dir)
-      val built = buildAnnIndex(spark, all.select(col("vec_id"), col("v")))
-      built.centroids.write.mode("overwrite").parquet(s"$tmp/centroids")
-      built.books.write.mode("overwrite").parquet(s"$tmp/books")
-      built.codes.write.mode("overwrite").partitionBy("cluster").parquet(s"$tmp/codes")
+      buildAnnIndex(spark, vecs(spark, dir).select(col("vec_id"), col("v"))).write(tmp)
     }
-    val index = AnnIndex(
-      spark.read.parquet(s"$snap/centroids"),
-      spark.read.parquet(s"$snap/books"),
-      spark.read.parquet(s"$snap/codes"))
     val all = vecs(spark, dir)
-    probeAnnIndex(spark, index,
+    probeAnnIndex(spark, AnnIndex.read(spark, snap),
       all.filter(col("vec_id") < 10).select(col("vec_id"), col("v"), col("nrm")),
       all, nprobe, rerankKeep)
   }
@@ -2955,82 +2874,38 @@ object Llm {
     * and `corpus` are `(vec_id, v, nrm)`; an index written to
     * parquet and read back probes identically (AnnIndexSpec pins the
     * round trip). */
-  /** The driver-small model half of an `AnnIndex` back as arrays, in
-    * deterministic (c / j,c) order — k×dim centroids + m×ks×(dim/m)
-    * residual codebooks. Shared by `probeAnnIndex` and the streaming
-    * `annSuspects` leg (which freezes this snapshot at plan build,
-    * like `nearDupSuspects` does its band index). */
-  private[graft] def annModelOf(index: AnnIndex)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val spark = index.centroids.sparkSession
-    import spark.implicits._
-    val centroids: Array[Array[Double]] = index.centroids
-      .select(col("c"), col("cv")).as[(Int, Array[Double])]
-      .collect().sortBy(_._1).map(_._2)
-    val bookRows = index.books.select(col("j"), col("c"), col("bv"))
-      .as[(Int, Int, Array[Double])].collect()
-    val m = bookRows.map(_._1).max + 1
-    val ks = bookRows.map(_._2).max + 1
-    val books = Array.ofDim[Array[Double]](m, ks)
-    bookRows.foreach { case (j, c, bv) => books(j)(c) = bv }
-    (centroids, books)
-  }
-
   def probeAnnIndex(spark: SparkSession, index: AnnIndex, probes: DataFrame,
       corpus: DataFrame, nprobe: Int = 28, rerankKeep: Int = 100): DataFrame = {
     import spark.implicits._
-    val (centroids, books) = annModelOf(index)
-    val k = centroids.length
-    val dim = centroids(0).length
-    val m = books.length
-    val ks = books(0).length
-    val sub = dim / m
-    val cNorms = annCentroidNorms(centroids)
-
-    // probe side: nprobe closest cells per probe; per (probe, cell)
-    // one scalar dot(p, centroid); per probe ONE residual ADC table
-    // (codebook shared across cells): T[j*ks + c] = dot(p_j, books(j)(c))
-    val probeRows = probes.select(col("vec_id"), col("v"))
-      .as[(Long, Array[Double])].collect()
-    val probeCells = probeRows.toSeq.flatMap { case (pid, pv) =>
-      val t = new Array[Double](m * ks)
-      for (j <- 0 until m; c <- 0 until ks) {
-        var d = 0.0; var i = 0
-        while (i < sub) { d += pv(j * sub + i) * books(j)(c)(i); i += 1 }
-        t(j * ks + c) = d
-      }
-      annNearest(pv, centroids, cNorms, math.min(nprobe, k)).map { cell =>
-        var cd = 0.0; var i = 0
-        while (i < dim) { cd += pv(i) * centroids(cell)(i); i += 1 }
-        (pid, cell, cd, t.toSeq)
-      }.toSeq
-    }.toDF("probe_id", "cluster", "cell_dot", "ptab")
+    val model = annModelOf(index)
+    val probeCells = probes.select(col("vec_id"), col("v"))
+      .as[(Long, Array[Double])].collect().toSeq
+      .flatMap { case (pid, pv) =>
+        model.probe(pv, nprobe).map { case (cell, cd, t) => (pid, cell, cd, t) } }
+      .toDF("probe_id", "cluster", "cell_dot", "ptab")
 
     // ADC scan over probed cells only: the join on cluster IS the
     // prune (at 100 TB: a partition-pruned read of nprobe/k of
     // the corpus); approx dot = cell_dot + m table lookups — the
     // codegen'd graft_adc kernel over the packed byte codes, HOF
     // reference with kernels disabled (bit parity, adcExpr)
-    val adc = adcExpr(spark, m, ks)
-    val wq = Window.partitionBy(col("probe_id")).orderBy(col("simq").desc, col("vec_id").asc)
-    val cand = index.codes.join(broadcast(probeCells), Seq("cluster"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("simq", (col("cell_dot") + adc) / greatest(col("qn"), lit(1e-12)))
-      .withColumn("rnq", row_number().over(wq))
-      .filter(col("rnq") <= rerankKeep)
-      .select(col("probe_id"), col("vec_id"))
-    // exact re-rank: ids-only candidates re-join the float vectors
-    val probeVecs = probes
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    cand.join(corpus, Seq("vec_id"))
-      .join(broadcast(probeVecs), Seq("probe_id"))
-      .withColumn("sim", round(cosineSim(spark), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+    val cand = approxTop(
+      index.codes.join(broadcast(probeCells), Seq("cluster"))
+        .filter(col("vec_id") =!= col("probe_id")),
+      (col("cell_dot") + adcExpr(spark, model.m, model.ks)) / greatest(col("qn"), lit(1e-12)),
+      rerankKeep)
+    rerank(spark, cand, corpus, asProbes(probes))
   }
 
+  /** SQ8 kNN: scalar-quantized search + exact re-rank — the
+    * two-stage pattern a memory-bound ANN deployment actually runs
+    * (FAISS SQ8 et al.). Stage 1 scans int8 codes (4x smaller than
+    * float32 — at 100 TB that is 4x less scan I/O, which is the whole
+    * point) and ranks by approximate cosine against the full-precision
+    * broadcast probes; stage 2 re-ranks the top-30 candidates with
+    * the exact kernel and keeps 10. Candidates carry ids only between
+    * stages; vectors re-join for the re-rank. no_oracle by design
+    * (approximate stage); LlmSpec pins recall against `knnExact`. */
   def knnQuantized(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
     val codes = all
@@ -3040,8 +2915,7 @@ object Llm {
         "transform(v, x -> least(255, cast(floor((x - mn) * 255.0 / (mx - mn)) as int)))"))
       .select(col("vec_id"), col("mn"), col("mx"), col("code"))
       .ckptLocal()
-    val probes = all.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pn"))
+    val probes = asProbes(all.filter(col("vec_id") < 10))
     // approximate cosine from bucket-midpoint decode: the codegen'd
     // dequantize-dot kernel (plans/DequantDot) — one fused primitive
     // loop per (vector × probe) row inside WholeStageCodegen — with
@@ -3055,21 +2929,11 @@ object Llm {
         """aggregate(zip_with(code, pv, (c, y) ->
            (mn + (cast(c as double) + 0.5) * (mx - mn) / 255.0) * y),
            cast(0.0 as double), (a, x) -> a + x)""")
-    val wq = Window.partitionBy(col("probe_id")).orderBy(col("simq").desc, col("vec_id").asc)
-    val cand = codes.crossJoin(broadcast(probes.select(col("probe_id"), col("pv"))))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("simq", approxSim)
-      .withColumn("rnq", row_number().over(wq))
-      .filter(col("rnq") <= 30)
-      .select(col("probe_id"), col("vec_id"))
-    // exact re-rank: ids-only candidates re-join the float vectors
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("sim").desc, col("vec_id").asc)
-    cand.join(all, Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("sim", round(cosineSim(spark), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 10)
-      .select(col("probe_id"), col("vec_id"), col("sim"), col("rn"))
+    val cand = approxTop(
+      codes.crossJoin(broadcast(probes.select(col("probe_id"), col("pv"))))
+        .filter(col("vec_id") =!= col("probe_id")),
+      approxSim, 30)
+    rerank(spark, cand, all, probes)
   }
 
   /** Per-document top-3 terms by tf-idf — the keyword-extraction /

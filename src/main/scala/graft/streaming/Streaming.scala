@@ -624,13 +624,7 @@ object Streaming {
     import graft.operators.Llm
     val spark = queries.sparkSession
     import spark.implicits._
-    val (cents, books) = Llm.annModelOf(index)
-    val k = cents.length
-    val dim = cents(0).length
-    val m = books.length
-    val ks = books(0).length
-    val sub = dim / m
-    val norms = Llm.annCentroidNorms(cents)
+    val model = Llm.annModelOf(index)
     val probed = queries
       // Array (not Seq): the 2.13 encoder deserializes Seq[Double] to
       // a List, making every pv(i) in the loops below a linear walk —
@@ -639,12 +633,6 @@ object Streaming {
       .as[(Long, java.sql.Timestamp, Array[Double])]
       .mapPartitions { rows =>
         rows.flatMap { case (pid, ts, pv) =>
-          val t = new Array[Double](m * ks)
-          for (j <- 0 until m; c <- 0 until ks) {
-            var d = 0.0; var i = 0
-            while (i < sub) { d += pv(j * sub + i) * books(j)(c)(i); i += 1 }
-            t(j * ks + c) = d
-          }
           // |p| too: simq must be approximate COSINE, not |p|·cos —
           // without it minSim over/under-admits in proportion to each
           // query's norm (round-14 advice; batch probeAnnIndex only
@@ -652,16 +640,12 @@ object Streaming {
           // needed the division)
           var p2 = 0.0
           var pi = 0
-          while (pi < dim) { p2 += pv(pi) * pv(pi); pi += 1 }
+          while (pi < pv.length) { p2 += pv(pi) * pv(pi); pi += 1 }
           val pn = math.sqrt(p2)
-          Llm.annNearest(pv, cents, norms, math.min(nprobe, k)).map { cell =>
-            var cd = 0.0; var i = 0
-            while (i < dim) { cd += pv(i) * cents(cell)(i); i += 1 }
-            (pid, ts, cell, cd, pn, t.toSeq)
-          }
+          model.probe(pv, nprobe).map { case (cell, cd, t) => (pid, ts, cell, cd, pn, t) }
         }
       }.toDF("probe_id", "ts", "cluster", "cell_dot", "pn", "ptab")
-    val adc = Llm.adcExpr(spark, m, ks)
+    val adc = Llm.adcExpr(spark, model.m, model.ks)
     probed.join(index.codes, Seq("cluster"))
       .filter(col("vec_id") =!= col("probe_id"))
       .withColumn("simq",

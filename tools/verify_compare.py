@@ -15,8 +15,10 @@ Usage: verify_compare.py A_DIR B_DIR [--overlap name ...]
     set-stable but not order/float-stable across the two legs (e.g.
     IVF under kernel-off, where Lloyd's merge order differs by design).
 
-Exit 0 iff every common query matches; missing-on-either-side is a
-mismatch.
+Exit 0 iff at least one query was compared and every query matches;
+missing-on-either-side is a mismatch. graft.Verify logs a query that
+throws and goes on, so a run in which every named query failed leaves
+no query dir: that compares nothing and exits 1.
 """
 import hashlib
 import os
@@ -91,7 +93,9 @@ def main():
         bad.append(n)
     print(f"\n{len(names) - len(bad)}/{len(names)} match"
           + (f"; BAD: {sorted(bad)}" if bad else ""))
-    sys.exit(1 if bad else 0)
+    if not names:
+        print(f"nothing compared: no query dir in {a_dir}")
+    sys.exit(1 if bad or not names else 0)
 
 
 if __name__ == "__main__":
