@@ -139,15 +139,19 @@ object Ecosystem {
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"))
 
-  /** A7 HyperLogLog distinct-count (hyperloglog.py:4-38;
-    * reference rsd b=12 ⇒ 1.625%). Spark's HLL++ sketch aggregate —
-    * mergeable, partial-agg friendly, no raw-value shuffle. Checked
-    * rows-only by the driver (estimates are impl-specific); the exact
-    * twin above is the hash-matched oracle. */
+  /** A7 HyperLogLog distinct-count (hyperloglog.py:4-38): Spark's
+    * built-in DataSketches HLL at lgConfigK = 12, the reference's own
+    * b = 12 — m = 4096 registers, RSE 1.04/√4096 = 1.625%. Mergeable,
+    * partial-agg friendly, no raw-value shuffle. (`approx_count_distinct`
+    * at rsd 0.01625 rounds up to 8192 registers and costs ~8x the CPU
+    * on the 100k-event eco_serve store.) The oracle compare checks
+    * row counts only (estimates are impl-specific); the exact twin
+    * above is the hash-matched oracle, and SketchesSpec pins the
+    * error bound. */
   def approxDistinctUsers(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), 0.01625).as("n_users_approx"))
+      .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12)).as("n_users_approx"))
 
   /** W1+A15 Markov transitions: per-user ordered event pairs via lead
     * over a partitioned window, then pair counts and row-stochastic
@@ -171,22 +175,14 @@ object Ecosystem {
     * avg(k + 1), a +1 Laplace smoothing, because props.k may be 0 in
     * this dataset (the reference's populationDensity domain is 1..1000
     * so it never divides by zero; ours can). The oracle SQL applies
-    * the same +1 so both sides compute the identical smoothed score. */
+    * the same +1 so both sides compute the identical smoothed score.
+    *
+    * Reads the events scan as it comes: the per-row JSON extraction is
+    * cheap next to a shuffle of the whole table. Another split layout
+    * only reorders the double sums; EcosystemSpec pins that one split
+    * and many round to the same scores. */
   def importance(spark: SparkSession, dir: String): DataFrame = {
-    // widened: the per-row JSON extraction below is the query's CPU;
-    // a single-split events scan would serialize it into one task.
-    // Width pinned to 32 (not defaultParallelism): the query averages
-    // doubles, and a host-dependent partition layout could flip the
-    // round(..,6) last digit under the exact-hash oracle compare.
-    // Known bound (round-9 ADVICE): the round-robin pin holds only
-    // while the events scan arrives in <32 splits (true through sf1 —
-    // one parquet file under maxPartitionBytes). Wider inputs keep
-    // their own layout; the strong fix (Tables.pinnedLayout's hash +
-    // in-partition sort) is deliberately NOT used here because it
-    // would put a per-partition sort on the full corpus-sized scan
-    // for a query whose values have ~1e-9 slack under round(..,6) —
-    // layout drift at that scale is absorbed by the rounding.
-    val e = Tables.widened(Tables.events(spark, dir), width = 32)
+    val e = Tables.events(spark, dir)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
     // grand-total normalization: same tiny-frame checkpoint +
     // broadcast pattern as `stats` (see its doc comment) — the

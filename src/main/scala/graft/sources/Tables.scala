@@ -95,20 +95,11 @@ object Tables {
     * caller passes a raw table scan plus at most a narrow
     * filter/projection (e.g. LinkGraph.pagesOf, Llm.langId).
     *
-    * `width` > 0 pins the repartition width to a constant instead of
-    * defaultParallelism — use it for queries that aggregate floats,
-    * where the partial-sum partition layout (and so the last digit
-    * of a rounded double) must not drift with the host's core
-    * count. CAVEAT: the pin holds only while the input arrives in
-    * FEWER splits than `width` (true for every current caller at the
-    * tested SFs — single-file scans under maxPartitionBytes); a wider
-    * input keeps its own layout. Round-robin output also inherits the
-    * input split boundaries, so this is "deterministic for narrow
-    * inputs", not layout-independent — callers that need the latter
-    * (bit-reproducible codebooks) use `pinnedLayout`. */
-  def widened(df: DataFrame, width: Int = 0): DataFrame = {
-    val target =
-      if (width > 0) width else df.sparkSession.sparkContext.defaultParallelism
+    * Round-robin output inherits the input split boundaries and the
+    * host's core count, so callers whose results must not depend on
+    * the layout (bit-reproducible codebooks) use `pinnedLayout`. */
+  def widened(df: DataFrame): DataFrame = {
+    val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
@@ -116,15 +107,13 @@ object Tables {
     * exactly `width` partitions and sort each partition by `key`, so
     * both the row→partition assignment and the within-partition fold
     * order are functions of the data alone — never of file split
-    * sizing, input partition count, or host core count. This is the
-    * strong form of `widened(width = …)`'s determinism claim (which
-    * round-robins and therefore only holds for inputs narrower than
-    * the pin): use it where a float partial-sum must be
-    * bit-reproducible across hosts AND input layouts, e.g. Lloyd
-    * codebook training. Costs a hash exchange plus an in-partition
-    * sort — fine for sampled/training-sized inputs; don't put it on a
-    * corpus-sized scan that doesn't need bit-stability. `key` must be
-    * unique (a row id) for the within-partition order to be total. */
+    * sizing, input partition count, or host core count. Use it where
+    * a float partial-sum must be bit-reproducible across hosts AND
+    * input layouts, e.g. Lloyd codebook training. Costs a hash
+    * exchange plus an in-partition sort — fine for sampled/training-
+    * sized inputs; don't put it on a corpus-sized scan that doesn't
+    * need bit-stability. `key` must be unique (a row id) for the
+    * within-partition order to be total. */
   def pinnedLayout(df: DataFrame, width: Int, key: String): DataFrame =
     df.repartition(width, org.apache.spark.sql.functions.col(key))
       .sortWithinPartitions(key)

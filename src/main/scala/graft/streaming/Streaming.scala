@@ -27,8 +27,9 @@ import graft.plans.{Dgim, Kernels, WireKernel}
   *  - 2 h TTL eviction (consumer.py:119-148)  → watermark-driven state GC
   *  - upsert by _id (consumer.py:66)          → first-seen dropDuplicatesWithinWatermark
   *  - json.loads per message (consumer.py:407) → graft_wire_decode kernel,
-  *    from_json's own evaluator for the rows it rejects, in one
-  *    whole-stage-codegen stage of at most one task per core
+  *    from_json's own evaluator for the rows it rejects, called once
+  *    per row in one whole-stage-codegen stage of at most one task
+  *    per core
   *  - RLock-guarded concurrent reads (ST7)    → memory-sink tables are
   *    transactionally versioned; `spark.sql` reads never block ingest
   *  - no delivery guarantees (ST8)            → checkpointLocation upgrades
@@ -695,6 +696,11 @@ object Streaming {
     * column — the reference's `json.loads` + try/except skip
     * (consumer.py:405-423). Corrupt rows decode to all-null structs
     * and are dropped by the `event_id` filter, mirroring the skip.
+    * The decoded struct is flattened by `inline` over a one-element
+    * array, a generator the optimizer cannot push the filter
+    * through: under a `select(e.*)`, filter pushdown would copy the
+    * whole decode into the `event_id IS NOT NULL` predicate and run
+    * it twice per row. PlanSpec pins one decode per plan.
     * The wire frame is first coalesced, without a shuffle, to one
     * partition per core: a `MemoryStream` batch has one partition per
     * appended block, and each task pays a fixed cost (deserializing
@@ -705,8 +711,7 @@ object Streaming {
     * either way. */
   def wireDecode(wire: DataFrame): DataFrame =
     wire.coalesce(wire.sparkSession.sparkContext.defaultParallelism)
-      .select(wireEvent(wire.sparkSession, col("value").cast("string")).as("e"))
-      .select(col("e.*"))
+      .select(inline(array(wireEvent(wire.sparkSession, col("value").cast("string")))))
       .filter(col("event_id").isNotNull)
 
   /** S3 Kafka source → typed event stream (consumer.py:13-17,
@@ -818,13 +823,19 @@ object Streaming {
     * a deque, consumer.py:112-117; a 1-hour window at web-scale rates
     * would be gigabytes per key, the sketch is ~30 tuples).
     *
-    * Within a micro-batch the key's rows are sorted by event time
-    * before replay (DGIM is order-dependent; a micro-batch is
+    * Each map task first folds its rows to one `(event_type, tsec,
+    * ones)` record per key and second, so the shuffle carries at most
+    * the distinct (key, second) pairs of a partition instead of every
+    * event. Within a micro-batch the key's records are sorted by event
+    * time before replay (DGIM is order-dependent; a micro-batch is
     * bounded, so the sort is a small in-memory one per key per
-    * trigger). Across batches the engine delivers batch N+1 after N —
-    * late stragglers beyond that are the stream's lateness domain,
-    * same as the reference's arrival-order deque. Run with
-    * outputMode("update").
+    * trigger). A record replays as `ones` 1-bits at its second, or one
+    * 0-bit when it has none, which is bit-identical to replaying the
+    * rows: a 0-bit only expires buckets, and expiring twice at the
+    * same second is expiring once. Across batches the engine delivers
+    * batch N+1 after N — late stragglers beyond that are the stream's
+    * lateness domain, same as the reference's arrival-order deque.
+    * Run with outputMode("update").
     *
     * State eviction: pass `ttl = Some(d)` to give each key a
     * processing-time TTL. A key idle past the TTL holds only buckets
@@ -848,6 +859,13 @@ object Streaming {
       .select(col("event_type"), col("ts").cast("long").as("tsec"),
         when(col("event_type") === "error", 1).otherwise(0).as("bit"))
       .as[(String, Long, Int)]
+      .mapPartitions { rows =>
+        val ones = scala.collection.mutable.HashMap.empty[(String, Long), Int]
+        rows.foreach { case (key, tsec, bit) =>
+          ones.updateWith((key, tsec))(n => Some(n.getOrElse(0) + bit))
+        }
+        ones.iterator.map { case ((key, tsec), n) => (key, tsec, n) }
+      }
       .groupByKey(_._1)
       .mapGroupsWithState[Seq[(Long, Long)], DgimUpdate](timeoutConf) {
         (key, rows, state) =>
@@ -858,8 +876,9 @@ object Streaming {
             val d = new Dgim(windowSec)
             state.getOption.foreach(d.loadBuckets)
             var last = Long.MinValue
-            rows.toSeq.sortBy(_._2).foreach { case (_, tsec, bit) =>
-              d.addBit(tsec, bit)
+            rows.toSeq.sortBy(_._2).foreach { case (_, tsec, ones) =>
+              if (ones == 0) d.addBit(tsec, 0)
+              else for (_ <- 0 until ones) d.addBit(tsec, 1)
               if (tsec > last) last = tsec
             }
             val est = if (last == Long.MinValue) 0L else d.estimate(last)

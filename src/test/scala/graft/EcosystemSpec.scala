@@ -25,6 +25,31 @@ class EcosystemSpec extends AnyFunSuite {
     assert(hop.forall(_.getLong(0) % 300 == 0), "starts must sit on the hop grid")
   }
 
+  test("importance rows do not depend on the events scan's split layout") {
+    // the query averages doubles over whatever splits the scan brings;
+    // one file, many files and a reordered many-file copy must all
+    // round to the same scores
+    import org.apache.spark.sql.functions.col
+    for (sf <- Seq(TestSpark.sf, new java.io.File(TestSpark.sf).getParent + "/sf0.01")) {
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      val layouts = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        _.coalesce(1),
+        _.repartition(16),
+        _.repartition(7, col("user_id")).sortWithinPartitions(col("event_id").desc))
+      val results = layouts.map { layout =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_importance").toString
+        layout(raw).write.parquet(s"$dir/events.parquet")
+        val splits = graft.sources.Tables.events(spark, dir).rdd.getNumPartitions
+        splits -> Ecosystem.importance(spark, dir).collect().map(_.toString).sorted.toSeq
+      }
+      assert(results.head._1 == 1, s"$sf: the one-file copy scanned as ${results.head._1} splits")
+      assert(results.tail.forall(_._1 > 1), s"$sf: split counts ${results.map(_._1)}")
+      results.tail.foreach { case (n, rows) =>
+        assert(rows == results.head._2, s"$sf: $n splits give $rows, one split ${results.head._2}")
+      }
+    }
+  }
+
   test("stats shares sum to 1") {
     val shares = Ecosystem.stats(spark, TestSpark.sf).collect().map(_.getDouble(4))
     assert(math.abs(shares.sum - 1.0) < 1e-3)

@@ -453,6 +453,10 @@ class PlanSpec extends AnyFunSuite {
     assert(p.linesIterator.exists(l => l.contains("graft_wire_decode") && """\*\(\d+\) """.r.findFirstIn(l).isDefined),
       s"wire decode is not whole-stage codegen'd:\n$p")
     assert(!p.contains("from_json("), s"wire decode must not plan the CodegenFallback from_json:\n$p")
+    // the event_id filter sits above the decode: pushed below it, the
+    // filter would carry a second copy of the decode and run it per row
+    assert("graft_wire_decode\\(".r.findAllMatchIn(p).size == 1,
+      s"wire decode is planned more than once per row:\n$p")
   }
 
   test("html extraction runs on the graft_html_text kernel — no ScalaUDF, no exchange") {

@@ -63,6 +63,31 @@ class SketchesSpec extends AnyFunSuite {
     }
   }
 
+  test("hll_sketch_agg at lgConfigK 12 stays within 3x its 1.625% RSE in list, set and HLL modes (property)") {
+    // eco_hll_users' sketch: m = 2^12 registers, RSE 1.04/sqrt(4096) =
+    // 1.625%. Cardinalities cover the sketch's three modes (a few
+    // coupons in a list, a coupon hash set, then the register array);
+    // random offsets and strides give each trial its own hashes.
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val cardinality = Gen.frequency(
+      1 -> Gen.choose(1L, 7L), 2 -> Gen.choose(50L, 300L),
+      3 -> Gen.choose(5000L, 20000L), 2 -> Gen.const(200000L))
+    val trial = for {
+      n <- cardinality; offset <- Gen.choose(0L, 1L << 40); stride <- Gen.choose(1L, 1000L)
+    } yield (n, offset, stride)
+    val prop = Prop.forAll(trial) { case (n, offset, stride) =>
+      val est = spark.range(n).select((col("id") * stride + offset).as("u"))
+        .agg(hll_sketch_estimate(hll_sketch_agg(col("u"), 12))).head().getLong(0)
+      val err = math.abs(est - n).toDouble / n
+      Prop(err <= 3 * 0.01625) :| s"n=$n offset=$offset stride=$stride: estimate $est, error $err"
+    }
+    for (seed <- Seq(11L, 12L, 13L)) {
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8)
+        .withInitialSeed(org.scalacheck.rng.Seed(seed)), prop)
+      assert(res.passed, s"seed $seed: ${res.status}")
+    }
+  }
+
   test("bloom membership query returns only true verdicts (no false negatives)") {
     val rows = Sketches.bloomMembers(spark, TestSpark.sf).collect()
     assert(rows.nonEmpty)

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.Dgim
 import graft.streaming.Streaming
 import graft.streaming.Streaming.Event
 
@@ -815,6 +816,68 @@ class StreamingSpec extends AnyFunSuite {
       assert(revived.map(_.getLong(0)).min <= 5,
         s"revived key estimates ${revived.mkString(",")} — old state resurrected?")
     } finally q.stop()
+  }
+
+  test("dgimCounts equals a per-row Dgim replay over random splits; the shuffle carries combined records") {
+    // the map side folds each partition's rows to one record per
+    // (event_type, second); the replay must still be bit-identical to
+    // feeding every row, with windows that expire between batches,
+    // seconds shared by many rows and blocks split at random
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val sqlCtx = spark.sqlContext
+    val windowSec = 120L
+    val t0 = ts("2024-01-01 10:00:00").getTime
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      val ms = MemoryStream[Event]
+      val q = Streaming.dgimCounts(ms.toDF(), windowSec = windowSec)
+        .writeStream.format("memory").queryName(s"dgim_diff_$seed")
+        .outputMode("update").start()
+      val replay = scala.collection.mutable.Map.empty[String, Dgim]
+      val expected = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Int)]
+      var id = 0L
+      var nPairs, nRows = 0L
+      try {
+        for (b <- 0 until 5) {
+          // rows in 30 s of each 80 s step against a 120 s window:
+          // seconds repeat, and each batch expires buckets the
+          // previous ones left
+          val batch = Seq.fill(100 + rnd.nextInt(200)) {
+            id += 1
+            val typ = Seq("error", "error", "click", "view")(rnd.nextInt(4))
+            Event(id, new Timestamp(t0 + (b * 80L + rnd.nextInt(30)) * 1000L + rnd.nextInt(1000)),
+              id % 7, typ, 1.0)
+          }
+          val cuts = (Seq.fill(rnd.nextInt(4))(rnd.nextInt(batch.size)) :+ 0 :+ batch.size).distinct.sorted
+          val blocks = cuts.zip(cuts.tail).map { case (a, z) => batch.slice(a, z) }
+          blocks.foreach(blk => ms.addData(blk: _*))
+          q.processAllAvailable()
+
+          val shuffled = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+            .executedPlan.collect { case x: ShuffleExchangeExec => x.metrics("shuffleRecordsWritten").value }
+          val pairs = blocks.map(_.map(e => (e.event_type, e.ts.getTime / 1000)).distinct.size).sum
+          assert(shuffled.size == 1, s"expected one exchange, got ${shuffled.size}")
+          assert(shuffled.head <= pairs,
+            s"seed $seed batch $b: shuffled ${shuffled.head} records, $pairs (type, second) pairs")
+          nPairs += pairs
+          nRows += batch.size
+
+          batch.groupBy(_.event_type).foreach { case (typ, rows) =>
+            val d = replay.getOrElseUpdate(typ, new Dgim(windowSec))
+            val secs = rows.map(_.ts.getTime / 1000).sorted
+            secs.foreach(t => d.addBit(t, if (typ == "error") 1 else 0))
+            expected += ((typ, secs.last, d.estimate(secs.last), d.bucketCount))
+          }
+        }
+        val got = spark.sql(s"SELECT event_type, last_ts, est_errors_1h, n_buckets FROM dgim_diff_$seed")
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
+        assert(got.sorted == expected.toSeq.sorted, s"seed $seed: streaming DGIM diverged from the per-row replay")
+        assert(expected.exists(r => r._1 == "error" && r._3 > 0))
+        // the bound above is below one record per row only if seconds repeat
+        assert(nPairs < nRows, s"seed $seed: $nPairs (type, second) pairs in $nRows rows")
+      } finally q.stop()
+    }
   }
 
   test("streaming as-of enrichment is event-time correct: late refs, ties, sealed-ref floor") {

@@ -3,7 +3,7 @@
 
 Usage:
   jfr print --stack-depth 2048 --events jdk.ExecutionSample rec.jfr > rec.txt
-  python3 tools/jfr_split.py rec.txt [--start S] [--end S]
+  python3 tools/jfr_split.py rec.txt [--start S] [--end S] [--frame REGEX ...]
 
 Keeps the samples of Spark executor threads ("Executor task launch
 worker ..."), optionally only those taken S seconds or more after the
@@ -22,8 +22,12 @@ be shorter than 12 hours):
 
 A sample goes to the bucket of its innermost matching frame; frames of
 the codegen package's per-row helpers (row writers, projections,
-orderings) match none. Profiled runs only say where time goes; they
-are never evidence for a speed claim (the recording itself costs CPU).
+orderings) match none. Each --frame REGEX adds a row counting, per
+bucket, the samples with any stack frame the regex finds, e.g.
+`--frame 'CodegenStage1[.]' --frame 'CodegenStage2[.]'` to tell which
+whole-stage-codegen stage a bucket's samples ran in. Profiled runs
+only say where time goes; they are never evidence for a speed claim
+(the recording itself costs CPU).
 """
 import argparse
 import re
@@ -87,12 +91,12 @@ def bucket(frames):
     return "other"
 
 
-def split(lines, start=None, end=None):
+def executor_stacks(lines, start=None, end=None):
+    """Frames of each executor-thread sample inside the window."""
     # samples are printed per thread buffer, not in time order
     all_samples = list(samples(lines))
-    counts = dict.fromkeys(NAMES, 0)
     if not all_samples:
-        return counts
+        return
     # times of day, unwrapped to the nearest day of the first printed sample
     ref = all_samples[0][0]
     times = [t - ref - DAY * round((t - ref) / DAY) for t, _, _ in all_samples]
@@ -103,7 +107,26 @@ def split(lines, start=None, end=None):
             continue
         if (start is not None and rel < start) or (end is not None and rel >= end):
             continue
+        yield frames
+
+
+def split(lines, start=None, end=None):
+    counts = dict.fromkeys(NAMES, 0)
+    for frames in executor_stacks(lines, start, end):
         counts[bucket(frames)] += 1
+    return counts
+
+
+def frame_counts(lines, patterns, start=None, end=None):
+    """Per regex of `patterns`, the samples in each bucket whose stack
+    has a frame the regex finds."""
+    regexes = [re.compile(p) for p in patterns]
+    counts = {p: dict.fromkeys(NAMES, 0) for p in patterns}
+    for frames in executor_stacks(lines, start, end):
+        b = bucket(frames)
+        for p, rx in zip(patterns, regexes):
+            if any(rx.search(f) for f in frames):
+                counts[p][b] += 1
     return counts
 
 
@@ -112,9 +135,12 @@ def main():
     ap.add_argument("print_output", help="output of `jfr print --events jdk.ExecutionSample`")
     ap.add_argument("--start", type=float, help="seconds after the first sample")
     ap.add_argument("--end", type=float, help="seconds after the first sample")
+    ap.add_argument("--frame", action="append", default=[], metavar="REGEX",
+                    help="also count, per bucket, the samples with a frame matching REGEX (repeatable)")
     a = ap.parse_args()
     with open(a.print_output) as f:
-        counts = split(f, a.start, a.end)
+        lines = f.readlines()
+    counts = split(lines, a.start, a.end)
     total = sum(counts.values())
     if total == 0:
         sys.exit("no executor samples in the window")
@@ -122,6 +148,9 @@ def main():
     for name in NAMES:
         print(f"{name:<14}{counts[name]:>9}{100.0 * counts[name] / total:>7.1f}%")
     print(f"{'total':<14}{total:>9}")
+    for p, m in frame_counts(lines, a.frame, a.start, a.end).items():
+        per_bucket = ", ".join(f"{name} {m[name]}" for name in NAMES if m[name])
+        print(f"frame {p}: {sum(m.values())} samples" + (f" ({per_bucket})" if per_bucket else ""))
 
 
 if __name__ == "__main__":

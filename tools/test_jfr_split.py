@@ -65,6 +65,39 @@ class Buckets(unittest.TestCase):
         self.assertEqual(c["wire_decode"], 1)
 
 
+GEN = "org.apache.spark.sql.catalyst.expressions.GeneratedClass$GeneratedIteratorForCodegenStage"
+KERNEL = "graft.plans.WireKernel.graft_wire_decode(UTF8String)"
+
+
+def frame_counts(patterns, *samples, start=None, end=None):
+    return js.frame_counts("".join(samples).splitlines(keepends=True), patterns, start, end)
+
+
+class Frames(unittest.TestCase):
+    def test_samples_count_per_bucket_under_the_stage_that_ran_them(self):
+        c = frame_counts([r"CodegenStage1\.", r"CodegenStage2\."],
+                         sample("10:00:00.000", [KERNEL, GEN + "1.filter_doConsume()", TASK]),
+                         sample("10:00:00.010", [KERNEL, GEN + "2.project_doConsume()", TASK]),
+                         sample("10:00:00.020", [KERNEL, GEN + "2.project_doConsume()", TASK]),
+                         sample("10:00:00.030", [GEN + "2.processNext()", TASK]))
+        self.assertEqual(c[r"CodegenStage1\."]["wire_decode"], 1)
+        self.assertEqual(sum(c[r"CodegenStage1\."].values()), 1)
+        self.assertEqual(c[r"CodegenStage2\."]["wire_decode"], 2)
+        self.assertEqual(c[r"CodegenStage2\."]["other"], 1)
+
+    def test_a_sample_counts_once_however_many_frames_match(self):
+        c = frame_counts(["Codegen"], sample("10:00:00.000", [GEN + "1.a()", GEN + "1.b()", CG + "X.y()", TASK]))
+        self.assertEqual(sum(c["Codegen"].values()), 1)
+
+    def test_frames_keep_the_thread_and_window_filters(self):
+        samples = [sample("10:00:00.000", [KERNEL, TASK]),
+                   sample("10:00:05.000", [KERNEL, TASK]),
+                   sample("10:00:05.500", [KERNEL], thread="stream execution thread for q")]
+        self.assertEqual(frame_counts(["graft_wire_decode"], *samples)["graft_wire_decode"]["wire_decode"], 2)
+        self.assertEqual(frame_counts(["graft_wire_decode"], *samples, start=1)["graft_wire_decode"]["wire_decode"], 1)
+        self.assertEqual(sum(frame_counts(["NoSuchFrame"], *samples)["NoSuchFrame"].values()), 0)
+
+
 class Window(unittest.TestCase):
     def test_window_is_relative_to_the_earliest_sample(self):
         # samples are printed per thread buffer, not in time order
