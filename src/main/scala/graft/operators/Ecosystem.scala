@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.operators.Ckpt.CkptOps
+import graft.plans.Kernels
 import graft.sources.Tables
 
 /** The reference's ecosystem analytics re-expressed over the `events`
@@ -180,10 +181,19 @@ object Ecosystem {
     * Reads the events scan as it comes: the per-row JSON extraction is
     * cheap next to a shuffle of the whole table. Another split layout
     * only reorders the double sums; EcosystemSpec pins that one split
-    * and many round to the same scores. */
+    * and many round to the same scores.
+    *
+    * `k` is read by the `graft_json_int` kernel, one byte pass per row,
+    * and only the rows it declines (anything but a flat object with one
+    * plain int `k`) go through Jackson in `get_json_object`, so the
+    * column equals `get_json_object(props, '$.k').cast("int")` alone,
+    * which is what kernels-off sessions run (KernelParitySpec). */
   def importance(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
+    val reference = get_json_object(col("props"), "$.k").cast("int")
+    val k =
+      if (Llm.kernelOn(spark)) coalesce(Kernels("graft_json_int", col("props"), lit("k")), reference)
+      else reference
+    val e = Tables.events(spark, dir).withColumn("k", k)
     // grand-total normalization: same tiny-frame checkpoint +
     // broadcast pattern as `stats` (see its doc comment) — the
     // grouped frame is one row per event_type, so materializing it

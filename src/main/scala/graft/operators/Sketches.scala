@@ -44,13 +44,16 @@ object Sketches {
     val e = keyed(spark, dir)
     // Size the filters from a cheap sketch pre-pass instead of a
     // fixed guess (round-2 nit: a hardcoded capacity degrades FPR
-    // when cohorts grow). approx_count_distinct is one partial-agg
-    // job; 1.5x headroom absorbs its rsd. Undersizing only degrades
+    // when cohorts grow). A type's keys are its distinct users, so
+    // the pre-pass is eco_hll_users' partial-agg HLL sketch
+    // (`Ecosystem.approxDistinctUsers`, lgConfigK 12) over user_id;
+    // 1.5x headroom absorbs its rsd. Undersizing only degrades
     // FPR — the no-false-negative guarantee never depends on it.
     // coalesce: max(n) over an empty events table is NULL, and the
     // 64-key floor must win there instead of an NPE
     val cap = math.max(64L,
-      (e.groupBy(col("event_type")).agg(approx_count_distinct(col("key")).as("n"))
+      (e.groupBy(col("event_type"))
+        .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12)).as("n"))
         .agg(coalesce(max(col("n")), lit(0L))).head().getLong(0) * 3) / 2)
     val bloomUdaf = udaf(new SketchAggs.BloomAgg(expectedItems = cap, fpp = 0.03), Encoders.STRING)
     val blooms = e.groupBy(col("event_type")).agg(bloomUdaf(col("key")).as("bf"))
@@ -154,21 +157,22 @@ object Sketches {
   }
 
   /** The exact twin of `minhashJaccard` (SURVEY §7.3 determinism
-    * rule): true Jaccard between event_type user sets, computed in
-    * ONE scan of events. Per-user type sets are collected, every
-    * ordered pair (including (a,a) for set sizes) is emitted and
-    * counted distributed; only the |types|² counter table — bounded
-    * by the categorical domain, not the data — is collected to
-    * assemble the final rows. (The naive self-join formulation scans
-    * events four times: a-side, b-side, and two size subqueries —
-    * the round-1 q10 critique at 100 TB.) */
+    * rule): true Jaccard between event_type user sets, the shape of
+    * its DuckDB oracle. A partial aggregate takes the distinct
+    * (user_id, event_type) pairs, so each map task ships its pairs, not
+    * its rows; one scan feeds both sides of a self-join on the user
+    * (`<=>`: a NULL user_id is one user, as a grouping key is) that
+    * emits every pair of types a user holds, (a, a) included for set
+    * sizes. Only the pair counts are collected: the |types|² counter
+    * table, bounded by the categorical domain, not the data. (A
+    * per-user `collect_set` sorted every row once the users outgrew
+    * the object-hash aggregate's 128-key fallback threshold.) */
   def jaccardExact(spark: SparkSession, dir: String): DataFrame = {
-    val pairCounts = Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(collect_set(col("event_type")).as("ts"))
-      .select(explode(expr(
-        "flatten(transform(ts, a -> transform(filter(ts, b -> b >= a), b -> struct(a AS ta, b AS tb))))"))
-        .as("p"))
-      .groupBy(col("p.ta").as("ta"), col("p.tb").as("tb"))
+    val pairs = Tables.events(spark, dir).select(col("user_id"), col("event_type")).distinct()
+    val pairCounts = pairs.select(col("user_id").as("ua"), col("event_type").as("ta"))
+      .join(pairs.select(col("user_id").as("ub"), col("event_type").as("tb")),
+        col("ua") <=> col("ub") && col("ta") <= col("tb"))
+      .groupBy(col("ta"), col("tb"))
       .agg(count(lit(1)).as("n"))
       .collect()
     val size = pairCounts.filter(r => r.getString(0) == r.getString(1))
@@ -199,12 +203,18 @@ object Sketches {
   }
 
   /** A9 true DGIM (plans/Dgim.scala): trailing-1-hour estimate of
-    * error-bits per event_type. Bits are replayed in event-time order
-    * within each key partition (repartition + sortWithinPartitions —
-    * the only ordering DGIM needs; no global sort), the sketch holds
-    * O(log² W) buckets however long the stream. Rows-only (order-
-    * dependent sketch state isn't SQL-expressible); SketchesSpec
-    * asserts the 50 % error bound against the exact count.
+    * error-bits per event_type. The rows are first folded by a partial
+    * aggregate to one `(event_type, tsec, ones)` record per key and
+    * second, so each shuffle carries at most the distinct (key,
+    * second) pairs of a map task instead of every event. The records
+    * are replayed in event-time order within each key partition
+    * (repartition + sortWithinPartitions — the only ordering DGIM
+    * needs; no global sort) with `Dgim.addCount`, which is
+    * bit-identical to replaying the rows. The sketch holds O(log² W)
+    * buckets however long the stream. Rows-only (order-dependent
+    * sketch state isn't SQL-expressible); SketchesSpec asserts the
+    * 50 % error bound against the exact count and the equality with a
+    * per-row replay.
     *
     * Scale limit (round-3 verdict item 6): parallelism here is
     * bounded by |event_type| — one hot key is one serial replay task.
@@ -212,20 +222,17 @@ object Sketches {
     * replay with stitched estimates. */
   def dgimTrue(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val bits = Tables.events(spark, dir)
-      .select(col("event_type"),
-        col("ts").cast("long").as("tsec"),
-        col("event_id"),
-        when(col("event_type") === "error", 1).otherwise(0).as("bit"))
-      .as[(String, Long, Long, Int)]
-    bits
+    Tables.events(spark, dir)
+      .groupBy(col("event_type"), col("ts").cast("long").as("tsec"))
+      .agg(sum(when(col("event_type") === "error", 1).otherwise(0)).as("ones"))
       .repartition(col("event_type"))
-      .sortWithinPartitions(col("event_type"), col("tsec"), col("event_id"))
+      .sortWithinPartitions(col("event_type"), col("tsec"))
+      .as[(String, Long, Long)]
       .mapPartitions { rows =>
         val sketches = scala.collection.mutable.LinkedHashMap.empty[String, (Dgim, Long)]
-        rows.foreach { case (t, tsec, _, bit) =>
+        rows.foreach { case (t, tsec, ones) =>
           val (d, _) = sketches.getOrElseUpdate(t, (new Dgim(3600L), 0L))
-          d.addBit(tsec, bit)
+          d.addCount(tsec, ones)
           sketches(t) = (d, tsec)
         }
         sketches.iterator.map { case (t, (d, last)) => (t, d.estimate(last)) }

@@ -58,6 +58,19 @@ class Dgim(windowSize: Long, maxPerSize: Int = 2) {
     }
   }
 
+  /** Replays one folded record: `ones` 1-bits at `ts`, or one 0-bit
+    * when `ones` is 0. This is bit-identical to replaying, in order,
+    * the rows at `ts` that the record counts: a 0-bit only expires
+    * buckets, and expiring twice at the same second is expiring once.
+    * So a caller may combine its rows per (key, second) before the
+    * shuffle (Sketches.dgimTrue, Streaming.dgimCounts). */
+  def addCount(ts: Long, ones: Long): Unit =
+    if (ones == 0) addBit(ts, 0)
+    else {
+      var k = 0L
+      while (k < ones) { addBit(ts, 1); k += 1 }
+    }
+
   private def expire(now: Long): Unit =
     while (buckets.nonEmpty && now - buckets.last._1 > windowSize)
       buckets.removeLast()
@@ -75,14 +88,23 @@ class Dgim(windowSize: Long, maxPerSize: Int = 2) {
   /** Memory guarantee hook for tests: bucket count is O(log² W). */
   def bucketCount: Int = buckets.length
 
-  /** Sketch state as plain data — (newestTimestamp, size) newest
-    * first — so a streaming job can park it in a state store between
-    * micro-batches (Streaming.dgimCounts) and restore with
-    * `loadBuckets`. O(log² W) values however long the stream. */
-  def exportBuckets: Seq[(Long, Long)] = buckets.toSeq
+  /** Sketch state as plain bytes — newestTimestamp and size as two
+    * big-endian longs per bucket, newest first — so a streaming job can
+    * park it in a state store between micro-batches
+    * (Streaming.dgimCounts) and restore with `loadBuckets`. O(log² W)
+    * values however long the stream. A binary state column
+    * deserializes with a plain copy; an array state (`Seq[(Long,
+    * Long)]`, even `Array[Long]`) plans `MapObjects`, whose fresh
+    * lambda variable compiles a new deserializer in every micro-batch. */
+  def exportBuckets: Array[Byte] = {
+    val out = java.nio.ByteBuffer.allocate(buckets.length * 16)
+    buckets.foreach { case (ts, size) => out.putLong(ts).putLong(size) }
+    out.array()
+  }
 
-  def loadBuckets(bs: Seq[(Long, Long)]): Unit = {
+  def loadBuckets(bs: Array[Byte]): Unit = {
     buckets.clear()
-    buckets.appendAll(bs)
+    val in = java.nio.ByteBuffer.wrap(bs)
+    while (in.remaining() >= 16) buckets.append((in.getLong(), in.getLong()))
   }
 }

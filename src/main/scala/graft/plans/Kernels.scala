@@ -47,12 +47,13 @@ object Kernels {
         s"$name requires a literal int $what, got $other")
     }
 
-  /** The agent selects the rule group: a query-time constant. */
-  private def literalAgent(name: String)(args: Seq[Expression]): Unit =
+  /** The last argument (a robots agent, which selects the rule group;
+    * a JSON field name) must be a literal string: a query-time constant. */
+  private def literalString(name: String, what: String)(args: Seq[Expression]): Unit =
     args.last match {
       case Literal(_: UTF8String, _) =>
       case other => throw new IllegalArgumentException(
-        s"$name requires a literal string agent, got $other")
+        s"$name requires a literal string $what, got $other")
     }
 
   private val functions: Map[String, Fn] = Map(
@@ -75,15 +76,17 @@ object Kernels {
     static(FrontierKernel, "graft_sitemaps", StrArray, StringType)(orNull = true),
     static(FrontierKernel, "graft_sitemap_entries", StrArray, StringType)(orNull = true),
     static(FrontierKernel, "graft_crawl_delay", LongType, StringType, StringType)(
-      orNull = true, check = literalAgent("graft_crawl_delay")),
+      orNull = true, check = literalString("graft_crawl_delay", "agent")),
     static(FrontierKernel, "graft_robots_allowed", BooleanType, StringType, StringType, StringType)(
-      check = literalAgent("graft_robots_allowed")),
+      check = literalString("graft_robots_allowed", "agent")),
     static(HtmlTextKernel, "graft_html_text", StringType, StringType)(),
     static(HtmlTextKernel, "graft_html_links", StrArray, StringType)(orNull = true),
     static(HtmlTextKernel, "graft_link_anchors", StrArray, StringType)(orNull = true),
     static(LangIdKernel, "graft_lang_id", StringType, StringType)(),
     static(BpeKernel, "graft_bpe_tokens", StrArray, StringType)(orNull = true),
     static(WireKernel, "graft_wire_decode", WireKernel.eventSchema, StringType)(orNull = true),
+    static(WireKernel, "graft_json_int", IntegerType, StringType, StringType)(
+      orNull = true, check = literalString("graft_json_int", "field")),
     "graft_cosine" -> Fn(2, a => CosineSimilarity(a(0), a(1))),
     "graft_srp_buckets" -> Fn(1, a => SrpBuckets(a(0))),
     "graft_nearest_centroid" -> Fn(2, a => NearestCentroid(a(0), a(1))),

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The wire-event decode kernel: one byte-level pass over a JSON
@@ -32,7 +33,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    JSON timestamp parser reads it. Strings without an offset, dates,
   *    epoch numbers and offsets with seconds are rejected, so the
   *    result never depends on the session time zone.
-  * The scan stops at the first byte that does not fit. */
+  * The scan stops at the first byte that does not fit.
+  *
+  * `graft_json_int(json, field)` reuses the scan for one integer field
+  * of a flat object: `coalesce(graft_json_int(p, 'k'),
+  * get_json_object(p, '$.k').cast("int"))` (`Ecosystem.importance`)
+  * equals the fallback alone. It answers only for an object of at
+  * most `MaxIntRow` bytes (under every Jackson read limit) whose
+  * members are escape-free ASCII keys with escape-free ASCII string,
+  * number, `true`, `false` or `null` values, in which `field` occurs
+  * once as a JSON integer within int range, with only JSON whitespace
+  * around the tokens and after the closing brace. Everything else
+  * (nesting, escapes, duplicate fields, floats, quoted or
+  * out-of-range values, malformed input) is NULL, so Jackson, the cast
+  * and its ANSI errors see exactly the rows they saw before. */
 object WireKernel {
 
   val eventSchema: StructType = StructType.fromDDL(
@@ -41,8 +55,15 @@ object WireKernel {
   /** The event struct of `s` in schema order, or null. */
   def graft_wire_decode(s: UTF8String): InternalRow = new Scan(s).event()
 
-  private val Keys: Array[Array[Byte]] =
-    eventSchema.fieldNames.map(_.getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+  /** The int value of `field` in the flat JSON object `s`, or null. */
+  def graft_json_int(s: UTF8String, field: UTF8String): java.lang.Integer =
+    if (s.numBytes > MaxIntRow) null else new Scan(s).intField(field)
+
+  /** Longest `graft_json_int` input: below Jackson's default name
+    * (50,000), string (20,000,000) and number (1,000) length limits. */
+  private final val MaxIntRow = 49999
+
+  private val Keys: Array[UTF8String] = eventSchema.fieldNames.map(UTF8String.fromString)
 
   /** Failure sentinel of the integer and timestamp readers: accepted
     * integers stay below 10^18 and accepted timestamps within years
@@ -92,7 +113,7 @@ object WireKernel {
       while (k < Keys.length) {
         ws()
         if (k > 0) { if (!eat(',')) return null; ws() }
-        val f = key()
+        val f = key(Keys)
         if (f < 0 || (seen & (1 << f)) != 0) return null
         seen |= 1 << f
         ws()
@@ -126,21 +147,65 @@ object WireKernel {
       -1
     }
 
-    /** The schema index of the key at `i`, or -1. */
-    private def key(): Int = {
-      val end = stringEnd()
-      if (end < 0) return -1
-      var f = 0
-      while (f < Keys.length) {
-        val name = Keys(f)
-        if (name.length == end - i) {
-          var j = 0
-          while (j < name.length && at(i + j) == name(j)) j += 1
-          if (j == name.length) { i = end + 1; return f }
+    /** The int value of the one `field` member, or null (see
+      * `graft_json_int`). */
+    def intField(field: UTF8String): java.lang.Integer = {
+      val names = Array(field)
+      ws()
+      if (!eat('{')) return null
+      var v = Bad
+      ws()
+      if (!eat('}')) {
+        var more = true
+        while (more) {
+          ws()
+          val f = key(names)
+          if (f == -2) return null
+          ws()
+          if (!eat(':')) return null
+          ws()
+          if (f == 0) {
+            if (v != Bad) return null
+            v = long()
+            if (v < Int.MinValue || v > Int.MaxValue) return null
+          } else if (!scalar()) return null
+          ws()
+          more = eat(',')
         }
-        f += 1
+        if (!eat('}')) return null
       }
-      -1
+      ws()
+      if (i != n || v == Bad) null else Int.box(v.toInt)
+    }
+
+    /** Steps over an escape-free ASCII string, a JSON number, `true`,
+      * `false` or `null`; false at anything else. */
+    private def scalar(): Boolean = at(i) match {
+      case '"' => val end = stringEnd(); i = end + 1; end >= 0
+      case 't' => word("true")
+      case 'f' => word("false")
+      case 'n' => word("null")
+      case _ => !double().isNaN
+    }
+
+    private def word(w: String): Boolean = {
+      var j = 0
+      while (j < w.length && at(i + j) == w.charAt(j)) j += 1
+      if (j == w.length) { i += j; true } else false
+    }
+
+    /** The index in `names` of the escape-free ASCII key at `i` (moving
+      * past it), -1 for another such key, or -2 when none opens at `i`. */
+    private def key(names: Array[UTF8String]): Int = {
+      val end = stringEnd()
+      if (end < 0) return -2
+      val len = end - i
+      var f = 0
+      while (f < names.length && !(names(f).numBytes == len && ByteArrayMethods.arrayEquals(
+          s.getBaseObject, s.getBaseOffset + i, names(f).getBaseObject, names(f).getBaseOffset, len)))
+        f += 1
+      i = end + 1
+      if (f == names.length) -1 else f
     }
 
     private def string(): UTF8String = {

@@ -830,11 +830,13 @@ object Streaming {
     * time before replay (DGIM is order-dependent; a micro-batch is
     * bounded, so the sort is a small in-memory one per key per
     * trigger). A record replays as `ones` 1-bits at its second, or one
-    * 0-bit when it has none, which is bit-identical to replaying the
-    * rows: a 0-bit only expires buckets, and expiring twice at the
-    * same second is expiring once. Across batches the engine delivers
-    * batch N+1 after N — late stragglers beyond that are the stream's
-    * lateness domain, same as the reference's arrival-order deque.
+    * 0-bit when it has none (`Dgim.addCount`), which is bit-identical
+    * to replaying the rows. The state is the sketch's buckets as bytes
+    * (`Dgim.exportBuckets`): its deserializer compiles once, where a
+    * `Seq[(Long, Long)]` compiled a new one in every micro-batch.
+    * Across batches the engine delivers batch N+1 after N — late
+    * stragglers beyond that are the stream's lateness domain, same as
+    * the reference's arrival-order deque.
     * Run with outputMode("update").
     *
     * State eviction: pass `ttl = Some(d)` to give each key a
@@ -867,7 +869,7 @@ object Streaming {
         ones.iterator.map { case ((key, tsec), n) => (key, tsec, n) }
       }
       .groupByKey(_._1)
-      .mapGroupsWithState[Seq[(Long, Long)], DgimUpdate](timeoutConf) {
+      .mapGroupsWithState[Array[Byte], DgimUpdate](timeoutConf) {
         (key, rows, state) =>
           if (state.hasTimedOut) {
             state.remove()
@@ -877,8 +879,7 @@ object Streaming {
             state.getOption.foreach(d.loadBuckets)
             var last = Long.MinValue
             rows.toSeq.sortBy(_._2).foreach { case (_, tsec, ones) =>
-              if (ones == 0) d.addBit(tsec, 0)
-              else for (_ <- 0 until ones) d.addBit(tsec, 1)
+              d.addCount(tsec, ones)
               if (tsec > last) last = tsec
             }
             val est = if (last == Long.MinValue) 0L else d.estimate(last)

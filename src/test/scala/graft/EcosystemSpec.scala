@@ -50,6 +50,99 @@ class EcosystemSpec extends AnyFunSuite {
     }
   }
 
+  test("graft_json_int ahead of get_json_object equals get_json_object alone, row for row (property)") {
+    // importance reads props.k as coalesce(graft_json_int(p, 'k'),
+    // get_json_object(p, '$.k').cast("int")); the kernel may answer
+    // only where its int is what the fallback gives
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{coalesce, col, get_json_object, lit}
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import graft.plans.Kernels
+    def q(x: String) = "\"" + x + "\""
+    val intTok = Gen.frequency(
+      8 -> Gen.choose(-1000, 1000).map(_.toString),
+      3 -> Gen.choose(Int.MinValue, Int.MaxValue).map(_.toString),
+      2 -> Gen.oneOf("0", "-0", "00", "007", "-01", "2147483647", "-2147483648", "2147483648",
+        "-2147483649", "9999999999", "123456789012345678", "1234567890123456789",
+        "99999999999999999999"),
+      2 -> Gen.oneOf("1.5", "1.0", "-0.0", "1e3", "1E0", "2e-1", "1.", ".5", "+1", "-", "0x1F",
+        q("5"), q("-7"), q("x"), "null", "true", "false", "NaN", "Infinity",
+        "{\"a\": 1}", "[1]", "[]", "{}"))
+    val valueTok = Gen.frequency(
+      4 -> Gen.choose(-1e6, 1e6).map(_.toString),
+      3 -> Gen.oneOf("x", "", "hello world", "a/b", "\u007f").map(q),
+      2 -> Gen.oneOf(q("a\\\"b"), q("\\u0041"), q("caf\u00e9"), q("tab\there"), q("\"open"),
+        "true", "false", "null", "tru", "nul", "01", "1.", "-", "1e", "[1, 2]", "{\"k\": 1}", "{}"))
+    val keyTok = Gen.frequency(
+      8 -> Gen.oneOf("a", "kk", "K", "k2", "species", "").map(q),
+      1 -> Gen.oneOf(q("\\u006b"), q("k "), q("\u006b\u0301"), "k", "'k'", q("caf\u00e9")))
+    val spaced = Gen.frequency(4 -> Gen.const(""), 3 -> Gen.const(" "), 1 -> Gen.oneOf("  ", "\n", "\t", "\r\n"))
+    val objGen = for {
+      nK <- Gen.frequency(8 -> Gen.const(1), 1 -> Gen.const(0), 1 -> Gen.const(2))
+      ks <- Gen.listOfN(nK, intTok.map(q("k") -> _))
+      nOther <- Gen.choose(0, 3)
+      others <- Gen.listOfN(nOther, Gen.zip(keyTok, valueTok))
+      members <- Gen.pick(ks.size + others.size, ks ++ others).map(_.toList)
+      a <- spaced; b <- spaced; c <- spaced; lead <- spaced
+      body = members.map { case (k, v) => s"$k$a:$b$v" }.mkString(lead + "{" + c, s"$a,$b", c + "}")
+      cut <- Gen.frequency(12 -> Gen.const(body.length), 1 -> Gen.choose(0, body.length))
+      tail <- Gen.frequency(10 -> Gen.const(""), 2 -> spaced, 1 -> Gen.oneOf("x", "}", ",", "{}", "\u0000"))
+    } yield body.take(cut) + tail
+    val propsGen = Gen.frequency(30 -> objGen,
+      1 -> Gen.oneOf(null, "", "[]", "5", q("k"), "null", "[{\"k\": 1}]", "{\"k\": 1} {\"k\": 2}",
+        "{\"k\": 1 \"a\": 2}", "{\"k\" 1}", "{k: 1}", "{'k': 1}", "{\"k\": 1,}", "{,\"k\": 1}"))
+
+    val fallback = get_json_object(col("p"), "$.k").cast("int")
+    val kernel = Kernels("graft_json_int", col("p"), lit("k"))
+    val session = spark.newSession()
+    // a failing cast is NULL here, so one frame holds every row; under
+    // ANSI the fallback then raises on the same rows, since the kernel
+    // answers only where the fallback's text is the int itself
+    session.conf.set("spark.sql.ansi.enabled", "false")
+    import session.implicits._
+    var answered = 0
+    def compare(values: Seq[String]): Unit = {
+      val in = values.zipWithIndex.toDF("p", "idx")
+      // a local frame folds its projection at planning (interpreted
+      // eval); a repartitioned one runs it in generated code
+      for (frame <- Seq(in, in.repartition(3))) {
+        val rows: Array[Row] = frame.select(col("idx"), coalesce(kernel, fallback), fallback, kernel,
+            get_json_object(col("p"), "$.k"))
+          .collect().sortBy(_.getInt(0))
+        assert(rows.length == values.length)
+        for (r <- rows) {
+          val p = values(r.getInt(0))
+          assert(r.get(1) == r.get(2), s"props $p: with the kernel ${r.get(1)}, get_json_object alone ${r.get(2)}")
+          if (!r.isNullAt(3)) {
+            answered += 1
+            assert(r.getString(4) == r.getInt(3).toString, s"props $p: kernel ${r.get(3)}, text ${r.get(4)}")
+          }
+        }
+      }
+    }
+    val props = Prop.forAllNoShrink(Gen.listOfN(400, propsGen)) { ps => compare(ps); true }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), props)
+    assert(res.passed, res.status match {
+      case SCTest.PropException(_, e, _) => e.getMessage
+      case other => other.getClass.getSimpleName
+    })
+    assert(answered > 1000, s"the kernel answered only $answered rows")
+    // the shapes the engine reads: the generator's and json.dumps'
+    val accepted = Seq("""{"k": 69}""", """{"k":0}""", """{"species": "ant", "k": -3}""")
+      .toDF("p").select(kernel).collect().map(_.get(0)).toSeq
+    assert(accepted == Seq(69, 0, -3))
+    // under ANSI (the default) an unparseable fallback raises with and
+    // without the kernel
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    for (p <- Seq("""{"k": 3000000000}""", """{"k": "x"}""")) withClue(p) {
+      val ansi = spark.createDataFrame(java.util.Arrays.asList(Row(p)),
+        org.apache.spark.sql.types.StructType.fromDDL("p STRING")).repartition(1)
+      def raised(c: org.apache.spark.sql.Column): Class[_] =
+        intercept[Exception](ansi.select(c).collect()).getClass
+      assert(raised(coalesce(kernel, fallback)) == raised(fallback))
+    }
+  }
+
   test("stats shares sum to 1") {
     val shares = Ecosystem.stats(spark, TestSpark.sf).collect().map(_.getDouble(4))
     assert(math.abs(shares.sum - 1.0) < 1e-3)

@@ -143,6 +143,27 @@ class KernelParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(withKernels(on = false)(decoded) == on)
   }
 
+  test("importance is identical with kernels disabled") {
+    // graft_json_int with get_json_object for its rejects, against
+    // get_json_object alone: the sf events, and a copy whose props the
+    // kernel partly hands to get_json_object (spacing, other members,
+    // a quoted, NULL, missing or repeated k, nesting, escapes)
+    import org.apache.spark.sql.functions.{element_at, lit, typedLit}
+    val odd = Seq("""{"k": 7}""", """{ "k" :12 , "species": "ant" }""", """{"k": "9"}""",
+      """{"k": null}""", """{"a": 1}""", """{"k": 4, "k": 5}""", """{"k": 3, "nest": {"k": 8}}""",
+      """{"\u006b": 6}""", """{"k": 2, "s": "caf\u00e9"}""", "{not json", "")
+    val oddDir = java.nio.file.Files.createTempDirectory("graft_importance_props").toString
+    spark.read.parquet(s"$dir/events.parquet")
+      .withColumn("props", element_at(typedLit(odd), (col("event_id") % odd.size).cast("int") + lit(1)))
+      .write.parquet(s"$oddDir/events.parquet")
+    for (d <- Seq(dir, oddDir)) {
+      val on  = withKernels(on = true)(s => canon(graft.operators.Ecosystem.importance(s, d)))
+      val off = withKernels(on = false)(s => canon(graft.operators.Ecosystem.importance(s, d)))
+      assert(on.size == 5, s"$d: ${on.size} importance rows")
+      assert(off == on, s"$d: importance diverges between kernel and fallback paths")
+    }
+  }
+
   test("a session that disables the kernels logs one WARN, once") {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}

@@ -459,6 +459,49 @@ class PlanSpec extends AnyFunSuite {
       s"wire decode is planned more than once per row:\n$p")
   }
 
+  /** The executed plans of the actions `body` runs, for operators that
+    * collect or checkpoint inside: their returned frame's plan does
+    * not show the work. The listener bus is asynchronous, so wait for
+    * the plans that `until` expects. */
+  private def actionPlans(until: Seq[String] => Boolean)(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      def seen = plans.toArray(Array.empty[String]).toSeq
+      val deadline = System.nanoTime() + 10000000000L
+      while (!until(seen) && System.nanoTime() < deadline) Thread.sleep(50)
+      seen
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("importance reads props.k with graft_json_int inside whole-stage codegen (eco_importance)") {
+    // the kernel reads each row's k in one byte pass; get_json_object
+    // (Jackson) stays behind it for the rows the kernel declines. The
+    // scan and the partial aggregate run in a checkpoint job.
+    val ps = actionPlans(_.exists(_.contains("graft_json_int(")))(plan("eco_importance"))
+    val p = ps.find(_.contains("graft_json_int(")).getOrElse(fail(s"no plan calls graft_json_int:\n${ps.mkString("\n")}"))
+    assert(p.contains("coalesce(static_invoke(graft.plans.WireKernel.graft_json_int(props#"),
+      s"props.k is not read by the kernel first:\n$p")
+    assert(p.linesIterator.exists(l => l.contains("graft_json_int(") && """\*\(\d+\) """.r.findFirstIn(l).isDefined),
+      s"graft_json_int is not whole-stage codegen'd:\n$p")
+  }
+
+  test("exact jaccard counts type pairs over distinct (user, type) pairs, no collect_set (eco_jaccard_exact)") {
+    // a per-user collect_set passes the object-hash aggregate's
+    // 128-key fallback and sorts every row; the distinct pairs come
+    // from a partial aggregate and meet in a user-keyed self-join
+    val ps = actionPlans(_.nonEmpty)(plan("eco_jaccard_exact"))
+    assert(ps.nonEmpty, "the query ran no action")
+    ps.foreach(p => assert(!p.contains("collect_set"), s"a per-user collect_set is back:\n$p"))
+    assert(ps.exists(p => p.contains("HashJoin") || p.contains("SortMergeJoin")), ps.mkString("\n"))
+  }
+
   test("html extraction runs on the graft_html_text kernel — no ScalaUDF, no exchange") {
     // at 100 TB this runs once per crawl document between the WARC
     // entity decode and the quality family — it must be a map-only

@@ -193,6 +193,89 @@ class SketchesSpec extends AnyFunSuite {
       s"DGIM estimate $errEst vs exact $exact breaches the 50% bound")
   }
 
+  /** `rows` (event_id, epoch second, user_id, event_type) as an
+    * events table of `files` parquet files; returns its directory. */
+  private def eventsDir(rows: Seq[(Long, Long, java.lang.Long, String)], files: Int): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sketch_events").toString
+    rows.map { case (id, sec, user, typ) => (id, sec * 1000000000L, user, typ, 1.0, """{"k": 1}""") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartition(files).write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  test("exact jaccard equals the per-user collect_set formulation, NULL users and types included") {
+    // the formulation jaccardExact replaced: one type set per user
+    // (collect_set drops NULL types; a NULL user is one group), every
+    // ordered pair of its types counted
+    def bySets(dir: String): Seq[String] = {
+      val pairCounts = graft.sources.Tables.events(spark, dir)
+        .groupBy(col("user_id")).agg(collect_set(col("event_type")).as("ts"))
+        .select(explode(expr(
+          "flatten(transform(ts, a -> transform(filter(ts, b -> b >= a), b -> struct(a AS ta, b AS tb))))"))
+          .as("p"))
+        .groupBy(col("p.ta"), col("p.tb")).agg(count(lit(1))).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+      pairCounts.collect { case ((a, b), common) if a < b =>
+        val (na, nb) = (pairCounts((a, a)), pairCounts((b, b)))
+        val jac = new java.math.BigDecimal(common.toDouble / (na + nb - common))
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        Seq(a, b, na, nb, common, jac).mkString("|")
+      }.toSeq.sorted
+    }
+    def exact(dir: String): Seq[String] =
+      Sketches.jaccardExact(spark, dir).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val rnd = new scala.util.Random(5)
+    val types = Seq("click", "view", "error", null)
+    val withNulls = eventsDir((1L to 600L).map { id =>
+      val user: java.lang.Long = if (rnd.nextInt(10) == 0) null else java.lang.Long.valueOf(rnd.nextInt(40).toLong)
+      (id, 1700000000L + id, user, types(rnd.nextInt(types.size)))
+    }, files = 3)
+    for (dir <- Seq(TestSpark.sf, withNulls)) {
+      val want = bySets(dir)
+      assert(want.size >= 3, s"$dir: ${want.size} type pairs")
+      assert(exact(dir) == want, s"$dir: jaccardExact diverged from the collect_set formulation")
+    }
+  }
+
+  test("declared DGIM query equals a per-row replay over random splits; its shuffles carry folded records") {
+    // dgimTrue folds rows to (event_type, second, ones) before its
+    // shuffles; the estimates must equal the per-row replay in
+    // (event_type, ts, event_id) order, and no exchange may write more
+    // records than the files' distinct (event_type, second) pairs (a
+    // map task reads one file or more)
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    for (seed <- 1 to 3) withClue(s"seed $seed: ") {
+      val rnd = new scala.util.Random(seed)
+      // 3 h of rows on few distinct seconds, so a 1 h window expires
+      // buckets and seconds repeat within and across files
+      val rows = (1L to 3000L).map { id =>
+        val typ = Seq("error", "error", "click", "view")(rnd.nextInt(4))
+        (id, 1700000000L + rnd.nextInt(600) * 18L, java.lang.Long.valueOf(id % 11), typ)
+      }
+      val files = 2 + rnd.nextInt(5)
+      val dir = eventsDir(rows, files)
+      val want = rows.groupBy(_._4).map { case (typ, rs) =>
+        val d = new graft.plans.Dgim(3600L)
+        val sorted = rs.sortBy(r => (r._2, r._1))
+        sorted.foreach(r => d.addBit(r._2, if (typ == "error") 1 else 0))
+        typ -> d.estimate(sorted.last._2)
+      }
+      val df = Sketches.dgimTrue(spark, dir)
+      val got = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == want)
+      assert(want("error") > 0)
+      val pairs = spark.read.parquet(s"$dir/events.parquet")
+        .select(input_file_name().as("f"), col("event_type"), col("ts")).distinct().count()
+      val written = Plans.collect(df.queryExecution.executedPlan) {
+        case x: ShuffleExchangeExec => x.metrics("shuffleRecordsWritten").value
+      }
+      assert(written.nonEmpty && pairs < rows.size, s"$pairs pairs in ${rows.size} rows")
+      assert(written.forall(_ <= pairs), s"exchanges wrote ${written.mkString(", ")} records, $pairs pairs")
+    }
+  }
+
   test("stitched sub-window DGIM: hot-key scale path stays within the 50% bound") {
     // same trailing-window contract as dgimTrue, but replayed as
     // |keys| x chunks independent tasks; only the boundary chunk is

@@ -78,7 +78,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       "graft_dequant_dot" -> Seq("code", "array(0.5D, 0.25D, 1.0D)", "0.0D", "1.0D"),
       "graft_adc" -> Seq("ptab", "pq", "2"),
       "graft_bpe_tokens_with" -> Seq("s", "array(array('h', 'e'), array('l', 'l'))"),
-      "graft_wire_decode" -> Seq("w"))
+      "graft_wire_decode" -> Seq("w"), "graft_json_int" -> Seq("w", "'user_id'"))
     assert(calls.keySet == Kernels.names.toSet, "every SQL name needs a case here")
     val in = spark.table("graft_kernel_in")
     for ((name, args) <- calls) withClue(s"$name: ") {
@@ -97,6 +97,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .contains("graft_gram_stats requires a literal int gram width"))
     assert(analysisError("SELECT graft_robots_allowed(s, '/x', s) FROM graft_kernel_in")
       .contains("graft_robots_allowed requires a literal string agent"))
+    assert(analysisError("SELECT graft_json_int(w, s) FROM graft_kernel_in")
+      .contains("graft_json_int requires a literal string field"))
     assert(analysisError("SELECT graft_lang_id(s, s) FROM graft_kernel_in")
       .contains("graft_lang_id takes exactly 1 argument"))
   }

@@ -880,6 +880,33 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("dgimCounts compiles no code after its first batches (a binary state column)") {
+    // an array state (Seq[(Long, Long)], Array[Long]) deserializes
+    // through MapObjects, whose lambda variable gets a fresh id in every
+    // batch's planning, so every batch compiled a new projection; a
+    // binary state plans the same code each batch and hits the cache
+    import org.apache.spark.metrics.source.CodegenMetrics
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = ts("2024-01-01 10:00:00").getTime
+    val ms = MemoryStream[Event]
+    val q = Streaming.dgimCounts(ms.toDF(), windowSec = 120L)
+      .writeStream.format("memory").queryName("dgim_codegen")
+      .outputMode("update").start()
+    try {
+      val compiled = (0 until 6).map { b =>
+        ms.addData((0 until 50).map { i =>
+          Event(b * 100L + i, new Timestamp(t0 + (b * 60L + i) * 1000L), i % 5L,
+            Seq("error", "click", "view")(i % 3), 1.0)
+        }: _*)
+        q.processAllAvailable()
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      }
+      // batches 3-6 run the plan batches 1-2 compiled
+      assert(compiled(5) == compiled(2), s"compilations after each batch: ${compiled.mkString(", ")}")
+      assert(spark.table("dgim_codegen").count() > 0)
+    } finally q.stop()
+  }
+
   test("streaming as-of enrichment is event-time correct: late refs, ties, sealed-ref floor") {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[Event]

@@ -1,0 +1,107 @@
+#!/usr/bin/env python3
+"""Per-operation work of two sets of perfbench runs, side by side.
+
+Usage: perfbench_ops.py PARENT_DIR CHANGE_DIR [--workload NAME] [--op NAME ...]
+
+Each DIR is searched recursively for perfbench raw reports
+(`<workload>-seed<N>-trace<T>.json`, written under
+`.bench_build/perfbench/run-*/reports/` of the checkout that ran them),
+so a checkout root, its reports dir or a copy of several reports all
+work. For every operation of the workload (default eco_serve) it prints
+the median over the untraced timed samples of all reports of:
+
+  cpu_ms    executor CPU of the operation's stages
+  tasks     tasks run
+  shuf_rec  shuffle records written
+  crit_ms   critical-path task time (wall time the cores were busy)
+
+for the parent and the change, and the change's relative move in
+executor CPU. `n` is the sample count per side. `--op` (repeatable)
+limits the table to the named operations.
+
+Exit 0 iff both sides hold at least one sample of the workload.
+"""
+import argparse
+import fnmatch
+import json
+import os
+import statistics
+import sys
+
+COLUMNS = (("cpu_ms", "cpu_ns", 1e-6), ("tasks", "tasks", 1.0),
+           ("shuf_rec", "shuffle_records", 1.0), ("crit_ms", "crit_ms", 1.0))
+
+
+def reports(root, workload):
+    """The raw reports of `workload` under `root`, hidden dirs included."""
+    paths = [os.path.join(d, f) for d, _, files in os.walk(root)
+             for f in fnmatch.filter(files, "%s-seed*-trace*.json" % workload)]
+    out = []
+    for path in sorted(paths):
+        with open(path) as f:
+            r = json.load(f)
+        if r.get("workload") == workload and "ops" in r and "groups" in r:
+            out.append(r)
+    return out
+
+
+def samples(reps):
+    """{op name: {column: [values]}} over the untraced timed samples."""
+    by_op = {}
+    for r in reps:
+        for o in r["ops"]:
+            if o.get("traced"):
+                continue
+            g = r["groups"].get(o["op"], {})
+            cols = by_op.setdefault(o["name"], {c: [] for c, _, _ in COLUMNS})
+            for c, key, scale in COLUMNS:
+                cols[c].append(g.get(key, 0) * scale)
+    return by_op
+
+
+def median(xs):
+    return statistics.median(xs) if xs else float("nan")
+
+
+def table(parent, change, only=()):
+    """The side-by-side lines, one per operation in either set."""
+    names = sorted(set(parent) | set(change))
+    if only:
+        names = [n for n in names if n in only]
+    head = "%-26s %5s %5s" % ("op", "n_p", "n_c")
+    for c, _, _ in COLUMNS:
+        head += " %10s %10s" % (c + "_p", c + "_c")
+    lines = [head + " %8s" % "cpu_d%"]
+    empty = {c: [] for c, _, _ in COLUMNS}
+    for n in names:
+        p, c = parent.get(n, empty), change.get(n, empty)
+        line = "%-26s %5d %5d" % (n, len(p["cpu_ms"]), len(c["cpu_ms"]))
+        for col, _, _ in COLUMNS:
+            line += " %10.1f %10.1f" % (median(p[col]), median(c[col]))
+        mp, mc = median(p["cpu_ms"]), median(c["cpu_ms"])
+        line += " %+8.1f" % (100.0 * (mc - mp) / mp if mp else float("nan"))
+        lines.append(line)
+    return lines
+
+
+def main(argv=None):
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("parent_dir")
+    ap.add_argument("change_dir")
+    ap.add_argument("--workload", default="eco_serve")
+    ap.add_argument("--op", action="append", default=[])
+    a = ap.parse_args(argv)
+    sides = []
+    for d in (a.parent_dir, a.change_dir):
+        reps = reports(d, a.workload)
+        print("%s: %d %s reports" % (d, len(reps), a.workload))
+        sides.append(samples(reps))
+    if not sides[0] or not sides[1]:
+        print("nothing compared: a side has no %s sample" % a.workload)
+        return 1
+    print("\n".join(table(sides[0], sides[1], a.op)))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
