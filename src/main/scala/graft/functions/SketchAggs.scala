@@ -7,7 +7,7 @@ import org.apache.spark.util.sketch.BloomFilter
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-/** Mergeable sketch aggregators (SURVEY.md §2.10). Both are
+/** Mergeable sketch aggregators (SURVEY.md §2.10). Each is
   * associative + commutative, so Spark runs them as partial+final
   * hash aggregations: each task folds its rows into a local sketch
   * and only the fixed-size sketch buffers cross the shuffle — at
@@ -60,27 +60,6 @@ object SketchAggs {
 
   def deserializeBloom(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-
-  /** A10: MinHash signature aggregation (minwisehashing.py:4-24,
-    * 128 seeded hash functions, per-function minimum). The input is a
-    * per-row array of the `numHashes` seeded hash values (computed
-    * with codegen'd built-ins — `xxhash64(seed, key)` — so the only
-    * custom code is this elementwise-min fold). Signatures merge by
-    * elementwise min, making the aggregation partial-agg friendly;
-    * signature Jaccard (minwisehashing.py:31-36) is then a plain
-    * column expression over two signature arrays. */
-  class MinHashAgg(numHashes: Int) extends Aggregator[Array[Long], Array[Long], Array[Long]] {
-    def zero: Array[Long] = Array.fill(numHashes)(Long.MaxValue)
-    def reduce(buf: Array[Long], hashes: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < numHashes) { if (hashes(i) < buf(i)) buf(i) = hashes(i); i += 1 }
-      buf
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = reduce(a, b)
-    def finish(buf: Array[Long]): Array[Long] = buf
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  }
 
   /** Faithful HyperLogLog replicating hyperloglog.py:4-38 bit-for-bit
     * as a mergeable Aggregator: sha256 of the key, register index =
@@ -179,35 +158,5 @@ object SketchAggs {
     def finish(buf: Array[Long]): Array[Long] = buf
     def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
     def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-  }
-
-  /** SimHash signature aggregation: input is one `nBits`-bit feature
-    * hash per row (e.g. an md5-derived word-bigram hash), buffer is
-    * the per-bit ±1 vote counter, output the majority-vote signature.
-    * Single-pass and mergeable — the naive formulation (explode rows
-    * × nBits bit positions, two shuffles) multiplies the shuffle by
-    * nBits; this aggregator keeps the blowup inside the partial
-    * aggregate buffer, so at 100 TB only `groups × nBits` counters
-    * cross the network. */
-  class SimHashAgg(nBits: Int) extends Aggregator[Long, Array[Long], Long] {
-    def zero: Array[Long] = Array.fill(nBits)(0L)
-    def reduce(buf: Array[Long], hv: Long): Array[Long] = {
-      var b = 0
-      while (b < nBits) { buf(b) += ((hv >> b) & 1L) * 2 - 1; b += 1 }
-      buf
-    }
-    def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < nBits) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(buf: Array[Long]): Long = {
-      var sig = 0L
-      var b = 0
-      while (b < nBits) { if (buf(b) > 0) sig |= (1L << b); b += 1 }
-      sig
-    }
-    def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Central `localCheckpoint` wrapper for the pipeline working sets.
   *
-  * Checkpointed blocks default to SERIALIZED storage
+  * Checkpointed blocks are stored SERIALIZED
   * (MEMORY_AND_DISK_SER) instead of `localCheckpoint()`'s
   * deserialized MEMORY_AND_DISK: a deserialized block's size is
   * measured by `SizeEstimator` walking a sample of the stored object
@@ -19,22 +19,10 @@ import org.apache.spark.storage.StorageLevel
   * queries (DevTime, warm runs, sf0.1) measured the serialized form
   * cheaper on every one: llm_tfidf_terms 8.0 → 3.9 CPU-s, llm_curate
   * 13.9 → 8.9, llm_dedup_near 6.8 → 5.1, llm_dedup_clusters
-  * 8.6 → 6.9, llm_inverted_index level.
-  *
-  * `spark.graft.ckpt.deserialized=true` restores the engine default
-  * (the escape hatch if a future workload rereads a checkpoint so
-  * often that per-read deserialization dominates the one-time
-  * SizeEstimator walk). */
+  * 8.6 → 6.9, llm_inverted_index level. */
 private[graft] object Ckpt {
   implicit class CkptOps(private val df: DataFrame) extends AnyVal {
-    def ckptLocal(): DataFrame = {
-      val deser = df.sparkSession.conf
-        .getOption("spark.graft.ckpt.deserialized").contains("true")
-      val level =
-        if (deser) StorageLevel.MEMORY_AND_DISK
-        else StorageLevel.MEMORY_AND_DISK_SER
-      df.localCheckpoint(true, level)
-    }
+    def ckptLocal(): DataFrame = df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
   }
 
   /** Materialize two INDEPENDENT eager subtrees concurrently and wait

@@ -28,46 +28,71 @@ object Llm {
 
   // ---- shared text primitives -------------------------------------------
 
-  /** Distinct word-3-gram shingles over a (key, text) frame — the
-    * unit of the near-dup Jaccard. Texts shorter than one shingle are
-    * excluded (both here and in the oracle). */
-  private def shingles(keyed: DataFrame): DataFrame =
-    keyed
-      .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("key"), explode(array_distinct(expr(
-        "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")))
-        .as("shingle"))
+  /** The exact-dedup grouping hash: md5 of the whitespace-normalized
+    * text (runs of whitespace collapsed, trimmed, lower-cased). The one
+    * definition behind every exact-dup group, batch and streaming
+    * (`Streaming.dedupDocs`). */
+  private[graft] def textHash(text: Column): Column =
+    md5(lower(trim(regexp_replace(text, "\\s+", " "))))
+
+  /** The crawl era of a `documents` row: source `srcN` → N. The
+    * incremental queries split the corpus at era 10 (existing
+    * src0..src9, new batch src10..src19). */
+  private def srcEra: Column = expr("cast(substring(source, 4, 10) as int)")
+
+  /** The distinct word-3-gram shingles of a token array (>= 3 tokens)
+    * — the unit of the near-dup Jaccard. */
+  private def shingleSet(toks: Column): Column =
+    array_distinct(transform(sequence(lit(0), size(toks) - 3),
+      i => concat_ws(" ", toks(i), toks(i + 1), toks(i + 2))))
+
+  /** (key, shingle) rows of a (key, toks) frame of >= 3-token rows. */
+  private def shinglesOf(keyedToks: DataFrame): DataFrame =
+    keyedToks.select(col("key"), explode(shingleSet(col("toks"))).as("shingle"))
 
   // ---- deduplication -----------------------------------------------------
 
-  /** Exact dedup: group documents by md5 of whitespace-normalized
-    * text; each group keeps its smallest doc_id. One scan, one
-    * shuffle on the 128-bit hash — the canonical 100 TB exact-dedup
-    * plan (hash first, never compare raw text). */
+  /** Exact dedup: group documents by `textHash`; each group keeps its
+    * smallest doc_id. One scan, one shuffle on the 128-bit hash — the
+    * canonical 100 TB exact-dedup plan (hash first, never compare raw
+    * text). */
   def dedupExact(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))).as("text_hash"))
+      .select(col("doc_id"), textHash(col("text")).as("text_hash"))
       .groupBy(col("text_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_doc_id"))
 
-  /** (doc_id, text, text_hash) — the exact-dedup grouping hash
-    * (md5 of whitespace-normalized text) shared with `dedupExact`. */
-  private def normalized(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text"),
-      md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))).as("text_hash"))
+  /** (doc_id, text, text_hash) of a (doc_id, text) frame: the working
+    * set of every sketch-over-groups pipeline (near-dup, SimHash),
+    * widened (see `Tables.widened`) and materialized once with an
+    * eager localCheckpoint — without it, every broadcast exchange
+    * re-executes the scan→md5→group subtree as its own (often
+    * single-task) job, which round-3 profiling measured at 10-60 s of
+    * pure recomputation at sf0.1. Checkpointed blocks are dropped by
+    * the ContextCleaner when the frames are GC'd (no session-level
+    * cache leak); a cluster run at 100 TB would use a reliable
+    * checkpoint for the same stage cut. */
+  private def exactGroups(docs: DataFrame): DataFrame =
+    Tables.widened(docs)
+      .select(col("doc_id"), col("text"), textHash(col("text")).as("text_hash"))
+      .ckptLocal()
 
-  /** Narrow-scan insurance before per-row hash work — see
-    * `Tables.widened` (shared since round 6; Ecosystem's JSON-parse
-    * queries hit the same single-split serialization). */
-  private def widened(docs: DataFrame): DataFrame = Tables.widened(docs)
+  /** One tokenized representative (smallest doc_id) per exact-duplicate
+    * group of `exactGroups` output: (key = text_hash, toks), groups of
+    * at least `minToks` tokens only. Tokenization normalizes exactly
+    * the way `textHash` does (lower + trim + whitespace collapse), so
+    * every member of a group has the representative's tokens. */
+  private def repToks(m: DataFrame, minToks: Int): DataFrame =
+    m.groupBy(col("text_hash"))
+      .agg(min(struct(col("doc_id"), col("text"))).as("r"))
+      .select(col("text_hash").as("key"), split(lower(trim(col("r.text"))), "\\s+").as("toks"))
+      .filter(size(col("toks")) >= minToks)
 
   /** Selects, at the kernel call sites that keep an independent SQL
-    * formulation (MinHash fold, SimHash, band hashes, ADC, char/gram
-    * run stats, gram hashes, fingerprint, winnow, term counts,
-    * segments, postings, cosine, SRP, dequant, centroid, wire decode),
-    * between the kernel and that reference:
+    * formulation (MinHash signature, SimHash, band hashes, ADC,
+    * char/gram run stats, gram hashes, fingerprint, winnow, term
+    * counts, segments, postings, cosine, SRP, dequant, centroid, wire
+    * decode), between the kernel and that reference:
     * `spark.graft.kernels.enabled`, default true. Kernels never need
     * the session extension, so the conf is the only switch;
     * `KernelParitySpec` flips it to pin whole-query agreement between
@@ -108,135 +133,120 @@ object Llm {
           (a, j) -> a + element_at(ptab,
             j * $ks + cast(conv(hex(substring(code, j + 1, 1)), 16, 10) as int) + 1))""")
 
-  /** One representative (smallest doc_id) per exact-duplicate group:
-    * (key = text_hash, text). Tokenization normalizes exactly the way
-    * the grouping hash does (lower + trim + whitespace collapse), so
-    * every member of a group has the representative's shingle set. */
-  private def repsOf(m: DataFrame): DataFrame =
-    m.groupBy(col("text_hash"))
-      .agg(min(struct(col("doc_id"), col("text"))).as("r"))
-      .select(col("text_hash").as("key"), col("r.text").as("text"))
+  /** The 128-slot MinHash signature of a token array (>= 3 tokens) as
+    * struct(n = distinct-shingle count, sig), computed per row: every
+    * shingle of a key comes from its own token array, so no shuffle
+    * regroups shingles. `graft_minhash_sig` with kernels on; with
+    * kernels off the same arithmetic as a SQL expression, bit-equal
+    * (LlmSpec pins it on the corpus and edge fixtures; it is also the
+    * streaming leg's signature, where only per-row expressions run).
+    *
+    * Kirsch-Mitzenmacher double hashing: each distinct shingle hashes
+    * twice, h1/h2 = pmod(xxhash64(seed, s), 2^31), and slot i keeps
+    * min (h1 + i·h2) mod 2^31 — 64x fewer string hash evaluations than
+    * 128 seeded xxhash64 calls per shingle (the 31-bit range keeps
+    * max h1 + 127·h2 < 2^38 overflow-free; slot collisions are
+    * ~n_shingles/2^31 ≈ 1e-7 — no recall impact). The shingle-set
+    * size rides along with the signature, and then through the band
+    * join, so no separate size subquery rescans the corpus. */
+  private[graft] def minhashSig(spark: SparkSession, toks: Column): Column =
+    if (kernelOn(spark)) Kernels("graft_minhash_sig", toks)
+    else {
+      val m = lit(1L << 31)
+      val sh = shingleSet(toks)
+      val hashed = transform(sh, s =>
+        struct(pmod(xxhash64(lit(1), s), m).as("h1"), pmod(xxhash64(lit(2), s), m).as("h2")))
+      struct(size(sh).cast("long").as("n"),
+        aggregate(hashed, array_repeat(lit(Long.MaxValue), 128), (acc, h) =>
+          zip_with(acc, sequence(lit(0), lit(127)),
+            (a, i) => least(a, pmod(h("h1") + i * h("h2"), m)))).as("sig"))
+    }
 
-  /** MinHash-LSH candidate pairs between exact-duplicate GROUPS
-    * (keys are the groups' text_hashes): 128 Kirsch-Mitzenmacher
-    * hashes → per-group signature → 32 bands × 4 rows → band-bucket
-    * self-join. Exposed for scale tests: a corpus with a large
-    * exact-duplicate cluster must produce O(groups) candidates, not
-    * O(cluster²) — the cluster collapses to one representative before
-    * any quadratic step. Routes through the kernel signature build
-    * (the shipping path), or the explode+fold with kernels disabled
-    * — candidate sets are identical (signatures bit-equal,
-    * LlmSpec pins it). */
-  private[graft] def nearDupCandidates(docs: DataFrame): DataFrame = {
-    val m = normalized(docs)
-    if (kernelOn(docs.sparkSession))
-      bandJoin(repsOf(m)
-        .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("key"), Kernels("graft_minhash_sig", col("toks")).as("s"))
-        .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig")))
-    else candidatesOf(shingles(repsOf(m)))
-  }
-
-  /** Band join shared by both signature builds: 32 bands × 4 rows
-    * per signature, groups sharing any (band, band_hash) bucket
-    * become candidate pairs. Input: (key, n, sig[128]). */
-  /** (key, n, band, band_hash) — each signature exploded into its 32
-    * band hashes, the unit both band joins bucket on. Band hashes via
-    * the native kernel when available — the HOF lambda evaluates
-    * interpretively (Slice.nullSafeEval was a top frame in warm
-    * llm_curate profiles); the kernel is one primitive loop,
-    * bit-equal to the fold (pinned in LlmSpec). */
-  /** The band-hash expression over a `sig` column — kernel with
-    * kernels on, seed-chained xxhash64 fold otherwise (bit-equal;
-    * LlmSpec). Shared with the streaming suspects leg. */
+  /** The band-hash expression over a `sig` column: 32 bands × 4 rows,
+    * kernel with kernels on, seed-chained xxhash64 fold otherwise
+    * (bit-equal; LlmSpec). The HOF lambda evaluates interpretively
+    * (Slice.nullSafeEval was a top frame in warm llm_curate profiles);
+    * the kernel is one primitive loop. Shared with the streaming
+    * suspects leg. */
   private[graft] def bandHashesExpr(spark: SparkSession) =
     if (kernelOn(spark)) Kernels("graft_band_hashes", col("sig"))
     else expr("transform(sequence(0, 31), b -> xxhash64(b, slice(sig, b*4 + 1, 4)))")
 
+  /** (key, n, band, band_hash) — each signature of a (key, n, sig)
+    * frame exploded into its 32 band hashes, the unit the band join
+    * buckets on. */
   private[graft] def bandsOf(sigs: DataFrame): DataFrame =
     sigs.select(col("key"), col("n"), posexplode(bandHashesExpr(sigs.sparkSession)))
       .toDF("key", "n", "band", "band_hash")
 
-  private def bandJoin(sigs: DataFrame): DataFrame = {
-    val bands = bandsOf(sigs)
-    bands.as("x").join(bands.as("y"),
+  /** The band join: group pairs (hash_a from `x`, hash_b from `y`)
+    * sharing any (band, band_hash) bucket and passing `keyPred` on
+    * their keys — candidate pairs, each once, with their shingle-set
+    * sizes (n_a, n_b). Never all-pairs: a jaccard-0.9 pair is missed
+    * with probability (1-0.9⁴)³² ≈ 3e-7. A corpus's self join passes
+    * `_ < _`; an index probe passes `_ =!= _`, so its candidates are
+    * (index group, batch group) only — index×index and batch×batch
+    * collisions never materialize, and a group on both sides never
+    * pairs with itself (the exact-hash path covers that at 1.0). */
+  private[graft] def bandPairs(x: DataFrame, y: DataFrame,
+      keyPred: (Column, Column) => Column): DataFrame =
+    bandsOf(x).as("x").join(bandsOf(y).as("y"),
         col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
-          col("x.key") < col("y.key"))
+          keyPred(col("x.key"), col("y.key")))
       .select(col("x.key").as("hash_a"), col("x.n").as("n_a"),
               col("y.key").as("hash_b"), col("y.n").as("n_b"))
       .distinct()
+
+  /** Exact-Jaccard verification of band candidates (hash_a, n_a,
+    * hash_b, n_b) against the groups' token arrays: the candidate
+    * keys' shingles are exploded — restricted to CANDIDATE keys by a
+    * semi-join first, since on a web corpus candidates are a tiny
+    * fraction of groups — each pair is expanded by side a's shingles
+    * and hash-joined against side b's set, and pairs at >= 0.8 are
+    * kept: (hash_a, hash_b, jac). The candidates and the candidate
+    * shingles each feed two joins, so both are materialized once.
+    * `groups` are the (key, toks) sides the candidates came from; a
+    * group on both sides of a probe carries identical toks (same
+    * normalized text), so the key-dedup after their union is
+    * value-stable. */
+  private def verifiedPairs(cand: DataFrame, groups: DataFrame*): DataFrame = {
+    val c = cand.ckptLocal()
+    val candKeys = c.select(col("hash_a").as("key"))
+      .unionByName(c.select(col("hash_b").as("key"))).distinct()
+    val toks = groups.map(_.select(col("key"), col("toks"))).reduce(_ unionByName _)
+      .join(candKeys, Seq("key"), "left_semi")
+    val sh = shinglesOf(if (groups.size > 1) toks.dropDuplicates("key") else toks).ckptLocal()
+    c.join(sh.select(col("key").as("hash_a"), col("shingle")), Seq("hash_a"))
+      .join(sh.select(col("key").as("hash_b"), col("shingle")), Seq("hash_b", "shingle"))
+      .groupBy(col("hash_a"), col("hash_b"), col("n_a"), col("n_b"))
+      .agg(count(lit(1)).as("n_common"))
+      .withColumn("jac", col("n_common") / (col("n_a") + col("n_b") - col("n_common")))
+      .filter(col("jac") >= 0.8)
+      .select(col("hash_a"), col("hash_b"), col("jac"))
   }
 
-  /** Two-sided band join for the incremental near-dup: the EXISTING
-    * corpus's bands are the build/index side, the new batch's bands
-    * probe it — candidate pairs are (old group, new group) only;
-    * old×old and new×new bucket collisions never materialize. A
-    * group holding docs from both eras appears on both sides (keyed
-    * inequality keeps it from pairing with itself — the exact-dup
-    * path covers that at jaccard 1.0). */
-  private def bandJoinCross(index: DataFrame, probe: DataFrame): DataFrame =
-    bandsOf(index).as("x").join(bandsOf(probe).as("y"),
-        col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
-          col("x.key") =!= col("y.key"))
-      .select(col("x.key").as("hash_a"), col("x.n").as("n_a"),
-              col("y.key").as("hash_b"), col("y.n").as("n_b"))
-      .distinct()
-
-  private def candidatesOf(sh: DataFrame): DataFrame =
-    bandJoin(sigsOfShingles(sh))
-
-  /** The no-kernel signature build: (key, n, sig[128]) per shingled
-    * group, bit-equal to the `graft_minhash_sig` kernel (LlmSpec's
-    * standing pin) — shared by `candidatesOf` and the incremental
-    * near-dup's fallback path.
-    *
-    * Kirsch-Mitzenmacher double hashing: two string hashes expand to
-    * 128 independent-enough functions (h1 + i*h2) mod 2^31 — 64x
-    * fewer string hash evaluations than 128 seeded xxhash64 calls
-    * per shingle (the 31-bit range keeps the mixing arithmetic,
-    * max h1 + 127*h2 < 2^38, overflow-free; slot collisions are
-    * ~n_shingles/2^31 ≈ 1e-7 — no recall impact).
-    *
-    * The per-group elementwise-min fold is a typed
-    * groupByKey.mapGroups — one primitive JVM loop per group. Both
-    * "idiomatic" alternatives lose badly at this width, measured by
-    * round-3 stack sampling: a udaf Aggregator pays interpreted
-    * SafeProjection buffer serde per merge row, and 128 separate
-    * min() aggregates make every task rebuild a megabyte of
-    * generated-source string just to look up the codegen cache.
-    * The raw (key, h1, h2) shuffle this costs is also SMALLER than
-    * the partial-agg alternative's buffers whenever groups are
-    * shingle-sized (128-slot partials ≈ 1 KB/group/partition vs
-    * ~50 B/shingle row). Shingle-set size rides along with the
-    * signature, and then through the band join — candidate pairs
-    * carry (n_a, n_b) so no separate size subquery rescans the
-    * corpus. */
-  private def sigsOfShingles(sh: DataFrame): DataFrame = {
-    val M = 1L << 31
-    import sh.sparkSession.implicits._
-    sh.select(col("key"),
-        pmod(xxhash64(lit(1), col("shingle")), lit(M)).as("h1"),
-        pmod(xxhash64(lit(2), col("shingle")), lit(M)).as("h2"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1).mapGroups { (k, rows) =>
-        val buf = Array.fill(128)(Long.MaxValue)
-        val mask = M - 1 // 2^31 is a power of two and h1,h2,i are non-
-        // negative, so `& mask` IS `% M` — without the integer
-        // divide, which round-4 stack sampling measured as THE hot
-        // instruction of the whole dedup pipeline
-        var n = 0L
-        rows.foreach { case (_, h1, h2) =>
-          var i = 0
-          while (i < 128) {
-            val v = (h1 + i * h2) & mask
-            if (v < buf(i)) buf(i) = v
-            i += 1
-          }
-          n += 1
-        }
-        (k, n, buf)
-      }.toDF("key", "n", "sig")
+  /** Group pairs → doc pairs, the pair-list contract of `dedupNear` and
+    * `simhashPairs`: any two members of one group in `groups` (key)
+    * pair at `intra` (identical normalized text), and each group pair
+    * (hash_a, hash_b, measure) pairs every member of one group with
+    * every member of the other, inheriting the measure. Output:
+    * (doc_a < doc_b, measure). The expansion is output-sized — the
+    * irreducible cost of the pair-list contract (a production dedup
+    * run would stop at the group table, i.e. `dedupExact`, or at
+    * `dedupClusters`). */
+  private def docPairs(members: DataFrame, groups: DataFrame, pairs: DataFrame,
+      intra: Column): DataFrame = {
+    val measure = pairs.columns(2)
+    val vm = members.join(groups.select(col("key").as("text_hash")), Seq("text_hash"))
+    val within = vm.as("m1").join(vm.as("m2"),
+        col("m1.text_hash") === col("m2.text_hash") && col("m1.doc_id") < col("m2.doc_id"))
+      .select(col("m1.doc_id").as("doc_a"), col("m2.doc_id").as("doc_b"), intra.as(measure))
+    val cross = pairs
+      .join(members.select(col("text_hash").as("hash_a"), col("doc_id").as("ida")), Seq("hash_a"))
+      .join(members.select(col("text_hash").as("hash_b"), col("doc_id").as("idb")), Seq("hash_b"))
+      .select(least(col("ida"), col("idb")).as("doc_a"),
+              greatest(col("ida"), col("idb")).as("doc_b"), col(measure))
+    within.unionByName(cross)
   }
 
   /** Near-dup detection via MinHash + LSH banding, exact-verified,
@@ -245,122 +255,48 @@ object Llm {
     *     (the `dedupExact` hash) BEFORE any pairwise step — web-scale
     *     corpora have huge exact-dup clusters, and without this the
     *     band buckets go quadratic in cluster size;
-    *  1. 128 seeded hashes per shingle (xxhash64, F10), elementwise-
-    *     min MinHash signature per representative (mergeable
-    *     Aggregator);
+    *  1. one 128-slot MinHash signature per representative
+    *     (`minhashSig`);
     *  2. 32 bands × 4 rows: groups sharing any band-hash become
-    *     candidate pairs (bucket join — never all-pairs; a jaccard-
-    *     0.9 pair is missed with probability (1-0.9⁴)³² ≈ 3e-7);
+    *     candidate pairs (`bandPairs`);
     *  3. candidates are verified with the exact shingle Jaccard at
     *     the representative level and kept at >= 0.8;
-    *  4. group pairs expand back to doc pairs: intra-group pairs are
-    *     jaccard 1.0 by construction (identical normalized text ⇒
-    *     identical shingle set), cross-group pairs inherit their
-    *     representatives' jaccard. The expansion is output-sized —
-    *     the irreducible cost of the pair-list contract (a production
-    *     dedup run would stop at the group table, i.e. `dedupExact`).
+    *  4. group pairs expand back to doc pairs (`docPairs`):
+    *     intra-group pairs are jaccard 1.0 by construction (identical
+    *     normalized text ⇒ identical shingle set), cross-group pairs
+    *     inherit their representatives' jaccard.
     * The oracle computes the same >= 0.8 pairs all-pairs in DuckDB —
     * feasible at sf0.01, which is exactly why the banded plan is the
     * one that ships: at 100 TB only step 3's candidate set is
     * quadratic, and it is tiny.
     *
-    * NOTE: CONSTRUCTING this DataFrame runs Spark jobs (eager
-    * `localCheckpoint` of the scan→md5→group→shingle working set) —
-    * see `dedupNearOn`'s scale note for why the materialization is
-    * eager. Callers composing plans lazily should expect
-    * construction-time jobs here (also true of `simhash` /
-    * `simhashPairs`). */
+    * NOTE: CONSTRUCTING this DataFrame runs Spark jobs (the eager
+    * `localCheckpoint`s of `exactGroups`, the index groups, the
+    * candidates and the candidate shingles). Callers composing plans
+    * lazily should expect construction-time jobs here (also true of
+    * `simhash` / `simhashPairs`). */
   def dedupNear(spark: SparkSession, dir: String): DataFrame =
     dedupNearOn(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
 
-  /** The shared trunk of the near-dup pipeline: (members,
-    * shingledGroups, repPairs) where members = (doc_id, text_hash),
-    * shingledGroups = the keys with >= 3 tokens (the near-dup
-    * domain), and repPairs = verified >= 0.8 Jaccard pairs BETWEEN
-    * exact-duplicate groups (hash_a, hash_b, jac). `dedupNearOn`
-    * expands these to the doc-pair contract; `dedupClustersOn` runs
-    * connected components over them without ever materializing the
-    * quadratic expansion.
-    *
-    * Two signature builds, candidate-identical (LlmSpec pins the
-    * signatures bit-equal): with kernels on, `graft_minhash_sig`
-    * computes each representative's 128-slot signature in one pass
-    * over its own token array — every shingle of a key comes from ONE
-    * row, so the fallback's explode → shuffle → regroup
-    * (`candidatesOf`) moves the whole working set just to reassemble
-    * rows the scan already had together. The kernel path also
-    * restricts the verify-side shingle explode to CANDIDATE keys
-    * (a semi-join first): non-candidate shingles never matched the
-    * verify joins anyway, and on a web corpus candidates are a tiny
-    * fraction of groups. */
-  private def nearDupCore(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    // `m` and the tokenized reps are the pipeline's working set,
-    // materialized once with an eager localCheckpoint — without it,
-    // every broadcast exchange re-executes the scan→md5→group
-    // subtree as its own (often single-task) job, which round-3
-    // profiling measured at 10-60 s of pure recomputation at sf0.1.
-    // Checkpointed blocks are dropped by the ContextCleaner when the
-    // frames are GC'd (no session-level cache leak); a cluster run
-    // at 100 TB would use a reliable checkpoint for the same stage
-    // cut.
-    val spark = docs.sparkSession
-    val m = normalized(widened(docs)).ckptLocal()
-    val members = m.select(col("doc_id"), col("text_hash"))
-    if (kernelOn(spark)) {
-      val repToks = repsOf(m)
-        .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .ckptLocal()
-      val sigs = repToks
-        .select(col("key"), Kernels("graft_minhash_sig", col("toks")).as("s"))
-        .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig"))
-      val cand = bandJoin(sigs).ckptLocal()
-      val candKeys = cand.select(col("hash_a").as("key"))
-        .unionByName(cand.select(col("hash_b").as("key"))).distinct()
-      val shCand = repToks.join(candKeys, Seq("key"), "left_semi")
-        .select(col("key"), explode(array_distinct(expr(
-          "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")))
-          .as("shingle"))
-        .ckptLocal()
-      (members, repToks.select(col("key")), verified(cand, shCand))
-    } else {
-      val sh = shingles(repsOf(m))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .ckptLocal()
-      (members, sh.select(col("key")).distinct(), verified(candidatesOf(sh), sh))
-    }
+  /** The shared trunk of the near-dup pipeline: the corpus's own
+    * `NearDupIndex` and the verified >= 0.8 Jaccard pairs BETWEEN its
+    * exact-duplicate groups (hash_a < hash_b, jac) — the index
+    * probing itself. `dedupNearOn` expands these to the doc-pair
+    * contract; `dedupClustersOn` runs connected components over them
+    * without ever materializing the quadratic expansion. */
+  private def nearDupCore(docs: DataFrame): (NearDupIndex, DataFrame) = {
+    val idx = buildNearDupIndex(docs)
+    (idx, verifiedPairs(bandPairs(idx.groups, idx.groups, _ < _), idx.groups))
   }
 
-  /** Exact-Jaccard verification of candidate group pairs against the
-    * shingle table: expand each pair by side a's shingles, hash-join
-    * against side b's set, keep >= 0.8. */
-  private def verified(cand: DataFrame, sh: DataFrame): DataFrame =
-    cand
-      .join(sh.select(col("key").as("hash_a"), col("shingle")), Seq("hash_a"))
-      .join(sh.select(col("key").as("hash_b"), col("shingle")), Seq("hash_b", "shingle"))
-      .groupBy(col("hash_a"), col("hash_b"), col("n_a"), col("n_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .withColumn("jac", col("n_common") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jac") >= 0.8)
-      .select(col("hash_a"), col("hash_b"), col("jac"))
-
   private[graft] def dedupNearOn(docs: DataFrame): DataFrame = {
-    val (members, shingled, repPairs) = nearDupCore(docs)
-    // groups that produced shingles (>= 3 tokens) — shorter docs are
-    // outside the near-dup domain, both here and in the oracle
-    val vm = members.join(shingled.select(col("key").as("text_hash")), Seq("text_hash"))
-    val intra = vm.as("m1").join(vm.as("m2"),
-        col("m1.text_hash") === col("m2.text_hash") && col("m1.doc_id") < col("m2.doc_id"))
-      .select(col("m1.doc_id").as("doc_a"), col("m2.doc_id").as("doc_b"),
-              lit(1.0).as("jaccard"))
-    val cross = repPairs
-      .join(members.select(col("text_hash").as("hash_a"), col("doc_id").as("ida")), Seq("hash_a"))
-      .join(members.select(col("text_hash").as("hash_b"), col("doc_id").as("idb")), Seq("hash_b"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"),
-              round(col("jac"), 6).as("jaccard"))
-    intra.unionByName(cross)
+    val (idx, repPairs) = nearDupCore(docs)
+    // only the index's groups (>= 3 tokens) pair within themselves —
+    // shorter docs are outside the near-dup domain, here and in the
+    // oracle
+    docPairs(idx.members, idx.groups,
+      repPairs.select(col("hash_a"), col("hash_b"), round(col("jac"), 6).as("jaccard")),
+      lit(1.0))
   }
 
   /** Dedup CLUSTERS — the production output of a dedup run: every
@@ -383,7 +319,8 @@ object Llm {
     dedupClustersOn(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
 
   private[graft] def dedupClustersOn(docs: DataFrame): DataFrame = {
-    val (members, _, repPairs) = nearDupCore(docs)
+    val (idx, repPairs) = nearDupCore(docs)
+    val members = idx.members
     // group node id = min doc_id of the group, so the component min
     // IS the min doc_id over every doc in the cluster
     val gid = members.groupBy(col("text_hash")).agg(min(col("doc_id")).as("gid"))
@@ -430,10 +367,14 @@ object Llm {
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame =
     dedupIncrementalOn(Tables.documents(spark, dir))
 
+  /** (doc_id, src_n = `srcEra`, text_hash) of a documents frame — the
+    * hashes-only working set of both incremental exact-dedup twins. */
+  private def eraHashes(docs: DataFrame): DataFrame =
+    Tables.widened(docs).select(col("doc_id"), srcEra.as("src_n"),
+      textHash(col("text")).as("text_hash"))
+
   private[graft] def dedupIncrementalOn(docs: DataFrame): DataFrame = {
-    val d = widened(docs).select(col("doc_id"),
-      expr("cast(substring(source, 4, 10) as int)").as("src_n"),
-      md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))).as("text_hash"))
+    val d = eraHashes(docs)
     val existing = d.filter(col("src_n") < 10).select(col("text_hash")).distinct()
     d.filter(col("src_n") >= 10)
       .join(existing, Seq("text_hash"), "left_anti")
@@ -472,12 +413,9 @@ object Llm {
     // (the distinct-count pre-pass, the bloom build, both branches of
     // the maybe-dup union, and the confirm join's build side) — each
     // would otherwise re-run the scan + per-row md5 as its own job
-    // (§8 doctrine, the nearDupCore pattern). The frame is (id, int,
+    // (§8 doctrine, the `exactGroups` pattern). The frame is (id, int,
     // 128-bit hash) — never the text column.
-    val d = widened(docs).select(col("doc_id"),
-      expr("cast(substring(source, 4, 10) as int)").as("src_n"),
-      md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))).as("text_hash"))
-      .ckptLocal()
+    val d = eraHashes(docs).ckptLocal()
     val existing = d.filter(col("src_n") < 10).select(col("text_hash")).distinct()
     // size from a sketch pre-pass (undersizing only raises the fpp,
     // which only costs extra confirm-join rows, never correctness)
@@ -516,15 +454,15 @@ object Llm {
     * table is the BUILD/INDEX side — at a real cadence it is
     * precomputed once per corpus generation, bucketed on
     * (band, band_hash), and only the new batch computes signatures
-    * and probes it (`bandJoinCross`). Old×old and new×new bucket
-    * collisions never become candidate pairs, so per-crawl work is
-    * probe-sized: O(new-batch bands + matched buckets), never a
-    * full-corpus re-band. Candidates are exact-verified on shingles
-    * (same `verified` trunk, restricted to candidate keys); same-
-    * text cross-era pairs short-circuit the sketch entirely at
-    * jaccard 1.0 through the exact-hash path. The DuckDB oracle
-    * computes the cross-corpus pairs all-pairs — feasible at sf0.01,
-    * which is exactly why the indexed plan is the one that ships. */
+    * and probes it (`bandPairs` with `=!=`). Old×old and new×new
+    * bucket collisions never become candidate pairs, so per-crawl
+    * work is probe-sized: O(new-batch bands + matched buckets), never
+    * a full-corpus re-band. Candidates are exact-verified on shingles
+    * (the same `verifiedPairs` trunk as `dedupNear`); same-text
+    * cross-era pairs short-circuit the sketch entirely at jaccard 1.0
+    * through the exact-hash path. The DuckDB oracle computes the
+    * cross-corpus pairs all-pairs — feasible at sf0.01, which is
+    * exactly why the indexed plan is the one that ships. */
   def dedupNearIncremental(spark: SparkSession, dir: String): DataFrame =
     dedupNearIncrementalOn(Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("source")))
@@ -535,7 +473,7 @@ object Llm {
     *    `dedupExact`'s text_hash, n = shingle-set size, sig = 128-slot
     *    MinHash signature, toks = the representative's token array
     *    (for exact verification of candidates; any member yields the
-    *    same array — `repsOf`'s invariant);
+    *    same array — `repToks`'s invariant);
     *  - `members`: (text_hash, doc_id) for every corpus document.
     * Both are plain columnar frames: write to parquet, read back,
     * probe — LlmSpec round-trips exactly that. At 100 TB `groups`
@@ -543,50 +481,26 @@ object Llm {
     * pre-materialized sorted on (band, band_hash). */
   final case class NearDupIndex(groups: DataFrame, members: DataFrame)
 
-  private def shinglesOfToks(repToks: DataFrame): DataFrame =
-    repToks.select(col("key"), explode(array_distinct(expr(
-      "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")))
-      .as("shingle"))
-
-  /** Per-ROW MinHash signature as a pure Catalyst expression over a
-    * distinct-shingle ARRAY column named `sh` — the streaming-safe
-    * fallback for `graft_minhash_sig` (the typed mapGroups fold in
-    * `sigsOfShingles` is a batch operator). Identical KM arithmetic
-    * — h1/h2 = pmod(xxhash64(seed, s), 2^31), slot i carries
-    * min (h1 + i·h2) mod 2^31 — so the signature is bit-equal to
-    * both batch builds (StreamingSpec pins it through the suspects
-    * leg under kernels-off). Interpreted HOF evaluation: fine as a
-    * correctness fallback, the kernel is the shipping path. */
-  private[graft] val rowSigSql: String =
-    "transform(sequence(0, 127), i -> aggregate(sh, bigint(9223372036854775807), " +
-      "(acc, s) -> least(acc, pmod(pmod(xxhash64(1, s), bigint(2147483648)) + " +
-      "i * pmod(xxhash64(2, s), bigint(2147483648)), bigint(2147483648)))))"
-
   /** Build the near-dup index of a corpus (`doc_id`, `text`): one
-    * scan → exact-dup collapse → one signature per shingled group
-    * (>= 3 tokens — the near-dup domain), kernel or KM-fold
-    * fallback (bit-equal signatures either way). */
+    * scan → exact-dup collapse → one `minhashSig` per shingled group
+    * (>= 3 tokens — the near-dup domain). `groups` is materialized
+    * once: the band join reads it on both sides and the candidate
+    * shingles read its token arrays. */
   def buildNearDupIndex(docs: DataFrame): NearDupIndex = {
     val spark = docs.sparkSession
-    val m = normalized(widened(docs)).ckptLocal()
-    val repToks = repsOf(m)
-      .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= 3)
+    val m = exactGroups(docs)
+    val groups = repToks(m, 3)
       .repartition(spark.sparkContext.defaultParallelism)
+      .select(col("key"), minhashSig(spark, col("toks")).as("s"), col("toks"))
+      .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig"), col("toks"))
       .ckptLocal()
-    val groups =
-      if (kernelOn(spark))
-        repToks.select(col("key"), Kernels("graft_minhash_sig", col("toks")).as("s"), col("toks"))
-          .select(col("key"), col("s.n").as("n"), col("s.sig").as("sig"), col("toks"))
-      else
-        sigsOfShingles(shinglesOfToks(repToks)).join(repToks, Seq("key"))
-    NearDupIndex(groups.ckptLocal(), m.select(col("text_hash"), col("doc_id")))
+    NearDupIndex(groups, m.select(col("text_hash"), col("doc_id")))
   }
 
   /** Probe a corpus index with a new batch: the index's bands are the
-    * build side, the batch's bands probe them (`bandJoinCross` — no
-    * index×index or batch×batch candidates ever materialize), exact
-    * Jaccard verification over candidate keys only, plus the
+    * build side, the batch's bands probe them (`bandPairs` with `=!=`
+    * — no index×index or batch×batch candidates ever materialize),
+    * exact Jaccard verification over candidate keys only, plus the
     * exact-hash short-circuit for same-text cross-era pairs. Output:
     * (new_doc_id, old_doc_id, jaccard) at >= 0.8. */
   def probeNearDupIndex(index: NearDupIndex, newDocs: DataFrame): DataFrame =
@@ -594,18 +508,9 @@ object Llm {
 
   private def probeNearDupIndexBuilt(index: NearDupIndex,
       probe: NearDupIndex): DataFrame = {
-    val cand = bandJoinCross(index.groups, probe.groups).ckptLocal()
-    val candKeys = cand.select(col("hash_a").as("key"))
-      .unionByName(cand.select(col("hash_b").as("key"))).distinct()
-    // a group on BOTH sides carries identical toks (same normalized
-    // text), so the key-dedup after the union is value-stable
-    val shCand = shinglesOfToks(
-      index.groups.select(col("key"), col("toks"))
-        .unionByName(probe.groups.select(col("key"), col("toks")))
-        .join(candKeys, Seq("key"), "left_semi")
-        .dropDuplicates("key"))
-      .ckptLocal()
-    val pairs = verified(cand, shCand) // (hash_a = index group, hash_b = batch group, jac)
+    // (hash_a = index group, hash_b = batch group, jac)
+    val pairs = verifiedPairs(bandPairs(index.groups, probe.groups, _ =!= _),
+      index.groups, probe.groups)
     val oldDocs = index.members.select(col("text_hash"), col("doc_id").as("old_doc_id"))
     val newD = probe.members.select(col("text_hash"), col("doc_id").as("new_doc_id"))
     // cross-group near pairs expand to (index member × batch member)
@@ -627,8 +532,7 @@ object Llm {
     // the index from storage instead of rebuilding — see
     // NearDupIndex). The era split costs a second scan here, which
     // is the point: build and probe are independent pipelines.
-    val d = docs.select(col("doc_id"), col("text"),
-      (expr("cast(substring(source, 4, 10) as int)") < 10).as("is_old"))
+    val d = docs.select(col("doc_id"), col("text"), (srcEra < 10).as("is_old"))
     // the two era indexes are INDEPENDENT pipelines until the band
     // probe, so their checkpoint chains materialize CONCURRENTLY
     // (Ckpt.par2 — the curate pattern, r21): the batch index's scan
@@ -646,12 +550,7 @@ object Llm {
     * Identical normalized text ⇒ identical bigram multiset ⇒
     * identical signature, so the sketch is built once per distinct
     * text. The feature hash is md5-derived so the DuckDB oracle
-    * reproduces it bit-for-bit; the signature is built as 60 plain
-    * per-bit vote `sum()`s — a codegen'd HashAggregate with a
-    * primitive buffer, bit-identical to SketchAggs.SimHashAgg (which
-    * remains the mergeable-Aggregator form of the same sketch; the
-    * SQL formulation won the hot path for the same serde reason as
-    * candidatesOf). Returns (key = text_hash, simhash). */
+    * reproduces it bit-for-bit. Returns (key = text_hash, simhash). */
   private def simhashSigs(m: DataFrame): DataFrame = {
     // per-representative sketch: with kernels on the whole
     // bigram → md5-60-bit → ±1 votes → sign fold runs as one native
@@ -659,9 +558,7 @@ object Llm {
     // ONE representative row, same argument as graft_minhash_sig);
     // the explode + 60-column sum aggregation is the SQL reference
     // formulation. LlmSpec pins the signatures bit-equal.
-    val toks = repsOf(m)
-      .select(col("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= 2)
+    val toks = repToks(m, 2)
     if (kernelOn(m.sparkSession))
       toks.select(col("key"), Kernels("graft_simhash", col("toks")).as("simhash"))
     else simhashSigsHof(toks)
@@ -669,7 +566,9 @@ object Llm {
 
   /** The explode + 60-vote aggregation formulation — the SQL
     * reference (kernels disabled) and the drift-pin twin of
-    * `graft_simhash`. Takes the tokenized reps (`key`, `toks`). */
+    * `graft_simhash`. The signature is built as 60 plain per-bit vote
+    * `sum()`s — a codegen'd HashAggregate with a primitive buffer.
+    * Takes the tokenized reps (`key`, `toks`). */
   private[graft] def simhashSigsHof(toks: DataFrame): DataFrame = {
     val bigrams = toks
       .select(col("key"), explode(expr(
@@ -688,10 +587,8 @@ object Llm {
     * not documents (web corpora are duplicate-heavy). Construction
     * runs eager localCheckpoint jobs (see `dedupNear`'s note). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    // m is read by both the member projection and the sig build —
-    // one eager materialization (see dedupNearOn's scale note)
-    val m = normalized(widened(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
-      .ckptLocal()
+    // m is read by both the member projection and the sig build
+    val m = exactGroups(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
     m.select(col("doc_id"), col("text_hash"))
       .join(simhashSigs(m), col("text_hash") === col("key"))
       .select(col("doc_id"), col("simhash"))
@@ -705,16 +602,13 @@ object Llm {
     * candidates only. Like `dedupNear`, exact duplicates collapse to
     * one representative before the band join (they would otherwise
     * share every band bucket and make it quadratic in cluster size);
-    * group pairs expand back to doc pairs at the end (intra-group =
-    * Hamming 0 by construction). Construction runs eager
-    * localCheckpoint jobs (see `dedupNear`'s note). */
+    * group pairs expand back to doc pairs at the end (`docPairs`,
+    * intra-group = Hamming 0 by construction). Construction runs
+    * eager localCheckpoint jobs (see `dedupNear`'s note). */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    // m (scan+md5) and sig (bigram explode + md5 + SimHashAgg) feed
-    // four consumers each (band join sides, member expansion, group
-    // filter) — materialize both once (see dedupNearOn's scale note)
-    val m = normalized(widened(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
-      .ckptLocal()
-    val members = m.select(col("doc_id"), col("text_hash"))
+    // m (scan+md5) and sig feed four consumers each (band join sides,
+    // member expansion, group filter) — materialize both once
+    val m = exactGroups(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
     val sig = simhashSigs(m).ckptLocal()
     val bands = sig.select(col("key"), col("simhash"), posexplode(expr(
       "transform(sequence(0, 3), b -> (simhash >> (b*15)) & 32767)")))
@@ -726,18 +620,7 @@ object Llm {
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
       .distinct()
       .filter(col("hamming") <= 3)
-    val sigGroups = sig.select(col("key").as("text_hash"))
-    val vm = members.join(sigGroups, Seq("text_hash"))
-    val intra = vm.as("m1").join(vm.as("m2"),
-        col("m1.text_hash") === col("m2.text_hash") && col("m1.doc_id") < col("m2.doc_id"))
-      .select(col("m1.doc_id").as("doc_a"), col("m2.doc_id").as("doc_b"),
-        lit(0L).as("hamming"))
-    val cross = repPairs
-      .join(members.select(col("text_hash").as("hash_a"), col("doc_id").as("ida")), Seq("hash_a"))
-      .join(members.select(col("text_hash").as("hash_b"), col("doc_id").as("idb")), Seq("hash_b"))
-      .select(least(col("ida"), col("idb")).as("doc_a"),
-              greatest(col("ida"), col("idb")).as("doc_b"), col("hamming"))
-    intra.unionByName(cross)
+    docPairs(m.select(col("doc_id"), col("text_hash")), sig, repPairs, lit(0L))
   }
 
   // ---- text analysis -----------------------------------------------------
@@ -1004,9 +887,8 @@ object Llm {
     mixWeightedOn(Tables.documents(spark, dir))
 
   private[graft] def mixWeightedOn(docs: DataFrame): DataFrame =
-    widened(docs)
-      .select(col("doc_id"), col("source"),
-        expr("cast(substring(source, 4, 10) as int)").as("src_n"),
+    Tables.widened(docs)
+      .select(col("doc_id"), col("source"), srcEra.as("src_n"),
         (conv(substring(md5(concat(lit("mix:"), col("doc_id").cast("string"))), 1, 14), 16, 10)
           .cast("long") % 100000L).as("u"))
       .filter(col("u") < (col("src_n") % 5 + 1).cast("long") * 20000L)
@@ -1035,7 +917,7 @@ object Llm {
           .groupBy(col("term").as("token"))
           .agg(sum(col("cnt")).as("corpus_freq"), count(lit(1)).as("doc_freq"))
       else
-        widened(docs)
+        Tables.widened(docs)
           .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
           .groupBy(col("token"))
           .agg(count(lit(1)).as("corpus_freq"), count_distinct(col("doc_id")).as("doc_freq"))
@@ -1072,7 +954,7 @@ object Llm {
     import spark.implicits._
     val depth = 4
     val width = 8192
-    val toks = widened(docs)
+    val toks = Tables.widened(docs)
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
       .as[String]
     val nPart = math.max(1, toks.rdd.getNumPartitions)
@@ -1169,7 +1051,7 @@ object Llm {
   private[graft] val piiIpRe = "(?<![0-9])[0-9]++\\.[0-9]++\\.[0-9]++\\.[0-9]++"
 
   private[graft] def piiScrubOn(docs: DataFrame): DataFrame =
-    widened(docs)
+    Tables.widened(docs)
       .withColumn("txt", concat(
         col("text"),
         when(col("doc_id") % 7 === 0,
@@ -1444,7 +1326,7 @@ object Llm {
     // widened: a single-file documents scan is one partition, which
     // would serialize the kernelized stats scan into one task
     // (measured 1.07 s of the warm query's wall at sf0.1)
-    val tokenized = withSplit(widened(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
+    val tokenized = withSplit(Tables.widened(Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
       .select(col("doc_id"), col("split"), split(lower(trim(col("text"))), "\\s+").as("toks"))
     val stats =
       if (kernelOn(spark))
@@ -1500,9 +1382,10 @@ object Llm {
     * the same shingle Jaccard on candidates only). One shingle
     * self-join; sizes ride separate tiny aggregates. */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingles(Tables.documents(spark, dir)
+    val sh = shinglesOf(Tables.documents(spark, dir)
       .filter(col("doc_id") < 50)
-      .select(col("doc_id").as("key"), col("text")))
+      .select(col("doc_id").as("key"), split(lower(trim(col("text"))), "\\s+").as("toks"))
+      .filter(size(col("toks")) >= 3))
     val sizes = sh.groupBy(col("key")).agg(count(lit(1)).as("n"))
     sh.as("a").join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.key") < col("b.key"))
@@ -2124,7 +2007,7 @@ object Llm {
         Kernels("graft_segments", col("t"), lit(10))
       else expr(
         "transform(sequence(0, cast(floor((size(t)-1)/10) as int)), i -> array_join(slice(t, i*10+1, 10), ' '))")
-    val segs = widened(docs)
+    val segs = Tables.widened(docs)
       .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
       .select(col("doc_id"), posexplode(segsExpr))
       .toDF("doc_id", "seg", "seg_text")
@@ -2190,7 +2073,7 @@ object Llm {
              round(sum(col("cnt") * -log(col("c") / col("n").cast("double"))) / sum(col("cnt")), 6)
                .as("avg_neg_logp"))
     } else {
-      val toks = widened(docs)
+      val toks = Tables.widened(docs)
         .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
         .ckptLocal()
       val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -2271,7 +2154,7 @@ object Llm {
     // the postings the aggregation already collects (distinct doc_ids
     // of a term's postings ARE its document frequency), so the query
     // plans a single partial-agg + one term-keyed exchange.
-    widened(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
+    Tables.widened(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), posexplode(split(lower(trim(col("text"))), "\\s+")))
       .toDF("doc_id", "pos", "term")
       .groupBy(col("term"))
@@ -2958,7 +2841,7 @@ object Llm {
     * term-level statistic: tf-idf's tf frame and the unigram LM's
     * working set both start here. */
   private[graft] def termCountsOf(docs: DataFrame): DataFrame =
-    widened(docs)
+    Tables.widened(docs)
       .select(col("doc_id"),
         explode(Kernels("graft_term_counts", split(lower(trim(col("text"))), "\\s+"))).as("tc"))
       .select(col("doc_id"), col("tc.term").as("term"), col("tc.cnt").as("cnt"))
@@ -2979,7 +2862,7 @@ object Llm {
           .select(col("doc_id"), col("term"), col("cnt").as("tf"))
           .ckptLocal()
       else {
-        val toks = widened(docs)
+        val toks = Tables.widened(docs)
           .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
         toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
           .ckptLocal()

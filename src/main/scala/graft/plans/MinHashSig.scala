@@ -104,14 +104,14 @@ object BandHashes {
   * ONE representative row (exact-dup groups collapse first), so
   * regrouping the exploded shingles was a full-working-set shuffle
   * plus typed-encoder serde that reassembled what the scan already
-  * had in hand. Cites Llm.candidatesOf's fold (the SQL
-  * reference) — bit parity is guaranteed by construction:
+  * had in hand. Its SQL reference is `Llm.minhashSig`'s kernels-off
+  * expression — bit parity is guaranteed by construction:
   *   h1 = pmod(xxhash64(1, shingle), 2^31)
   *      = XXH64.hashUTF8String(shingle, XXH64.hashInt(1, 42)) & mask
   * (pmod by a power of two IS the two's-complement mask), and the
   * shingle bytes come from the same UTF8String.concatWs the SQL
-  * `concat_ws` evaluates. LlmSpec pins kernel-vs-fold equality on
-  * the real corpus.
+  * `concat_ws` evaluates. LlmSpec pins kernel-vs-SQL equality on
+  * the real corpus and edge fixtures.
   */
 object MinHashSig {
   val Slots = 128

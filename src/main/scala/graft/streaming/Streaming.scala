@@ -405,7 +405,7 @@ object Streaming {
     * hash, applied per micro-batch instead of per corpus rebuild. */
   def dedupDocs(docs: DataFrame, lateness: String = "1 hour"): DataFrame =
     docs
-      .withColumn("text_hash", md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
+      .withColumn("text_hash", graft.operators.Llm.textHash(col("text")))
       .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark("text_hash")
 
@@ -504,9 +504,8 @@ object Streaming {
     * a document stream against a STATIC corpus index
     * (`Llm.NearDupIndex` — built batch-side, typically reloaded from
     * parquet). Each incoming doc's 128-slot MinHash signature is
-    * computed per row (the `graft_minhash_sig` kernel, or the
-    * bit-equal pure-expression fallback `Llm.rowSigSql` — the batch
-    * fold isn't available on streams), its 32 band hashes
+    * computed per row (`Llm.minhashSig`, the batch index's own
+    * signature column), its 32 band hashes
     * stream-static equi-join the index's band table, and each
     * distinct (doc, indexed-group) collision emits once
     * (`dropDuplicatesWithinWatermark` — state is the collision set
@@ -514,7 +513,7 @@ object Streaming {
     *
     * Contract — SUSPECTS, not verdicts: this is the crawl-frontier
     * split every production dedup runs. Candidate generation is
-    * exactly the batch `bandJoinCross` arithmetic, so the suspect set
+    * exactly the batch `bandPairs` arithmetic, so the suspect set
     * EQUALS the batch probe's candidate set over the same admitted
     * docs (StreamingSpec pins set-equality, kernels on AND off);
     * false positives at the banding collision rate pass on to the
@@ -536,17 +535,12 @@ object Streaming {
       lateness: String = "1 hour"): DataFrame = {
     import graft.operators.Llm
     val spark = docs.sparkSession
-    val withSh = docs
+    val sig = docs
       .withWatermark("ts", lateness)
       .select(col("doc_id"), col("ts"),
         split(lower(trim(col("text"))), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
-      .withColumn("sh", array_distinct(expr(
-        "transform(sequence(0, size(toks)-3), i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")))
-    val sig =
-      if (Llm.kernelOn(spark))
-        withSh.withColumn("sig", Kernels("graft_minhash_sig", col("toks")).getField("sig"))
-      else withSh.withColumn("sig", expr(Llm.rowSigSql))
+      .withColumn("sig", Llm.minhashSig(spark, col("toks")).getField("sig"))
     val streamBands = sig
       .select(col("doc_id"), col("ts"), posexplode(Llm.bandHashesExpr(spark)))
       .toDF("doc_id", "ts", "band", "band_hash")

@@ -78,8 +78,8 @@ class KernelParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
 
   // Minimal declared-query set covering every kernelOn site:
-  // nearDupCandidates + bandJoin (dedup_near), nearDupCore
-  // (dedup_clusters), curate's stats + band path (curate),
+  // minhashSig + bandHashesExpr (dedup_near, dedup_clusters,
+  // dedup_near_incr), curate's stats + band path (curate),
   // simhashSigs (simhash_pairs), vocabTopK, charEntropy,
   // repetitionOn, contaminationOn, dedupEmbed's pair cosine,
   // fingerprintOn, cosineSim (knn_exact), annLsh's SRP buckets,
@@ -271,21 +271,5 @@ class KernelParitySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val off = withKernels(on = false)(s => canon(Llm.embedNearDup(s, dir, 0.25)))
     assert(on.nonEmpty, "no pairs at threshold 0.25 — lower it so the pin bites")
     assert(off == on, "embedNearDup diverges between kernel and fallback paths")
-  }
-
-  // The OTHER session escape hatch: deserialized checkpoint blocks
-  // (spark.graft.ckpt.deserialized=true) must be storage-level-only —
-  // identical results through the checkpoint-heaviest declared
-  // queries (curate crosses Ckpt.par2 + multiple ckptLocal barriers;
-  // dedup_near crosses the working-set checkpoint).
-  test("deserialized-checkpoint escape hatch changes storage, not results") {
-    for (q <- Seq("llm_curate", "llm_dedup_near")) {
-      val ser   = canon(SparkEntry.queries(q)(spark, dir))
-      val deser = TestSpark.withConf("spark.graft.ckpt.deserialized" -> "true") {
-        canon(SparkEntry.queries(q)(spark, dir))
-      }
-      assert(ser.nonEmpty, s"$q returned no rows — parity would be vacuous")
-      assert(deser == ser, s"$q diverges under deserialized checkpoint blocks")
-    }
   }
 }

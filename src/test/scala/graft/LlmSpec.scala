@@ -40,7 +40,8 @@ class LlmSpec extends AnyFunSuite {
     val docs = (cluster ++ uniques).toDF("doc_id", "text")
     // candidate generation runs on exact-dup GROUP representatives:
     // 11 groups -> at most C(11,2) = 55 candidates, never 19900+.
-    val cand = Llm.nearDupCandidates(docs).collect()
+    val groups = Llm.buildNearDupIndex(docs).groups
+    val cand = Llm.bandPairs(groups, groups, _ < _).collect()
     assert(cand.length <= 55, s"candidate pairs ${cand.length} — duplicate cluster not collapsed")
     // the declared output still carries every intra-cluster pair at
     // jaccard 1.0 (the oracle's all-pairs contract), and nothing else
@@ -925,6 +926,83 @@ class LlmSpec extends AnyFunSuite {
       assert(kernel(k)._1 == n, s"distinct-shingle count drifted for $k")
       assert(kernel(k)._2 == sig, s"signature drifted for $k")
     }
+  }
+
+  test("minhashSig with kernels off equals graft_minhash_sig row for row (corpus and edge fixtures)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // the one signature column of the near-dup family: its kernels-off
+    // SQL form must give the kernel's (n, sig) on every row, or the
+    // band buckets, and so the candidate sets, differ between sessions
+    val edge = Seq(
+      (-1L, "one two three"),                            // exactly 3 tokens: one shingle
+      (-2L, "a b c a b c a b c a b c"),                  // repeated shingles
+      (-3L, "Über straße café naïve 東京 タワー ∑ 😀 ok"), // non-ASCII tokens
+      (-4L, "x  y\t\tz \n\n w   x y z"),                // runs of whitespace
+      (-5L, "\t a leading tab before the tokens"))
+      .toDF("doc_id", "text")
+    val toks = graft.sources.Tables.documents(spark, TestSpark.sf).select($"doc_id", $"text")
+      .unionByName(edge)
+      .select($"doc_id", split(lower(trim($"text")), "\\s+").as("toks"))
+      .filter(size($"toks") >= 3)
+    def sigs(on: Boolean) = TestSpark.withConf("spark.graft.kernels.enabled" -> on.toString) {
+      val df = toks.select($"doc_id", Llm.minhashSig(spark, $"toks").as("s"))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("graft_minhash_sig") == on, s"kernels on = $on, plan:\n$plan")
+      df.select($"doc_id", $"s.n", $"s.sig").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getSeq[Long](2)))).toMap
+    }
+    val (on, off) = (sigs(on = true), sigs(on = false))
+    assert(on.size == toks.count() && on.size > 5, s"${on.size} signatures")
+    assert(on(-1L)._1 == 1L && on(-2L)._1 == 3L, s"distinct-shingle counts: ${on(-1L)._1}, ${on(-2L)._1}")
+    assert(off.keySet == on.keySet)
+    for ((id, (n, sig)) <- on) {
+      assert(off(id)._1 == n, s"distinct-shingle count drifted for doc $id")
+      assert(off(id)._2 == sig, s"signature drifted for doc $id")
+    }
+  }
+
+  /** Spark jobs started while `body` runs. A marker job before and
+    * after brackets them: the listener bus delivers events in order,
+    * so once the closing marker is seen every job of `body` was. */
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.test.jobMarker"
+    val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        Option(job.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(m) => markers.put(m)
+          case None    => started.incrementAndGet()
+        }
+    }
+    def mark(m: String): Unit = {
+      sc.setLocalProperty(key, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(markers.poll(60, java.util.concurrent.TimeUnit.SECONDS) == m, s"marker $m not seen")
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("begin")
+      started.set(0)
+      body
+      mark("end")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("near-dup queries run at most their recorded Spark job counts at sf0.001") {
+    // counted work, not time: each eager checkpoint, AQE query stage
+    // and broadcast is a job. The counts are those of the two-trunk
+    // formulation (separate build and probe trunks, the exploded
+    // signature fold); the one build/probe trunk must not add a job
+    val recorded = Seq("llm_dedup_near" -> 21, "llm_dedup_clusters" -> 33, "llm_dedup_near_incr" -> 29)
+    val jobs = recorded.map { case (q, _) =>
+      q -> jobsOf(SparkEntry.queries(q)(spark, TestSpark.sf).collect()) }
+    assert(jobs.zip(recorded).forall { case ((_, n), (_, bound)) => n <= bound },
+      s"Spark jobs per query: ${jobs.mkString(", ")}; recorded: ${recorded.mkString(", ")}")
   }
 
   test("band-hash kernel is bit-equal to the xxhash64+slice fold on real signatures") {

@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.Encoders
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.SketchAggs
-import graft.operators.{Ecosystem, Sketches}
+import graft.operators.{Ecosystem, Llm, Sketches}
 
 /** Property tests for the sketch family (SURVEY §5.2): Bloom
   * no-false-negatives + bounded FPR, MinHash Jaccard error bound,
@@ -27,17 +26,17 @@ class SketchesSpec extends AnyFunSuite {
   }
 
   test("minhash signature jaccard estimates true jaccard within Chernoff bound") {
-    // |A|=800, |B|=800, |A∩B|=600 -> true J = 600/1000 = 0.6
-    val a = (0 until 800).map(i => ("a", s"k_$i"))
-    val b = (200 until 1000).map(i => ("b", s"k_$i"))
-    val df = (a ++ b).toDF("grp", "key")
-      .withColumn("hashes",
-        expr("transform(sequence(0, 127), i -> xxhash64(i, key) & 9223372036854775807)"))
-    val sigUdaf = udaf(new SketchAggs.MinHashAgg(128), ExpressionEncoder[Array[Long]]())
-    val sigs = df.groupBy("grp").agg(sigUdaf(col("hashes")).as("sig"))
-      .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    val est = sigs("a").zip(sigs("b")).count { case (x, y) => x == y } / 128.0
-    assert(math.abs(est - 0.6) < 0.15, s"estimate $est should be within 0.15 of 0.6")
+    // the near-dup family's signature column, kernel and SQL forms:
+    // token runs t0..t801 and t200..t1001 have 800 word-3-gram
+    // shingles each, 600 shared -> true J = 600/1000 = 0.6
+    def run(from: Int) = (from until from + 802).map(i => s"t$i")
+    val df = Seq(("a", run(0)), ("b", run(200))).toDF("grp", "toks")
+    for (on <- Seq(true, false)) TestSpark.withConf("spark.graft.kernels.enabled" -> on.toString) {
+      val sigs = df.select(col("grp"), Llm.minhashSig(spark, col("toks")).getField("sig"))
+        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
+      val est = sigs("a").zip(sigs("b")).count { case (x, y) => x == y } / 128.0
+      assert(math.abs(est - 0.6) < 0.15, s"kernels on = $on: estimate $est should be within 0.15 of 0.6")
+    }
   }
 
   test("declared minhash query tracks the exact jaccard twin") {
@@ -129,25 +128,6 @@ class SketchesSpec extends AnyFunSuite {
     val golden = Map("click" -> 19689L, "error" -> 20332L, "purchase" -> 19839L,
                      "signup" -> 20330L, "view" -> 20046L)
     assert(raw == golden, s"raw-regime goldens drifted: $raw vs $golden")
-  }
-
-  test("SimHashAgg matches the SQL vote formulation bit-for-bit") {
-    // simhashSigs builds signatures as 60 codegen'd vote sums; the
-    // mergeable Aggregator is the streaming/custom-agg form of the
-    // same sketch — they must never drift.
-    val hvs = (0 until 5000).map(i => ("d" + (i % 7), (i * 2654435761L) ^ (i << 13)))
-    val df = hvs.toDF("k", "hv")
-    val simUdaf = udaf(new SketchAggs.SimHashAgg(60), Encoders.scalaLong)
-    val viaAgg = df.groupBy("k").agg(simUdaf(col("hv")).as("sig"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val votes = (0 until 60).map(b =>
-      sum(shiftright(col("hv"), b).bitwiseAND(lit(1L)) * 2 - 1).as(s"v_$b"))
-    val viaSql = df.groupBy("k").agg(votes.head, votes.tail: _*)
-      .select(col("k"),
-        (0 until 60).map(b => when(col(s"v_$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _).as("sig"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(viaAgg == viaSql)
   }
 
   test("true DGIM stays within the 50% error bound with logarithmic memory") {

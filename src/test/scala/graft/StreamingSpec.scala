@@ -822,7 +822,13 @@ class StreamingSpec extends AnyFunSuite {
     // the map side folds each partition's rows to one record per
     // (event_type, second); the replay must still be bit-identical to
     // feeding every row, with windows that expire between batches,
-    // seconds shared by many rows and blocks split at random
+    // seconds shared by many rows and blocks split at random.
+    // Each logical batch must reach the query as ONE micro-batch: its
+    // blocks are added while the query is stopped, then the query
+    // restarts from the same checkpoint (its DGIM state carries over)
+    // and runs what is available, so no trigger can fire between two
+    // blocks and split the batch
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
     implicit val sqlCtx = spark.sqlContext
@@ -831,52 +837,61 @@ class StreamingSpec extends AnyFunSuite {
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       val ms = MemoryStream[Event]
-      val q = Streaming.dgimCounts(ms.toDF(), windowSec = windowSec)
-        .writeStream.format("memory").queryName(s"dgim_diff_$seed")
-        .outputMode("update").start()
+      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_dgim_diff_$seed").toString
+      val got = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, Long, Long, Int)]())
+      val batchIds = new java.util.concurrent.ConcurrentSkipListSet[java.lang.Long]()
+      def start() = Streaming.dgimCounts(ms.toDF(), windowSec = windowSec).toDF()
+        .writeStream.outputMode("update").option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batchIds.add(batchId)
+          batch.select("event_type", "last_ts", "est_errors_1h", "n_buckets").collect()
+            .foreach(r => got.add((r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))))
+        }.start()
       val replay = scala.collection.mutable.Map.empty[String, Dgim]
       val expected = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Int)]
       var id = 0L
       var nPairs, nRows = 0L
-      try {
-        for (b <- 0 until 5) {
-          // rows in 30 s of each 80 s step against a 120 s window:
-          // seconds repeat, and each batch expires buckets the
-          // previous ones left
-          val batch = Seq.fill(100 + rnd.nextInt(200)) {
-            id += 1
-            val typ = Seq("error", "error", "click", "view")(rnd.nextInt(4))
-            Event(id, new Timestamp(t0 + (b * 80L + rnd.nextInt(30)) * 1000L + rnd.nextInt(1000)),
-              id % 7, typ, 1.0)
-          }
-          val cuts = (Seq.fill(rnd.nextInt(4))(rnd.nextInt(batch.size)) :+ 0 :+ batch.size).distinct.sorted
-          val blocks = cuts.zip(cuts.tail).map { case (a, z) => batch.slice(a, z) }
-          blocks.foreach(blk => ms.addData(blk: _*))
-          q.processAllAvailable()
-
-          val shuffled = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
-            .executedPlan.collect { case x: ShuffleExchangeExec => x.metrics("shuffleRecordsWritten").value }
-          val pairs = blocks.map(_.map(e => (e.event_type, e.ts.getTime / 1000)).distinct.size).sum
-          assert(shuffled.size == 1, s"expected one exchange, got ${shuffled.size}")
-          assert(shuffled.head <= pairs,
-            s"seed $seed batch $b: shuffled ${shuffled.head} records, $pairs (type, second) pairs")
-          nPairs += pairs
-          nRows += batch.size
-
-          batch.groupBy(_.event_type).foreach { case (typ, rows) =>
-            val d = replay.getOrElseUpdate(typ, new Dgim(windowSec))
-            val secs = rows.map(_.ts.getTime / 1000).sorted
-            secs.foreach(t => d.addBit(t, if (typ == "error") 1 else 0))
-            expected += ((typ, secs.last, d.estimate(secs.last), d.bucketCount))
-          }
+      for (b <- 0 until 5) {
+        // rows in 30 s of each 80 s step against a 120 s window:
+        // seconds repeat, and each batch expires buckets the
+        // previous ones left
+        val batch = Seq.fill(100 + rnd.nextInt(200)) {
+          id += 1
+          val typ = Seq("error", "error", "click", "view")(rnd.nextInt(4))
+          Event(id, new Timestamp(t0 + (b * 80L + rnd.nextInt(30)) * 1000L + rnd.nextInt(1000)),
+            id % 7, typ, 1.0)
         }
-        val got = spark.sql(s"SELECT event_type, last_ts, est_errors_1h, n_buckets FROM dgim_diff_$seed")
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
-        assert(got.sorted == expected.toSeq.sorted, s"seed $seed: streaming DGIM diverged from the per-row replay")
-        assert(expected.exists(r => r._1 == "error" && r._3 > 0))
-        // the bound above is below one record per row only if seconds repeat
-        assert(nPairs < nRows, s"seed $seed: $nPairs (type, second) pairs in $nRows rows")
-      } finally q.stop()
+        val cuts = (Seq.fill(rnd.nextInt(4))(rnd.nextInt(batch.size)) :+ 0 :+ batch.size).distinct.sorted
+        val blocks = cuts.zip(cuts.tail).map { case (a, z) => batch.slice(a, z) }
+        blocks.foreach(blk => ms.addData(blk: _*))
+        val q = start()
+        val shuffled =
+          try {
+            q.processAllAvailable()
+            q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+              .executedPlan.collect { case x: ShuffleExchangeExec => x.metrics("shuffleRecordsWritten").value }
+          } finally q.stop()
+        val pairs = blocks.map(_.map(e => (e.event_type, e.ts.getTime / 1000)).distinct.size).sum
+        assert(shuffled.size == 1, s"expected one exchange, got ${shuffled.size}")
+        assert(shuffled.head <= pairs,
+          s"seed $seed batch $b: shuffled ${shuffled.head} records, $pairs (type, second) pairs")
+        nPairs += pairs
+        nRows += batch.size
+
+        batch.groupBy(_.event_type).foreach { case (typ, rows) =>
+          val d = replay.getOrElseUpdate(typ, new Dgim(windowSec))
+          val secs = rows.map(_.ts.getTime / 1000).sorted
+          secs.foreach(t => d.addBit(t, if (typ == "error") 1 else 0))
+          expected += ((typ, secs.last, d.estimate(secs.last), d.bucketCount))
+        }
+      }
+      val all = got.toArray(Array.empty[(String, Long, Long, Int)]).toSeq
+      assert(batchIds.size == 5 && batchIds.last == 4L,
+        s"seed $seed: expected micro-batches 0-4, one per logical batch, ran $batchIds")
+      assert(all.sorted == expected.toSeq.sorted, s"seed $seed: streaming DGIM diverged from the per-row replay")
+      assert(expected.exists(r => r._1 == "error" && r._3 > 0))
+      // the bound above is below one record per row only if seconds repeat
+      assert(nPairs < nRows, s"seed $seed: $nPairs (type, second) pairs in $nRows rows")
     }
   }
 
@@ -1162,8 +1177,8 @@ class StreamingSpec extends AnyFunSuite {
     // the near-dup family's online leg: a doc stream probed against a
     // static corpus index. The suspect set must EQUAL the batch band
     // arithmetic's candidate set over the same docs (same sigs, same
-    // band hashes) — including under the no-kernel per-row expression
-    // fallback, which pins rowSigSql bit-equal to the kernel build.
+    // band hashes) — including under kernels off, where the signature
+    // is `Llm.minhashSig`'s SQL form.
     import graft.operators.Llm
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
@@ -1208,7 +1223,7 @@ class StreamingSpec extends AnyFunSuite {
       "kernel-path streaming suspects diverged from batch candidates")
     withConf("spark.graft.kernels.enabled" -> "false") {
       assert(runStream("ndx_suspects_off") == expected,
-        "fallback rowSigSql suspects diverged — per-row sig not bit-equal")
+        "kernels-off suspects diverged — minhashSig SQL form not bit-equal")
     }
   }
 
