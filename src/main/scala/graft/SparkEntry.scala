@@ -33,16 +33,281 @@ object SparkEntry {
       family: String, entry: String, oracle: Option[String] = None,
       snapshot: Boolean = false)
 
+  // Oracle SQL fragments: each names a block of lines that two or more
+  // oracles share, so it is written once. An oracle interpolates them
+  // with `raw"""…"""`, so a backslash stays a backslash as in a plain
+  // literal (and `$$` would be a literal `$`). A fragment's first line
+  // continues the line it is interpolated into; its later lines carry
+  // their own indentation, which `shift` deepens where an oracle nests
+  // the block further. ORACLES.md shows every oracle's assembled text.
+  // These vals must precede `registry`, which reads them.
+
+  /** `block` with every line after its first indented `n` more columns. */
+  private def shift(block: String, n: Int): String = block.replace("\n", "\n" + " " * n)
+
+  /** q1/q5/q11: sum of the discounted extended price, in decimals. */
+  private val sumDiscPrice = """CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+                  * (CAST(1.00 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)"""
+
+  /** q13/q15/q17/q18: each click (probe `p`) as-of joined to a
+    * purchase (ref `r`) of the same user; the oracle appends the
+    * timestamp comparison. */
+  private val clickCols = """SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
+                round(p.value, 4) AS click_value,"""
+  private val clicksAsofPurchases = """FROM (SELECT event_id, user_id, ts, value FROM events
+               WHERE event_type = 'click') p
+         ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
+                         WHERE event_type = 'purchase') r"""
+  /** q13/q15: the latest purchase at or before each click. */
+  private val asofPrior = raw"""$clickCols
+                epoch_us(r.ts) AS asof_ts_us, round(r.value, 4) AS asof_value
+         $clicksAsofPurchases
+           ON p.user_id = r.user_id AND p.ts >= r.ts"""
+
+  /** eco_sessions/q16: per-user gap sessions (a gap > 30 min opens
+    * one) over floored epoch seconds, rows `s(user_id, sec, session)`. */
+  private val sessionRows = """e AS (
+           SELECT user_id, event_id, date_trunc('microseconds', ts) AS mts,
+                  CAST(floor(epoch(ts)) AS BIGINT) AS sec
+           FROM events),
+         g AS (
+           SELECT user_id, sec, mts, event_id,
+             CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800
+                  THEN 1 ELSE 0 END AS gap
+           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY mts, event_id)),
+         s AS (
+           SELECT user_id, sec,
+             sum(gap) OVER (PARTITION BY user_id ORDER BY mts, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
+           FROM g)"""
+
+  /** The habitat graph: `r` ranks each habitat's events so `rn = 1`
+    * is its first; `habitatPairs` adds its coordinates `n` and the
+    * haversine distance `d` of every habitat pair, the expression tree
+    * mirrored verbatim from Geo.haversineKm so both engines evaluate
+    * the identical double formula. */
+  private val firstPerHabitat = """r AS (SELECT event_type, value, user_id,
+             row_number() OVER (PARTITION BY event_type
+               ORDER BY date_trunc('microseconds', ts), event_id) AS rn
+           FROM events)"""
+  private val habitatPairs = raw"""$firstPerHabitat,
+         n AS (SELECT event_type AS habitat,
+                 round(value % 180.0 - 90.0, 6) AS lat,
+                 CAST(user_id % 360 - 180 AS DOUBLE) AS lon
+               FROM r WHERE rn = 1),
+         d AS (SELECT a.habitat AS h1, b.habitat AS h2,
+                 2 * 6371.0 * asin(sqrt(pow(sin(radians(b.lat - a.lat) / 2), 2) +
+                   cos(radians(a.lat)) * cos(radians(b.lat)) *
+                   pow(sin(radians(b.lon - a.lon) / 2), 2))) AS dist
+               FROM n a JOIN n b ON a.habitat < b.habitat)"""
+
+  /** The Markov chain's observed steps: each event and its user's next. */
+  private val markovPairs = """pairs AS (
+           SELECT event_type AS cur,
+             lead(event_type) OVER (PARTITION BY user_id
+               ORDER BY date_trunc('microseconds', ts), event_id) AS nxt
+           FROM events)"""
+
+  /** Lower-cased whitespace tokens `t` of each document. */
+  private val docTokens = """toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
+                       FROM documents)"""
+
+  /** The same tokens as an array, for positional slicing. */
+  private val tokenArrays = """toks AS (
+           SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
+         )"""
+
+  /** Over `toks`: the distinct word 3-gram shingles `sh`, each doc's
+    * shingle count `sizes` and every doc pair's shared count `i`. */
+  private val shingleOverlap = """sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
+                FROM toks, LATERAL (SELECT unnest(range(1, len(t)-1)) AS i)
+                WHERE len(t) >= 3),
+         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+         i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
+               FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)"""
+
+  /** llm_dedup_clusters/llm_curate: the transitive closure of the
+    * exact-or-near duplicate relation (a recursive CTE). Near edges are
+    * llm_dedup_near's all-pairs >= 0.8 Jaccard, exact edges join a doc
+    * to the min doc of its normalized-text group; `lab` labels each
+    * doc with the min doc_id it reaches. */
+  private val dupClusters = raw"""toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
+                  FROM documents),
+         $shingleOverlap,
+         near AS (SELECT doc_a AS a, doc_b AS b
+                  FROM i JOIN sizes sa ON sa.doc_id = doc_a
+                         JOIN sizes sb ON sb.doc_id = doc_b
+                  WHERE n_common / (sa.n + sb.n - n_common) >= 0.8),
+         g AS (SELECT doc_id,
+                 min(doc_id) OVER (PARTITION BY
+                   md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))) AS gmin
+               FROM documents),
+         ex AS (SELECT gmin AS a, doc_id AS b FROM g WHERE doc_id <> gmin),
+         e0 AS (SELECT a, b FROM near UNION SELECT a, b FROM ex),
+         edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
+         reach(d, r) AS (
+           SELECT doc_id, doc_id FROM documents
+           UNION
+           SELECT reach.d, e.b FROM reach JOIN edges e ON e.a = reach.r),
+         lab AS (SELECT d AS doc_id, min(r) AS cluster_id FROM reach GROUP BY d)"""
+
+  /** llm_simhash/llm_simhash_pairs: each doc's 60 SimHash `bits`, one
+    * vote per word bigram hashed to the first 15 hex digits of md5. */
+  private val simhashBits = raw"""$docTokens,
+         big AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g
+                 FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i)
+                 WHERE len(t) >= 2),
+         h AS (SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::BIGINT AS hv FROM big),
+         bits AS (SELECT doc_id, b,
+                    CASE WHEN sum(((hv >> b) & 1) * 2 - 1) > 0
+                         THEN 1::BIGINT ELSE 0::BIGINT END AS bit
+                  FROM h, (SELECT unnest(range(60)) AS b) GROUP BY doc_id, b)"""
+
+  /** Each doc's text lower-cased, trimmed and whitespace-collapsed. */
+  private val normText = """d AS (SELECT doc_id,
+             regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+           FROM documents)"""
+
+  /** The winnowed fingerprint set `sel(doc_id, h)` (k=8 chars, w=16
+    * positions): the selection key packs the 36-bit gram hash with the
+    * complemented 24-bit position, so min(key) is (min hash,
+    * rightmost); a position is selected iff SOME window ending at or
+    * after it chose its key, i.e. the max of the following w mins
+    * equals the key (each wmin <= key of every position its window
+    * contains, so exists == max). Gram hash = llm_fingerprint's md5
+    * trick. */
+  private val winnowSel = raw"""$normText,
+         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
+                 substr(t, CAST(i AS INTEGER), 8) AS gg
+               FROM d, LATERAL (SELECT unnest(range(1, least(len(t) - 6, 16777216))) AS i)
+               WHERE len(t) >= 23),
+         h AS (SELECT doc_id, pos, ('0x' || substr(md5(gg), 1, 14))::BIGINT AS h FROM g),
+         k AS (SELECT doc_id, pos, h,
+                 (h % 68719476736) * 16777216 + (16777215 - pos) AS key FROM h),
+         w AS (SELECT doc_id, pos, h, key,
+                 CASE WHEN pos >= 16 THEN min(key) OVER (PARTITION BY doc_id
+                   ORDER BY pos ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) END AS wmin
+               FROM k),
+         s AS (SELECT doc_id, h, key,
+                 max(wmin) OVER (PARTITION BY doc_id
+                   ORDER BY pos ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS m
+               FROM w),
+         sel AS (SELECT DISTINCT doc_id, h FROM s WHERE m = key)"""
+
+  /** llm_dedup_incremental/llm_dedup_bloom: the new batch (src10..19)
+    * deduped against the existing corpus (src0..9) and within itself,
+    * keeping the min doc_id per survivor. */
+  private val newBatchSurvivors = """WITH d AS (SELECT doc_id, CAST(substr(source, 4, 10) AS INT) AS src_n,
+             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS text_hash
+           FROM documents)
+         SELECT text_hash, min(doc_id) AS keep_doc_id,
+           CAST(count(*) AS BIGINT) AS n_dups_in_batch
+         FROM d WHERE src_n >= 10
+           AND text_hash NOT IN (SELECT text_hash FROM d WHERE src_n < 10)
+         GROUP BY 1"""
+
+  /** llm_bpe_tokenize/llm_chunk_bpe: the seed BPE model's tokens of the
+    * synthesized sample text, a closed form of doc_id: `bpeSample` is
+    * each doc's case and repeat count, `bpeTokens` the token list
+    * `toks` (the tail of a CTE over `p`). */
+  private val bpeSample = """p AS (SELECT doc_id, doc_id % 4 AS bpe_case, doc_id % 5 + 1 AS k
+                    FROM documents WHERE text IS NOT NULL)"""
+  private val bpeTokens = """CASE bpe_case
+                        WHEN 0 THEN [CASE WHEN i=0 THEN 'the' ELSE ' the' END FOR i IN range(k)]
+                        WHEN 1 THEN flatten([[CASE WHEN i=0 THEN 'data' ELSE ' data' END, ' z', 'q'] FOR i IN range(k)])
+                        WHEN 2 THEN flatten([[CASE WHEN i=0 THEN 'the' ELSE ' the' END, 'data'] FOR i IN range(k)])
+                        ELSE list_concat(['the',' data',' model',' train'], flatten([[' z','q'] FOR i IN range(k)]))
+                      END AS toks
+                    FROM p)"""
+
+  /** llm_split/llm_curate: each doc's fold from its salted md5 prefix. */
+  private val splitFold = """SELECT doc_id,
+           CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
+         FROM (SELECT doc_id,
+                 ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT % 100 AS b
+               FROM documents)"""
+
+  /** llm_html_extract/llm_crawl_extract: the synthesized page's visible
+    * text, the h1's 'Doc & <id>' plus the whitespace-collapsed text. */
+  private val pageText = """concat('Doc & ', doc_id,
+                  CASE WHEN regexp_matches(text, '\S')
+                       THEN concat(' ', trim(regexp_replace(text, '\s+', ' ', 'g')))
+                       ELSE '' END) AS extracted_text"""
+
+  /** llm_url_frontier/llm_frontier_schedule: each doc's admitted
+    * frontier URL, its host and the host's RFC 9309 verdict. */
+  private val frontierRow = """CASE n_chars % 4
+             WHEN 0 THEN concat('http://', source, '.example.com/data/pub/', doc_id)
+             WHEN 1 THEN concat('https://', source, '.example.com/data/raw/', doc_id)
+             WHEN 2 THEN concat('http://', source, '.example.com/tmp/run', doc_id, '.log')
+             ELSE concat('http://', source, '.example.com/doc/~', doc_id, '?q=1')
+           END AS canonical_url,
+           concat(source, '.example.com') AS host,
+           CASE n_chars % 4
+             WHEN 0 THEN true
+             WHEN 1 THEN false
+             WHEN 2 THEN false
+             ELSE length(source) % 2 = 1
+           END AS allowed"""
+
+  /** The 101-host link graph: each page's three affine-map targets,
+    * the tail of the `d` CTE over documents with text. */
+  private val linkTargets = """(doc_id * 2 + 1) % 101 AS d1,
+                  (doc_id * 3 + 7) % 101 AS d2,
+                  (doc_id * 7 + 13) % 101 AS d3
+           FROM documents WHERE text IS NOT NULL)"""
+  /** Its distinct host edges `e` (self-loops dropped) and `nodes`. */
+  private val hostEdges = raw"""d AS (SELECT doc_id % 101 AS src,
+                  $linkTargets,
+         raw AS (SELECT src, unnest([d1, d2, d3]) AS dst FROM d),
+         e AS (SELECT DISTINCT src, dst FROM raw WHERE dst <> src),
+         nodes AS (SELECT src AS h FROM e UNION SELECT dst FROM e)"""
+
+  /** Steps `p`1..`p`k of the host-rank power iteration in fixed-point
+    * longs, step i from step i-1: r(v) = tp + (85 * sum(r(u) //
+    * outdeg(u))) // 100 over `nodes`, the constants `con`, the
+    * `edges` and the out-degrees `deg`. Written for CTE names at
+    * column 9; `shift` moves it. */
+  private def powerSteps(p: String, k: Int, nodes: String, con: String, edges: String,
+      deg: String): String =
+    (1 to k).map(i => raw"""$p$i AS (SELECT $nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
+                FROM $nodes CROSS JOIN $con
+                LEFT JOIN (SELECT $edges.dst AS h, sum(p.r // $deg.outdeg) AS inflow
+                           FROM $edges JOIN $p${i - 1} p ON p.h = $edges.src
+                                  JOIN $deg ON $deg.src = $edges.src
+                           GROUP BY 1) s ON s.h = $nodes.h)""").mkString(",\n         ")
+
+  /** llm_host_rank/llm_mix_ranked: five cold power steps from the
+    * uniform base = 1e12 // N, teleport tp = (15 * base) // 100. */
+  private val hostRanks = raw"""$hostEdges,
+         con AS (SELECT (1000000000000 // count(*)) AS base,
+                        (15 * (1000000000000 // count(*))) // 100 AS tp
+                 FROM nodes),
+         deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
+         p0 AS (SELECT h, base AS r FROM nodes CROSS JOIN con),
+         ${powerSteps("p", 5, "nodes", "con", "e", "deg")}"""
+
+  /** llm_mix_ranked: a rank's bucket around the uniform base. */
+  private val rankBucket = """CASE WHEN r IS NULL THEN 1
+                         WHEN r >= (11 * base) // 10 THEN 5
+                         WHEN r >= base THEN 4
+                         WHEN r >= (8 * base) // 10 THEN 3
+                         ELSE 2 END"""
+
+  /** llm_media_decode/llm_media_wav: one row per char of md5(text). */
+  private val md5CharRows = """FROM (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
+              LATERAL (SELECT unnest(range(1, 33)) AS i)
+         GROUP BY doc_id"""
+
   /** Every declared query, grouped by family in README order.
     * RegistryDocSpec pins the names unique. */
   val registry: Seq[Query] = Seq(
     Query("q1_pricing_summary", Relational.q1PricingSummary _,
       "relational", "Relational.q1PricingSummary",
-      Some("""SELECT l_returnflag, l_linestatus,
+      Some(raw"""SELECT l_returnflag, l_linestatus,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                  * (CAST(1.00 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+         $sumDiscPrice
            AS sum_disc_price,
          round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_qty,
          round(CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4) AS avg_disc,
@@ -65,9 +330,8 @@ object SparkEntry {
          ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""")),
     Query("q5_revenue_by_region", Relational.q5RevenueByRegion _,
       "relational", "Relational.q5RevenueByRegion",
-      Some("""SELECT r_name,
-         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                  * (CAST(1.00 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+      Some(raw"""SELECT r_name,
+         $sumDiscPrice
            AS revenue,
          count(*) AS n_items
          FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
@@ -102,9 +366,8 @@ object SparkEntry {
             INTERSECT SELECT l_linestatus AS status FROM lineitem) b""")),
     Query("q11_parts_by_brand", Relational.q11PartsByBrand _,
       "relational", "Relational.q11PartsByBrand",
-      Some("""SELECT p_brand, count(*) AS n_items,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1.00 AS DECIMAL(3,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
+      Some(raw"""SELECT p_brand, count(*) AS n_items,
+           ${shift(sumDiscPrice, 2)}
              AS revenue,
            round(CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / count(*), 4)
              AS avg_retail
@@ -122,14 +385,7 @@ object SparkEntry {
     // union+window as-of (Joins.asofJoin): largest ref ts <= probe ts
     // per user, nulls kept for probe rows with no prior ref
     Query("q13_asof_join", Joins.asofJoin _, "temporal-join", "Joins.asofJoin",
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-                round(p.value, 4) AS click_value,
-                epoch_us(r.ts) AS asof_ts_us, round(r.value, 4) AS asof_value
-         FROM (SELECT event_id, user_id, ts, value FROM events
-               WHERE event_type = 'click') p
-         ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
-                         WHERE event_type = 'purchase') r
-           ON p.user_id = r.user_id AND p.ts >= r.ts""")),
+      Some(asofPrior)),
     // point-in-interval range join against the same literal band
     // table the Spark side bin-explodes (Joins.bands)
     Query("q14_range_join", Joins.rangeJoinBands _, "temporal-join", "Joins.rangeJoinBands",
@@ -151,34 +407,14 @@ object SparkEntry {
     // by construction, JoinsSpec) — the oracle is the same ASOF join
     Query("q15_asof_stitched", (s, d) => Joins.asofJoinStitched(s, d, maxRowsPerKey = 8L),
       "temporal-join", "Joins.asofJoinStitched",
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-                round(p.value, 4) AS click_value,
-                epoch_us(r.ts) AS asof_ts_us, round(r.value, 4) AS asof_value
-         FROM (SELECT event_id, user_id, ts, value FROM events
-               WHERE event_type = 'click') p
-         ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
-                         WHERE event_type = 'purchase') r
-           ON p.user_id = r.user_id AND p.ts >= r.ts""")),
+      Some(asofPrior)),
     // interval × interval overlap: the session derivation is
     // eco_sessions' oracle verbatim; the window grid is one 90-min
     // window every 6 h from the first event. The theta join is the
     // oracle's prerogative — the engine runs the binned equi-join
     // with the first-overlap-bin dedupe guard instead (Joins.scala)
     Query("q16_interval_join", Joins.intervalJoin _, "temporal-join", "Joins.intervalJoin",
-      Some("""WITH e AS (
-           SELECT user_id, event_id, date_trunc('microseconds', ts) AS mts,
-                  CAST(floor(epoch(ts)) AS BIGINT) AS sec
-           FROM events),
-         g AS (
-           SELECT user_id, sec, mts, event_id,
-             CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800
-                  THEN 1 ELSE 0 END AS gap
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY mts, event_id)),
-         s AS (
-           SELECT user_id, sec,
-             sum(gap) OVER (PARTITION BY user_id ORDER BY mts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
-           FROM g),
+      Some(raw"""WITH $sessionRows,
          sess AS (
            SELECT user_id, min(sec) AS s_lo, max(sec) AS s_hi
            FROM s GROUP BY user_id, session),
@@ -194,13 +430,9 @@ object SparkEntry {
     // forward as-of: DuckDB's ASOF with the comparison flipped picks
     // the NEAREST ref at-or-after each probe
     Query("q17_asof_forward", Joins.asofJoinForward _, "temporal-join", "Joins.asofJoinForward",
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-                round(p.value, 4) AS click_value,
+      Some(raw"""$clickCols
                 epoch_us(r.ts) AS asof_ts_us, round(r.value, 4) AS asof_value
-         FROM (SELECT event_id, user_id, ts, value FROM events
-               WHERE event_type = 'click') p
-         ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
-                         WHERE event_type = 'purchase') r
+         $clicksAsofPurchases
            ON p.user_id = r.user_id AND p.ts <= r.ts""")),
     // tolerance-bounded as-of (pandas merge_asof tolerance): refs
     // staler than 6h are no match — both branches exercised at
@@ -211,16 +443,12 @@ object SparkEntry {
     // as a post-match guard, exactly how the engine applies it
     Query("q18_asof_tolerance", (s, d) => Joins.asofJoinTolerance(s, d),
       "temporal-join", "Joins.asofJoinTolerance",
-      Some("""SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
-                round(p.value, 4) AS click_value,
+      Some(raw"""$clickCols
                 CASE WHEN p.ts - r.ts <= INTERVAL 6 HOUR
                      THEN epoch_us(r.ts) END AS asof_ts_us,
                 CASE WHEN p.ts - r.ts <= INTERVAL 6 HOUR
                      THEN round(r.value, 4) END AS asof_value
-         FROM (SELECT event_id, user_id, ts, value FROM events
-               WHERE event_type = 'click') p
-         ASOF LEFT JOIN (SELECT user_id, ts, value FROM events
-                         WHERE event_type = 'purchase') r
+         $clicksAsofPurchases
            ON p.user_id = r.user_id AND p.ts >= r.ts""")),
     Query("eco_stats", Ecosystem.stats _, "eco-aggregate", "Ecosystem.stats",
       Some("""WITH g AS (SELECT event_type, count(*) AS n,
@@ -284,20 +512,7 @@ object SparkEntry {
     // so the floor is explicit); ordering at microsecond precision
     // like eco_transitions.
     Query("eco_sessions", Ecosystem.sessions _, "eco-aggregate", "Ecosystem.sessions",
-      Some("""WITH e AS (
-           SELECT user_id, event_id, date_trunc('microseconds', ts) AS mts,
-                  CAST(floor(epoch(ts)) AS BIGINT) AS sec
-           FROM events),
-         g AS (
-           SELECT user_id, sec, mts, event_id,
-             CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800
-                  THEN 1 ELSE 0 END AS gap
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY mts, event_id)),
-         s AS (
-           SELECT user_id, sec,
-             sum(gap) OVER (PARTITION BY user_id ORDER BY mts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session
-           FROM g)
+      Some(raw"""WITH $sessionRows
          SELECT user_id, CAST(session AS BIGINT) AS session,
                 min(sec) AS session_start, count(*) AS n_events,
                 max(sec) - min(sec) AS duration_s
@@ -372,41 +587,20 @@ object SparkEntry {
            round(n / CAST(sum(n) OVER (PARTITION BY cur_event) AS DOUBLE), 6) AS p
          FROM g""")),
     Query("eco_graph_nodes", Graph.graphNodes _, "graph", "Graph.graphNodes",
-      Some("""WITH r AS (SELECT event_type, value, user_id,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY date_trunc('microseconds', ts), event_id) AS rn
-           FROM events)
+      Some(raw"""WITH $firstPerHabitat
          SELECT event_type AS habitat,
            round(value % 180.0 - 90.0, 6) AS lat,
            CAST(user_id % 360 - 180 AS DOUBLE) AS lon
          FROM r WHERE rn = 1""")),
-    // Haversine expression tree mirrored verbatim from Geo.haversineKm
-    // so both engines evaluate the identical double formula.
     Query("eco_graph_edges", Graph.graphEdges _, "graph", "Graph.graphEdges",
-      Some("""WITH r AS (SELECT event_type, value, user_id,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY date_trunc('microseconds', ts), event_id) AS rn
-           FROM events),
-         n AS (SELECT event_type AS habitat,
-                 round(value % 180.0 - 90.0, 6) AS lat,
-                 CAST(user_id % 360 - 180 AS DOUBLE) AS lon
-               FROM r WHERE rn = 1),
-         d AS (SELECT a.habitat AS h1, b.habitat AS h2,
-                 2 * 6371.0 * asin(sqrt(pow(sin(radians(b.lat - a.lat) / 2), 2) +
-                   cos(radians(a.lat)) * cos(radians(b.lat)) *
-                   pow(sin(radians(b.lon - a.lon) / 2), 2))) AS dist
-               FROM n a JOIN n b ON a.habitat < b.habitat)
+      Some(raw"""WITH $habitatPairs
          SELECT h1, h2, round(dist, 4) AS dist_km FROM d WHERE dist <= 15000.0""")),
     Query("eco_walk_freq", Graph.walkFreq _, "graph", "Graph.walkFreq"),
     // Recurrence via recursive-CTE mutual reachability; period via the
     // same BFS-level cycle-GCD the Scala side uses
     // (MarkovChainAnalysis.py:119-146 semantics).
     Query("eco_markov_classes", Graph.markovClasses _, "graph", "Graph.markovClasses",
-      Some("""WITH RECURSIVE pairs AS (
-           SELECT event_type AS cur,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY date_trunc('microseconds', ts), event_id) AS nxt
-           FROM events),
+      Some(raw"""WITH RECURSIVE $markovPairs,
          e AS (SELECT DISTINCT cur, nxt FROM pairs WHERE nxt IS NOT NULL),
          states AS (SELECT DISTINCT s FROM
                       (SELECT cur AS s FROM e UNION ALL SELECT nxt AS s FROM e) u),
@@ -434,11 +628,7 @@ object SparkEntry {
                 ELSE 'recurrent-periodic' END AS dtmc_class
          FROM cls""")),
     Query("eco_transition_matrix", Graph.transitionMatrix _, "graph", "Graph.transitionMatrix",
-      Some("""WITH pairs AS (
-           SELECT event_type AS cur,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY date_trunc('microseconds', ts), event_id) AS nxt
-           FROM events),
+      Some(raw"""WITH $markovPairs,
          g AS (SELECT cur, nxt, count(*) AS n FROM pairs WHERE nxt IS NOT NULL GROUP BY 1, 2),
          t AS (SELECT cur, nxt,
                  round(n / CAST(sum(n) OVER (PARTITION BY cur) AS DOUBLE), 6) AS p
@@ -451,19 +641,7 @@ object SparkEntry {
            round(coalesce(sum(CASE WHEN nxt = 'view' THEN p END), 0), 6) AS p_view
          FROM t GROUP BY cur""")),
     Query("eco_graph_components", Graph.graphComponents _, "graph", "Graph.graphComponents",
-      Some("""WITH RECURSIVE r AS (SELECT event_type, value, user_id,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY date_trunc('microseconds', ts), event_id) AS rn
-           FROM events),
-         n AS (SELECT event_type AS habitat,
-                 round(value % 180.0 - 90.0, 6) AS lat,
-                 CAST(user_id % 360 - 180 AS DOUBLE) AS lon
-               FROM r WHERE rn = 1),
-         d AS (SELECT a.habitat AS h1, b.habitat AS h2,
-                 2 * 6371.0 * asin(sqrt(pow(sin(radians(b.lat - a.lat) / 2), 2) +
-                   cos(radians(a.lat)) * cos(radians(b.lat)) *
-                   pow(sin(radians(b.lon - a.lon) / 2), 2))) AS dist
-               FROM n a JOIN n b ON a.habitat < b.habitat),
+      Some(raw"""WITH RECURSIVE $habitatPairs,
          ed AS (SELECT h1 AS a, h2 AS b FROM d WHERE dist <= 15000.0),
          edges AS (SELECT a, b FROM ed UNION SELECT b AS a, a AS b FROM ed),
          reach(h, x) AS (
@@ -507,42 +685,18 @@ object SparkEntry {
     // sf0.01; the Spark side must find the same >=0.8 pairs via its
     // banded LSH + candidate-only verification).
     Query("llm_dedup_near", Llm.dedupNear _, "llm-dedup", "Llm.dedupNear",
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-                       FROM documents),
-         sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-                FROM toks, LATERAL (SELECT unnest(range(1, len(t)-1)) AS i)
-                WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-               FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      Some(raw"""WITH $docTokens,
+         $shingleOverlap,
          j AS (SELECT doc_a, doc_b, n_common / (sa.n + sb.n - n_common) AS jac
                FROM i JOIN sizes sa ON sa.doc_id = doc_a
                       JOIN sizes sb ON sb.doc_id = doc_b)
          SELECT doc_a, doc_b, round(jac, 6) AS jaccard FROM j WHERE jac >= 0.8""")),
     Query("llm_simhash", Llm.simhash _, "llm-dedup", "Llm.simhash",
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-                       FROM documents),
-         big AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-                 FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i)
-                 WHERE len(t) >= 2),
-         h AS (SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::BIGINT AS hv FROM big),
-         bits AS (SELECT doc_id, b,
-                    CASE WHEN sum(((hv >> b) & 1) * 2 - 1) > 0
-                         THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-                  FROM h, (SELECT unnest(range(60)) AS b) GROUP BY doc_id, b)
+      Some(raw"""WITH $simhashBits
          SELECT doc_id, CAST(sum(bit * (1::BIGINT << b)) AS BIGINT) AS simhash
          FROM bits GROUP BY doc_id""")),
     Query("llm_simhash_pairs", Llm.simhashPairs _, "llm-dedup", "Llm.simhashPairs",
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-                       FROM documents),
-         big AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g
-                 FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i)
-                 WHERE len(t) >= 2),
-         h AS (SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::BIGINT AS hv FROM big),
-         bits AS (SELECT doc_id, b,
-                    CASE WHEN sum(((hv >> b) & 1) * 2 - 1) > 0
-                         THEN 1::BIGINT ELSE 0::BIGINT END AS bit
-                  FROM h, (SELECT unnest(range(60)) AS b) GROUP BY doc_id, b),
+      Some(raw"""WITH $simhashBits,
          sig AS (SELECT doc_id, sum(bit * (1::BIGINT << b)) AS simhash FROM bits GROUP BY doc_id)
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
@@ -552,9 +706,7 @@ object SparkEntry {
     // hash = first 14 hex digits of md5 (same cross-engine trick as
     // llm_simhash). bit_xor folds the selected set order-free.
     Query("llm_fingerprint", Llm.fingerprint _, "llm-dedup", "Llm.fingerprint",
-      Some("""WITH d AS (SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-           FROM documents),
+      Some(raw"""WITH $normText,
          g AS (SELECT doc_id, substr(t, CAST(i AS INTEGER), 8) AS g
                FROM d, LATERAL (SELECT unnest(range(1, len(t) - 6)) AS i)
                WHERE len(t) >= 8),
@@ -566,60 +718,16 @@ object SparkEntry {
          FROM h GROUP BY doc_id""")),
     // winnowing (SWA 2003): guaranteed detection of shared substrings
     // >= 23 normalized chars; rollup + MOSS pair report + Lee-et-al
-    // style per-doc duplicate coverage
-    //
-    // Winnowing (k=8 chars, w=16 positions): selection key packs the
-    // 36-bit hash with the complemented 24-bit position so min(key)
-    // is (min hash, rightmost); a position is selected iff SOME
-    // window ending at or after it chose its key, i.e. the max of
-    // the following w mins equals the key (each wmin <= key of every
-    // position its window contains, so exists == max). Gram hash =
-    // the llm_fingerprint md5 trick.
+    // style per-doc duplicate coverage, all over `winnowSel`
     Query("llm_winnow", Llm.winnow _, "llm-dedup", "Llm.winnow",
-      Some("""WITH d AS (SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-           FROM documents),
-         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                 substr(t, CAST(i AS INTEGER), 8) AS gg
-               FROM d, LATERAL (SELECT unnest(range(1, least(len(t) - 6, 16777216))) AS i)
-               WHERE len(t) >= 23),
-         h AS (SELECT doc_id, pos, ('0x' || substr(md5(gg), 1, 14))::BIGINT AS h FROM g),
-         k AS (SELECT doc_id, pos, h,
-                 (h % 68719476736) * 16777216 + (16777215 - pos) AS key FROM h),
-         w AS (SELECT doc_id, pos, h, key,
-                 CASE WHEN pos >= 16 THEN min(key) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) END AS wmin
-               FROM k),
-         s AS (SELECT doc_id, h, key,
-                 max(wmin) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS m
-               FROM w),
-         sel AS (SELECT DISTINCT doc_id, h FROM s WHERE m = key)
+      Some(raw"""WITH $winnowSel
          SELECT doc_id, count(*) AS n_sel, min(h) AS min_sel,
            bit_xor(h) AS sel_xor
          FROM sel GROUP BY doc_id""")),
     // MOSS-style pair report over the winnowed sets; fingerprints in
     // > 16 docs dropped as stop-grams (bounds the h-join fanout).
     Query("llm_dup_spans", Llm.dupSpans _, "llm-dedup", "Llm.dupSpans",
-      Some("""WITH d AS (SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-           FROM documents),
-         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                 substr(t, CAST(i AS INTEGER), 8) AS gg
-               FROM d, LATERAL (SELECT unnest(range(1, least(len(t) - 6, 16777216))) AS i)
-               WHERE len(t) >= 23),
-         h AS (SELECT doc_id, pos, ('0x' || substr(md5(gg), 1, 14))::BIGINT AS h FROM g),
-         k AS (SELECT doc_id, pos, h,
-                 (h % 68719476736) * 16777216 + (16777215 - pos) AS key FROM h),
-         w AS (SELECT doc_id, pos, h, key,
-                 CASE WHEN pos >= 16 THEN min(key) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) END AS wmin
-               FROM k),
-         s AS (SELECT doc_id, h, key,
-                 max(wmin) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS m
-               FROM w),
-         sel AS (SELECT DISTINCT doc_id, h FROM s WHERE m = key),
+      Some(raw"""WITH $winnowSel,
          hd AS (SELECT h, count(*) AS nd FROM sel GROUP BY h),
          ok AS (SELECT sel.doc_id, sel.h FROM sel JOIN hd USING (h) WHERE nd <= 16),
          n AS (SELECT doc_id, count(*) AS ns FROM ok GROUP BY doc_id),
@@ -634,25 +742,7 @@ object SparkEntry {
     // Per-doc duplicate coverage: fraction of the winnowed set shared
     // with any other document.
     Query("llm_dup_coverage", Llm.dupCoverage _, "llm-dedup", "Llm.dupCoverage",
-      Some("""WITH d AS (SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-           FROM documents),
-         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                 substr(t, CAST(i AS INTEGER), 8) AS gg
-               FROM d, LATERAL (SELECT unnest(range(1, least(len(t) - 6, 16777216))) AS i)
-               WHERE len(t) >= 23),
-         h AS (SELECT doc_id, pos, ('0x' || substr(md5(gg), 1, 14))::BIGINT AS h FROM g),
-         k AS (SELECT doc_id, pos, h,
-                 (h % 68719476736) * 16777216 + (16777215 - pos) AS key FROM h),
-         w AS (SELECT doc_id, pos, h, key,
-                 CASE WHEN pos >= 16 THEN min(key) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) END AS wmin
-               FROM k),
-         s AS (SELECT doc_id, h, key,
-                 max(wmin) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS m
-               FROM w),
-         sel AS (SELECT DISTINCT doc_id, h FROM s WHERE m = key),
+      Some(raw"""WITH $winnowSel,
          hd AS (SELECT h, count(*) AS nd FROM sel GROUP BY h)
          SELECT sel.doc_id, count(*) AS n_sel,
            CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
@@ -663,25 +753,7 @@ object SparkEntry {
     // high-dup predicate is integer (2*shared >= sel), sums recast to
     // BIGINT (DuckDB sum widens to HUGEINT and would flip the schema).
     Query("llm_dup_sources", Llm.dupSources _, "llm-dedup", "Llm.dupSources",
-      Some("""WITH d AS (SELECT doc_id,
-             regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
-           FROM documents),
-         g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                 substr(t, CAST(i AS INTEGER), 8) AS gg
-               FROM d, LATERAL (SELECT unnest(range(1, least(len(t) - 6, 16777216))) AS i)
-               WHERE len(t) >= 23),
-         h AS (SELECT doc_id, pos, ('0x' || substr(md5(gg), 1, 14))::BIGINT AS h FROM g),
-         k AS (SELECT doc_id, pos, h,
-                 (h % 68719476736) * 16777216 + (16777215 - pos) AS key FROM h),
-         w AS (SELECT doc_id, pos, h, key,
-                 CASE WHEN pos >= 16 THEN min(key) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) END AS wmin
-               FROM k),
-         s AS (SELECT doc_id, h, key,
-                 max(wmin) OVER (PARTITION BY doc_id
-                   ORDER BY pos ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS m
-               FROM w),
-         sel AS (SELECT DISTINCT doc_id, h FROM s WHERE m = key),
+      Some(raw"""WITH $winnowSel,
          hd AS (SELECT h, count(*) AS nd FROM sel GROUP BY h),
          cov AS (SELECT sel.doc_id, count(*) AS n_sel,
                    CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
@@ -696,14 +768,9 @@ object SparkEntry {
     // slice (the oracle-checked twin of the n-gram near-dup family;
     // full-corpus scale path = llm_dedup_near's banded LSH).
     Query("llm_ngram_jaccard", Llm.ngramJaccard _, "llm-dedup", "Llm.ngramJaccard",
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
+      Some(raw"""WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
                        FROM documents WHERE doc_id < 50),
-         sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-                FROM toks, LATERAL (SELECT unnest(range(1, len(t)-1)) AS i)
-                WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-               FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
+         $shingleOverlap
          SELECT doc_a, doc_b, sa.n AS n_a, sb.n AS n_b, n_common,
            round(n_common / (sa.n + sb.n - n_common), 6) AS jaccard
          FROM i JOIN sizes sa ON sa.doc_id = doc_a
@@ -718,36 +785,9 @@ object SparkEntry {
                  round(list_cosine_similarity(a.ve, b.ve), 6) AS cos_sim
                FROM v a JOIN v b ON a.vec_id < b.vec_id)
          SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.35""")),
-    // Transitive closure of the exact-or-near duplicate relation:
-    // near edges = the same all-pairs >= 0.8 Jaccard as
-    // llm_dedup_near, exact edges = doc -> min doc of its normalized-
-    // text group; component label = min reachable doc_id.
     Query("llm_dedup_clusters", Llm.dedupClusters _, "llm-dedup", "Llm.dedupClusters",
-      Some("""WITH RECURSIVE
-         toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-                  FROM documents),
-         sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-                FROM toks, LATERAL (SELECT unnest(range(1, len(t)-1)) AS i)
-                WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-               FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         near AS (SELECT doc_a AS a, doc_b AS b
-                  FROM i JOIN sizes sa ON sa.doc_id = doc_a
-                         JOIN sizes sb ON sb.doc_id = doc_b
-                  WHERE n_common / (sa.n + sb.n - n_common) >= 0.8),
-         g AS (SELECT doc_id,
-                 min(doc_id) OVER (PARTITION BY
-                   md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))) AS gmin
-               FROM documents),
-         ex AS (SELECT gmin AS a, doc_id AS b FROM g WHERE doc_id <> gmin),
-         e0 AS (SELECT a, b FROM near UNION SELECT a, b FROM ex),
-         edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         reach(d, r) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT reach.d, e.b FROM reach JOIN edges e ON e.a = reach.r),
-         lab AS (SELECT d AS doc_id, min(r) AS cluster_id FROM reach GROUP BY d)
+      Some(raw"""WITH RECURSIVE
+         $dupClusters
          SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
            CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_n
          FROM lab""")),
@@ -774,25 +814,14 @@ object SparkEntry {
            round(count(tr.g) / count(*), 6) AS contam_frac
          FROM ev LEFT JOIN tr ON ev.g = tr.g
          GROUP BY 1, 2""")),
-    // New batch (src10..19) deduped against the existing corpus
-    // (src0..9) and within itself — keep min doc_id per survivor.
     Query("llm_dedup_incremental", Llm.dedupIncremental _, "llm-dedup", "Llm.dedupIncremental",
-      Some("""WITH d AS (SELECT doc_id, CAST(substr(source, 4, 10) AS INT) AS src_n,
-             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS text_hash
-           FROM documents)
-         SELECT text_hash, min(doc_id) AS keep_doc_id,
-           CAST(count(*) AS BIGINT) AS n_dups_in_batch
-         FROM d WHERE src_n >= 10
-           AND text_hash NOT IN (SELECT text_hash FROM d WHERE src_n < 10)
-         GROUP BY 1""")),
+      Some(newBatchSurvivors)),
     // Segment granularity: 10-token windows, kept only at the
     // corpus-wide first (doc_id, position) occurrence; clean_hash
     // digests the order-preserving reassembly. generate_series +
     // list slicing replays Spark's sequence + slice exactly.
     Query("llm_segment_dedup", Llm.segmentDedup _, "llm-dedup", "Llm.segmentDedup",
-      Some("""WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
-         ),
+      Some(raw"""WITH $tokenArrays,
          segs0 AS (
            SELECT doc_id, unnest(list_transform(
              generate_series(0, CAST(floor((len(t)-1)/10) AS BIGINT)),
@@ -817,14 +846,7 @@ object SparkEntry {
     // the bloom prefilter changes data movement, never the answer —
     // the oracle is llm_dedup_incremental's, verbatim
     Query("llm_dedup_bloom", Llm.dedupBloom _, "llm-dedup", "Llm.dedupBloom",
-      Some("""WITH d AS (SELECT doc_id, CAST(substr(source, 4, 10) AS INT) AS src_n,
-             md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS text_hash
-           FROM documents)
-         SELECT text_hash, min(doc_id) AS keep_doc_id,
-           CAST(count(*) AS BIGINT) AS n_dups_in_batch
-         FROM d WHERE src_n >= 10
-           AND text_hash NOT IN (SELECT text_hash FROM d WHERE src_n < 10)
-         GROUP BY 1""")),
+      Some(newBatchSurvivors)),
     // incremental near-dup: new crawl probed against the existing
     // corpus's LSH band index, cross-era pairs only, exact-verified
     //
@@ -973,8 +995,7 @@ object SparkEntry {
                 array_to_string(list_slice(t, i * 24 + 1, i * 24 + 32), ' ') AS chunk_text
          FROM counts, LATERAL (SELECT unnest(range(0, n_chunks)) AS i)""")),
     Query("llm_repetition", Llm.repetition _, "llm-text", "Llm.repetition",
-      Some("""WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-                       FROM documents),
+      Some(raw"""WITH $docTokens,
          ok AS (SELECT doc_id, t FROM toks WHERE len(t) >= 3),
          bg AS (SELECT doc_id, t[i] || ' ' || t[i+1] AS g
                 FROM ok, LATERAL (SELECT unnest(range(1, len(t))) AS i)),
@@ -1080,9 +1101,7 @@ object SparkEntry {
     // Postings are canonicalized as "doc:pos" CSV ordered by
     // (doc_id, pos) — 0-based positions on both engines.
     Query("llm_inverted_index", Llm.invertedIndex _, "llm-text", "Llm.invertedIndex",
-      Some("""WITH toks AS (
-           SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t FROM documents
-         ),
+      Some(raw"""WITH $tokenArrays,
          p0 AS (
            SELECT doc_id, unnest(list_transform(range(1, len(t) + 1),
              i -> struct_pack(pos := i - 1, term := t[i]))) AS u
@@ -1107,16 +1126,9 @@ object SparkEntry {
     // sentence) — so DuckDB restates the token spelling, count and
     // decode round-trip per row via list comprehensions
     Query("llm_bpe_tokenize", Bpe.bpeTokenize _, "llm-text", "Bpe.bpeTokenize",
-      Some("""WITH p AS (SELECT doc_id, doc_id % 4 AS bpe_case, doc_id % 5 + 1 AS k
-                    FROM documents WHERE text IS NOT NULL),
+      Some(raw"""WITH $bpeSample,
               t AS (SELECT doc_id, bpe_case,
-                      CASE bpe_case
-                        WHEN 0 THEN [CASE WHEN i=0 THEN 'the' ELSE ' the' END FOR i IN range(k)]
-                        WHEN 1 THEN flatten([[CASE WHEN i=0 THEN 'data' ELSE ' data' END, ' z', 'q'] FOR i IN range(k)])
-                        WHEN 2 THEN flatten([[CASE WHEN i=0 THEN 'the' ELSE ' the' END, 'data'] FOR i IN range(k)])
-                        ELSE list_concat(['the',' data',' model',' train'], flatten([[' z','q'] FOR i IN range(k)]))
-                      END AS toks
-                    FROM p)
+                      $bpeTokens
          SELECT doc_id, bpe_case,
                 CAST(len(toks) AS BIGINT) AS n_tokens,
                 list_aggregate(toks, 'string_agg', '|') AS tokens,
@@ -1131,16 +1143,9 @@ object SparkEntry {
     // advancing by 3 and decoded per chunk (ltrim drops the slice's
     // leading word-boundary space)
     Query("llm_chunk_bpe", (s, d) => Bpe.chunkBpe(s, d), "llm-text", "Bpe.chunkBpe",
-      Some("""WITH p AS (SELECT doc_id, doc_id % 4 AS bpe_case, doc_id % 5 + 1 AS k
-                    FROM documents WHERE text IS NOT NULL),
+      Some(raw"""WITH $bpeSample,
               t AS (SELECT doc_id,
-                      CASE bpe_case
-                        WHEN 0 THEN [CASE WHEN i=0 THEN 'the' ELSE ' the' END FOR i IN range(k)]
-                        WHEN 1 THEN flatten([[CASE WHEN i=0 THEN 'data' ELSE ' data' END, ' z', 'q'] FOR i IN range(k)])
-                        WHEN 2 THEN flatten([[CASE WHEN i=0 THEN 'the' ELSE ' the' END, 'data'] FOR i IN range(k)])
-                        ELSE list_concat(['the',' data',' model',' train'], flatten([[' z','q'] FOR i IN range(k)]))
-                      END AS toks
-                    FROM p),
+                      $bpeTokens,
               c AS (SELECT doc_id, toks, len(toks) AS n,
                       CASE WHEN len(toks) <= 4 THEN 1
                            ELSE CAST(ceil((len(toks) - 4) / 3.0) AS INT) + 1 END AS n_chunks
@@ -1150,11 +1155,7 @@ object SparkEntry {
                 ltrim(list_aggregate(list_slice(toks, i * 3 + 1, i * 3 + 4), 'string_agg', '')) AS chunk_text
          FROM c, LATERAL (SELECT unnest(range(0, n_chunks)) AS i)""")),
     Query("llm_split", Llm.splitFolds _, "llm-corpus", "Llm.splitFolds",
-      Some("""SELECT doc_id,
-           CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-         FROM (SELECT doc_id,
-                 ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT % 100 AS b
-               FROM documents)""")),
+      Some(splitFold)),
     Query("llm_sample_stratified", (s, d) => Llm.sampleStratified(s, d),
       "llm-corpus", "Llm.sampleStratified",
       Some("""SELECT doc_id, source, CAST(rn AS BIGINT) AS rank_in_source
@@ -1180,37 +1181,10 @@ object SparkEntry {
     // their llm_split fold. Filters run on the same expressions the
     // standalone oracles use, so each stage is already proven.
     Query("llm_curate", Llm.curate _, "llm-corpus", "Llm.curate",
-      Some("""WITH RECURSIVE
-         toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
-                  FROM documents),
-         sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS s
-                FROM toks, LATERAL (SELECT unnest(range(1, len(t)-1)) AS i)
-                WHERE len(t) >= 3),
-         sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-         i AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_common
-               FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-         near AS (SELECT doc_a AS a, doc_b AS b
-                  FROM i JOIN sizes sa ON sa.doc_id = doc_a
-                         JOIN sizes sb ON sb.doc_id = doc_b
-                  WHERE n_common / (sa.n + sb.n - n_common) >= 0.8),
-         g AS (SELECT doc_id,
-                 min(doc_id) OVER (PARTITION BY
-                   md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))))) AS gmin
-               FROM documents),
-         ex AS (SELECT gmin AS a, doc_id AS b FROM g WHERE doc_id <> gmin),
-         e0 AS (SELECT a, b FROM near UNION SELECT a, b FROM ex),
-         edges AS (SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0),
-         reach(d, r) AS (
-           SELECT doc_id, doc_id FROM documents
-           UNION
-           SELECT reach.d, e.b FROM reach JOIN edges e ON e.a = reach.r),
-         lab AS (SELECT d AS doc_id, min(r) AS cluster_id FROM reach GROUP BY d),
+      Some(raw"""WITH RECURSIVE
+         $dupClusters,
          reps AS (SELECT doc_id FROM lab WHERE doc_id = cluster_id),
-         splits AS (SELECT doc_id,
-             CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split
-           FROM (SELECT doc_id,
-                   ('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT % 100 AS b
-                 FROM documents)),
+         splits AS (${shift(splitFold, 2)}),
          base AS (SELECT tk.doc_id,
                     CAST(len(tk.t) AS BIGINT) AS n_tokens,
                     round(len(list_distinct(tk.t)) / len(tk.t)
@@ -1301,11 +1275,8 @@ object SparkEntry {
     // escaped-then-extracted document text, whitespace-collapsed;
     // style/script/comment content must vanish for the row to match
     Query("llm_html_extract", graft.sources.Html.htmlExtract _, "llm-corpus", "Html.htmlExtract",
-      Some("""SELECT doc_id,
-                concat('Doc & ', doc_id,
-                  CASE WHEN regexp_matches(text, '\S')
-                       THEN concat(' ', trim(regexp_replace(text, '\s+', ' ', 'g')))
-                       ELSE '' END) AS extracted_text
+      Some(raw"""SELECT doc_id,
+                $pageText
          FROM documents WHERE text IS NOT NULL""")),
     // the SEAM of the crawl chain: WARC member -> HTTP entity ->
     // charset decode -> html-text kernel -> tokens, one query; text
@@ -1317,11 +1288,8 @@ object SparkEntry {
     // AND the html kernel each executed correctly in sequence; the
     // token count is 3 ('Doc & <id>') + the text's \s+ tokens
     Query("llm_crawl_extract", graft.sources.Html.crawlExtract _, "llm-corpus", "Html.crawlExtract",
-      Some("""SELECT doc_id,
-                concat('Doc & ', doc_id,
-                  CASE WHEN regexp_matches(text, '\S')
-                       THEN concat(' ', trim(regexp_replace(text, '\s+', ' ', 'g')))
-                       ELSE '' END) AS extracted_text,
+      Some(raw"""SELECT doc_id,
+                $pageText,
                 CAST(3 + CASE WHEN regexp_matches(text, '\S')
                               THEN len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' '))
                               ELSE 0 END AS BIGINT) AS n_tokens
@@ -1379,20 +1347,8 @@ object SparkEntry {
     // /doc, so case 3 is host-dependent), n_seen = the 2 aliases the
     // seen-set collapsed, first_doc_id = the lone contributing doc
     Query("llm_url_frontier", graft.sources.Urls.urlFrontier _, "llm-corpus", "Urls.urlFrontier",
-      Some("""SELECT
-           CASE n_chars % 4
-             WHEN 0 THEN concat('http://', source, '.example.com/data/pub/', doc_id)
-             WHEN 1 THEN concat('https://', source, '.example.com/data/raw/', doc_id)
-             WHEN 2 THEN concat('http://', source, '.example.com/tmp/run', doc_id, '.log')
-             ELSE concat('http://', source, '.example.com/doc/~', doc_id, '?q=1')
-           END AS canonical_url,
-           concat(source, '.example.com') AS host,
-           CASE n_chars % 4
-             WHEN 0 THEN true
-             WHEN 1 THEN false
-             WHEN 2 THEN false
-             ELSE length(source) % 2 = 1
-           END AS allowed,
+      Some(raw"""SELECT
+           $frontierRow,
            CAST(2 AS BIGINT) AS n_seen,
            doc_id AS first_doc_id
          FROM documents WHERE text IS NOT NULL""")),
@@ -1432,21 +1388,9 @@ object SparkEntry {
     // frontierPolicy; odd declare none -> the 1 s default)
     Query("llm_frontier_schedule", graft.sources.Urls.frontierSchedule _,
       "llm-corpus", "Urls.frontierSchedule",
-      Some("""WITH f AS (
+      Some(raw"""WITH f AS (
            SELECT
-             CASE n_chars % 4
-               WHEN 0 THEN concat('http://', source, '.example.com/data/pub/', doc_id)
-               WHEN 1 THEN concat('https://', source, '.example.com/data/raw/', doc_id)
-               WHEN 2 THEN concat('http://', source, '.example.com/tmp/run', doc_id, '.log')
-               ELSE concat('http://', source, '.example.com/doc/~', doc_id, '?q=1')
-             END AS canonical_url,
-             concat(source, '.example.com') AS host,
-             CASE n_chars % 4
-               WHEN 0 THEN true
-               WHEN 1 THEN false
-               WHEN 2 THEN false
-               ELSE length(source) % 2 = 1
-             END AS allowed,
+             ${shift(frontierRow, 2)},
              doc_id AS first_doc_id,
              CASE WHEN length(source) % 2 = 0 THEN 2000 ELSE 1000 END AS delay_ms
            FROM documents WHERE text IS NOT NULL)
@@ -1482,11 +1426,8 @@ object SparkEntry {
     // the closed form re-aggregates host-pair multiplicities
     Query("llm_link_graph", graft.operators.LinkGraph.linkGraph _,
       "llm-corpus", "LinkGraph.linkGraph",
-      Some("""WITH d AS (SELECT doc_id % 101 AS src,
-                  (doc_id * 2 + 1) % 101 AS d1,
-                  (doc_id * 3 + 7) % 101 AS d2,
-                  (doc_id * 7 + 13) % 101 AS d3
-           FROM documents WHERE text IS NOT NULL),
+      Some(raw"""WITH d AS (SELECT doc_id % 101 AS src,
+                  $linkTargets,
          raw AS (SELECT src, unnest([d1, d2, d3, d1]) AS dst FROM d)
          SELECT concat('h', CAST(src AS VARCHAR), '.example') AS src_host,
                 concat('h', CAST(dst AS VARCHAR), '.example') AS dst_host,
@@ -1501,49 +1442,7 @@ object SparkEntry {
     // r(v) = teleport + (85 * sum(r(u) // outdeg(u))) // 100. DuckDB's
     // // floor-division equals Spark's div on this non-negative domain
     Query("llm_host_rank", graft.operators.LinkGraph.hostRank _, "llm-corpus", "LinkGraph.hostRank",
-      Some("""WITH d AS (SELECT doc_id % 101 AS src,
-                  (doc_id * 2 + 1) % 101 AS d1,
-                  (doc_id * 3 + 7) % 101 AS d2,
-                  (doc_id * 7 + 13) % 101 AS d3
-           FROM documents WHERE text IS NOT NULL),
-         raw AS (SELECT src, unnest([d1, d2, d3]) AS dst FROM d),
-         e AS (SELECT DISTINCT src, dst FROM raw WHERE dst <> src),
-         nodes AS (SELECT src AS h FROM e UNION SELECT dst FROM e),
-         con AS (SELECT (1000000000000 // count(*)) AS base,
-                        (15 * (1000000000000 // count(*))) // 100 AS tp
-                 FROM nodes),
-         deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-         p0 AS (SELECT h, base AS r FROM nodes CROSS JOIN con),
-         p1 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p0 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p2 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p1 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p3 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p2 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p4 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p3 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p5 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p4 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h)
+      Some(raw"""WITH $hostRanks
          SELECT concat('h', CAST(h AS VARCHAR), '.example') AS host,
                 CAST(r AS BIGINT) AS rank_scaled
          FROM p5"""), snapshot = true),
@@ -1554,14 +1453,7 @@ object SparkEntry {
     // link-BFS oracle: depth-bounded recursive walk with UNION dedup
     // (each (host, depth) pair once), min(d) = the BFS distance
     Query("llm_link_bfs", graft.operators.LinkGraph.linkBfs _, "llm-corpus", "LinkGraph.linkBfs",
-      Some("""WITH RECURSIVE d AS (SELECT doc_id % 101 AS src,
-                  (doc_id * 2 + 1) % 101 AS d1,
-                  (doc_id * 3 + 7) % 101 AS d2,
-                  (doc_id * 7 + 13) % 101 AS d3
-           FROM documents WHERE text IS NOT NULL),
-         raw AS (SELECT src, unnest([d1, d2, d3]) AS dst FROM d),
-         e AS (SELECT DISTINCT src, dst FROM raw WHERE dst <> src),
-         nodes AS (SELECT src AS h FROM e UNION SELECT dst FROM e),
+      Some(raw"""WITH RECURSIVE $hostEdges,
          w AS (SELECT h, 0 AS depth FROM nodes WHERE h % 10 = 0
                UNION
                SELECT e.dst, w.depth + 1 FROM w JOIN e ON e.src = w.h
@@ -1578,11 +1470,8 @@ object SparkEntry {
     // each era's multiplicity a conditional sum (prev = docs with
     // doc_id % 3 != 0, the persisted index; new = the % 3 == 0 crawl)
     Query("llm_link_incr", graft.operators.LinkGraph.linkIncr _, "llm-corpus", "LinkGraph.linkIncr",
-      Some("""WITH d AS (SELECT doc_id, doc_id % 101 AS src,
-                  (doc_id * 2 + 1) % 101 AS d1,
-                  (doc_id * 3 + 7) % 101 AS d2,
-                  (doc_id * 7 + 13) % 101 AS d3
-           FROM documents WHERE text IS NOT NULL),
+      Some(raw"""WITH d AS (SELECT doc_id, doc_id % 101 AS src,
+                  $linkTargets,
          raw AS (SELECT doc_id, src, unnest([d1, d2, d3, d1]) AS dst FROM d)
          SELECT concat('h', CAST(src AS VARCHAR), '.example') AS src_host,
                 concat('h', CAST(dst AS VARCHAR), '.example') AS dst_host,
@@ -1600,56 +1489,10 @@ object SparkEntry {
     // uniform base, salted-hash keep rule per row
     Query("llm_mix_ranked", graft.operators.LinkGraph.mixRanked _,
       "llm-corpus", "LinkGraph.mixRanked",
-      Some("""WITH d AS (SELECT doc_id % 101 AS src,
-                  (doc_id * 2 + 1) % 101 AS d1,
-                  (doc_id * 3 + 7) % 101 AS d2,
-                  (doc_id * 7 + 13) % 101 AS d3
-           FROM documents WHERE text IS NOT NULL),
-         raw AS (SELECT src, unnest([d1, d2, d3]) AS dst FROM d),
-         e AS (SELECT DISTINCT src, dst FROM raw WHERE dst <> src),
-         nodes AS (SELECT src AS h FROM e UNION SELECT dst FROM e),
-         con AS (SELECT (1000000000000 // count(*)) AS base,
-                        (15 * (1000000000000 // count(*))) // 100 AS tp
-                 FROM nodes),
-         deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-         p0 AS (SELECT h, base AS r FROM nodes CROSS JOIN con),
-         p1 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p0 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p2 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p1 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p3 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p2 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p4 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p3 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h),
-         p5 AS (SELECT nodes.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                FROM nodes CROSS JOIN con
-                LEFT JOIN (SELECT e.dst AS h, sum(p.r // deg.outdeg) AS inflow
-                           FROM e JOIN p4 p ON p.h = e.src
-                                  JOIN deg ON deg.src = e.src
-                           GROUP BY 1) s ON s.h = nodes.h)
+      Some(raw"""WITH $hostRanks
          SELECT doc_id,
                 concat('h', CAST(doc_id % 101 AS VARCHAR), '.example') AS host,
-                CAST(CASE WHEN r IS NULL THEN 1
-                          WHEN r >= (11 * base) // 10 THEN 5
-                          WHEN r >= base THEN 4
-                          WHEN r >= (8 * base) // 10 THEN 3
-                          ELSE 2 END AS BIGINT) AS rank_bucket,
+                CAST(${shift(rankBucket, 1)} AS BIGINT) AS rank_bucket,
                 u AS mix_rank
          FROM (SELECT doc_id,
                       ('0x' || substr(md5('mixrank:' || CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT % 100000 AS u,
@@ -1658,11 +1501,7 @@ object SparkEntry {
                CROSS JOIN con
                LEFT JOIN p5 ON p5.h = doc_id % 101
                WHERE text IS NOT NULL) x
-         WHERE u < (CASE WHEN r IS NULL THEN 1
-                         WHEN r >= (11 * base) // 10 THEN 5
-                         WHEN r >= base THEN 4
-                         WHEN r >= (8 * base) // 10 THEN 3
-                         ELSE 2 END) * 15000"""), snapshot = true),
+         WHERE u < ($rankBucket) * 15000"""), snapshot = true),
     // host authority at crawl cadence: the previous era ranks cold
     // (5 iterations), the merged graph re-ranks with 2 WARM
     // iterations seeded from those ranks; DuckDB restates the whole
@@ -1674,11 +1513,8 @@ object SparkEntry {
     // every stage exact integer arithmetic, restated verbatim
     Query("llm_host_rank_warm", graft.operators.LinkGraph.hostRankWarm _,
       "llm-corpus", "LinkGraph.hostRankWarm",
-      Some("""WITH d AS (SELECT doc_id, doc_id % 101 AS src,
-                           (doc_id * 2 + 1) % 101 AS d1,
-                           (doc_id * 3 + 7) % 101 AS d2,
-                           (doc_id * 7 + 13) % 101 AS d3
-                    FROM documents WHERE text IS NOT NULL),
+      Some(raw"""WITH d AS (SELECT doc_id, doc_id % 101 AS src,
+                           ${shift(linkTargets, 9)},
               rawA AS (SELECT src, unnest([d1, d2, d3]) AS dst FROM d WHERE doc_id % 3 <> 0),
               eA AS (SELECT DISTINCT src, dst FROM rawA WHERE dst <> src),
               nA AS (SELECT src AS h FROM eA UNION SELECT dst FROM eA),
@@ -1686,36 +1522,7 @@ object SparkEntry {
                             (15 * (1000000000000 // count(*))) // 100 AS tp FROM nA),
               dgA AS (SELECT src, count(*) AS outdeg FROM eA GROUP BY 1),
               a0 AS (SELECT h, base AS r FROM nA CROSS JOIN cA),
-              a1 AS (SELECT nA.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nA CROSS JOIN cA
-                     LEFT JOIN (SELECT eA.dst AS h, sum(p.r // dgA.outdeg) AS inflow
-                                FROM eA JOIN a0 p ON p.h = eA.src
-                                       JOIN dgA ON dgA.src = eA.src
-                                GROUP BY 1) s ON s.h = nA.h),
-              a2 AS (SELECT nA.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nA CROSS JOIN cA
-                     LEFT JOIN (SELECT eA.dst AS h, sum(p.r // dgA.outdeg) AS inflow
-                                FROM eA JOIN a1 p ON p.h = eA.src
-                                       JOIN dgA ON dgA.src = eA.src
-                                GROUP BY 1) s ON s.h = nA.h),
-              a3 AS (SELECT nA.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nA CROSS JOIN cA
-                     LEFT JOIN (SELECT eA.dst AS h, sum(p.r // dgA.outdeg) AS inflow
-                                FROM eA JOIN a2 p ON p.h = eA.src
-                                       JOIN dgA ON dgA.src = eA.src
-                                GROUP BY 1) s ON s.h = nA.h),
-              a4 AS (SELECT nA.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nA CROSS JOIN cA
-                     LEFT JOIN (SELECT eA.dst AS h, sum(p.r // dgA.outdeg) AS inflow
-                                FROM eA JOIN a3 p ON p.h = eA.src
-                                       JOIN dgA ON dgA.src = eA.src
-                                GROUP BY 1) s ON s.h = nA.h),
-              a5 AS (SELECT nA.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nA CROSS JOIN cA
-                     LEFT JOIN (SELECT eA.dst AS h, sum(p.r // dgA.outdeg) AS inflow
-                                FROM eA JOIN a4 p ON p.h = eA.src
-                                       JOIN dgA ON dgA.src = eA.src
-                                GROUP BY 1) s ON s.h = nA.h),
+              ${shift(powerSteps("a", 5, "nA", "cA", "eA", "dgA"), 5)},
               rawF AS (SELECT src, unnest([d1, d2, d3]) AS dst FROM d),
               eF AS (SELECT DISTINCT src, dst FROM rawF WHERE dst <> src),
               nF AS (SELECT src AS h FROM eF UNION SELECT dst FROM eF),
@@ -1724,18 +1531,7 @@ object SparkEntry {
               dgF AS (SELECT src, count(*) AS outdeg FROM eF GROUP BY 1),
               w0 AS (SELECT nF.h, coalesce(a5.r, cF.base) AS r
                      FROM nF CROSS JOIN cF LEFT JOIN a5 ON a5.h = nF.h),
-              w1 AS (SELECT nF.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nF CROSS JOIN cF
-                     LEFT JOIN (SELECT eF.dst AS h, sum(p.r // dgF.outdeg) AS inflow
-                                FROM eF JOIN w0 p ON p.h = eF.src
-                                       JOIN dgF ON dgF.src = eF.src
-                                GROUP BY 1) s ON s.h = nF.h),
-              w2 AS (SELECT nF.h, tp + (85 * coalesce(s.inflow, 0)) // 100 AS r
-                     FROM nF CROSS JOIN cF
-                     LEFT JOIN (SELECT eF.dst AS h, sum(p.r // dgF.outdeg) AS inflow
-                                FROM eF JOIN w1 p ON p.h = eF.src
-                                       JOIN dgF ON dgF.src = eF.src
-                                GROUP BY 1) s ON s.h = nF.h)
+              ${shift(powerSteps("w", 2, "nF", "cF", "eF", "dgF"), 5)}
          SELECT concat('h', CAST(h AS VARCHAR), '.example') AS host,
                 CAST(r AS BIGINT) AS rank_scaled
          FROM w2"""), snapshot = true),
@@ -1828,11 +1624,9 @@ object SparkEntry {
     // of md5(text), so the checksum is recomputable engine-free
     Query("llm_media_decode", graft.operators.Multimodal.mediaDecodeChecksum _,
       "multimodal", "Multimodal.mediaDecodeChecksum",
-      Some("""SELECT doc_id, 32 AS w, 1 AS h,
+      Some(raw"""SELECT doc_id, 32 AS w, 1 AS h,
                 CAST(SUM(ord(substr(md5(text), i, 1))) AS BIGINT) AS px_sum
-         FROM (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-              LATERAL (SELECT unnest(range(1, 33)) AS i)
-         GROUP BY doc_id""")),
+         $md5CharRows""")),
     // same construction for the audio branch: synthesized 8-bit PCM
     // WAV payloads ride the real RIFF decode, sample-sum checksum
     // recomputed by DuckDB
@@ -1842,11 +1636,9 @@ object SparkEntry {
     // (b - 128) * 256, so the sample sum is recomputable engine-free
     Query("llm_media_wav", graft.operators.Multimodal.mediaWavChecksum _,
       "multimodal", "Multimodal.mediaWavChecksum",
-      Some("""SELECT doc_id, 8000 AS sample_rate, 1 AS channels,
+      Some(raw"""SELECT doc_id, 8000 AS sample_rate, 1 AS channels,
                 CAST(SUM((ord(substr(md5(text), i, 1)) - 128) * 256) AS BIGINT) AS smp_sum
-         FROM (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-              LATERAL (SELECT unnest(range(1, 33)) AS i)
-         GROUP BY doc_id""")),
+         $md5CharRows""")),
     // compressed-audio sibling: per-row-varying synthesized MP3s
     // (ID3v2 tag + CBR frame train) ride the real header walk;
     // frame count / duration / tag size recomputed by DuckDB

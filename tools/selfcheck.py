@@ -3,8 +3,13 @@
 parquet dumps, run the dumped oracle_sql.json in DuckDB over the same
 testdata tables, and diff (column-name-sorted, row-sorted, exact).
 
-Usage: python3 tools/selfcheck.py <sfDir> <outDir>
-(run `sbt "runMain graft.Verify <sfDir> <outDir>"` first)
+Usage: python3 tools/selfcheck.py <sfDir> <outDir> [name ...]
+(run `sbt "runMain graft.Verify <sfDir> <outDir> [name ...]"` first)
+
+Every oracle in oracle_sql.json must have an output dir: a query whose
+Spark build threw in Verify leaves none, and counts as bad. Trailing
+names, as Verify takes them for a dev subset, check only those queries
+(each of which must then have an output dir).
 """
 import sys, os, json, glob
 import duckdb
@@ -22,18 +27,19 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, names=()):
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
+    dirs = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
     n_ok = n_bad = 0
-    for name in sorted(os.listdir(out_dir)):
+    for name in sorted(set(names) if names else set(oracle) | dirs):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
+        if name not in dirs:
+            print(f"✗ {name}: no Verify output"); n_bad += 1; continue
         files = glob.glob(os.path.join(d, "*.parquet"))
         if files:
             got = pd.concat([pd.read_parquet(f) for f in files])
@@ -71,4 +77,4 @@ def main(sf_dir, out_dir):
     sys.exit(1 if n_bad else 0)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    main(sys.argv[1], sys.argv[2], sys.argv[3:])
