@@ -346,26 +346,6 @@ object LinkGraph {
       .agg((lit(teleport) + expr("(85 * sum(contrib)) div 100")).as("rank"))
   }
 
-  /** The ORACLED host-authority leg (`llm_host_rank`): PageRank over
-    * the host graph in EXACT fixed-point arithmetic.
-    *
-    * Definition (mirrored verbatim by the DuckDB oracle):
-    * N = |hosts touching a distinct edge|, base = Scale div N,
-    * teleport = (15 × base) div 100, r₀(v) = base, and for each of
-    * the 5 iterations
-    *   r(v) = teleport + (85 × Σ_{(u,v)∈E} (r(u) div outdeg(u))) div 100.
-    * Truncating integer division throughout; dangling hosts (in-links
-    * only) contribute nothing — their mass decays, the standard
-    * power-iteration-without-dangling-redistribution variant. Total
-    * mass stays ≤ Scale, so 85 × inflow ≤ 8.5e13 — overflow headroom
-    * ~10⁵ on longs.
-    *
-    * Per iteration: `rankStep` above — the corpus-sized edge table
-    * never re-shuffles; iterations chain LAZILY with a checkpoint
-    * every `RankCkptEvery` steps bounding the plan (r21 — the former
-    * per-iteration eager checkpoint cost one driver job barrier per
-    * step for a host-sized vector), and only the node COUNT ever
-    * reaches the driver. */
   /** Lineage bound for the lazily-chained power iterations: a
     * checkpoint cuts the plan every this-many steps (and never on the
     * final step — the caller's one materialization executes the tail).
@@ -388,6 +368,26 @@ object LinkGraph {
     ranks.select(col("host"), col("rank").as("rank_scaled"))
   }
 
+  /** The ORACLED host-authority leg (`llm_host_rank`): PageRank over
+    * the host graph in EXACT fixed-point arithmetic.
+    *
+    * Definition (mirrored verbatim by the DuckDB oracle):
+    * N = |hosts touching a distinct edge|, base = Scale div N,
+    * teleport = (15 × base) div 100, r₀(v) = base, and for each of
+    * the 5 iterations
+    *   r(v) = teleport + (85 × Σ_{(u,v)∈E} (r(u) div outdeg(u))) div 100.
+    * Truncating integer division throughout; dangling hosts (in-links
+    * only) contribute nothing — their mass decays, the standard
+    * power-iteration-without-dangling-redistribution variant. Total
+    * mass stays ≤ Scale, so 85 × inflow ≤ 8.5e13 — overflow headroom
+    * ~10⁵ on longs.
+    *
+    * Per iteration: `rankStep` above — the corpus-sized edge table
+    * never re-shuffles; iterations chain LAZILY with a checkpoint
+    * every `RankCkptEvery` steps bounding the plan (r21 — the former
+    * per-iteration eager checkpoint cost one driver job barrier per
+    * step for a host-sized vector), and only the node COUNT ever
+    * reaches the driver. */
   def hostRank(spark: SparkSession, dir: String): DataFrame =
     hostRankWithN(spark, dir)._1
 

@@ -20,11 +20,13 @@ import org.apache.spark.sql.functions._
   * filters, Adam7 interlace; zlib inflate is in the JDK), GIF87a/89a
   * (a full LZW decoder —
   * variable-width codes, KwKwK, 4096-entry dictionary — palette
-  * mapping and interlaced first frames), and baseline JPEG (huffman
+  * mapping and interlaced first frames), and JPEG: one marker walk
+  * and one bit reader (`decodeJpeg`) for baseline SOF0 (huffman
   * entropy decode, dequant, IDCT — grayscale, 4:4:4 and the
-  * subsampled 4:2:0/4:2:2/4:4:0 layouts, restart intervals) AND
-  * progressive JPEG (SOF2 multi-scan spectral selection + successive
-  * approximation; see `decodeJpegProgUnsafe`) — header parse →
+  * subsampled 4:2:0/4:2:2/4:4:0 layouts, restart intervals) and
+  * progressive SOF2 (multi-scan spectral selection + successive
+  * approximation), with scan components resolved through the ids
+  * the SOF declares — header parse →
   * pixels/samples → the feature pipeline. What remains codec-bound
   * (MP3, H.264 — real DSP/codec territory) falls back to the
   * clearly-marked deterministic STUB `stubDecode`, preserving the
@@ -756,50 +758,116 @@ object Multimodal {
     def value(len: Int, code: Int): Int = vals(valPtr(len) + code - minCode(len))
   }
 
-  /** Baseline JPEG (SOF0) decode, pure JVM: marker walk (0xFF fill
-    * bytes skipped, standalone TEM/RSTn markers handled length-less),
-    * DQT/DHT/SOF0/DRI/SOS parse, MSB-first entropy decode with 0xFF00
-    * unstuffing and restart-marker bit-reader resets, per-MCU
-    * interleaved block order with arbitrary sampling factors (4:2:0,
-    * 4:2:2, 4:4:0, 4:4:4 — Y must be the full-resolution component,
-    * true of every real-world subsampled JPEG), per-block DC
-    * prediction + AC run-length, dequantization, a separable
-    * double-precision IDCT, level shift. Output is the Y channel
-    * (JPEG's Y IS the luma raster — chroma blocks are entropy-decoded
-    * to keep bit position, then discarded, so subsampling support is
-    * MCU geometry, not an upsampler). Scope: 8-bit baseline
-    * sequential here; progressive (SOF2) streams dispatch to
-    * `decodeJpegProgUnsafe`; corrupt entropy data
-    * (DC size > 11 / AC size > 10 — the spec limits) returns None and
-    * takes the stub path. The IDCT is the textbook O(8·8·8) separable
-    * form — correctness-first; a production deployment swaps a SIMD
-    * codec behind the same dispatch. */
-  private[graft] def decodeJpeg(b: Array[Byte]): Option[GrayRaster] =
-    try {
-      if (jpegSofMarker(b) == 0xc2) decodeJpegProgUnsafe(b)
-      else decodeJpegUnsafe(b)
-    } catch { case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None }
+  /** `JpegBits.dcDiff`'s corruption result: a real DC difference is
+    * below 2^11 in magnitude. */
+  private final val JpegBad = Int.MinValue
 
-  /** Header pre-scan: the frame's SOFn marker byte (0xc0 baseline,
-    * 0xc2 progressive, ...), or -1 if none before SOS/EOI/corruption.
-    * Walks segment lengths only — no entropy decode. */
-  private def jpegSofMarker(b: Array[Byte]): Int = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return -1
-    var i = 2
-    while (i + 3 < b.length) {
-      if ((b(i) & 0xff) != 0xff) return -1
-      while (i + 1 < b.length && (b(i + 1) & 0xff) == 0xff) i += 1
-      if (i + 3 >= b.length) return -1
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9 || m == 0xda) return -1
-      if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { i += 2 }
-      else {
-        if ((m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 && m != 0xcc)
-          return m
-        i += 2 + (((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff))
+  /** Reader of JPEG entropy-coded data (spec F.2.2.5): MSB-first bits
+    * with 0xFF00 unstuffing; any other marker ends the data, and reads
+    * past the end return -1. It also holds the per-block steps both
+    * frame kinds share (a huffman symbol, a DC difference, an AC
+    * run/size symbol) and the RSTn resync. */
+  private final class JpegBits(b: Array[Byte]) {
+    var pos = 0
+    private var buf = 0; private var cnt = 0; private var eos = false
+    /** The last `acSym`: its zero run, and its extended value, which
+      * is 0 for an EOB or ZRL symbol (size 0). */
+    var run = 0; var value = 0
+
+    def seek(p: Int): Unit = { pos = p; buf = 0; cnt = 0; eos = false }
+
+    private def fill(): Unit =
+      while (cnt <= 24 && !eos) {
+        if (pos >= b.length) eos = true
+        else {
+          val v = b(pos) & 0xff
+          if (v != 0xff) { buf |= v << (24 - cnt); cnt += 8; pos += 1 }
+          else if (pos + 1 < b.length && b(pos + 1) == 0) {
+            buf |= 0xff << (24 - cnt); cnt += 8; pos += 2
+          } else eos = true // EOI or another marker
+        }
       }
+
+    def bit(): Int = {
+      fill(); if (cnt <= 0) return -1
+      val v = buf >>> 31
+      buf <<= 1; cnt -= 1
+      v
     }
-    -1
+
+    def bits(n: Int): Int = {
+      var v = 0; var k = 0
+      while (k < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; k += 1 }
+      v
+    }
+
+    /** One huffman symbol; -1 for a missing table, no code within 16
+      * bits, or the end of the data. */
+    def huff(t: JpegHuff): Int = {
+      if (t == null) return -1
+      var code = 0; var l = 1
+      while (l <= 16) {
+        val x = bit(); if (x < 0) return -1
+        code = (code << 1) | x
+        if (t.maxCode(l) >= 0 && code <= t.maxCode(l) && code >= t.minCode(l))
+          return t.value(l, code)
+        l += 1
+      }
+      -1
+    }
+
+    private def extend(v: Int, s: Int): Int = if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
+
+    /** A DC difference (size <= 11, spec F.1.2.1), or `JpegBad`. */
+    def dcDiff(t: JpegHuff): Int = {
+      val s = huff(t)
+      if (s < 0 || s > 11) JpegBad
+      else if (s == 0) 0
+      else { val v = bits(s); if (v < 0) JpegBad else extend(v, s) }
+    }
+
+    /** An AC run/size symbol (size <= 10, spec F.1.2.2.1) into `run`
+      * and `value`; false on corruption. */
+    def acSym(t: JpegHuff): Boolean = {
+      val rs = huff(t)
+      if (rs < 0 || (rs & 15) > 10) return false
+      run = rs >> 4
+      val s = rs & 15
+      if (s == 0) { value = 0; return true }
+      val v = bits(s)
+      value = if (v < 0) 0 else extend(v, s)
+      v >= 0
+    }
+
+    /** RSTn resync (spec E.2.4): drop the buffered padding bits and
+      * step over the next RST marker, which must be RST(n mod 8). All
+      * entropy bytes of the interval are already in the bit buffer, so
+      * the skip loop normally advances 0 bytes — it only tolerates
+      * optional 0xFF fill before the marker. */
+    def restart(n: Int): Boolean = {
+      buf = 0; cnt = 0; eos = false
+      while (pos + 1 < b.length && !((b(pos) & 0xff) == 0xff &&
+          (b(pos + 1) & 0xff) >= 0xd0 && (b(pos + 1) & 0xff) <= 0xd7)) pos += 1
+      if (pos + 1 >= b.length || (b(pos + 1) & 0xff) != 0xd0 + (n & 7)) return false
+      pos += 2
+      true
+    }
+
+    /** The first marker at or after `from` (0xFF, then a byte that is
+      * not stuffing, fill or RSTn), or -1: where a scan's data ends. */
+    def markerAfter(from: Int): Int = {
+      var p = from
+      while (p + 1 < b.length) {
+        if ((b(p) & 0xff) == 0xff) {
+          val nx = b(p + 1) & 0xff
+          if (nx == 0x00) p += 2
+          else if (nx == 0xff) p += 1
+          else if (nx >= 0xd0 && nx <= 0xd7) p += 2
+          else return p
+        } else p += 1
+      }
+      -1
+    }
   }
 
   private val idctCos: Array[Double] =
@@ -842,224 +910,47 @@ object Multimodal {
     }
   }
 
-  private def decodeJpegUnsafe(b: Array[Byte]): Option[GrayRaster] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var i = 2
-    val quant = new Array[Array[Int]](4)
-    val huffDc = new Array[JpegHuff](4); val huffAc = new Array[JpegHuff](4)
-    var w = 0; var h = 0
-    var nComp = 0
-    val compQ = new Array[Int](4) // per component: quant table id
-    val compH = new Array[Int](4); val compV = new Array[Int](4)
-    var ri = 0 // restart interval in MCUs (0 = none)
-    var sosAt = -1
-    val compDcT = new Array[Int](4); val compAcT = new Array[Int](4)
-    while (sosAt < 0) {
-      if ((b(i) & 0xff) != 0xff) return None
-      // spec B.1.1.2: any number of 0xFF fill bytes may precede a
-      // marker byte — skip them instead of misreading 0xFF as a marker
-      while ((b(i + 1) & 0xff) == 0xff) i += 1
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9) return None // EOI before SOS
-      if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
-        i += 2 // TEM / stray RSTn: standalone markers, no length field
-      } else {
-      val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-      val seg = i + 4
-      m match {
-        case 0xdb => // DQT: one or more tables
-          var p = seg
-          while (p < i + 2 + len) {
-            val pq = (b(p) & 0xf0) >> 4; val tq = b(p) & 0x0f
-            if (pq != 0 || tq > 3) return None // 8-bit tables only
-            quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
-            p += 65
-          }
-        case 0xc0 => // SOF0 baseline
-          if ((b(seg) & 0xff) != 8) return None // 8-bit precision
-          h = ((b(seg + 1) & 0xff) << 8) | (b(seg + 2) & 0xff)
-          w = ((b(seg + 3) & 0xff) << 8) | (b(seg + 4) & 0xff)
-          nComp = b(seg + 5) & 0xff
-          if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3) ||
-            w.toLong * h > PngMaxRaw) return None
-          for (c <- 0 until nComp) {
-            val o = seg + 6 + c * 3
-            val hv = b(o + 1) & 0xff
-            compH(c) = (hv >> 4) & 0x0f; compV(c) = hv & 0x0f
-            if (compH(c) < 1 || compH(c) > 4 ||
-              compV(c) < 1 || compV(c) > 4) return None
-            compQ(c) = b(o + 2) & 0x0f
-          }
-        case 0xc4 => // DHT: one or more tables
-          var p = seg
-          while (p < i + 2 + len) {
-            val tc = (b(p) & 0xf0) >> 4; val th = b(p) & 0x0f
-            if (tc > 1 || th > 3) return None
-            val counts = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
-            val n = counts.sum
-            val vals = Array.tabulate(n)(k => b(p + 17 + k) & 0xff)
-            val t = new JpegHuff(counts, vals)
-            if (tc == 0) huffDc(th) = t else huffAc(th) = t
-            p += 17 + n
-          }
-        case 0xc2 => return None // progressive: unsupported
-        case 0xdd => // DRI: restart interval in MCUs
-          if (len != 4) return None
-          ri = ((b(seg) & 0xff) << 8) | (b(seg + 1) & 0xff)
-        case 0xda => // SOS
-          val ns = b(seg) & 0xff
-          if (ns != nComp) return None
-          for (c <- 0 until ns) {
-            compDcT(c) = (b(seg + 2 + c * 2) & 0xf0) >> 4
-            compAcT(c) = b(seg + 2 + c * 2) & 0x0f
-          }
-          sosAt = i + 2 + len
-        case _ => () // APPn/COM/etc: skip
-      }
-      if (sosAt < 0) i += 2 + len
-      }
-    }
-    if (w == 0 || nComp == 0) return None
-    for (c <- 0 until nComp)
-      if (quant(compQ(c)) == null || huffDc(compDcT(c)) == null ||
-        huffAc(compAcT(c)) == null) return None
-    // spec A.2.3: a single-component scan is never interleaved — its
-    // block layout ignores the declared sampling factors
-    if (nComp == 1) { compH(0) = 1; compV(0) = 1 }
-    val hmax = (0 until nComp).map(compH).max
-    val vmax = (0 until nComp).map(compV).max
-    // Y must be the full-resolution component (every real-world
-    // subsampled JPEG subsamples chroma, not luma) — the luma raster
-    // then needs no upsampling, only MCU block placement
-    if (compH(0) != hmax || compV(0) != vmax) return None
-    if ((0 until nComp).map(c => compH(c) * compV(c)).sum > 10)
-      return None // B.2.3: at most 10 data units per MCU
-
-    // --- entropy-coded segment: MSB-first bit reader with unstuffing
-    var bp = sosAt; var bitBuf = 0; var bitCnt = 0; var eos = false
-    def fill(): Unit = {
-      while (bitCnt <= 24 && !eos) {
-        if (bp >= b.length) { eos = true }
-        else {
-          val v = b(bp) & 0xff
-          if (v == 0xff) {
-            val nx = if (bp + 1 < b.length) b(bp + 1) & 0xff else 0xd9
-            if (nx == 0x00) { bitBuf |= 0xff << (24 - bitCnt); bitCnt += 8; bp += 2 }
-            else { eos = true } // EOI or another marker
-          } else { bitBuf |= v << (24 - bitCnt); bitCnt += 8; bp += 1 }
-        }
-      }
-    }
-    def bit(): Int = {
-      fill(); if (bitCnt <= 0) return -1
-      val v = (bitBuf >>> 31) & 1
-      bitBuf <<= 1; bitCnt -= 1
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var k = 0
-      while (k < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; k += 1 }
-      v
-    }
-    def decodeHuff(t: JpegHuff): Int = {
-      var code = 0
-      var l = 1
-      while (l <= 16) {
-        val x = bit(); if (x < 0) return -1
-        code = (code << 1) | x
-        if (t.maxCode(l) >= 0 && code <= t.maxCode(l) && code >= t.minCode(l))
-          return t.value(l, code)
-        l += 1
-      }
-      -1
-    }
-    def extend(v: Int, s: Int): Int = if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-
-    val y = new Array[Byte](w * h)
-    val dcPred = new Array[Int](4)
-    val coef = new Array[Double](64)
-    val tmp = new Array[Double](64)
-
-    // RSTn handling: drop buffered (padding) bits, byte-align on the
-    // expected marker, reset the DC predictors (spec E.2.4). All
-    // entropy bytes of the interval are already consumed into the bit
-    // buffer, so the skip loop normally advances 0 bytes — it only
-    // tolerates optional 0xFF fill before the marker.
-    def restart(n: Int): Boolean = {
-      bitBuf = 0; bitCnt = 0; eos = false
-      while (bp + 1 < b.length &&
-        !((b(bp) & 0xff) == 0xff && (b(bp + 1) & 0xff) >= 0xd0 &&
-          (b(bp + 1) & 0xff) <= 0xd7)) bp += 1
-      if (bp + 1 >= b.length) return false
-      if ((b(bp + 1) & 0xff) != 0xd0 + (n & 7)) return false
-      bp += 2
-      java.util.Arrays.fill(dcPred, 0)
-      true
-    }
-
-    // one entropy-coded data unit for component c; IDCT + placement
-    // only for luma (ox0/oy0 = the block's top-left pixel)
-    def decodeBlock(c: Int, ox0: Int, oy0: Int): Boolean = {
-      java.util.Arrays.fill(coef, 0.0)
-      val q = quant(compQ(c))
-      val s0 = decodeHuff(huffDc(compDcT(c)))
-      if (s0 < 0 || s0 > 11) return false // spec F.1.2.1: DC size <= 11
-      val d0 = if (s0 == 0) 0 else { val r = bits(s0); if (r < 0) return false; extend(r, s0) }
-      dcPred(c) += d0
-      coef(0) = dcPred(c).toDouble * q(0)
-      var k = 1
-      var done = false
-      while (!done && k < 64) {
-        val rs = decodeHuff(huffAc(compAcT(c))); if (rs < 0) return false
-        val r = rs >> 4; val s = rs & 15
-        if (s == 0) { if (r == 15) k += 16 else done = true }
-        else {
-          if (s > 10) return false // spec F.1.2.2.1: AC size <= 10
-          k += r
-          if (k > 63) return false
-          val v = bits(s); if (v < 0) return false
-          coef(JpegZigzag(k)) = extend(v, s).toDouble * q(k)
-          k += 1
-        }
-      }
-      if (c == 0) idctPlace(coef, tmp, y, w, h, ox0, oy0) // luma only
-      true
-    }
-
-    // interleaved MCU order (spec A.2.3): within an MCU each
-    // component contributes compH(c)×compV(c) blocks in raster order;
-    // luma is full-resolution (checked above), so its block (bx, by)
-    // of MCU (mx, my) lands at pixel ((mx·hmax+bx)·8, (my·vmax+by)·8)
-    val mcX = (w + 8 * hmax - 1) / (8 * hmax)
-    val mcY = (h + 8 * vmax - 1) / (8 * vmax)
-    var mcu = 0
-    var my = 0
-    while (my < mcY) {
-      var mx = 0
-      while (mx < mcX) {
-        if (ri > 0 && mcu > 0 && mcu % ri == 0 &&
-          !restart((mcu / ri - 1) & 7)) return None
-        var c = 0
-        while (c < nComp) {
-          var by = 0
-          while (by < compV(c)) {
-            var bx = 0
-            while (bx < compH(c)) {
-              if (!decodeBlock(c, (mx * hmax + bx) * 8, (my * vmax + by) * 8))
-                return None
-              bx += 1
-            }
-            by += 1
-          }
-          c += 1
-        }
-        mcu += 1
-        mx += 1
-      }
-      my += 1
-    }
-    Some(GrayRaster(w, h, y))
-  }
+  /** JPEG decode, pure JVM, for the two frame kinds of ITU-T T.81 this
+    * code supports: SOF0 baseline sequential and SOF2 progressive.
+    *
+    * One marker walk serves both. It skips 0xFF fill bytes, steps over
+    * standalone TEM/RSTn markers, bounds-checks every segment and
+    * parses each DQT/DHT/DRI once (progressive streams may redefine
+    * them between scans). The first SOF0 or SOF2 sets the frame; any
+    * other SOFn, or a second frame header, returns None. Each SOS
+    * component selector is resolved through the ids the SOF declared
+    * (an undeclared id, or one a scan names twice, returns None), so
+    * frames labelled 0,1,2 or 'R','G','B' decode like 1,2,3. One
+    * `JpegBits` reader then drives the scan decoder of the frame's
+    * kind:
+    *  - baseline decodes block by block in MCU-interleaved order with
+    *    arbitrary sampling factors (4:2:0, 4:2:2, 4:4:0, 4:4:4), DC
+    *    prediction + AC run-length, and dequantizes and IDCTs each
+    *    luma block at once. It needs no EOI and holds no coefficient
+    *    buffer, so it takes rasters up to `PngMaxRaw` pixels;
+    *  - progressive (spec G) buffers the luma coefficients across
+    *    scans (hence `JpegProgMaxPixels`): DC first scans
+    *    (point-transformed diffs, interleaved or single-component), DC
+    *    refinement (one raw bit per block), AC first scans (per-band
+    *    run-length with EOBn runs) and AC refinement (correction bits
+    *    over nonzero history, G.1.2.3). Single-component chroma AC
+    *    scans are skipped to the next marker — legal because scans
+    *    are marker-delimited and DC prediction resets per scan, so no
+    *    decoder state crosses a skipped scan. After EOI, one dequantize
+    *    + IDCT pass over the unpadded luma grid emits the raster.
+    * Restart intervals reset the DC predictors, the EOB run and the
+    * bit reader in every scan kind. Y must be the full-resolution
+    * component (true of every real-world subsampled JPEG). Output is
+    * the Y channel (JPEG's Y IS the luma raster — chroma blocks are
+    * entropy-decoded to keep bit position, then discarded, so
+    * subsampling support is MCU geometry, not an upsampler). Corrupt
+    * entropy data (DC size > 11 / AC size > 10 — the spec limits)
+    * returns None and takes the stub path. The IDCT is the textbook
+    * O(8·8·8) separable form — correctness-first; a production
+    * deployment swaps a SIMD codec behind the same dispatch. */
+  private[graft] def decodeJpeg(b: Array[Byte]): Option[GrayRaster] =
+    try decodeJpegUnsafe(b)
+    catch { case _: ArrayIndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
   /** Progressive-raster cap: unlike baseline's block-streaming
     * decode, progressive must buffer every luma coefficient across
@@ -1068,268 +959,73 @@ object Multimodal {
     * larger progressive claims take the stub path. */
   private val JpegProgMaxPixels = 1 << 22
 
-  /** Progressive JPEG (SOF2) decode, pure JVM. Multi-scan spectral
-    * selection + successive approximation (spec G): DC first scans
-    * (point-transformed diffs, interleaved or single-component), DC
-    * refinement scans (one raw bit per block), AC first scans
-    * (per-band run-length with EOBn end-of-band runs), and AC
-    * refinement scans (correction bits over nonzero history, G.1.2.3)
-    * — restart intervals reset predictors, EOB run and the bit reader
-    * in every scan kind. Only LUMA coefficients are stored (output is
-    * the Y raster): chroma blocks in interleaved DC scans are
-    * entropy-consumed to keep bit position, and single-component
-    * chroma scans are skipped wholesale by jumping to the next marker
-    * — legal because every scan is marker-delimited and DC prediction
-    * resets per scan, so no decoder state crosses a skipped scan.
-    * Tables (DHT/DQT/DRI) may be redefined between scans. After EOI,
-    * one dequantize + IDCT pass over the unpadded luma grid emits the
-    * raster. Same spec limits as baseline: DC size <= 11, AC size
-    * <= 10, first-scan AC bands single-component only. */
-  private def decodeJpegProgUnsafe(b: Array[Byte]): Option[GrayRaster] = {
+  private def decodeJpegUnsafe(b: Array[Byte]): Option[GrayRaster] = {
     if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var i = 2
-    val quant = new Array[Array[Int]](4)
-    val huffDc = new Array[JpegHuff](4); val huffAc = new Array[JpegHuff](4)
+    // tables by their 4-bit selector: DQT/DHT define ids 0-3 only, so
+    // a selector above 3 finds null and the decode rejects
+    val quant = new Array[Array[Int]](16)
+    val huffDc = new Array[JpegHuff](16); val huffAc = new Array[JpegHuff](16)
+    var ri = 0 // restart interval in MCUs (0 = none)
+    // the frame: its SOF marker, then per component the id scans name
+    // it by, its quant table and its sampling factors
+    var sof = 0
     var w = 0; var h = 0; var nComp = 0
-    val compQ = new Array[Int](4)
+    val compId = Array.fill(4)(-1); val compQ = new Array[Int](4)
     val compH = new Array[Int](4); val compV = new Array[Int](4)
-    var ri = 0
-    var hmax = 1; var vmax = 1
-    var mcX = 0; var mcY = 0
-    var bwPad = 0 // padded luma block grid (interleaved MCU layout)
-    var bw = 0; var bh = 0 // unpadded luma block grid
-    var yCoef: Array[Int] = null // bwPad * (mcY*compV(0)) blocks × 64, natural order
+    var hmax = 1; var vmax = 1; var mcX = 0; var mcY = 0
+    var bwPad = 0 // luma blocks per row of the MCU-padded grid
+    var yCoef: Array[Int] = null // progressive: padded luma grid × 64, natural order
     val dcPred = new Array[Int](4)
     var eobrun = 0
+    val bits = new JpegBits(b)
+    val coef = new Array[Double](64); val tmp = new Array[Double](64)
 
-    // --- bit reader over one scan's entropy-coded segment ---
-    var bp = 0; var bitBuf = 0; var bitCnt = 0; var eos = false
-    def fill(): Unit = {
-      while (bitCnt <= 24 && !eos) {
-        if (bp >= b.length) { eos = true }
-        else {
-          val v = b(bp) & 0xff
-          if (v == 0xff) {
-            val nx = if (bp + 1 < b.length) b(bp + 1) & 0xff else 0xd9
-            if (nx == 0x00) { bitBuf |= 0xff << (24 - bitCnt); bitCnt += 8; bp += 2 }
-            else { eos = true }
-          } else { bitBuf |= v << (24 - bitCnt); bitCnt += 8; bp += 1 }
-        }
+    // every block of one scan, in order, with the restart checks:
+    // MCU-interleaved (spec A.2.3) when the scan has several
+    // components, else the one component's unpadded block grid.
+    // `block(si, lb)` gets the scan slot and, for component 0, the
+    // luma block's index in the padded grid: luma is full-resolution,
+    // so its block (bx, by) of MCU (mx, my) is (mx·hmax+bx, my·vmax+by)
+    def scanBlocks(comps: Array[Int], block: (Int, Int) => Boolean): Boolean = {
+      var n = 0 // MCUs, or blocks of a one-component scan
+      def restartOk(): Boolean = ri == 0 || n == 0 || n % ri != 0 || {
+        java.util.Arrays.fill(dcPred, 0); eobrun = 0
+        bits.restart(n / ri - 1)
       }
-    }
-    def bit(): Int = {
-      fill(); if (bitCnt <= 0) return -1
-      val v = (bitBuf >>> 31) & 1
-      bitBuf <<= 1; bitCnt -= 1
-      v
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var k = 0
-      while (k < n) { val x = bit(); if (x < 0) return -1; v = (v << 1) | x; k += 1 }
-      v
-    }
-    def decodeHuff(t: JpegHuff): Int = {
-      if (t == null) return -1
-      var code = 0; var l = 1
-      while (l <= 16) {
-        val x = bit(); if (x < 0) return -1
-        code = (code << 1) | x
-        if (t.maxCode(l) >= 0 && code <= t.maxCode(l) && code >= t.minCode(l))
-          return t.value(l, code)
-        l += 1
-      }
-      -1
-    }
-    def extend(v: Int, s: Int): Int =
-      if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-    def restart(n: Int): Boolean = {
-      bitBuf = 0; bitCnt = 0; eos = false
-      while (bp + 1 < b.length &&
-        !((b(bp) & 0xff) == 0xff && (b(bp + 1) & 0xff) >= 0xd0 &&
-          (b(bp + 1) & 0xff) <= 0xd7)) bp += 1
-      if (bp + 1 >= b.length) return false
-      if ((b(bp + 1) & 0xff) != 0xd0 + (n & 7)) return false
-      bp += 2
-      java.util.Arrays.fill(dcPred, 0)
-      eobrun = 0
-      true
-    }
-    // position of the next marker at/after `from` (0xFF + non-fill,
-    // non-stuffed, non-RST byte) — scan delimiter
-    def nextMarker(from: Int): Int = {
-      var p = from
-      while (p + 1 < b.length) {
-        if ((b(p) & 0xff) == 0xff) {
-          val nx = b(p + 1) & 0xff
-          if (nx == 0x00) p += 2
-          else if (nx == 0xff) p += 1
-          else if (nx >= 0xd0 && nx <= 0xd7) p += 2
-          else return p
-        } else p += 1
-      }
-      -1
-    }
-
-    // --- one scan's entropy decode; returns false on corruption ---
-    // scanComp: component indices in scan order; Ss/Se/Ah/Al per header
-    def decodeScan(scanComp: Array[Int], scanDcT: Array[Int], scanAcT: Array[Int],
-        ss: Int, se: Int, ah: Int, al: Int, dataStart: Int): Boolean = {
-      bp = dataStart; bitBuf = 0; bitCnt = 0; eos = false
-      java.util.Arrays.fill(dcPred, 0)
-      eobrun = 0
-      val ns = scanComp.length
-      // luma coefficient slot for padded-grid block (bxP, byP)
-      def yBlock(bxP: Int, byP: Int): Int = (byP * bwPad + bxP) * 64
-
-      if (ss == 0) { // DC scan (first or refinement)
-        def dcBlock(si: Int, c: Int, coefBase: Int): Boolean = {
-          if (ah == 0) {
-            val t = huffDc(scanDcT(si))
-            val s0 = decodeHuff(t); if (s0 < 0 || s0 > 11) return false
-            val d0 = if (s0 == 0) 0 else { val r = bits(s0); if (r < 0) return false; extend(r, s0) }
-            dcPred(c) += d0
-            if (c == 0) yCoef(coefBase) = dcPred(c) << al
-          } else {
-            val x = bit(); if (x < 0) return false
-            if (c == 0 && x == 1) yCoef(coefBase) |= 1 << al
-          }
-          true
-        }
-        if (ns > 1) { // interleaved MCU order
-          var mcu = 0
-          var my = 0
-          while (my < mcY) {
-            var mx = 0
-            while (mx < mcX) {
-              if (ri > 0 && mcu > 0 && mcu % ri == 0 && !restart(mcu / ri - 1)) return false
-              var si = 0
-              while (si < ns) {
-                val c = scanComp(si)
-                var by = 0
-                while (by < compV(c)) {
-                  var bx = 0
-                  while (bx < compH(c)) {
-                    val base = if (c == 0) yBlock(mx * compH(0) + bx, my * compV(0) + by) else 0
-                    if (!dcBlock(si, c, base)) return false
-                    bx += 1
-                  }
-                  by += 1
+      if (comps.length > 1) {
+        var my = 0
+        while (my < mcY) {
+          var mx = 0
+          while (mx < mcX) {
+            if (!restartOk()) return false
+            var si = 0
+            while (si < comps.length) {
+              val c = comps(si)
+              var by = 0
+              while (by < compV(c)) {
+                var bx = 0
+                while (bx < compH(c)) {
+                  if (!block(si, (my * vmax + by) * bwPad + mx * hmax + bx)) return false
+                  bx += 1
                 }
-                si += 1
+                by += 1
               }
-              mcu += 1
-              mx += 1
+              si += 1
             }
-            my += 1
+            n += 1; mx += 1
           }
-        } else { // single-component DC scan: unpadded component grid
-          val c = scanComp(0)
-          val cw = (w * compH(c) + hmax - 1) / hmax
-          val chh = (h * compV(c) + vmax - 1) / vmax
-          val cbw = (cw + 7) / 8; val cbh = (chh + 7) / 8
-          var blk = 0
-          var by = 0
-          while (by < cbh) {
-            var bx = 0
-            while (bx < cbw) {
-              if (ri > 0 && blk > 0 && blk % ri == 0 && !restart(blk / ri - 1)) return false
-              val base = if (c == 0) yBlock(bx, by) else 0
-              if (!dcBlock(0, c, base)) return false
-              blk += 1
-              bx += 1
-            }
-            by += 1
-          }
+          my += 1
         }
-      } else { // AC scan: single luma component (chroma is skipped upstream)
-        if (ns != 1 || scanComp(0) != 0) return false
-        val t = huffAc(scanAcT(0))
-        val p1 = 1 << al; val m1 = -1 << al
-        var blk = 0
+      } else {
+        val c = comps(0)
+        val cbw = ((w * compH(c) + hmax - 1) / hmax + 7) / 8
+        val cbh = ((h * compV(c) + vmax - 1) / vmax + 7) / 8
         var by = 0
-        while (by < bh) {
+        while (by < cbh) {
           var bx = 0
-          while (bx < bw) {
-            if (ri > 0 && blk > 0 && blk % ri == 0 && !restart(blk / ri - 1)) return false
-            val base = yBlock(bx, by)
-            if (ah == 0) { // first scan for this band
-              if (eobrun > 0) eobrun -= 1
-              else {
-                var k = ss
-                var done = false
-                while (!done && k <= se) {
-                  val rs = decodeHuff(t); if (rs < 0) return false
-                  val r = rs >> 4; val s = rs & 15
-                  if (s == 0) {
-                    if (r == 15) k += 16
-                    else {
-                      eobrun = (1 << r) - 1
-                      if (r > 0) { val x = bits(r); if (x < 0) return false; eobrun += x }
-                      done = true
-                    }
-                  } else {
-                    if (s > 10) return false
-                    k += r
-                    if (k > se) return false
-                    val v = bits(s); if (v < 0) return false
-                    yCoef(base + JpegZigzag(k)) = extend(v, s) << al
-                    k += 1
-                  }
-                }
-              }
-            } else { // refinement scan (G.1.2.3)
-              var k = ss
-              if (eobrun == 0) {
-                var done = false
-                while (!done && k <= se) {
-                  val rs = decodeHuff(t); if (rs < 0) return false
-                  var r = rs >> 4; val s = rs & 15
-                  var newval = 0
-                  if (s == 0) {
-                    if (r < 15) {
-                      eobrun = 1 << r
-                      if (r > 0) { val x = bits(r); if (x < 0) return false; eobrun += x }
-                      done = true
-                    }
-                    // r == 15: run of 16 zero-history positions
-                  } else {
-                    if (s != 1) return false // refinement sends size-1 only
-                    val sb = bit(); if (sb < 0) return false
-                    newval = if (sb == 1) p1 else m1
-                  }
-                  if (!done) {
-                    var placed = false
-                    while (!placed && k <= se) {
-                      val z = base + JpegZigzag(k)
-                      if (yCoef(z) != 0) {
-                        val cb = bit(); if (cb < 0) return false
-                        if (cb == 1 && (yCoef(z) & p1) == 0)
-                          yCoef(z) += (if (yCoef(z) >= 0) p1 else m1)
-                      } else {
-                        if (r == 0) { if (newval != 0) yCoef(z) = newval; placed = true }
-                        else r -= 1
-                      }
-                      k += 1
-                    }
-                    if (!placed && s != 0) return false
-                  }
-                }
-              }
-              if (eobrun > 0) { // correction bits through the band tail
-                while (k <= se) {
-                  val z = base + JpegZigzag(k)
-                  if (yCoef(z) != 0) {
-                    val cb = bit(); if (cb < 0) return false
-                    if (cb == 1 && (yCoef(z) & p1) == 0)
-                      yCoef(z) += (if (yCoef(z) >= 0) p1 else m1)
-                  }
-                  k += 1
-                }
-                eobrun -= 1
-              }
-            }
-            blk += 1
-            bx += 1
+          while (bx < cbw) {
+            if (!restartOk() || !block(0, by * bwPad + bx)) return false
+            n += 1; bx += 1
           }
           by += 1
         }
@@ -1337,137 +1033,238 @@ object Multimodal {
       true
     }
 
-    // --- marker loop over the whole stream ---
-    var done = false
-    while (!done) {
+    // baseline: each block is decoded, dequantized and (luma only)
+    // IDCT-placed at once
+    def sequential(comps: Array[Int], dcT: Array[JpegHuff], acT: Array[JpegHuff]): Option[GrayRaster] = {
+      if ((0 until nComp).exists(c => quant(compQ(c)) == null)) return None
+      val y = new Array[Byte](w * h)
+      def block(si: Int, lb: Int): Boolean = {
+        val c = comps(si); val q = quant(compQ(c))
+        java.util.Arrays.fill(coef, 0.0)
+        val d = bits.dcDiff(dcT(si)); if (d == JpegBad) return false
+        dcPred(c) += d
+        coef(0) = dcPred(c).toDouble * q(0)
+        var k = 1
+        while (k < 64) {
+          if (!bits.acSym(acT(si))) return false
+          if (bits.value == 0) k += (if (bits.run == 15) 16 else 64) // ZRL / EOB
+          else {
+            k += bits.run
+            if (k > 63) return false
+            coef(JpegZigzag(k)) = bits.value.toDouble * q(k)
+            k += 1
+          }
+        }
+        if (c == 0) idctPlace(coef, tmp, y, w, h, lb % bwPad * 8, lb / bwPad * 8)
+        true
+      }
+      if (scanBlocks(comps, block)) Some(GrayRaster(w, h, y)) else None
+    }
+
+    // one progressive scan (spec G) into yCoef; false on corruption
+    def progressive(comps: Array[Int], dcT: Array[JpegHuff], t: JpegHuff,
+        ss: Int, se: Int, ah: Int, al: Int): Boolean = {
+      java.util.Arrays.fill(dcPred, 0); eobrun = 0
+      val p1 = 1 << al; val m1 = -1 << al
+      // a nonzero-history coefficient's correction bit (G.1.2.3)
+      def correct(z: Int): Boolean = {
+        val cb = bits.bit()
+        if (cb == 1 && (yCoef(z) & p1) == 0) yCoef(z) += (if (yCoef(z) >= 0) p1 else m1)
+        cb >= 0
+      }
+      // first scan of band ss..se for one block
+      def acFirst(base: Int): Boolean = {
+        if (eobrun > 0) { eobrun -= 1; return true }
+        var k = ss
+        while (k <= se) {
+          if (!bits.acSym(t)) return false
+          val r = bits.run
+          if (bits.value != 0) {
+            k += r
+            if (k > se) return false
+            yCoef(base + JpegZigzag(k)) = bits.value << al
+            k += 1
+          } else if (r == 15) k += 16
+          else { // EOBn: this block and the next eobrun end the band
+            eobrun = (1 << r) - 1
+            if (r > 0) { val x = bits.bits(r); if (x < 0) return false; eobrun += x }
+            return true
+          }
+        }
+        true
+      }
+      // refinement of band ss..se for one block (G.1.2.3)
+      def acRefine(base: Int): Boolean = {
+        var k = ss
+        if (eobrun == 0) {
+          var done = false
+          while (!done && k <= se) {
+            if (!bits.acSym(t)) return false
+            var r = bits.run; val v = bits.value
+            if (v == 0 && r < 15) {
+              eobrun = 1 << r
+              if (r > 0) { val x = bits.bits(r); if (x < 0) return false; eobrun += x }
+              done = true
+            } else { // v (±1, or 0 for a ZRL) lands on the (r+1)-th zero-history slot
+              if (math.abs(v) > 1) return false // refinement sends size-1 only
+              var placed = false
+              while (!placed && k <= se) {
+                val z = base + JpegZigzag(k)
+                if (yCoef(z) != 0) { if (!correct(z)) return false }
+                else if (r == 0) { if (v != 0) yCoef(z) = v << al; placed = true }
+                else r -= 1
+                k += 1
+              }
+              if (!placed && v != 0) return false
+            }
+          }
+        }
+        if (eobrun > 0) { // correction bits through the band tail
+          while (k <= se) {
+            val z = base + JpegZigzag(k)
+            if (yCoef(z) != 0 && !correct(z)) return false
+            k += 1
+          }
+          eobrun -= 1
+        }
+        true
+      }
+      if (ss > 0) scanBlocks(comps, (_, lb) => if (ah == 0) acFirst(lb * 64) else acRefine(lb * 64))
+      else scanBlocks(comps, (si, lb) => {
+        val c = comps(si)
+        if (ah == 0) { // DC first: point-transformed difference
+          val d = bits.dcDiff(dcT(si))
+          if (d != JpegBad) { dcPred(c) += d; if (c == 0) yCoef(lb * 64) = dcPred(c) << al }
+          d != JpegBad
+        } else { // DC refinement: one raw bit per block
+          val x = bits.bit()
+          if (c == 0 && x == 1) yCoef(lb * 64) |= p1
+          x >= 0
+        }
+      })
+    }
+
+    // progressive, after EOI: dequantize + IDCT the unpadded luma grid
+    def progressiveRaster(): Option[GrayRaster] = {
+      val q = quant(compQ(0)); if (q == null) return None
+      val y = new Array[Byte](w * h)
+      for (by <- 0 until (h + 7) / 8; bx <- 0 until (w + 7) / 8) {
+        val base = (by * bwPad + bx) * 64
+        var k = 0
+        while (k < 64) { // q is in zigzag order (DQT layout); yCoef in natural order
+          coef(JpegZigzag(k)) = yCoef(base + JpegZigzag(k)).toDouble * q(k)
+          k += 1
+        }
+        idctPlace(coef, tmp, y, w, h, bx * 8, by * 8)
+      }
+      Some(GrayRaster(w, h, y))
+    }
+
+    var i = 2
+    while (true) {
       if (i + 1 >= b.length || (b(i) & 0xff) != 0xff) return None
+      // spec B.1.1.2: any number of 0xFF fill bytes may precede a
+      // marker byte — skip them instead of misreading 0xFF as a marker
       while (i + 1 < b.length && (b(i + 1) & 0xff) == 0xff) i += 1
       if (i + 1 >= b.length) return None
       val m = b(i + 1) & 0xff
-      if (m == 0xd9) { done = true } // EOI
-      else if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) { i += 2 }
+      if (m == 0xd9) return if (sof == 0xc2) progressiveRaster() else None // EOI
+      if (m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i += 2 // TEM / stray RSTn: no length field
       else {
         if (i + 3 >= b.length) return None
         val len = ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-        val seg = i + 4
-        if (i + 2 + len > b.length) return None
+        val seg = i + 4; val end = i + 2 + len
+        if (end > b.length) return None
+        i = end
         m match {
-          case 0xdb =>
+          case 0xdb => // DQT: one or more tables, 8-bit only
             var p = seg
-            while (p < i + 2 + len) {
+            while (p < end) {
               val pq = (b(p) & 0xf0) >> 4; val tq = b(p) & 0x0f
               if (pq != 0 || tq > 3) return None
               quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
               p += 65
             }
-          case 0xc4 =>
+          case 0xc4 => // DHT: one or more tables
             var p = seg
-            while (p < i + 2 + len) {
+            while (p < end) {
               val tc = (b(p) & 0xf0) >> 4; val th = b(p) & 0x0f
               if (tc > 1 || th > 3) return None
               val counts = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
               val n = counts.sum
-              val vals = Array.tabulate(n)(k => b(p + 17 + k) & 0xff)
-              val tt = new JpegHuff(counts, vals)
-              if (tc == 0) huffDc(th) = tt else huffAc(th) = tt
+              val t = new JpegHuff(counts, Array.tabulate(n)(k => b(p + 17 + k) & 0xff))
+              if (tc == 0) huffDc(th) = t else huffAc(th) = t
               p += 17 + n
             }
-          case 0xdd =>
+          case 0xdd => // DRI: restart interval in MCUs
             if (len != 4) return None
             ri = ((b(seg) & 0xff) << 8) | (b(seg + 1) & 0xff)
-          case 0xc2 =>
-            if (yCoef != null) return None // one frame only
-            if ((b(seg) & 0xff) != 8) return None
+          case 0xc0 | 0xc2 if sof == 0 => // SOF0 baseline / SOF2 progressive
+            if ((b(seg) & 0xff) != 8) return None // 8-bit precision
             h = ((b(seg + 1) & 0xff) << 8) | (b(seg + 2) & 0xff)
             w = ((b(seg + 3) & 0xff) << 8) | (b(seg + 4) & 0xff)
             nComp = b(seg + 5) & 0xff
             if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3) ||
-              w.toLong * h > JpegProgMaxPixels) return None
-            for (c <- 0 until nComp) {
+              w.toLong * h > (if (m == 0xc0) PngMaxRaw else JpegProgMaxPixels)) return None
+            var c = 0
+            while (c < nComp) {
               val o = seg + 6 + c * 3
-              val hv = b(o + 1) & 0xff
-              compH(c) = (hv >> 4) & 0x0f; compV(c) = hv & 0x0f
-              if (compH(c) < 1 || compH(c) > 4 ||
-                compV(c) < 1 || compV(c) > 4) return None
+              compId(c) = b(o) & 0xff
+              compH(c) = (b(o + 1) & 0xf0) >> 4; compV(c) = b(o + 1) & 0x0f
+              if (compH(c) < 1 || compH(c) > 4 || compV(c) < 1 || compV(c) > 4) return None
               compQ(c) = b(o + 2) & 0x0f
+              c += 1
             }
+            // spec A.2.3: a single-component scan is never interleaved —
+            // its block layout ignores the declared sampling factors
             if (nComp == 1) { compH(0) = 1; compV(0) = 1 }
-            hmax = (0 until nComp).map(compH).max
-            vmax = (0 until nComp).map(compV).max
-            if (compH(0) != hmax || compV(0) != vmax) return None
-            if ((0 until nComp).map(c => compH(c) * compV(c)).sum > 10) return None
+            hmax = compH.max; vmax = compV.max
+            // Y must be the full-resolution component (every real-world
+            // subsampled JPEG subsamples chroma, not luma) — the luma
+            // raster then needs no upsampling, only block placement;
+            // B.2.3: at most 10 data units per MCU
+            if (compH(0) != hmax || compV(0) != vmax ||
+              (0 until nComp).map(c => compH(c) * compV(c)).sum > 10) return None
             mcX = (w + 8 * hmax - 1) / (8 * hmax)
             mcY = (h + 8 * vmax - 1) / (8 * vmax)
-            bwPad = mcX * compH(0)
-            bw = ((w + 7) / 8); bh = ((h + 7) / 8)
-            yCoef = new Array[Int](bwPad * (mcY * compV(0)) * 64)
-          case 0xc0 | 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
-               0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-            return None // only one SOF, and it must be SOF2 here
-          case 0xda =>
-            if (yCoef == null) return None // SOS before SOF2
+            bwPad = mcX * hmax
+            if (m == 0xc2) yCoef = new Array[Int](bwPad * mcY * vmax * 64)
+            sof = m
+          case _ if m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc =>
+            return None // another SOFn: one frame, of the two kinds above
+          case 0xda => // SOS
+            if (sof == 0) return None
             val ns = b(seg) & 0xff
-            if (ns < 1 || ns > 4) return None
-            val scanComp = new Array[Int](ns)
-            val scanDcT = new Array[Int](ns); val scanAcT = new Array[Int](ns)
-            for (si <- 0 until ns) {
-              val cid = b(seg + 1 + si * 2) & 0xff
-              // component ids are 1-based in our encoder and libjpeg;
-              // match against SOF order (ids are frame-scoped labels)
-              val c = (0 until nComp).indexWhere(k => k + 1 == cid)
-              if (c < 0) return None
-              scanComp(si) = c
-              scanDcT(si) = (b(seg + 2 + si * 2) & 0xf0) >> 4
-              scanAcT(si) = b(seg + 2 + si * 2) & 0x0f
+            if (ns < 1 || ns > nComp || (sof == 0xc0 && ns != nComp)) return None
+            val comps = new Array[Int](ns)
+            val dcT = new Array[JpegHuff](ns); val acT = new Array[JpegHuff](ns)
+            var si = 0
+            while (si < ns) {
+              // the selector names a component by the id its SOF declared
+              val c = compId.indexOf(b(seg + 1 + si * 2) & 0xff)
+              if (c < 0 || comps.take(si).contains(c)) return None
+              comps(si) = c
+              dcT(si) = huffDc((b(seg + 2 + si * 2) & 0xf0) >> 4)
+              acT(si) = huffAc(b(seg + 2 + si * 2) & 0x0f)
+              si += 1
             }
+            bits.seek(end)
+            if (sof == 0xc0) return sequential(comps, dcT, acT)
             val ss = b(seg + 1 + ns * 2) & 0xff
             val se = b(seg + 2 + ns * 2) & 0xff
-            val aa = b(seg + 3 + ns * 2) & 0xff
-            val ah = (aa >> 4) & 0x0f; val al = aa & 0x0f
-            if (ss > 63 || se > 63 || se < ss) return None
-            if (ss > 0 && ns != 1) return None // AC scans are single-component
-            val dataStart = i + 2 + len
-            if (ss > 0 && scanComp(0) != 0) {
-              // chroma AC scan: skip wholesale to the next marker
-              val nm = nextMarker(dataStart)
-              if (nm < 0) return None
-              i = nm
-            } else {
-              if (!decodeScan(scanComp, scanDcT, scanAcT, ss, se, ah, al, dataStart))
-                return None
-              val nm = nextMarker(bp)
-              i = if (nm < 0) { // EOI possibly swallowed at buffer end
-                return None
-              } else nm
-            }
-          case _ => ()
+            val ah = (b(seg + 3 + ns * 2) & 0xf0) >> 4; val al = b(seg + 3 + ns * 2) & 0x0f
+            if (ss > 63 || se > 63 || se < ss || (ss > 0 && ns != 1)) return None
+            // AC scans are single-component; a chroma one is skipped
+            // whole, to the marker that ends it
+            if ((ss == 0 || comps(0) == 0) &&
+              !progressive(comps, dcT, acT(0), ss, se, ah, al)) return None
+            i = bits.markerAfter(bits.pos)
+            if (i < 0) return None
+          case _ => () // APPn/COM/etc: skip
         }
-        if (m != 0xda) i += 2 + len
       }
     }
-    if (yCoef == null || quant(compQ(0)) == null) return None
-    // --- dequantize + IDCT the unpadded luma grid ---
-    val q = quant(compQ(0))
-    val y = new Array[Byte](w * h)
-    val coef = new Array[Double](64)
-    val tmp = new Array[Double](64)
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        val base = (by * bwPad + bx) * 64
-        var k = 0
-        while (k < 64) {
-          // q is in zigzag order (DQT layout); yCoef in natural order
-          coef(JpegZigzag(k)) = yCoef(base + JpegZigzag(k)).toDouble * q(k)
-          k += 1
-        }
-        idctPlace(coef, tmp, y, w, h, bx * 8, by * 8)
-        bx += 1
-      }
-      by += 1
-    }
-    Some(GrayRaster(w, h, y))
+    None
   }
 
   /** Dispatch on magic bytes: each decoder rejects wrong magic in
@@ -1634,17 +1431,6 @@ object Multimodal {
       .as[MediaRow]
   }
 
-  /** The registry's oracled leg THROUGH the typed decode pipeline
-    * (`llm_media_frames`): every document's payload ridden through
-    * the executor-side `decodeFeatures` pass, emitting the
-    * deterministic decode metadata (byte count, frame count at the
-    * default stride). Text payloads take the stub path by design, so
-    * the DuckDB oracle states the same quantities from `documents`
-    * directly (`octet_length`, ceil-division) — what the oracle
-    * checks is that the REAL mapPartitions pipeline executed over
-    * every row with the declared batching semantics, not a shortcut
-    * projection. The feature vectors themselves are pinned by
-    * MultimodalSpec (stub identity + real-decoder dispatch). */
   /** The ORACLED leg through a REAL decoder (`llm_media_decode`):
     * every document gets a deterministic 32×1 PGM payload whose
     * pixels are the ASCII bytes of `md5(text)` (hex chars are ASCII,
@@ -1831,6 +1617,17 @@ object Multimodal {
       }.toDF("doc_id", "brand", "duration_ms", "n_tracks", "w", "h")
   }
 
+  /** The registry's oracled leg THROUGH the typed decode pipeline
+    * (`llm_media_frames`): every document's payload ridden through
+    * the executor-side `decodeFeatures` pass, emitting the
+    * deterministic decode metadata (byte count, frame count at the
+    * default stride). Text payloads take the stub path by design, so
+    * the DuckDB oracle states the same quantities from `documents`
+    * directly (`octet_length`, ceil-division) — what the oracle
+    * checks is that the REAL mapPartitions pipeline executed over
+    * every row with the declared batching semantics, not a shortcut
+    * projection. The feature vectors themselves are pinned by
+    * MultimodalSpec (stub identity + real-decoder dispatch). */
   def mediaFrames(spark: SparkSession, dir: String): DataFrame =
     decodeFeatures(mediaFromDocuments(spark, dir))
       .select(col("doc_id"), col("n_bytes"),

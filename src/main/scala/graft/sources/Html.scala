@@ -223,33 +223,6 @@ object Html {
   private def isAsciiWs(c: Char): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == 11.toChar || c == '\f' || c == '\r'
 
-  /** Extract outlink CANDIDATES — the `href`/`src` attribute values —
-    * from `html`, in document order. This is the discover step of the
-    * crawl loop (fetch → extract → discover → frontier): the values
-    * come back RAW (relative, protocol-relative, fragment-only …) for
-    * `Urls.resolve(base, ref)` to absolutize against the page URL.
-    *
-    * Same bounded single-pass discipline as `extractText` (one
-    * forward scan, O(1) state, hostile markup degrades to dropped
-    * values, never quadratic time), with the one addition text
-    * extraction doesn't need: the in-tag walk is QUOTE-AWARE, because
-    * a `>` inside a quoted attribute value does not close the tag.
-    * Rules:
-    *
-    *  - `href`/`src` values of ANY tag count (a crawler wants links,
-    *    stylesheets, scripts, frames alike); attribute names are
-    *    case-insensitive;
-    *  - values may be double-quoted, single-quoted, or unquoted
-    *    (unquoted ends at ASCII whitespace or `>`); an UNTERMINATED
-    *    quote swallows the tail and yields nothing — it cannot be a
-    *    well-formed link;
-    *  - character references in values decode (`&amp;` between query
-    *    params) under the same bounded rules as `extractText`;
-    *  - leading/trailing ASCII whitespace strips (the URL parser's
-    *    own pre-step) and empty values drop;
-    *  - comment, CDATA, `<script>`, `<style>` spans contribute
-    *    nothing — markup inside them is code or commentary, not
-    *    links. */
   /** Walk one tag's interior from `start` (the `<`), quote-aware —
     * a `>` inside a quoted attribute value does not close the tag
     * (the HTML5 tokenizer's attribute-value states; quotes only bind
@@ -313,6 +286,33 @@ object Html {
     if (g < n) g + 1 else n
   }
 
+  /** Extract outlink CANDIDATES — the `href`/`src` attribute values —
+    * from `html`, in document order. This is the discover step of the
+    * crawl loop (fetch → extract → discover → frontier): the values
+    * come back RAW (relative, protocol-relative, fragment-only …) for
+    * `Urls.resolve(base, ref)` to absolutize against the page URL.
+    *
+    * Same bounded single-pass discipline as `extractText` (one
+    * forward scan, O(1) state, hostile markup degrades to dropped
+    * values, never quadratic time), with the one addition text
+    * extraction doesn't need: the in-tag walk is QUOTE-AWARE, because
+    * a `>` inside a quoted attribute value does not close the tag.
+    * Rules:
+    *
+    *  - `href`/`src` values of ANY tag count (a crawler wants links,
+    *    stylesheets, scripts, frames alike); attribute names are
+    *    case-insensitive;
+    *  - values may be double-quoted, single-quoted, or unquoted
+    *    (unquoted ends at ASCII whitespace or `>`); an UNTERMINATED
+    *    quote swallows the tail and yields nothing — it cannot be a
+    *    well-formed link;
+    *  - character references in values decode (`&amp;` between query
+    *    params) under the same bounded rules as `extractText`;
+    *  - leading/trailing ASCII whitespace strips (the URL parser's
+    *    own pre-step) and empty values drop;
+    *  - comment, CDATA, `<script>`, `<style>` spans contribute
+    *    nothing — markup inside them is code or commentary, not
+    *    links. */
   def extractLinks(html: String): Seq[String] = {
     if (html == null) return Nil
     val n = html.length

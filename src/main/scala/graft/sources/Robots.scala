@@ -53,14 +53,6 @@ object Robots {
     * figure while still bounding the parse work identically. */
   private val MaxRobotsChars = 512 * 1024
 
-  /** Parse a robots.txt body into rule groups. Tolerant the way the
-    * protocol demands: blank/comment lines, unknown directives and
-    * malformed lines are skipped, never fatal — a hostile or
-    * truncated robots.txt yields fewer rules, not a crash; input
-    * past `MaxRobotsChars` is not read, and the cut lands on the last
-    * line BOUNDARY before the cap — a mid-line cut would synthesize a
-    * spurious shorter rule (`Disallow: /private` clipped to
-    * `Disallow: /p`) that disallows far more than the author wrote. */
   /** Cap + line-boundary truncation shared by `parse` and
     * `sitemaps`. A boundary is '\n' OR a lone '\r' — `linesIterator`
     * splits on both, and a CR-only robots.txt (old-Mac line endings
@@ -76,6 +68,14 @@ object Robots {
       case nl => txt.substring(0, nl)
     }
 
+  /** Parse a robots.txt body into rule groups. Tolerant the way the
+    * protocol demands: blank/comment lines, unknown directives and
+    * malformed lines are skipped, never fatal — a hostile or
+    * truncated robots.txt yields fewer rules, not a crash; input
+    * past `MaxRobotsChars` is not read, and the cut lands on the last
+    * line BOUNDARY before the cap — a mid-line cut would synthesize a
+    * spurious shorter rule (`Disallow: /private` clipped to
+    * `Disallow: /p`) that disallows far more than the author wrote. */
   def parse(txt: String): Seq[Group] = {
     val bounded = boundedText(txt)
     val out = Vector.newBuilder[Group]

@@ -603,19 +603,6 @@ object Warc {
     }
   }
 
-  /** The ORACLED registry leg (`llm_warc_extract`): every document
-    * becomes a two-record WARC segment — a `request` record with a
-    * constant payload and a `response` record whose payload is the
-    * document text (UTF-8) and whose `WARC-Target-URI` derives from
-    * (source, doc_id) — concatenated and pushed through the REAL
-    * record walk. The query re-emits, per document, what a crawl
-    * ingest actually extracts: record count, the response's target
-    * URI, its Content-Length (= UTF-8 byte length of the text) and
-    * the payload round-tripped back to a string. DuckDB recomputes
-    * all of it from `documents` directly — a row matches only if
-    * header parsing, the length-driven payload skip ACROSS the
-    * request record, and the terminator checks all executed
-    * correctly, distributed, per row. */
   /** The ORACLED leg through the FULL crawl-ingest path
     * (`llm_warc_http`): gzip member → record walk → HTTP split —
     * exactly what a Common Crawl ingest runs per record. Every
@@ -667,21 +654,6 @@ object Warc {
       }.toDF("doc_id", "status_line", "content_type", "body_bytes", "body_text")
   }
 
-  /** The ORACLED leg through the PRODUCTION-TRUE entity path
-    * (`llm_warc_entity`): charset-encode → Content-Encoding gzip →
-    * chunked transfer framing → HTTP message → WARC record → gzip
-    * member → member walk → `httpSplit` → `decodeEntity` (unchunk +
-    * content-gunzip) → `bodyToText` (BOM/charset/UTF-8-sniff) —
-    * exactly what a real Common Crawl response record needs that
-    * `llm_warc_http`'s identity-encoded body did not exercise. Three
-    * charset regimes by `doc_id % 3`: declared UTF-8, declared
-    * ISO-8859-1, and UNDECLARED UTF-8 (the strict-sniff path); the
-    * body carries a non-ASCII marker (« é ») so a wrong decode is a
-    * wrong STRING, not a silent coincidence. The body is split into
-    * multiple chunks (framing must reassemble across boundaries).
-    * DuckDB restates the recovered text and charset label per case
-    * — a row matches only if every stage of the chain executed
-    * correctly, distributed, per row. */
   /** Synthesis side shared by the entity-path oracle legs
     * (`llm_warc_entity`, `llm_crawl_extract`): wrap `raw` body bytes
     * as a chunked-transfer + gzip-content-encoded HTTP 200 response
@@ -731,6 +703,21 @@ object Warc {
       plain <- decodeEntity(hdrs, body)
     } yield (hdrs.getOrElse("content-type", "!"), bodyToText(hdrs, plain))
 
+  /** The ORACLED leg through the PRODUCTION-TRUE entity path
+    * (`llm_warc_entity`): charset-encode → Content-Encoding gzip →
+    * chunked transfer framing → HTTP message → WARC record → gzip
+    * member → member walk → `httpSplit` → `decodeEntity` (unchunk +
+    * content-gunzip) → `bodyToText` (BOM/charset/UTF-8-sniff) —
+    * exactly what a real Common Crawl response record needs that
+    * `llm_warc_http`'s identity-encoded body did not exercise. Three
+    * charset regimes by `doc_id % 3`: declared UTF-8, declared
+    * ISO-8859-1, and UNDECLARED UTF-8 (the strict-sniff path); the
+    * body carries a non-ASCII marker (« é ») so a wrong decode is a
+    * wrong STRING, not a silent coincidence. The body is split into
+    * multiple chunks (framing must reassemble across boundaries).
+    * DuckDB restates the recovered text and charset label per case
+    * — a row matches only if every stage of the chain executed
+    * correctly, distributed, per row. */
   def warcEntity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // widened (r21): the documents table arrives as one parquet split,
@@ -773,6 +760,19 @@ object Warc {
       }.toDF("doc_id", "charset_case", "content_type", "recovered_text")
   }
 
+  /** The ORACLED registry leg (`llm_warc_extract`): every document
+    * becomes a two-record WARC segment — a `request` record with a
+    * constant payload and a `response` record whose payload is the
+    * document text (UTF-8) and whose `WARC-Target-URI` derives from
+    * (source, doc_id) — concatenated and pushed through the REAL
+    * record walk. The query re-emits, per document, what a crawl
+    * ingest actually extracts: record count, the response's target
+    * URI, its Content-Length (= UTF-8 byte length of the text) and
+    * the payload round-tripped back to a string. DuckDB recomputes
+    * all of it from `documents` directly — a row matches only if
+    * header parsing, the length-driven payload skip ACROSS the
+    * request record, and the terminator checks all executed
+    * correctly, distributed, per row. */
   def warcExtract(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // NOT widened (r21 A/B): the uncompressed record walk is 0.04

@@ -651,10 +651,13 @@ class MultimodalSpec extends AnyFunSuite {
     * interleaved block order, spec A.2.3 — plane c is sized
     * ceil(w·hc/hmax) × ceil(h·vc/vmax)) and an optional restart
     * interval (DRI segment + byte-aligned RSTn every `dri` MCUs with
-    * DC predictor resets, spec E.2.4). */
+    * DC predictor resets, spec E.2.4). `ids` are the component ids
+    * SOF declares and SOS names (default 1..nc). */
   private def jpegG(w: Int, h: Int, planes: Seq[Array[Byte]],
-      samp: Seq[(Int, Int)], q: Array[Int], dri: Int = 0): Array[Byte] = {
+      samp: Seq[(Int, Int)], q: Array[Int], dri: Int = 0,
+      ids: Seq[Int] = null): Array[Byte] = {
     val nc = planes.size
+    val idsF = if (ids == null) 1 to nc else ids
     val hmax = samp.map(_._1).max; val vmax = samp.map(_._2).max
     val cw = Array.tabulate(nc)(c => (w * samp(c)._1 + hmax - 1) / hmax)
     val chh = Array.tabulate(nc)(c => (h * samp(c)._2 + vmax - 1) / vmax)
@@ -734,12 +737,12 @@ class MultimodalSpec extends AnyFunSuite {
     bb.write(0xff); bb.write(0xd8)
     seg(0xdb, Array(0.toByte) ++ q.map(_.toByte))
     seg(0xc0, Array(8, (h >> 8) & 0xff, h & 0xff, (w >> 8) & 0xff, w & 0xff, nc).map(_.toByte)
-      ++ (1 to nc).flatMap(c => Seq(c.toByte,
-        ((samp(c - 1)._1 << 4) | samp(c - 1)._2).toByte, 0.toByte)))
+      ++ (0 until nc).flatMap(c => Seq(idsF(c).toByte,
+        ((samp(c)._1 << 4) | samp(c)._2).toByte, 0.toByte)))
     if (dri > 0) seg(0xdd, Array(((dri >> 8) & 0xff).toByte, (dri & 0xff).toByte))
     seg(0xc4, Array(0x00.toByte) ++ dcSeg)
     seg(0xc4, Array(0x10.toByte) ++ acSeg)
-    seg(0xda, Array(nc.toByte) ++ (1 to nc).flatMap(c => Seq(c.toByte, 0x00.toByte))
+    seg(0xda, Array(nc.toByte) ++ idsF.flatMap(id => Seq(id.toByte, 0x00.toByte))
       ++ Array(0.toByte, 63.toByte, 0.toByte))
     bb.write(bits.out.toByteArray)
     bb.write(0xff); bb.write(0xd9)
@@ -753,10 +756,11 @@ class MultimodalSpec extends AnyFunSuite {
     * Y AC refinement per band at Al=0 (correction bits emitted in
     * exactly the order figure G.7's walk consumes them), DC
     * refinement (one raw bit per block). Each scan carries its own
-    * DHT; per-block EOBs (run 1). */
+    * DHT; per-block EOBs (run 1). `ids` as in `jpegG`. */
   private def jpegProg(w: Int, h: Int, planes: Seq[Array[Byte]], q: Array[Int],
-      samp: Seq[(Int, Int)] = null): Array[Byte] = {
+      samp: Seq[(Int, Int)] = null, ids: Seq[Int] = null): Array[Byte] = {
     val nc = planes.size
+    val idsF = if (ids == null) 1 to nc else ids
     val sampF = if (samp == null) Seq.fill(nc)((1, 1)) else samp
     val hmax = sampF.map(_._1).max; val vmax = sampF.map(_._2).max
     val mcX = (w + 8 * hmax - 1) / (8 * hmax)
@@ -895,8 +899,8 @@ class MultimodalSpec extends AnyFunSuite {
     bb.write(0xff); bb.write(0xd8)
     seg(0xdb, Array(0.toByte) ++ q.map(_.toByte))
     seg(0xc2, Array(8, (h >> 8) & 0xff, h & 0xff, (w >> 8) & 0xff, w & 0xff, nc).map(_.toByte)
-      ++ (1 to nc).flatMap(c => Seq(c.toByte,
-        ((sampF(c - 1)._1 << 4) | sampF(c - 1)._2).toByte, 0.toByte)))
+      ++ (0 until nc).flatMap(c => Seq(idsF(c).toByte,
+        ((sampF(c)._1 << 4) | sampF(c)._2).toByte, 0.toByte)))
     def scan(run: Sink => Unit, comps: Seq[Int], ss: Int, se: Int,
         ah: Int, al: Int, tableClass: Int): Unit = {
       val census = new Census
@@ -909,7 +913,7 @@ class MultimodalSpec extends AnyFunSuite {
           e
         } else Map.empty
       seg(0xda, Array(comps.size.toByte) ++
-        comps.flatMap(c => Seq((c + 1).toByte, 0x00.toByte)) ++
+        comps.flatMap(c => Seq(idsF(c).toByte, 0x00.toByte)) ++
         Array(ss.toByte, se.toByte, (((ah << 4) | al)).toByte))
       val bits = new JBits
       run(new Emit(enc, bits))
@@ -1143,6 +1147,85 @@ class MultimodalSpec extends AnyFunSuite {
       assert(maxErr <= 4 * qv,
         s"trial $trial (w=$w h=$h q=$qv nc=${planes.size}): error $maxErr > ${4 * qv}")
     }
+  }
+
+  test("JPEG decode: scan selectors resolve through the SOF component ids") {
+    // A scan names its components by the ids the SOF declared, not by
+    // position: 0-based ids and Adobe's 'R','G','B' must decode like
+    // the usual 1,2,3 on both frame kinds. A selector naming an id the
+    // SOF never declared, or one the scan already named, rejects.
+    val rnd = new scala.util.Random(5150)
+    val w = 21; val h = 13
+    val q = Array.fill(64)(2)
+    val yP = Array.fill(w * h)(rnd.nextInt(256).toByte)
+    val cb = Array.fill(w * h)((128 + rnd.nextInt(64) - 32).toByte)
+    val cr = Array.fill(w * h)((128 + rnd.nextInt(64) - 32).toByte)
+    for (prog <- Seq(false, true); planes <- Seq(Seq(yP), Seq(yP, cb, cr))) {
+      def enc(ids: Seq[Int]): Array[Byte] =
+        if (prog) jpegProg(w, h, planes, q, ids = ids)
+        else jpegG(w, h, planes, planes.map(_ => (1, 1)), q, ids = ids)
+      val kind = s"${if (prog) "progressive" else "baseline"} nc=${planes.size}"
+      val ok = enc(null)
+      val want = Multimodal.decodeJpeg(ok).get
+      for (ids <- Seq(Seq(0, 1, 2), Seq('R', 'G', 'B').map(_.toInt))) {
+        val Some(g) = Multimodal.decodeJpeg(enc(ids.take(planes.size)))
+        assert(g.pixels.sameElements(want.pixels), s"$kind ids $ids drifted")
+      }
+      // first SOS: FF DA, length(2), Ns, then (selector, tables) pairs
+      val sos = ok.indexOfSlice(Seq(0xff.toByte, 0xda.toByte))
+      val undeclared = ok.clone(); undeclared(sos + 5) = 9.toByte
+      assert(Multimodal.decodeJpeg(undeclared).isEmpty, s"$kind undeclared id")
+      if (planes.size == 3) {
+        val twice = ok.clone(); twice(sos + 7) = 1.toByte
+        assert(Multimodal.decodeJpeg(twice).isEmpty, s"$kind repeated id")
+      }
+    }
+  }
+
+  private def md5Hex(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytes).map(b => f"${b & 0xff}%02x").mkString
+
+  /** One line per corrupt variant of `ok`: every truncation, then 3
+    * seeded single-byte replacements at every offset, each with its
+    * decode result (None, or w×h and the md5 of the pixels). */
+  private def jpegCorpus(ok: Array[Byte], rnd: scala.util.Random): Seq[String] = {
+    def result(in: Array[Byte]): String = Multimodal.decodeJpeg(in) match {
+      case None => "None"
+      case Some(g) => s"${g.w}x${g.h} ${md5Hex(g.pixels)}"
+    }
+    (0 until ok.length).map(k => s"cut $k: ${result(ok.take(k))}") ++
+      (for (p <- 0 until ok.length; _ <- 1 to 3) yield {
+        val bad = ok.clone(); bad(p) = ((ok(p) & 0xff) + 1 + rnd.nextInt(255)).toByte
+        s"set $p=${bad(p) & 0xff}: ${result(bad)}"
+      })
+  }
+
+  test("JPEG decode: truncated and byte-corrupted streams never throw; results pinned") {
+    // Pins the decoder's behaviour on corrupt input, stream by stream:
+    // one md5 over the result lines of `jpegCorpus`. Any decoder change
+    // that turns one of these inputs into a different result (another
+    // raster, None for a raster, a raster for None) moves a digest.
+    val rnd = new scala.util.Random(1212)
+    def plane(n: Int) = Array.fill(n)(rnd.nextInt(256).toByte)
+    val s420 = Seq((2, 2), (1, 1), (1, 1))
+    val streams = Seq(
+      "baseline gray" -> jpeg(16, 16, Seq(plane(256)), Array.fill(64)(2)),
+      "baseline 4:2:0 DRI=3" -> jpegG(35, 19, Seq(plane(35 * 19), plane(18 * 10), plane(18 * 10)),
+        s420, Array.fill(64)(4), dri = 3),
+      "progressive 4:4:4" -> jpegProg(16, 16, Seq(plane(256), plane(256), plane(256)),
+        Array.fill(64)(2)),
+      "progressive 4:2:0" -> jpegProg(21, 13, Seq(plane(21 * 13), plane(11 * 7), plane(11 * 7)),
+        Array.fill(64)(2), samp = s420))
+    val want = Map(
+      "baseline gray" -> "3a83f8fbf348012de01f36157865be46",
+      "baseline 4:2:0 DRI=3" -> "481588ccc94be34dfb09a6a5b0cdcb3f",
+      "progressive 4:4:4" -> "19c2c5b3069fb6623bd463c5a3557e7a",
+      "progressive 4:2:0" -> "64f23d078f5aa8c7c73c89a9f25cff6b")
+    val got = streams.map { case (name, ok) =>
+      assert(Multimodal.decodeJpeg(ok).nonEmpty, s"$name must decode")
+      name -> md5Hex(jpegCorpus(ok, rnd).mkString("\n").getBytes("UTF-8"))
+    }.toMap
+    assert(got == want)
   }
 
   test("compressed decoders round-trip arbitrary rasters (generative)") {
@@ -1395,6 +1478,8 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.MediaRow(5L, gif(16, 16, Array.fill(256)(1.toByte), 2, 1,
         i => (i * 60, i * 60, i * 60)), "image/gif"),
       Multimodal.MediaRow(6L, jpeg(16, 16, Seq(flat), Array.fill(64)(1)),
+        "image/jpeg"),
+      Multimodal.MediaRow(7L, jpegProg(16, 16, Seq(flat), Array.fill(64)(1)),
         "image/jpeg")).toDS()
     val out = Multimodal.decodeFeatures(media).collect().map(f => f.doc_id -> f).toMap
     // image: one frame, 4x4 thumbnail of the decoded luma values
@@ -1409,9 +1494,10 @@ class MultimodalSpec extends AnyFunSuite {
     val frames = Multimodal.sampleFrames(blob, 4)
     assert(out(3L).n_frames == frames.length)
     assert(out(3L).features.sameElements(Multimodal.stubDecode(frames)))
-    // PNG/JPEG flat-130 rasters and a constant-60 GIF: real decode
-    // (n_frames == 1), thumbnails at the known constant values
-    for (id <- Seq(4L, 6L)) {
+    // PNG/JPEG (baseline and progressive) flat-130 rasters and a
+    // constant-60 GIF: real decode (n_frames == 1), thumbnails at the
+    // known constant values
+    for (id <- Seq(4L, 6L, 7L)) {
       assert(out(id).n_frames == 1, s"doc $id fell to the stub path")
       out(id).features.foreach(v => assert(math.abs(v - 130 / 255f) < 1e-3,
         s"doc $id thumbnail drifted: $v"))
