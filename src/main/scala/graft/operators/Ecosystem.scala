@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.operators.Ckpt.CkptOps
-import graft.plans.Kernels
+import graft.plans.{Kernels, Markov}
 import graft.sources.Tables
 
 /** The reference's ecosystem analytics re-expressed over the `events`
@@ -22,11 +22,13 @@ import graft.sources.Tables
   * computation runs where the data is.
   *
   * Scale notes: all aggregations are partial-agg friendly (no
-  * distinct-heavy wide keys); the Markov transition extraction is
-  * partitioned per user (no global sort — the reference's global
-  * event ordering, transition_matrix.py:36-46, would be a
-  * single-partition sort at 100 TB; keying by entity preserves the
-  * semantics per timeline and scales horizontally).
+  * distinct-heavy wide keys); the Markov transitions order events per
+  * user (no global sort — the reference's global event ordering,
+  * transition_matrix.py:36-46, would be a single-partition sort at
+  * 100 TB; keying by entity preserves the semantics per timeline and
+  * scales horizontally), and each scan split folds a user's events
+  * into one run before the per-user exchange, so no event row is
+  * shuffled.
   */
 object Ecosystem {
 
@@ -154,16 +156,32 @@ object Ecosystem {
       .groupBy(col("event_type"))
       .agg(hll_sketch_estimate(hll_sketch_agg(col("user_id"), 12)).as("n_users_approx"))
 
-  /** W1+A15 Markov transitions: per-user ordered event pairs via lead
-    * over a partitioned window, then pair counts and row-stochastic
-    * probabilities (transition_matrix.py:36-62). */
+  /** W1+A15 Markov transitions: pair counts of each user's events in
+    * (ts, event_id) order, then row-stochastic probabilities
+    * (transition_matrix.py:36-62). A null user_id is one user, ts and
+    * event_id sort nulls first, a pair counts when the next event_type
+    * is non-null, and a null current event_type gives a null
+    * cur_event: the rows of a `lead(event_type)` over
+    * `partitionBy(user_id).orderBy(ts, event_id)`.
+    *
+    * The events are not shuffled. Each scan split becomes one sorted
+    * run per user (`Markov.runs`, which buffers the split); the runs,
+    * about users × splits records, are exchanged on user_id; each task
+    * merges one user's runs at a time and counts adjacent pairs into
+    * one |S|×|S| table (`Markov.pairCounts`, which holds the runs of
+    * its shuffle partition in memory, about 21 bytes an event, and
+    * cannot spill them). */
   def transitions(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val pairs = Tables.events(spark, dir)
-      .withColumn("next_event", lead(col("event_type"), 1).over(w))
-      .filter(col("next_event").isNotNull)
-    pairs.groupBy(col("event_type").as("cur_event"), col("next_event"))
-      .agg(count(lit(1)).as("n"))
+    import spark.implicits._
+    Tables.events(spark, dir)
+      .select(Markov.Event.columns: _*)
+      .as[Markov.Event]
+      .mapPartitions(Markov.runs)
+      .repartition(col("user_id"))
+      .mapPartitions(Markov.pairCounts)
+      .toDF("cur_event", "next_event", "n")
+      .groupBy(col("cur_event"), col("next_event"))
+      .agg(sum(col("n")).as("n"))
       .withColumn("p", round(col("n") / sum(col("n")).over(Window.partitionBy(col("cur_event"))), 6))
   }
 

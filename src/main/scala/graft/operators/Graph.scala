@@ -122,9 +122,9 @@ object Graph {
 
   /** G4/G5: Tarjan SCC + DTMC state classification over the Markov
     * transition structure of event types (MarkovChainAnalysis.py:
-    * 24-161). The per-user transition extraction and pair-count
-    * aggregation are fully distributed (Ecosystem.transitions); only
-    * the |S|² matrix is collected for the structural analysis. The
+    * 24-161). The per-user run merge and pair count are fully
+    * distributed (Ecosystem.transitions); only the |S|² matrix is
+    * collected for the structural analysis. The
     * DuckDB oracle reproduces recurrence via recursive-CTE
     * reachability and the period via the same BFS-level cycle-GCD. */
   def markovClasses(spark: SparkSession, dir: String): DataFrame = {
@@ -147,7 +147,7 @@ object Graph {
     * and the pivot assembled driver-side: one distributed job total,
     * instead of a value-discovery job plus a pivot job over a tiny
     * frame (round-3 verdict nit). The distributed work — the
-    * lead-window transition extraction — stays in
+    * per-user run merge and pair count — stays in
     * `Ecosystem.transitions`; only the |S|² matrix crosses the
     * driver. Column order is the sorted successor set, deterministic
     * run-to-run. */

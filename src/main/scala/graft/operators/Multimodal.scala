@@ -1181,7 +1181,7 @@ object Multimodal {
             var p = seg
             while (p < end) {
               val pq = (b(p) & 0xf0) >> 4; val tq = b(p) & 0x0f
-              if (pq != 0 || tq > 3) return None
+              if (pq != 0 || tq > 3 || p + 65 > end) return None
               quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
               p += 65
             }
@@ -1189,9 +1189,10 @@ object Multimodal {
             var p = seg
             while (p < end) {
               val tc = (b(p) & 0xf0) >> 4; val th = b(p) & 0x0f
-              if (tc > 1 || th > 3) return None
+              if (tc > 1 || th > 3 || p + 17 > end) return None
               val counts = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
               val n = counts.sum
+              if (p + 17 + n > end) return None
               val t = new JpegHuff(counts, Array.tabulate(n)(k => b(p + 17 + k) & 0xff))
               if (tc == 0) huffDc(th) = t else huffAc(th) = t
               p += 17 + n
@@ -1204,6 +1205,7 @@ object Multimodal {
             h = ((b(seg + 1) & 0xff) << 8) | (b(seg + 2) & 0xff)
             w = ((b(seg + 3) & 0xff) << 8) | (b(seg + 4) & 0xff)
             nComp = b(seg + 5) & 0xff
+            if (seg + 6 + 3 * nComp > end) return None
             if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3) ||
               w.toLong * h > (if (m == 0xc0) PngMaxRaw else JpegProgMaxPixels)) return None
             var c = 0

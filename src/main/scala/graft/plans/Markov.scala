@@ -1,6 +1,10 @@
 package graft.plans
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{coalesce, col, lit, unix_micros, when}
 
 /** Markov-chain structural analysis in pure Scala, run driver-side on
   * a collected transition matrix (SURVEY §2.8 [D]: the state space is
@@ -16,6 +20,9 @@ import scala.collection.mutable
   *    state with the same BFS formula, which is representative-order
   *    independent (and equal across an SCC for true DTMC periods),
   *    so results don't depend on Tarjan's traversal order.
+  *
+  * The counts behind that matrix are built executor-side by the
+  * per-user run functions at the end of this object.
   */
 object Markov {
 
@@ -110,5 +117,152 @@ object Markov {
         else "recurrent-periodic"
       StateClass(states(s), recurrent, per, cls)
     }
+  }
+
+  // ---- per-user transition counts (Ecosystem.transitions) -------------
+  //
+  // The pair counts of each user's (ts, event_id)-ordered events, built
+  // without shuffling the events: `runs` turns a scan split into one
+  // record per user, those records are exchanged on user_id, and
+  // `pairCounts` merges each user's records and counts adjacent pairs.
+
+  /** One events row as `runs` reads it. A null user_id, ts or event_id
+    * arrives as 0 with its bit set in `nulls` (ts 1, event_id 2,
+    * user_id 4), so the row deserializes to primitives. `ts` is in
+    * micros. */
+  final case class Event(user_id: Long, ts: Long, event_id: Long, event_type: String, nulls: Int)
+
+  object Event {
+    /** The events table's columns as an `Event`. */
+    def columns: Seq[Column] = {
+      def nullBit(c: String, bit: Int) = when(col(c).isNull, bit).otherwise(0)
+      Seq(coalesce(col("user_id"), lit(0L)).as("user_id"),
+        coalesce(unix_micros(col("ts")), lit(0L)).as("ts"),
+        coalesce(col("event_id"), lit(0L)).as("event_id"), col("event_type"),
+        (nullBit("ts", 1) + nullBit("event_id", 2) + nullBit("user_id", 4)).as("nulls"))
+    }
+  }
+
+  /** Some of one user's events in (ts, event_id) order, nulls first.
+    * `state(i)` indexes `types` (-1: a null event_type) and `nulls(i)`
+    * holds event i's ts (1) and event_id (2) null bits. A null user_id
+    * (`None`) is one user. */
+  final case class Run(user_id: Option[Long], types: Array[String], state: Array[Int],
+                       ts: Array[Long], event_id: Array[Long], nulls: Array[Byte])
+
+  private final class RunBuilder {
+    val state = new mutable.ArrayBuilder.ofInt
+    val ts = new mutable.ArrayBuilder.ofLong
+    val eventId = new mutable.ArrayBuilder.ofLong
+    val nulls = new mutable.ArrayBuilder.ofByte
+    def run(user: Option[Long], types: Array[String]): Run =
+      sorted(Run(user, types, state.result(), ts.result(), eventId.result(), nulls.result()))
+  }
+
+  /** Step 1: the events of one scan split as one sorted `Run` per user.
+    * Buffers the split's events, about 21 bytes each. */
+  def runs(rows: Iterator[Event]): Iterator[Run] = {
+    val code = mutable.HashMap.empty[String, Int]
+    val byUser = mutable.LongMap.empty[RunBuilder]
+    var nullUser: Option[RunBuilder] = None
+    rows.foreach { e =>
+      val b =
+        if ((e.nulls & 4) == 0) byUser.getOrElseUpdate(e.user_id, new RunBuilder)
+        else nullUser.getOrElse { nullUser = Some(new RunBuilder); nullUser.get }
+      b.state += (if (e.event_type == null) -1 else code.getOrElseUpdate(e.event_type, code.size))
+      b.ts += e.ts
+      b.eventId += e.event_id
+      b.nulls += (e.nulls & 3).toByte
+    }
+    val types = new Array[String](code.size)
+    code.foreach { case (t, i) => types(i) = t }
+    byUser.iterator.map { case (u, b) => b.run(Some(u), types) } ++ nullUser.iterator.map(_.run(None, types))
+  }
+
+  /** `r` in (ts, event_id) order, nulls first; equal keys keep their
+    * order. A run already in order comes back as it is. */
+  private def sorted(r: Run): Run = {
+    def key(bit: Int, v: Array[Long], i: Int, j: Int): Int = {
+      val ni = (r.nulls(i) & bit) != 0
+      val nj = (r.nulls(j) & bit) != 0
+      if (ni || nj) java.lang.Boolean.compare(nj, ni) else java.lang.Long.compare(v(i), v(j))
+    }
+    def compare(i: Int, j: Int): Int = {
+      val c = key(1, r.ts, i, j)
+      if (c != 0) c else key(2, r.event_id, i, j)
+    }
+    val n = r.ts.length
+    var i = 1
+    while (i < n && compare(i - 1, i) <= 0) i += 1
+    if (i >= n) r
+    else {
+      // TimSort: a concatenation of sorted runs is merged, not re-sorted
+      val idx = Array.tabulate[Integer](n)(Integer.valueOf)
+      java.util.Arrays.sort(idx, (a: Integer, b: Integer) => compare(a, b))
+      r.copy(state = idx.map(r.state(_)), ts = idx.map(r.ts(_)),
+        event_id = idx.map(r.event_id(_)), nulls = idx.map(r.nulls(_)))
+    }
+  }
+
+  /** Step 3: one user's runs, from any splits in any order, as one
+    * sorted run over the union of their `types`. */
+  def merge(runs: Seq[Run]): Run =
+    if (runs.length == 1) runs.head
+    else {
+      val types = runs.flatMap(_.types).distinct.toArray
+      val code = types.zipWithIndex.toMap
+      def cat[A: ClassTag](f: Run => Array[A]): Array[A] = Array.concat(runs.map(f): _*)
+      val state = cat { r =>
+        val c = r.types.map(code)
+        r.state.map(s => if (s < 0) -1 else c(s))
+      }
+      sorted(Run(runs.head.user_id, types, state, cat(_.ts), cat(_.event_id), cat(_.nulls)))
+    }
+
+  /** Counts of adjacent (cur, next) event types over the ordered runs
+    * `add`ed to it: the |S|×|S| table of one task. A pair counts when
+    * next's event_type is non-null; cur's may be null. */
+  final class PairCounts {
+    private val code = mutable.HashMap.empty[String, Int]
+    private val names = mutable.ArrayBuffer.empty[String]
+    // counts(cur + 1)(next); row 0 is a null cur
+    private var counts = Array.ofDim[Long](1, 0)
+
+    private def codeOf(t: String): Int = code.getOrElseUpdate(t, {
+      names += t
+      val k = names.length
+      val old = counts
+      counts = Array.tabulate(k + 1, k)((i, j) => if (i < old.length && j < old(i).length) old(i)(j) else 0L)
+      k - 1
+    })
+
+    def add(r: Run): Unit = {
+      val c = r.types.map(codeOf)
+      var i = 1
+      while (i < r.state.length) {
+        val next = r.state(i)
+        if (next >= 0) {
+          val cur = r.state(i - 1)
+          counts(if (cur < 0) 0 else c(cur) + 1)(c(next)) += 1
+        }
+        i += 1
+      }
+    }
+
+    /** (cur_event, next_event, n) for each pair seen. */
+    def rows: Iterator[(String, String, Long)] =
+      for (i <- counts.indices.iterator; j <- names.indices.iterator if counts(i)(j) > 0)
+        yield (if (i == 0) null else names(i - 1), names(j), counts(i)(j))
+  }
+
+  /** Step 3: the pair counts of the users whose runs one task received.
+    * Holds those runs (the task's share of the events, as in step 1)
+    * and merges one user at a time. */
+  def pairCounts(runs: Iterator[Run]): Iterator[(String, String, Long)] = {
+    val byUser = mutable.HashMap.empty[Option[Long], mutable.ArrayBuffer[Run]]
+    runs.foreach(r => byUser.getOrElseUpdate(r.user_id, mutable.ArrayBuffer.empty) += r)
+    val counts = new PairCounts
+    byUser.valuesIterator.foreach(rs => counts.add(merge(rs.toSeq)))
+    counts.rows
   }
 }

@@ -16,6 +16,81 @@ class EcosystemSpec extends AnyFunSuite {
     }
   }
 
+  /** The formulation `transitions` replaced: `lead(event_type)` over
+    * each user's events in (ts, event_id) order. */
+  private def leadWindowTransitions(dir: String): Seq[String] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count, lead, lit, round, sum}
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    graft.sources.Tables.events(spark, dir)
+      .withColumn("next_event", lead(col("event_type"), 1).over(w))
+      .filter(col("next_event").isNotNull)
+      .groupBy(col("event_type").as("cur_event"), col("next_event"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("p", round(col("n") / sum(col("n")).over(Window.partitionBy(col("cur_event"))), 6))
+      .collect().map(_.toString).sorted.toSeq
+  }
+
+  private def transitionRows(dir: String): Seq[String] = {
+    val df = Ecosystem.transitions(spark, dir)
+    assert(df.columns.toSeq == Seq("cur_event", "next_event", "n", "p"))
+    df.collect().map(_.toString).sorted.toSeq
+  }
+
+  test("transitions equal the lead-window formulation on every split layout") {
+    import org.apache.spark.sql.functions.col
+    for (sf <- Seq(TestSpark.sf, new java.io.File(TestSpark.sf).getParent + "/sf0.01")) {
+      val raw = spark.read.parquet(s"$sf/events.parquet")
+      val layouts = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        _.coalesce(1),
+        _.repartition(16),
+        _.repartition(7, col("user_id")).sortWithinPartitions(col("event_id").desc))
+      for (layout <- layouts) {
+        val dir = java.nio.file.Files.createTempDirectory("graft_transitions").toString
+        layout(raw).write.parquet(s"$dir/events.parquet")
+        val splits = graft.sources.Tables.events(spark, dir).rdd.getNumPartitions
+        val want = leadWindowTransitions(dir)
+        assert(want.size > 1)
+        assert(transitionRows(dir) == want, s"$sf in $splits splits")
+      }
+    }
+  }
+
+  test("transitions equal the lead-window formulation on nulls, ts ties and users split across files") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.input_file_name
+    val L = java.lang.Long.valueOf(_: Long)
+    // (event_id, ts seconds, user_id, event_type); no user has two
+    // events with equal (ts, event_id), so the order is total
+    val hand = Seq[(java.lang.Long, java.lang.Long, java.lang.Long, String)](
+      // user 1: a null ts first, a null event_id first among ts = 100,
+      // then ts ties broken by event_id, a null type as cur and as next
+      (L(12), null, L(1), "b"), (null, L(100), L(1), "a"), (L(9), L(100), L(1), "c"),
+      (L(10), L(100), L(1), "a"), (L(11), L(100), L(1), "b"), (L(13), L(200), L(1), null),
+      (L(14), L(300), L(1), "a"),
+      // single-event users, one of them with a null type
+      (L(15), L(50), L(2), "c"), (L(16), L(50), L(3), null),
+      // the null user is one group
+      (L(20), L(50), null, "a"), (L(21), L(60), null, "b"), (L(22), L(60), null, null),
+      (L(23), null, null, "c"),
+      // null ts and event_id together sort ahead of a null ts alone
+      (L(30), null, L(4), "a"), (L(31), null, L(4), "b"), (L(29), null, L(4), "c"),
+      (null, null, L(4), "b"))
+    // user 5's events are dealt round-robin over every file
+    val spread = (0 until 60).map(i => (L(100L + i), L(1000L + (i * 37) % 60), L(5), Seq("a", "b", "c")(i * 7 % 3)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_transitions_nulls").toString
+    (hand ++ spread)
+      .map { case (id, sec, user, typ) => (id, if (sec == null) null else L(sec * 1000000000L), user, typ, 1.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartition(4).write.parquet(s"$dir/events.parquet")
+    val files = spark.read.parquet(s"$dir/events.parquet").filter($"user_id" === 5)
+      .select(input_file_name()).distinct().count()
+    assert(files > 1, s"user 5 sits in $files file")
+    val want = leadWindowTransitions(dir)
+    assert(want.exists(_.startsWith("[null,")), s"no null cur_event row in $want")
+    assert(transitionRows(dir) == want)
+  }
+
   test("hopping windows: every event lands in exactly two windows") {
     val hop = Ecosystem.hoppingCounts(spark, TestSpark.sf).collect()
     val total = graft.sources.Tables.events(spark, TestSpark.sf).count()

@@ -116,7 +116,34 @@ class PlanSpec extends AnyFunSuite {
 
   test("markov ordering is per-user, never a global sort (eco_transitions)") {
     val p = plan("eco_transitions")
-    assert(p.contains("user_id"), "lead window must partition by user_id")
+    assert(p.contains("user_id"), "transitions must key each user's events by user_id")
+    // the per-user runs cross one user_id exchange; the events are
+    // neither sorted by user nor walked by a lead window
+    val exchanges = p.linesIterator.count(_.contains("Exchange hashpartitioning(user_id"))
+    assert(exchanges == 1, s"expected one user_id exchange, got $exchanges:\n$p")
+    assert(!p.contains("Sort [user_id"), s"events sorted by user:\n$p")
+    assert(!p.contains("lead("), s"lead window resurfaced:\n$p")
+  }
+
+  test("eco_transitions' user exchange writes one record per (scan split, user), not one per event") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("eco_transitions")(spark, TestSpark.sf)
+    df.collect()
+    val written = Plans.collect(df.queryExecution.executedPlan) {
+      case x: ShuffleExchangeExec if (x.outputPartitioning match {
+          case HashPartitioning(Seq(a: AttributeReference), _) => a.name == "user_id"
+          case _ => false
+        }) => x.metrics("shuffleRecordsWritten").value
+    }
+    val events = graft.sources.Tables.events(spark, TestSpark.sf)
+    val bound = events.select("user_id").distinct().count() * events.rdd.getNumPartitions
+    assert(written.size == 1, s"user exchanges: $written")
+    assert(bound < events.count(), s"bound $bound is no tighter than one record per event")
+    assert(written.head <= bound, s"the user exchange wrote ${written.head} records, bound $bound")
   }
 
   test("sessionization reuses one sort for lag, running sum, and groupBy (eco_sessions)") {

@@ -17,7 +17,10 @@ the median over the untraced timed samples of all reports of:
 
 for the parent and the change, and the change's relative move in
 executor CPU. `n` is the sample count per side. `--op` (repeatable)
-limits the table to the named operations.
+limits the table to the named operations. A last `total` row sums each
+side's per-op medians over every operation of the workload, and with
+`--op` a `share` line gives the named operations' part of each side's
+total executor CPU.
 
 Exit 0 iff both sides hold at least one sample of the workload.
 """
@@ -63,11 +66,29 @@ def median(xs):
     return statistics.median(xs) if xs else float("nan")
 
 
+def pct(part, whole):
+    return 100.0 * part / whole if whole else float("nan")
+
+
+def line(name, n_p, n_c, mp, mc):
+    """One table line from the two sides' {column: value}."""
+    out = "%-26s %5s %5s" % (name, n_p, n_c)
+    for col, _, _ in COLUMNS:
+        out += " %10.1f %10.1f" % (mp[col], mc[col])
+    return out + " %+8.1f" % pct(mc["cpu_ms"] - mp["cpu_ms"], mp["cpu_ms"])
+
+
+def total(side, names):
+    """{column: sum of the per-op medians} over the `names` the side ran."""
+    return {c: sum(median(side[n][c]) for n in names if n in side) for c, _, _ in COLUMNS}
+
+
 def table(parent, change, only=()):
-    """The side-by-side lines, one per operation in either set."""
-    names = sorted(set(parent) | set(change))
-    if only:
-        names = [n for n in names if n in only]
+    """The side-by-side lines, one per operation in either set, then the
+    `total` row over all of them and, when `only` names operations, the
+    share of each side's total CPU those take."""
+    every = sorted(set(parent) | set(change))
+    names = [n for n in every if n in only] if only else every
     head = "%-26s %5s %5s" % ("op", "n_p", "n_c")
     for c, _, _ in COLUMNS:
         head += " %10s %10s" % (c + "_p", c + "_c")
@@ -75,12 +96,14 @@ def table(parent, change, only=()):
     empty = {c: [] for c, _, _ in COLUMNS}
     for n in names:
         p, c = parent.get(n, empty), change.get(n, empty)
-        line = "%-26s %5d %5d" % (n, len(p["cpu_ms"]), len(c["cpu_ms"]))
-        for col, _, _ in COLUMNS:
-            line += " %10.1f %10.1f" % (median(p[col]), median(c[col]))
-        mp, mc = median(p["cpu_ms"]), median(c["cpu_ms"])
-        line += " %+8.1f" % (100.0 * (mc - mp) / mp if mp else float("nan"))
-        lines.append(line)
+        lines.append(line(n, len(p["cpu_ms"]), len(c["cpu_ms"]),
+                          {k: median(v) for k, v in p.items()}, {k: median(v) for k, v in c.items()}))
+    tp, tc = total(parent, every), total(change, every)
+    lines.append(line("total", "", "", tp, tc))
+    if only:
+        sp, sc = total(parent, names)["cpu_ms"], total(change, names)["cpu_ms"]
+        lines.append("share of total cpu_ms: parent %.1f of %.1f (%.1f%%), change %.1f of %.1f (%.1f%%)" % (
+            sp, tp["cpu_ms"], pct(sp, tp["cpu_ms"]), sc, tc["cpu_ms"], pct(sc, tc["cpu_ms"])))
     return lines
 
 

@@ -75,6 +75,27 @@ class PerfbenchOps(unittest.TestCase):
         self.assertIn("eco_b ", out)
         self.assertNotIn("eco_a ", out)
 
+    def test_total_row_sums_the_per_op_medians(self):
+        write_report(self.p, 1, [("eco_a", False, 100e6, 4, 10, 50), ("eco_b", False, 300e6, 1, 0, 20)])
+        write_report(self.p, 2, [("eco_a", False, 200e6, 6, 30, 70), ("eco_b", False, 500e6, 3, 0, 40)])
+        write_report(self.c, 1, [("eco_a", False, 50e6, 2, 4, 30), ("eco_c", False, 7e6, 1, 2, 3)])
+        code, out = run(self.p, self.c)
+        self.assertEqual(code, 0, out)
+        # parent: eco_a medians 150/5/20/60 + eco_b 400/2/0/30;
+        # change: eco_a 50/2/4/30 + eco_c 7/1/2/3 (an op a side never ran adds nothing)
+        self.assertEqual(row(out, "total"),
+                         ["550.0", "57.0", "7.0", "3.0", "20.0", "6.0", "90.0", "33.0", "-89.6"])
+        self.assertNotIn("share", out)
+
+    def test_op_filter_prints_the_share_of_total_cpu(self):
+        write_report(self.p, 1, [("eco_a", False, 100e6, 1, 1, 1), ("eco_b", False, 300e6, 1, 1, 1)])
+        write_report(self.c, 1, [("eco_a", False, 100e6, 1, 1, 1), ("eco_b", False, 100e6, 1, 1, 1)])
+        code, out = run(self.p, self.c, "--op", "eco_b")
+        self.assertEqual(code, 0, out)
+        # the total still covers every op, not just the named ones
+        self.assertEqual(row(out, "total")[:2], ["400.0", "200.0"])
+        self.assertIn("share of total cpu_ms: parent 300.0 of 400.0 (75.0%), change 100.0 of 200.0 (50.0%)", out)
+
     def test_an_empty_side_compares_nothing(self):
         write_report(self.p, 1, [("eco_a", False, 1e6, 1, 1, 1)])
         os.makedirs(self.c)
