@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, Outp
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
 import org.apache.spark.sql.catalyst.expressions.objects.Invoke
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.streaming.sources.{MemoryPlan, MemorySink}
 import org.apache.spark.sql.kernelbridge.ColumnBridge
 import org.apache.spark.sql.types.{ObjectType, StructType}
 import org.apache.spark.sql.Row
@@ -30,8 +32,10 @@ import graft.plans.{Dgim, Kernels, WireKernel}
   *    from_json's own evaluator for the rows it rejects, called once
   *    per row in one whole-stage-codegen stage of at most one task
   *    per core
-  *  - RLock-guarded concurrent reads (ST7)    → memory-sink tables are
-  *    transactionally versioned; `spark.sql` reads never block ingest
+  *  - RLock-guarded concurrent reads (ST7)    → `serveMemory` tables:
+  *    a `MemorySink` that adds each micro-batch whole, in one
+  *    synchronized driver-side append, so reads are versioned by batch
+  *    and `spark.sql` reads never block ingest
   *  - no delivery guarantees (ST8)            → checkpointLocation upgrades
   *    the pipeline to exactly-once sink semantics for free
   */
@@ -765,10 +769,30 @@ object Streaming {
   /** S5 query serving: stream aggregates into an in-memory table
     * queryable with `spark.sql(...)` — replaces the reference's
     * pickle-over-Unix-socket RPC server (consumer.py:243-354). Reads
-    * are transactionally versioned (ST7): no lock, no torn reads. */
+    * are transactionally versioned (ST7): no lock, no torn reads.
+    *
+    * The table is Spark's own `MemorySink` behind a `MemoryPlan`
+    * view named `name`, as `format("memory")` builds it, but each
+    * micro-batch reaches it in one driver-side append: the batch is
+    * collected on the stream thread (under the query's job group) and
+    * `MemorySink.write` adds it whole, truncating first in `complete`
+    * mode (case-insensitive) and skipping a replayed batch id.
+    * `format("memory")` would instead build, in every task of the
+    * state stage, a `Row` deserializer through a full analyzer pass
+    * and convert each row there: a fixed cost per task that a small
+    * batch pays in full. One difference shows in progress events: a
+    * `foreachBatch` sink reports `sink.numOutputRows = -1`. */
   def serveMemory(aggregated: DataFrame, name: String,
-                  mode: String = "update"): StreamingQuery =
-    aggregated.writeStream.format("memory").queryName(name).outputMode(mode).start()
+                  mode: String = "update"): StreamingQuery = {
+    val sink = new MemorySink()
+    val truncate = mode.equalsIgnoreCase("complete")
+    val q = aggregated.writeStream.queryName(name).outputMode(mode)
+      .foreachBatch((batch: DataFrame, id: Long) => sink.write(id, truncate, batch.collect()))
+      .start()
+    ColumnBridge.frame(aggregated.sparkSession, MemoryPlan(sink, DataTypeUtils.toAttributes(aggregated.schema)))
+      .createOrReplaceTempView(name)
+    q
+  }
 
   /** S7 console sink (consultas.py's tabulate pretty-printers). */
   def consoleSink(df: DataFrame): DataStreamWriter[Row] =

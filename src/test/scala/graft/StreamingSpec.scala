@@ -503,6 +503,146 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** The sink behind a served table: the `MemoryPlan` its view reads. */
+  private def servedSink(name: String) =
+    spark.table(name).queryExecution.analyzed.collectFirst {
+      case p: org.apache.spark.sql.execution.streaming.sources.MemoryPlan => p.sink
+    }.getOrElse(fail(s"$name is not a memory-sink view"))
+
+  /** One wire message of the eco_stream generator's JSON shape. */
+  private def wire(id: Long, t: String, typ: String): String =
+    s"""{"event_id":$id,"ts":"${t}Z","user_id":${id % 7},"event_type":"$typ","value":$id.5}"""
+
+  test("serveMemory serves what a format(\"memory\") sink serves after every micro-batch, in every output mode") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    implicit val sqlCtx = spark.sqlContext
+    val types = Seq("click", "view", "error")
+    val batches: Seq[Seq[String]] = Seq(
+      (1L to 60L).map(i => wire(i, f"2024-01-01T10:${i - 1}%02d:00", types((i % 3).toInt))),
+      (61L to 70L).map(i => wire(i, f"2024-01-01T12:${i - 61}%02d:30", types((i % 3).toInt))),
+      // an event 3 h behind the newest (beyond both legs' watermarks),
+      // a redelivered message, a corrupt one, and four fresh events
+      Seq(wire(71, "2024-01-01T09:00:00", "click"), wire(65, "2024-01-01T12:04:30", "error"), "{not json") ++
+        (72L to 75L).map(i => wire(i, f"2024-01-01T12:${i - 60}%02d:10", types((i % 3).toInt))))
+    val legs: Seq[(String, String, DataFrame => DataFrame)] = Seq(
+      ("par_win", "update", Streaming.tumblingCounts(_)),
+      ("par_latest", "append", Streaming.upsertLatest(_)),
+      ("par_dgim", "update", d => Streaming.dgimCounts(d).toDF()),
+      ("par_types", "Complete", _.groupBy("event_type").agg(count(lit(1)).as("n"))))
+    for ((name, mode, leg) <- legs) {
+      val (served, reference) = (MemoryStream[String], MemoryStream[String])
+      val q = Streaming.serveMemory(leg(Streaming.wireDecode(served.toDF())), name, mode)
+      // the formulation serveMemory replaced: the memory sink's writer
+      val r = leg(Streaming.wireDecode(reference.toDF()))
+        .writeStream.format("memory").queryName(name + "_ref").outputMode(mode).start()
+      try {
+        for ((b, k) <- batches.zipWithIndex) {
+          served.addData(b); reference.addData(b)
+          q.processAllAvailable(); r.processAllAvailable()
+          def rows(t: String) = spark.table(t).collect().map(_.toString).sorted.toSeq
+          val (got, want) = (rows(name), rows(name + "_ref"))
+          assert(got.nonEmpty && got == want, s"$name ($mode) after batch $k:\n$got\nvs\n$want")
+          assert(servedSink(name).latestBatchId == servedSink(name + "_ref").latestBatchId,
+            s"$name ($mode) after batch $k: the two sinks hold different batch ids")
+        }
+      } finally { q.stop(); r.stop() }
+    }
+    // complete mode truncates: one row per event type, not one per batch;
+    // with no watermark it counts every decoded event, the late one and
+    // the redelivered copy too
+    assert(spark.table("par_types").count() == 3)
+    assert(spark.table("par_types").agg(sum("n")).head().getLong(0) == 76L)
+    // the late event's window never reached the served counts
+    assert(spark.sql("SELECT * FROM par_win WHERE wstart < timestamp'2024-01-01 10:00:00'").count() == 0)
+    assert(spark.sql("SELECT DISTINCT event_id FROM par_latest").count() == 74L)
+  }
+
+  test("serveMemory: one ten-event batch of each eco_stream leg runs pinned jobs, stages and tasks (counted work)") {
+    // after warm-up, each leg's ten-event data batch is one collect job
+    // of a map stage (at most one task per core) and a state stage (one
+    // task per shuffle partition); the legs with a watermark then run one
+    // no-data batch that evicts state. Counted in jobs, stages, tasks,
+    // batches and codegen compilations, not seconds.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.DataFrame
+    import java.util.concurrent.ConcurrentHashMap
+    implicit val sqlCtx = spark.sqlContext
+    val cores = spark.sparkContext.defaultParallelism
+    val statePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val stageBatch = new ConcurrentHashMap[Int, (String, Long)]()
+    // (query id, batch id) -> (jobs, task count of each completed stage)
+    val work = scala.collection.mutable.Map.empty[(String, Long), (Int, Seq[Int])]
+    val settled = ConcurrentHashMap.newKeySet[String]()
+    val Batch = """(?s).*\nbatch = (\d+).*""".r
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit = {
+        val p = Option(job.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
+        prop("spark.jobGroup.id").filter(_.startsWith("settle-")).foreach(settled.add)
+        for (q <- prop("sql.streaming.queryId"); Batch(b) <- prop("spark.job.description")) {
+          val k = (q, b.toLong)
+          work.synchronized { val (j, t) = work.getOrElse(k, (0, Nil)); work(k) = (j + 1, t) }
+          job.stageIds.foreach(stageBatch.put(_, k))
+        }
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        Option(stageBatch.get(s.stageInfo.stageId)).foreach { k =>
+          work.synchronized { val (j, t) = work.getOrElse(k, (0, Nil)); work(k) = (j, t :+ s.stageInfo.numTasks) }
+        }
+    }
+    // the listener bus delivers in order: once a later job's start is
+    // seen, every earlier job's and stage's events have been too
+    var settles = 0
+    def settle(): Unit = {
+      settles += 1
+      val g = s"settle-$settles"
+      spark.sparkContext.setJobGroup(g, g)
+      try spark.sparkContext.parallelize(Seq(1), 1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!settled.contains(g) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(settled.contains(g), "listener bus did not settle")
+    }
+    val types = Seq("click", "view", "error")
+    val history = (1L to 2000L).map(i => wire(i, f"2024-01-01T10:${(i - 1) / 60}%02d:${(i - 1) % 60}%02d", types((i % 3).toInt)))
+    def ten(k: Int) = (1L to 10L).map(i => wire(3000L + 10 * k + i, f"2024-01-01T11:$k%02d:${i}%02d", types((i % 3).toInt)))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // (name, mode, leg, no-data batches after a data batch, compilations per data batch at most)
+      val legs: Seq[(String, String, DataFrame => DataFrame, Long, Long)] = Seq(
+        ("pin_win", "update", Streaming.tumblingCounts(_), 1L, 1L),
+        ("pin_latest", "append", Streaming.upsertLatest(_), 1L, 1L),
+        ("pin_dgim", "update", d => Streaming.dgimCounts(d).toDF(), 0L, 0L))
+      for ((name, mode, leg, noData, compiles) <- legs) {
+        val ms = MemoryStream[String]
+        val q = Streaming.serveMemory(leg(Streaming.wireDecode(ms.toDF())), name, mode)
+        try {
+          ms.addData(history)
+          q.processAllAvailable()
+          (1 to 2).foreach { k => ms.addData(ten(k)); q.processAllAvailable() }
+          val before = servedSink(name).latestBatchId.get
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          ms.addData(ten(3))
+          q.processAllAvailable()
+          val c1 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          settle()
+          val data = before + 1
+          val (jobs, tasks) = work.synchronized(work.getOrElse((q.id.toString, data), (0, Nil)))
+          val got = (jobs, tasks.size, tasks.sum,
+            servedSink(name).latestBatchId.get - data)
+          assert(got == ((1, 2, 1 + statePartitions, noData)),
+            s"$name: (jobs, stages, tasks, no-data batches) of data batch $data were $got, stage tasks $tasks")
+          assert(tasks.max == statePartitions && tasks.min <= cores, s"$name: stage tasks $tasks")
+          assert(c1 - c0 <= compiles, s"$name: ${c1 - c0} compilations in one data batch and its no-data batches")
+          val sink = q.lastProgress.sink
+          assert(sink.description.startsWith("ForeachBatchSink") && sink.numOutputRows == -1L,
+            s"$name: progress names sink ${sink.description} with ${sink.numOutputRows} output rows")
+        } finally q.stop()
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("wire decode equals a from_json-only decode row for row, in UTC and a non-UTC zone (property)") {
     // wireDecode runs graft_wire_decode and keeps from_json for the
     // rows the kernel rejects; every row must decode to exactly the

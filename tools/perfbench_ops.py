@@ -22,6 +22,11 @@ side's per-op medians over every operation of the workload, and with
 `--op` a `share` line gives the named operations' part of each side's
 total executor CPU.
 
+eco_stream has no timed operations: its rows are the streaming queries
+(pb_win, pb_latest, pb_dgim), each the work of its run id's job group
+as the report's `query_groups` names it, one sample per untraced run,
+with a `stages` column after `cpu_ms`.
+
 Exit 0 iff both sides hold at least one sample of the workload.
 """
 import argparse
@@ -33,6 +38,9 @@ import sys
 
 COLUMNS = (("cpu_ms", "cpu_ns", 1e-6), ("tasks", "tasks", 1.0),
            ("shuf_rec", "shuffle_records", 1.0), ("crit_ms", "crit_ms", 1.0))
+#: a streaming query runs one or two stages per micro-batch, so its
+#: stage count shows how many batches a run took
+QUERY_COLUMNS = COLUMNS[:1] + (("stages", "stages", 1.0),) + COLUMNS[1:]
 
 
 def reports(root, workload):
@@ -43,23 +51,36 @@ def reports(root, workload):
     for path in sorted(paths):
         with open(path) as f:
             r = json.load(f)
-        if r.get("workload") == workload and "ops" in r and "groups" in r:
+        if r.get("workload") == workload and ("ops" in r or "query_groups" in r) and "groups" in r:
             out.append(r)
     return out
 
 
+def columns(reps):
+    return QUERY_COLUMNS if any("query_groups" in r for r in reps) else COLUMNS
+
+
 def samples(reps):
-    """{op name: {column: [values]}} over the untraced timed samples."""
-    by_op = {}
+    """{name: {column: [values]}} over the untraced timed ops, or for a
+    streaming workload over its queries, one value per untraced run (a
+    query restarted under a second run id sums both groups)."""
+    cols = columns(reps)
+    by_name = {}
     for r in reps:
-        for o in r["ops"]:
-            if o.get("traced"):
+        if "query_groups" in r:
+            if r.get("trace"):
                 continue
-            g = r["groups"].get(o["op"], {})
-            cols = by_op.setdefault(o["name"], {c: [] for c, _, _ in COLUMNS})
-            for c, key, scale in COLUMNS:
-                cols[c].append(g.get(key, 0) * scale)
-    return by_op
+            runs = {}
+            for run, name in r["query_groups"].items():
+                runs.setdefault(name, []).append(r["groups"].get(run, {}))
+            items = sorted(runs.items())
+        else:
+            items = [(o["name"], [r["groups"].get(o["op"], {})]) for o in r["ops"] if not o.get("traced")]
+        for name, groups in items:
+            side = by_name.setdefault(name, {c: [] for c, _, _ in cols})
+            for c, key, scale in cols:
+                side[c].append(sum(g.get(key, 0) for g in groups) * scale)
+    return by_name
 
 
 def median(xs):
@@ -70,38 +91,38 @@ def pct(part, whole):
     return 100.0 * part / whole if whole else float("nan")
 
 
-def line(name, n_p, n_c, mp, mc):
+def line(name, n_p, n_c, mp, mc, cols):
     """One table line from the two sides' {column: value}."""
     out = "%-26s %5s %5s" % (name, n_p, n_c)
-    for col, _, _ in COLUMNS:
+    for col, _, _ in cols:
         out += " %10.1f %10.1f" % (mp[col], mc[col])
     return out + " %+8.1f" % pct(mc["cpu_ms"] - mp["cpu_ms"], mp["cpu_ms"])
 
 
-def total(side, names):
+def total(side, names, cols):
     """{column: sum of the per-op medians} over the `names` the side ran."""
-    return {c: sum(median(side[n][c]) for n in names if n in side) for c, _, _ in COLUMNS}
+    return {c: sum(median(side[n][c]) for n in names if n in side) for c, _, _ in cols}
 
 
-def table(parent, change, only=()):
+def table(parent, change, only=(), cols=COLUMNS):
     """The side-by-side lines, one per operation in either set, then the
     `total` row over all of them and, when `only` names operations, the
     share of each side's total CPU those take."""
     every = sorted(set(parent) | set(change))
     names = [n for n in every if n in only] if only else every
     head = "%-26s %5s %5s" % ("op", "n_p", "n_c")
-    for c, _, _ in COLUMNS:
+    for c, _, _ in cols:
         head += " %10s %10s" % (c + "_p", c + "_c")
     lines = [head + " %8s" % "cpu_d%"]
-    empty = {c: [] for c, _, _ in COLUMNS}
+    empty = {c: [] for c, _, _ in cols}
     for n in names:
         p, c = parent.get(n, empty), change.get(n, empty)
         lines.append(line(n, len(p["cpu_ms"]), len(c["cpu_ms"]),
-                          {k: median(v) for k, v in p.items()}, {k: median(v) for k, v in c.items()}))
-    tp, tc = total(parent, every), total(change, every)
-    lines.append(line("total", "", "", tp, tc))
+                          {k: median(v) for k, v in p.items()}, {k: median(v) for k, v in c.items()}, cols))
+    tp, tc = total(parent, every, cols), total(change, every, cols)
+    lines.append(line("total", "", "", tp, tc, cols))
     if only:
-        sp, sc = total(parent, names)["cpu_ms"], total(change, names)["cpu_ms"]
+        sp, sc = total(parent, names, cols)["cpu_ms"], total(change, names, cols)["cpu_ms"]
         lines.append("share of total cpu_ms: parent %.1f of %.1f (%.1f%%), change %.1f of %.1f (%.1f%%)" % (
             sp, tp["cpu_ms"], pct(sp, tp["cpu_ms"]), sc, tc["cpu_ms"], pct(sc, tc["cpu_ms"])))
     return lines
@@ -114,15 +135,16 @@ def main(argv=None):
     ap.add_argument("--workload", default="eco_serve")
     ap.add_argument("--op", action="append", default=[])
     a = ap.parse_args(argv)
-    sides = []
+    sides, every = [], []
     for d in (a.parent_dir, a.change_dir):
         reps = reports(d, a.workload)
         print("%s: %d %s reports" % (d, len(reps), a.workload))
         sides.append(samples(reps))
+        every += reps
     if not sides[0] or not sides[1]:
         print("nothing compared: a side has no %s sample" % a.workload)
         return 1
-    print("\n".join(table(sides[0], sides[1], a.op)))
+    print("\n".join(table(sides[0], sides[1], a.op, columns(every))))
     return 0
 
 

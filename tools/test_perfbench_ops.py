@@ -28,6 +28,20 @@ def write_report(d, seed, ops, workload="eco_serve", trace=0):
         json.dump({"workload": workload, "ops": samples, "groups": groups}, f)
 
 
+def write_stream_report(d, seed, queries, trace=0):
+    """An eco_stream raw report: `queries` maps each run id to (query
+    name, cpu_ns, stages, tasks, shuffle_records, crit_ms)."""
+    os.makedirs(d, exist_ok=True)
+    names, groups = {}, {"none": {"cpu_ns": 5e9, "stages": 9}, "read0": {"cpu_ns": 7e9, "stages": 9}}
+    for run_id, (name, cpu_ns, stages, tasks, recs, crit) in queries.items():
+        names[run_id] = name
+        groups[run_id] = {"cpu_ns": cpu_ns, "stages": stages, "tasks": tasks,
+                          "shuffle_records": recs, "crit_ms": crit}
+    path = os.path.join(d, "eco_stream-seed%d-trace%d.json" % (seed, trace))
+    with open(path, "w") as f:
+        json.dump({"workload": "eco_stream", "trace": trace, "query_groups": names, "groups": groups}, f)
+
+
 def run(*args):
     r = subprocess.run([sys.executable, SCRIPT] + list(args), capture_output=True, text=True)
     return r.returncode, r.stdout
@@ -102,6 +116,36 @@ class PerfbenchOps(unittest.TestCase):
         code, out = run(self.p, self.c)
         self.assertEqual(code, 1)
         self.assertIn("nothing compared", out)
+
+    def test_stream_queries_one_sample_per_run(self):
+        for seed, cpu in ((1, 1000e6), (2, 3000e6), (3, 2000e6)):
+            write_stream_report(self.p, seed, {
+                "r%da" % seed: ("pb_win", cpu, 20, 80, 2000, 7000),
+                "r%db" % seed: ("pb_dgim", 500e6, 10, 40, 100, 3000)})
+        # a traced run is left out; a query restarted under a second run id sums both
+        write_stream_report(self.c, 4, {"x": ("pb_win", 9000e6, 99, 99, 99, 99)}, trace=1)
+        write_stream_report(self.c, 5, {"c5a": ("pb_win", 600e6, 12, 50, 1000, 4000),
+                                        "c5b": ("pb_win", 200e6, 2, 8, 0, 500),
+                                        "c5c": ("pb_latest", 100e6, 4, 10, 10, 90)})
+        code, out = run(self.p, self.c, "--workload", "eco_stream")
+        self.assertEqual(code, 0, out)
+        self.assertIn("stages_p", out.splitlines()[2])
+        # n_p n_c, then cpu, stages, tasks, shuffle records, crit (parent, change), cpu move
+        self.assertEqual(row(out, "pb_win"),
+                         ["3", "1", "2000.0", "800.0", "20.0", "14.0", "80.0", "58.0",
+                          "2000.0", "1000.0", "7000.0", "4500.0", "-60.0"])
+        self.assertEqual(row(out, "pb_dgim")[:4], ["3", "0", "500.0", "nan"])
+        self.assertEqual(row(out, "pb_latest")[:4], ["0", "1", "nan", "100.0"])
+        # job groups outside the queries (reads, "none") get no row and no part of the total
+        self.assertNotIn("read0", out)
+        self.assertEqual(row(out, "total")[:4], ["2500.0", "900.0", "30.0", "18.0"])
+
+    def test_stream_reports_without_queries_compare_nothing(self):
+        write_stream_report(self.p, 1, {"a": ("pb_win", 1e6, 1, 1, 1, 1)})
+        write_stream_report(self.c, 1, {"a": ("pb_win", 1e6, 1, 1, 1, 1)}, trace=1)
+        code, out = run(self.p, self.c, "--workload", "eco_stream")
+        self.assertEqual(code, 1)
+        self.assertIn("nothing compared: a side has no eco_stream sample", out)
 
 
 if __name__ == "__main__":
